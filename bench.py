@@ -701,7 +701,7 @@ def main() -> None:
                 # doc_pagerank, documented.
                 from sc_crawler_spark.queries.pipeline import \
                     bm25_pruned_sql
-                from sc_crawler_spark.sinks import postings_store
+                from sc_crawler_spark.sinks import artifacts, postings_store
                 from sc_crawler_spark.tables import load as _bload
                 kw = {"query_stride": 1300}
                 duck_sql = bm25_pruned_sql(1300)
@@ -713,9 +713,9 @@ def main() -> None:
                     bdocs, "text", "doc_id")
                 from sc_crawler_spark.queries.pipeline import (
                     _BM25_B, _BM25_K1)
-                if not postings_store.bm25_index_matches(
-                        bidx, bdigest, max_postings=256,
-                        k1=_BM25_K1, b=_BM25_B, query_stride=13):
+                if not artifacts.gate(
+                        bidx, "bm25", bdigest, max_postings=256,
+                        k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
                     t0 = time.perf_counter()
                     postings_store.write_bm25_index(
                         bdocs, bidx, "text", "doc_id", max_postings=256)
@@ -736,7 +736,7 @@ def main() -> None:
                 from sc_crawler_spark.queries.pipeline import (
                     _BM25_B, _BM25_K1)
                 from sc_crawler_spark.sinks import (
-                    ann_store, postings_store)
+                    ann_store, artifacts, postings_store)
                 from sc_crawler_spark.tables import load as _bload
                 scale.setdefault("variant", {})[name] = \
                     "served_postings+ivf"
@@ -744,9 +744,9 @@ def main() -> None:
                 hdocs = _bload(spark, qdir, "documents")
                 hdigest = postings_store.corpus_digest(
                     hdocs, "text", "doc_id")
-                if not postings_store.bm25_index_matches(
-                        hidx, hdigest, max_postings=256,
-                        k1=_BM25_K1, b=_BM25_B, query_stride=13):
+                if not artifacts.gate(
+                        hidx, "bm25", hdigest, max_postings=256,
+                        k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
                     t0 = time.perf_counter()
                     postings_store.write_bm25_index(
                         hdocs, hidx, "text", "doc_id",
@@ -757,8 +757,8 @@ def main() -> None:
                 hemb = _bload(spark, qdir, "embeddings")
                 adigest = ann_store.embedding_digest(
                     hemb, "embedding", "vec_id")
-                if not ann_store.ann_index_matches(
-                        aidx, adigest, n_cells=8, iters=2):
+                if not artifacts.gate(
+                        aidx, "ivf", adigest, n_cells=8, iters=2)[0]:
                     t0 = time.perf_counter()
                     ann_store.write_ivf_index(
                         hemb, aidx, "embedding", "vec_id",
@@ -782,7 +782,7 @@ def main() -> None:
                 # 1M-vector assignment pass actually costs.
                 from sc_crawler_spark.queries.pipeline import \
                     _ann_ivf_sql
-                from sc_crawler_spark.sinks import ann_store
+                from sc_crawler_spark.sinks import ann_store, artifacts
                 from sc_crawler_spark.tables import load as _bload
                 # r17 (verdict task 3): probe 8 -> 12 after the A/B
                 # (scripts/ab_ivf_probe.py): recall@5 at the 64-cell
@@ -798,8 +798,8 @@ def main() -> None:
                 aemb = _bload(spark, qdir, "embeddings")
                 adigest = ann_store.embedding_digest(
                     aemb, "embedding", "vec_id")
-                if not ann_store.ann_index_matches(
-                        aidx, adigest, n_cells=64, iters=2):
+                if not artifacts.gate(
+                        aidx, "ivf", adigest, n_cells=64, iters=2)[0]:
                     t0 = time.perf_counter()
                     ann_store.write_ivf_index(
                         aemb, aidx, "embedding", "vec_id",
@@ -817,17 +817,14 @@ def main() -> None:
                 # landed pairs (the multi-session cost, not the memo)
                 from sc_crawler_spark.queries.pipeline import (
                     _PAIR_MEMO, _docs_with_clones)
-                from sc_crawler_spark.sinks import index_store
+                from sc_crawler_spark.sinks import artifacts, index_store
                 idx_dir = os.path.join(s16_dir, "dedup_index")
                 corpus = _docs_with_clones(spark, qdir)
                 digest = index_store.corpus_digest(corpus, "text",
                                                    "doc_id")
-                # layout=2 (r18): shingles id-range-clustered for the
-                # streaming probe's row-group pruning — a pre-r18
-                # artifact rebuilds once (build cost published below)
-                if not index_store.index_matches(
-                        idx_dir, digest, k=3, n_hashes=8, band_rows=2,
-                        threshold=0.5, layout=2):
+                if not artifacts.gate(
+                        idx_dir, "minhash", digest, k=3, n_hashes=8,
+                        band_rows=2, threshold=0.5)[0]:
                     t0 = time.perf_counter()
                     index_store.write_minhash_index(
                         corpus, idx_dir, "text", "doc_id")
@@ -1045,13 +1042,13 @@ def main() -> None:
             import shutil
 
             from sc_crawler_spark.operators.graph import pagerank
-            from sc_crawler_spark.sinks import index_store
+            from sc_crawler_spark.sinks import artifacts, index_store
             from sc_crawler_spark.streaming import (
                 read_document_stream, stream_near_dedup)
             from sc_crawler_spark.tables import load as _load
 
             seed_dir = os.path.join(s16_dir, "dedup_index")
-            seed_meta = index_store.read_index_meta(seed_dir)
+            seed_meta = artifacts.read_meta(seed_dir)
             if seed_meta is not None:
                 fc: dict[str, object] = {}
                 scale["fold_cycle"] = fc
@@ -1117,7 +1114,7 @@ def main() -> None:
                     seed_meta["digest"],
                     index_store.corpus_digest(
                         spark.read.parquet(src), "text", "doc_id")])
-                got = index_store.read_index_meta(folded)["digest"]
+                got = artifacts.read_meta(folded)["digest"]
                 fc["digest_ok"] = bool(got == want)
 
                 def _serve_leg(rep: int) -> None:

@@ -45,6 +45,15 @@ def _read(spark: SparkSession, lake: str, table: str) -> DataFrame:
     return read_snapshot(spark, _table_path(lake, table))
 
 
+def _read_source(spark: SparkSession, lake: str, table: str) -> DataFrame:
+    """``<lake>/<table>.parquet`` when present (raw lake dir, the
+    TESTDATA layout), else the table's current snapshot."""
+    plain = os.path.join(lake, f"{table}.parquet")
+    if os.path.exists(plain):
+        return spark.read.parquet(plain)
+    return _read(spark, lake, table)
+
+
 def _tables_in(lake: str) -> list[str]:
     return sorted(
         d for d in os.listdir(lake)
@@ -1132,14 +1141,11 @@ def cmd_corpus(spark: SparkSession, lake: str, out: str,
     crash discipline as cmd_index) carrying the parameters and the
     input-corpus digest, so a reader can prove which corpus + knobs
     produced the artifact."""
-    import json as _json
-
     from .queries.curation import emit_training_corpus
-    from .sinks import index_store
+    from .sinks import artifacts, index_store
 
-    plain = os.path.join(lake, "documents.parquet")
-    docs = (spark.read.parquet(plain) if os.path.exists(plain)
-            else _read(spark, lake, "documents"))
+    artifacts.begin(out, "corpus")
+    docs = _read_source(spark, lake, "documents")
     digest = index_store.corpus_digest(
         docs.select("doc_id", "text"), "text", "doc_id")
     # Pass the RESOLVED source through: emit's default loader only
@@ -1154,11 +1160,10 @@ def cmd_corpus(spark: SparkSession, lake: str, out: str,
     landed = spark.read.parquet(os.path.join(out, "corpus"))
     n = landed.count()
     chars = landed.agg(F.sum("clean_chars")).first()[0] or 0
-    with open(os.path.join(out, "_META.json"), "w") as f:
-        _json.dump({"input_digest": digest, "lang": lang,
-                    "min_quality": min_quality, "quota": quota,
-                    "n_docs": n, "clean_chars": int(chars)},
-                   f, indent=1, sort_keys=True)
+    artifacts.commit_meta(out, {
+        "kind": "corpus", "input_digest": digest, "lang": lang,
+        "min_quality": min_quality, "quota": quota, "n_docs": n,
+        "clean_chars": int(chars)})
     print(f"corpus: landed {n} docs ({chars} chars) at {out} "
           f"digest={digest}")
 
@@ -1177,21 +1182,19 @@ def cmd_index(spark: SparkSession, lake: str, out: str,
     rebuilds. Consumers (incremental dedup, the graph queries' shared
     pair source) pick the artifact up via $SC_SPARK_INDEX_DIR after
     proving the digest still matches the corpus in front of them."""
-    from .sinks import index_store
+    from .sinks import artifacts, index_store
 
-    plain = os.path.join(lake, f"{table}.parquet")
-    if os.path.exists(plain):  # raw lake dir (TESTDATA layout)
-        df = spark.read.parquet(plain)
-    else:                      # snapshot-versioned CLI lake table
-        df = _read(spark, lake, table)
-    df = df.select(id_col, text_col)
+    df = _read_source(spark, lake, table).select(id_col, text_col)
     digest = index_store.corpus_digest(df, text_col, id_col)
-    params = dict(k=k, n_hashes=n_hashes, band_rows=band_rows,
-                  threshold=threshold, text_col=text_col, id_col=id_col)
-    if not force and index_store.index_matches(out, digest, **params):
+    hit, why = (False, "force") if force else artifacts.gate(
+        out, "minhash", digest, k=k, n_hashes=n_hashes,
+        band_rows=band_rows, threshold=threshold, text_col=text_col,
+        id_col=id_col)
+    if hit:
         n = spark.read.parquet(os.path.join(out, "pairs")).count()
         print(f"index: reuse {out} digest={digest} pairs={n}")
         return
+    print(f"index: rebuild ({why})")
     index_store.write_minhash_index(df, out, text_col, id_col, k=k,
                                     n_hashes=n_hashes,
                                     band_rows=band_rows,
@@ -1231,22 +1234,19 @@ def cmd_bm25_index(spark: SparkSession, lake: str, out: str,
     lexical arm) pick it up via $SC_SPARK_BM25_INDEX_DIR and serve
     BIT-EQUAL to in-plan."""
     from .queries.pipeline import _BM25_B, _BM25_K1
-    from .sinks import postings_store
+    from .sinks import artifacts, postings_store
 
-    plain = os.path.join(lake, f"{table}.parquet")
-    if os.path.exists(plain):  # raw lake dir (TESTDATA layout)
-        df = spark.read.parquet(plain)
-    else:                      # snapshot-versioned CLI lake table
-        df = _read(spark, lake, table)
-    df = df.select(id_col, text_col)
+    df = _read_source(spark, lake, table).select(id_col, text_col)
     digest = postings_store.corpus_digest(df, text_col, id_col)
-    if not force and postings_store.bm25_index_matches(
-            out, digest, max_postings=max_postings, text_col=text_col,
-            id_col=id_col, k1=_BM25_K1, b=_BM25_B,
-            query_stride=query_stride):
+    hit, why = (False, "force") if force else artifacts.gate(
+        out, "bm25", digest, max_postings=max_postings,
+        text_col=text_col, id_col=id_col, k1=_BM25_K1, b=_BM25_B,
+        query_stride=query_stride)
+    if hit:
         n = postings_store.load_postings(spark, out).count()
         print(f"bm25index: reuse {out} digest={digest} postings={n}")
         return
+    print(f"bm25index: rebuild ({why})")
     meta = postings_store.write_bm25_index(df, out, text_col, id_col,
                                            max_postings=max_postings,
                                            query_stride=query_stride)
@@ -1265,16 +1265,8 @@ def cmd_bm25_index_fold(spark: SparkSession, base: str, batch_lake: str,
     the merged union digest. The base stays read-only and true."""
     from .sinks import postings_store
 
-    meta = postings_store.read_bm25_meta(base)
-    if meta is None:
-        raise SystemExit(f"no complete postings artifact at {base}")
-    plain = os.path.join(batch_lake, f"{table}.parquet")
-    if os.path.exists(plain):
-        batch = spark.read.parquet(plain)
-    else:
-        batch = _read(spark, batch_lake, table)
-    batch = batch.select(meta["id_col"], meta["text_col"])
-    folded = postings_store.fold_bm25_index(spark, base, batch, out)
+    folded = postings_store.fold_bm25_index(
+        spark, base, _read_source(spark, batch_lake, table), out)
     n = postings_store.load_postings(spark, out).count()
     print(f"bm25index: folded {out} digest={folded['digest']} "
           f"postings={n}")
@@ -1292,21 +1284,18 @@ def cmd_ann_index(spark: SparkSession, lake: str, out: str,
     hybrid RRF dense arm, contrastive_triplets) pick it up via
     $SC_SPARK_ANN_INDEX_DIR — the opt-in approximate production
     serve; oracle runs stay in-plan."""
-    from .sinks import ann_store
+    from .sinks import ann_store, artifacts
 
-    plain = os.path.join(lake, f"{table}.parquet")
-    if os.path.exists(plain):
-        df = spark.read.parquet(plain)
-    else:
-        df = _read(spark, lake, table)
-    df = df.select(id_col, vec_col)
+    df = _read_source(spark, lake, table).select(id_col, vec_col)
     digest = ann_store.embedding_digest(df, vec_col, id_col)
-    if not force and ann_store.ann_index_matches(
-            out, digest, n_cells=n_cells, iters=iters,
-            vec_col=vec_col, id_col=id_col):
+    hit, why = (False, "force") if force else artifacts.gate(
+        out, "ivf", digest, n_cells=n_cells, iters=iters,
+        vec_col=vec_col, id_col=id_col)
+    if hit:
         n = spark.read.parquet(os.path.join(out, "assign")).count()
         print(f"annindex: reuse {out} digest={digest} vectors={n}")
         return
+    print(f"annindex: rebuild ({why})")
     meta = ann_store.write_ivf_index(df, out, vec_col, id_col,
                                      n_cells=n_cells, iters=iters)
     n = spark.read.parquet(os.path.join(out, "assign")).count()
@@ -1331,36 +1320,21 @@ def cmd_ann_index_fold(spark: SparkSession, base: str, batch_lake: str,
     command only warns."""
     from .sinks import ann_store
 
-    meta = ann_store.read_ann_meta(base)
-    if meta is None:
-        raise SystemExit(f"no complete IVF artifact at {base}")
-    plain = os.path.join(batch_lake, f"{table}.parquet")
-    if os.path.exists(plain):
-        batch = spark.read.parquet(plain)
-    else:
-        batch = _read(spark, batch_lake, table)
-    batch = batch.select(meta["id_col"], meta["vec_col"])
+    batch = _read_source(spark, batch_lake, table)
     folded = ann_store.fold_ivf_index(spark, base, batch, out)
     n = spark.read.parquet(os.path.join(out, "assign")).count()
     print(f"annindex: folded {out} digest={folded['digest']} "
           f"vectors={n}")
-    # r16 drift trip-wire (r15 verdict task 7): folds never move
-    # centroids, so cell balance and centroid fit degrade as the
-    # incoming distribution drifts. Warn past threshold — imbalance
-    # >= 1.5x the build-time baseline (or >= 4x flat), or mean
-    # cos-distance-to-centroid up >= 20% — and recommend the periodic
-    # full rebuild that is the documented fix.
-    imb, mcd = folded.get("occupancy_imbalance"), folded.get("mean_cos_dist")
-    b_imb = folded.get("baseline_occupancy_imbalance")
-    b_mcd = folded.get("baseline_mean_cos_dist")
+    # drift trip-wire: folds never move centroids, so cell balance and
+    # centroid fit degrade as the incoming distribution drifts. Warn
+    # past threshold — imbalance >= 1.5x the build-time baseline, or
+    # mean cos-distance-to-centroid up >= 20% — and recommend the
+    # periodic full rebuild that is the documented fix.
+    imb, mcd = folded["occupancy_imbalance"], folded["mean_cos_dist"]
+    b_imb = folded["baseline_occupancy_imbalance"]
+    b_mcd = folded["baseline_mean_cos_dist"]
     drifted = []
-    # The flat 4.0 floor applies only when the base predates the
-    # baseline stats (pre-r16): an index already >= 4x imbalanced at
-    # BUILD time would otherwise warn on every zero-drift fold. With a
-    # recorded baseline, only the 1.5x-relative check fires.
-    if imb is not None and (
-            (b_imb is None and imb >= 4.0)
-            or (b_imb is not None and imb >= 1.5 * b_imb)):
+    if imb is not None and b_imb is not None and imb >= 1.5 * b_imb:
         drifted.append(f"occupancy_imbalance {imb} (baseline {b_imb})")
     if (mcd is not None and b_mcd is not None and b_mcd > 0
             and mcd >= 1.2 * b_mcd):

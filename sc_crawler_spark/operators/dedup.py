@@ -935,7 +935,7 @@ def incremental_minhash_pairs(new_df: DataFrame,
     the verify stage re-roots on the collected (tiny) candidate
     table and pushes the cross-candidate ids into the BASE shingle
     scan as an In filter — against an id-range-clustered artifact
-    (index_store layout 2) parquet min-max stats then prune the
+    (index_store shingles) parquet min-max stats then prune the
     heavy shingle-array row groups to Theta(candidates) instead of
     decoding Theta(corpus). Larger candidate sets fall back to the
     unfiltered plan. Result-identical either way: the collected set

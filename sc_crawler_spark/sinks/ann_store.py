@@ -7,9 +7,8 @@ retrieves. This store lands the trained structure bronze — exactly the
 multi-session pattern the minhash dedup index established
 (sinks/index_store.py): the artifact is keyed by an order-independent
 content digest of the exact (id, vector) corpus it was built from plus
-its build parameters, a digest/parameter mismatch means rebuild, never
-silent reuse, and the meta file is written LAST so a crashed build
-reads as absent.
+its build parameters, and the meta commit and gate are
+sinks/artifacts.py's: any gate miss means rebuild, never silent reuse.
 
 Layout under one artifact root::
 
@@ -18,8 +17,8 @@ Layout under one artifact root::
                         repartitioned BY cell_id — the inverted lists,
                         co-located so a probe equi-join on cell_id
                         reads only its probed buckets
-    <root>/_META.json   {digest, n_vecs, vec_col, id_col, n_cells,
-                         iters, kind: "ivf"}             # written last
+    <root>/_META.json   {kind: "ivf", format, digest, n_vecs, vec_col,
+                         id_col, n_cells, iters, drift stats}
 
 At 100 TB the assign table is the big artifact (|corpus| rows of
 vector + norm); it is written once per corpus digest and every
@@ -43,13 +42,13 @@ production serve — the doc_pagerank / SC_SPARK_INDEX_DIR doctrine.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .index_store import META_NAME, corpus_digest, invalidate_meta
+from . import artifacts
+from .index_store import corpus_digest
 
 
 def embedding_digest(df: DataFrame, vec_col: str, id_col: str) -> str:
@@ -61,9 +60,7 @@ def embedding_digest(df: DataFrame, vec_col: str, id_col: str) -> str:
     1M x 64-dim corpus made the digest scan cost MORE than the probe
     it was gating (~7 s of the 14.6 s served run in BENCH_r15's first
     validation); hashing the raw floats cuts the gate to a plain
-    columnar scan. Format-compatible with merge_digests; artifacts
-    keyed under the old string-render digest simply mismatch and
-    rebuild once."""
+    columnar scan. Format-compatible with merge_digests."""
     row = df.agg(
         F.coalesce(
             F.expr(f"bit_xor(xxhash64({id_col}, {vec_col}))"),
@@ -81,17 +78,18 @@ def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
     queries share), the assignment pass reads the STORED centroids so
     the landed inverted lists are exactly consistent with the landed
     centroids, and meta commits last."""
+    artifacts.begin(out, "ivf")
+    return _build_ivf(df, out, vec_col, id_col, n_cells, iters,
+                      embedding_digest(df, vec_col, id_col))
+
+
+def _build_ivf(df: DataFrame, out: str, vec_col: str, id_col: str,
+               n_cells: int, iters: int, digest: str) -> dict:
+    """The build body after artifacts.begin: train, assign, record the
+    drift baseline, commit the meta keyed by ``digest``."""
     from ..operators.similarity import (
         as_double, ivf_assign, ivf_train_centroids, norm)
 
-    # invalidate FIRST (r15 ADVICE #3): "meta written LAST so a
-    # crashed build reads as absent" only holds for a fresh dir —
-    # rebuilding over an existing artifact (same corpus, different
-    # n_cells) and crashing after the centroids/assign overwrite
-    # would leave the OLD meta paired with partially NEW data, and
-    # ann_index_matches for the old spec would serve it.
-    invalidate_meta(out)
-    digest = embedding_digest(df, vec_col, id_col)
     meta = {
         "digest": digest, "kind": "ivf",
         "vec_col": vec_col, "id_col": id_col,
@@ -117,9 +115,7 @@ def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
     # the fold path compares its post-fold stats against these
     meta |= _drift_stats(
         spark.read.parquet(os.path.join(out, "assign")), cents_stored)
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(meta, f, indent=1, sort_keys=True)
-    return meta
+    return artifacts.commit_meta(out, meta)
 
 
 def _drift_stats(assigned: DataFrame, cents: DataFrame) -> dict:
@@ -174,13 +170,7 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
     from ..operators.similarity import as_double, ivf_assign, norm
     from .index_store import merge_digests
 
-    if os.path.abspath(out) == os.path.abspath(base_dir):
-        raise ValueError("fold target must be a NEW directory, not "
-                         "the base artifact dir")
-    meta = read_ann_meta(base_dir)
-    if meta is None:
-        raise ValueError(f"no complete IVF artifact at {base_dir}")
-    invalidate_meta(out)
+    meta = artifacts.begin(out, "ivf", base_dir)
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     batch_digest = embedding_digest(batch, vec_col, id_col)
     cents, base_assigned = load_ivf_index(spark, base_dir)
@@ -202,14 +192,11 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
     # baseline; callers (cmd_ann_index_fold) warn when the fold
     # drifted past threshold and recommend a rebuild
     for k in ("occupancy_imbalance", "mean_cos_dist"):
-        if k in meta:
-            folded[f"baseline_{k}"] = meta.get(f"baseline_{k}", meta[k])
+        folded[f"baseline_{k}"] = meta.get(f"baseline_{k}", meta[k])
     folded |= _drift_stats(
         spark.read.parquet(os.path.join(out, "assign")),
         spark.read.parquet(os.path.join(out, "centroids")))
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(folded, f, indent=1, sort_keys=True)
-    return folded
+    return artifacts.commit_meta(out, folded)
 
 
 def rebuild_ivf_index(spark: SparkSession, base_dir: str,
@@ -223,18 +210,16 @@ def rebuild_ivf_index(spark: SparkSession, base_dir: str,
     needed; Lloyd retrains from scratch and the fresh build records a
     new drift baseline.
 
-    ``union_digest`` (the fold's merge_digests result) overrides the
-    content hash write_ivf_index computes: the assign store holds
+    ``union_digest`` (the fold's merge_digests result) keys the meta
+    instead of a content hash of the union: the assign store holds
     as_double(vec), whose xxhash64 differs from the original float32
     lake's even though the VALUES are identical (exact widening), so
-    the content-derived digest would spuriously mismatch consumers
+    a content-derived digest would spuriously mismatch consumers
     hashing the original corpus. The merged digest is the true union
-    digest by construction."""
+    digest by construction, and the meta commits once."""
     from ..operators.similarity import as_double
 
-    meta = read_ann_meta(base_dir)
-    if meta is None:
-        raise ValueError(f"no complete IVF artifact at {base_dir}")
+    meta = artifacts.begin(out, "ivf", base_dir)
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     _cents, base_assigned = load_ivf_index(spark, base_dir)
     union = (base_assigned
@@ -243,33 +228,8 @@ def rebuild_ivf_index(spark: SparkSession, base_dir: str,
              .unionByName(batch.select(
                  F.col(id_col),
                  as_double(F.col(vec_col)).alias(vec_col))))
-    rebuilt = write_ivf_index(union, out, vec_col, id_col,
-                              n_cells=meta["n_cells"],
-                              iters=meta["iters"])
-    rebuilt["digest"] = union_digest
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(rebuilt, f, indent=1, sort_keys=True)
-    return rebuilt
-
-
-def read_ann_meta(out: str) -> dict | None:
-    """The artifact's meta, or None for absent/incomplete builds."""
-    try:
-        with open(os.path.join(out, META_NAME)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def ann_index_matches(out: str, digest: str, **params) -> bool:
-    """True iff a complete IVF artifact at ``out`` was built from
-    exactly the corpus with ``digest`` under exactly ``params``."""
-    meta = read_ann_meta(out)
-    if meta is None or meta.get("digest") != digest:
-        return False
-    if meta.get("kind") != "ivf":
-        return False
-    return all(meta.get(k) == v for k, v in params.items())
+    return _build_ivf(union, out, vec_col, id_col, meta["n_cells"],
+                      meta["iters"], union_digest)
 
 
 def load_ivf_index(spark: SparkSession,

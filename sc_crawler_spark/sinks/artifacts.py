@@ -1,46 +1,115 @@
-"""Artifact retention over the three digest-keyed index stores (r16,
-r15 verdict task 6).
+"""The lifecycle of the three digest-keyed index artifacts (MinHash
+dedup, pruned BM25 postings, IVF ANN): one meta commit, one gate, one
+retention pass.
 
-Every fold writes a NEW digest-keyed directory — correct, because the
-base artifact is still being read while the fold writes (ann_store /
-postings_store / index_store all enforce it) — but nothing ever
-deleted superseded copies, so a long-running lake accumulates one full
-index per fold. This module is the missing lifecycle tail:
+An artifact is a directory of parquet tables plus ``_META.json``, and
+the meta is the commit record. Every builder and fold runs the same
+three steps:
 
-- :func:`list_artifacts` — walk a root for complete artifacts (a dir
-  is an artifact iff it holds a readable ``_META.json``; a crashed or
-  half-deleted build reads as absent, same rule as every store).
-- :func:`prune` — keep the newest ``keep`` per kind (minhash / bm25 /
-  ivf), delete the rest. DRY-RUN by default; the newest artifact of
-  each kind is NEVER deleted (even ``--keep 0`` refuses — the
-  digest-current copy is what live readers gate against), and any
-  digest listed in ``active_digests`` is refused too (the operator's
-  pin for an index still referenced by a running consumer).
+- :func:`begin` — delete any stale meta BEFORE the first data write,
+  so a rebuild that crashes part-way reads as absent, never as the
+  old meta over new data. A fold names its inputs: the target may not
+  be one of them (the fold reads them while it writes), and the base
+  (first input) must pass the kind/format gate.
+- write the data tables;
+- :func:`commit_meta` — write a tmp file, fsync, ``os.replace`` it to
+  ``_META.json`` (atomic on POSIX), stamping the module's ``FORMAT``.
 
-Deletion removes the meta FIRST, then the data: a reader that races a
-prune sees a meta-less directory — "absent", the safe answer — never
-a meta pointing at half-deleted parquet.
+Readers go through :func:`gate`, which returns ``(hit, reason)``;
+the reason for a miss is ``absent`` (no readable meta — a crashed
+build), ``kind`` (another store's artifact), ``format`` (written under
+another ``FORMAT``), ``digest`` (built from another corpus) or
+``param:<name>`` (a requested build parameter is missing or differs).
+Artifacts are derived data, so any miss means rebuild, never a
+compatibility shim.
+
+Retention: :func:`list_artifacts` walks a root for complete artifacts,
+:func:`prune` keeps the newest ``keep`` per kind and deletes the rest
+— dry-run by default; the newest artifact of each kind is NEVER
+deleted (live readers gate against it), nor is any digest listed in
+``active_digests``. Deletion removes the meta FIRST, then the data: a
+reader that races a prune sees "absent", the safe answer.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
-from .index_store import META_NAME
-
+META_NAME = "_META.json"
+# bump when any store's on-disk tables change shape: every older
+# artifact then misses the gate with reason "format" and rebuilds
+FORMAT = 1
 KINDS = ("minhash", "bm25", "ivf")
 
 
-def _infer_kind(meta: dict) -> str | None:
-    """Pre-r16 minhash metas carry no ``kind`` — infer from the build
-    parameters that only that store writes."""
-    k = meta.get("kind")
-    if k in KINDS:
-        return k
-    if {"n_hashes", "band_rows", "threshold"} <= meta.keys():
-        return "minhash"
-    return None
+def read_meta(path: str) -> dict | None:
+    """The artifact's meta, or None when ``path`` holds no complete
+    artifact (a build that died before its commit reads as absent)."""
+    try:
+        with open(os.path.join(path, META_NAME)) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def commit_meta(path: str, meta: dict) -> dict:
+    """Commit ``meta`` (stamped with ``FORMAT``) as the artifact's
+    LAST write: tmp file, fsync, atomic rename."""
+    meta = dict(meta, format=FORMAT)
+    tmp = os.path.join(path, META_NAME + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(meta, f, indent=1, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(path, META_NAME))
+    return meta
+
+
+def gate(path: str, kind: str, digest: str | None = None,
+         **params) -> tuple[bool, str]:
+    """``(True, "hit")`` iff ``path`` holds a complete ``kind``
+    artifact of the current ``FORMAT``, built from the corpus with
+    ``digest`` (None: any corpus) under every requested parameter —
+    each key must be present in the meta and equal; else ``(False,
+    reason)`` with the first failing check."""
+    meta = read_meta(path)
+    if meta is None:
+        return False, "absent"
+    if meta.get("kind") != kind:
+        return False, "kind"
+    if meta.get("format") != FORMAT:
+        return False, "format"
+    if digest is not None and meta.get("digest") != digest:
+        return False, "digest"
+    for k, v in params.items():
+        if k not in meta or meta[k] != v:
+            return False, f"param:{k}"
+    return True, "hit"
+
+
+def begin(out: str, kind: str, *inputs: str) -> dict | None:
+    """Start a build (no ``inputs``) or a fold of ``kind`` at ``out``.
+    A fold refuses an ``out`` equal to any input dir and returns the
+    base artifact's meta (first input), raising ValueError naming the
+    gate reason when the base is unusable. Then any stale meta at
+    ``out`` is deleted, before the first data write."""
+    base = None
+    if inputs:
+        if os.path.abspath(out) in {os.path.abspath(d) for d in inputs}:
+            raise ValueError("fold target must be a NEW directory, not "
+                             "one of the fold's input dirs")
+        hit, why = gate(inputs[0], kind)
+        if not hit:
+            raise ValueError(
+                f"no usable {kind} base artifact at {inputs[0]} ({why})")
+        base = read_meta(inputs[0])
+    try:
+        os.remove(os.path.join(out, META_NAME))
+    except FileNotFoundError:
+        pass
+    return base
 
 
 def _dir_bytes(path: str) -> int:
@@ -59,10 +128,6 @@ def list_artifacts(root: str) -> list[dict]:
     itself if it is one), newest meta first. Each entry: path, kind,
     digest, n (docs/vecs if recorded), mtime of the meta (commit time
     — the meta is written LAST by every builder), and on-disk bytes."""
-    # the ONE completeness rule every store defines ("no readable
-    # meta == absent") — reuse it, never restate it
-    from .index_store import read_index_meta
-
     if not os.path.isdir(root):
         return []  # nothing landed yet — an empty lake, not an error
     cands = [root] + sorted(
@@ -70,18 +135,15 @@ def list_artifacts(root: str) -> list[dict]:
         if os.path.isdir(os.path.join(root, d)))
     out = []
     for path in cands:
-        mp = os.path.join(path, META_NAME)
-        meta = read_index_meta(path)
-        if meta is None:
-            continue
-        kind = _infer_kind(meta)
-        if kind is None or "digest" not in meta:
+        meta = read_meta(path)
+        if meta is None or meta.get("kind") not in KINDS \
+                or "digest" not in meta:
             continue
         out.append({
-            "path": os.path.abspath(path), "kind": kind,
+            "path": os.path.abspath(path), "kind": meta["kind"],
             "digest": meta["digest"],
             "n": meta.get("n_docs", meta.get("n_vecs")),
-            "mtime": os.path.getmtime(mp),
+            "mtime": os.path.getmtime(os.path.join(path, META_NAME)),
             "bytes": _dir_bytes(path),
         })
     out.sort(key=lambda e: e["mtime"], reverse=True)
@@ -126,10 +188,9 @@ def prune(root: str, keep: int = 1,
 
 
 def delete_artifact(path: str) -> None:
-    """Remove one artifact dir with the store-wide race discipline:
-    meta FIRST, so a reader that races the deletion sees a meta-less
-    directory — "absent", the safe answer — never a meta pointing at
-    half-deleted parquet. Used by :func:`prune` and by `annindex
+    """Remove one artifact dir, meta FIRST, so a reader that races the
+    deletion sees "absent", never a meta pointing at half-deleted
+    parquet. Used by :func:`prune` and by `annindex
     --rebuild-if-drifted` (the superseded base after a rebuild)."""
     try:
         os.remove(os.path.join(path, META_NAME))

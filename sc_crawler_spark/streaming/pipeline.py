@@ -259,19 +259,19 @@ def _validate_seed_index(seed_index_dir: str | None, k: int,
                          n_hashes: int, text_col: str,
                          id_col: str) -> None:
     """Shingle/signature parameters are proven against a seed
-    artifact's _META before any stream starts — a mismatched seed is
-    a loud ValueError, never silently-incomparable signatures."""
+    artifact's gate before any stream starts — a mismatched seed is
+    a loud ValueError naming the gate reason, never silently-
+    incomparable signatures."""
     if seed_index_dir is None:
         return
-    from ..sinks import index_store
-    meta = index_store.read_index_meta(seed_index_dir)
+    from ..sinks import artifacts
     want = dict(k=k, n_hashes=n_hashes, text_col=text_col,
                 id_col=id_col)
-    if meta is None or any(meta.get(p) != v for p, v in want.items()):
+    hit, why = artifacts.gate(seed_index_dir, "minhash", **want)
+    if not hit:
         raise ValueError(
-            f"seed index at {seed_index_dir} missing or built under "
-            f"different parameters (want {want}, got "
-            f"{ {p: (meta or {}).get(p) for p in want} })")
+            f"seed index at {seed_index_dir} unusable ({why}); "
+            f"want a minhash index built with {want}")
 
 
 def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,

@@ -50,7 +50,7 @@ def main() -> None:
     from sc_crawler_spark.queries.curation import dsir_log_ratios
     from sc_crawler_spark.queries.pipeline import _lr_trained
     from sc_crawler_spark.session import get_spark
-    from sc_crawler_spark.sinks import index_store
+    from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark.streaming import (read_document_stream,
                                             stream_ingest_gate)
     from sc_crawler_spark.streaming.pipeline import (stream_dsir_gate,
@@ -94,7 +94,7 @@ def main() -> None:
     out["gate.row_local_gates"] = timed(
         spark, "gate.row_local_gates", lambda: noop(surv))
 
-    meta = index_store.read_index_meta(SEED)
+    meta = artifacts.read_meta(SEED)
     k, n_hashes, band_rows = meta["k"], meta["n_hashes"], meta["band_rows"]
     threshold = meta["threshold"]
 

@@ -418,7 +418,7 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     MISMATCHED digest is ignored, never trusted."""
     from sc_crawler_spark.queries.pipeline import (
         _PAIR_MEMO, _docs_with_clones, _lsh_pair_graph)
-    from sc_crawler_spark.sinks import index_store
+    from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark import tables
 
     lake = str(tmp_path / "lake")
@@ -433,18 +433,22 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
 
     # build
     cli.cmd_index(spark, lake, out)
-    assert "built" in capsys.readouterr().out
-    meta = index_store.read_index_meta(out)
+    printed = capsys.readouterr().out
+    assert "index: rebuild (absent)" in printed and "built" in printed
+    meta = artifacts.read_meta(out)
     assert meta["k"] == 3 and meta["n_hashes"] == 8
     stored = index_store.load_pair_graph(spark, out).collect()
     assert [(r.id_a, r.id_b) for r in stored] == [(1, 2)]
 
     # idempotent re-run: digest matches, nothing rebuilt
-    mtime = os.path.getmtime(os.path.join(out, index_store.META_NAME))
+    mtime = os.path.getmtime(os.path.join(out, artifacts.META_NAME))
     cli.cmd_index(spark, lake, out)
     assert "reuse" in capsys.readouterr().out
     assert os.path.getmtime(
-        os.path.join(out, index_store.META_NAME)) == mtime
+        os.path.join(out, artifacts.META_NAME)) == mtime
+    # a parameter change rebuilds, naming the gate reason
+    cli.cmd_index(spark, lake, out, k=4)
+    assert "index: rebuild (param:k)" in capsys.readouterr().out
 
     # consumer: the pair-graph memo reads the artifact when the digest
     # matches ITS corpus. Build the index over the CLONE corpus (what
@@ -524,7 +528,7 @@ def test_index_fold_cli_wiring(spark, tmp_path, capsys):
     --fold without --base/--stream-pairs, build mode without --lake."""
     import pytest as _pytest
 
-    from sc_crawler_spark.sinks import index_store
+    from sc_crawler_spark.sinks import artifacts
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -565,7 +569,7 @@ def test_index_fold_cli_wiring(spark, tmp_path, capsys):
     cli.main(["index", "--fold", own, "--base", seed,
               "--stream-pairs", pairs_dir, "--out", folded])
     assert "folded" in capsys.readouterr().out
-    assert index_store.read_index_meta(folded)["digest"].endswith("_3")
+    assert artifacts.read_meta(folded)["digest"].endswith("_3")
 
     with _pytest.raises(SystemExit, match="--base"):
         cli.main(["index", "--fold", own, "--out", str(tmp_path / "x")])
@@ -633,7 +637,7 @@ def test_bm25index_build_reuse_fold_cli(spark, tmp_path, capsys):
     CLI wiring + reuse discipline)."""
     import pytest as _pytest
 
-    from sc_crawler_spark.sinks import postings_store
+    from sc_crawler_spark.sinks import artifacts
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -646,8 +650,8 @@ def test_bm25index_build_reuse_fold_cli(spark, tmp_path, capsys):
     out = str(tmp_path / "bidx")
 
     cli.main(["bm25index", "--lake", lake, "--out", out])
-    assert "built" in capsys.readouterr().out
-    meta = postings_store.read_bm25_meta(out)
+    assert "bm25index: rebuild (absent)" in capsys.readouterr().out
+    meta = artifacts.read_meta(out)
     assert meta["max_postings"] == 256 and meta["idf"] == "lucene"
 
     # digest+param match -> free reuse
@@ -656,8 +660,10 @@ def test_bm25index_build_reuse_fold_cli(spark, tmp_path, capsys):
     # parameter change -> rebuild
     cli.main(["bm25index", "--lake", lake, "--out", out,
               "--max-postings", "64"])
-    assert "built" in capsys.readouterr().out
-    assert postings_store.read_bm25_meta(out)["max_postings"] == 64
+    printed = capsys.readouterr().out
+    assert "bm25index: rebuild (param:max_postings)" in printed
+    assert "built" in printed
+    assert artifacts.read_meta(out)["max_postings"] == 64
 
     # fold a new-docs lake through the argparse path
     lake2 = str(tmp_path / "lake2")
@@ -670,7 +676,7 @@ def test_bm25index_build_reuse_fold_cli(spark, tmp_path, capsys):
     cli.main(["bm25index", "--fold", lake2, "--base", out,
               "--out", folded])
     assert "folded" in capsys.readouterr().out
-    fmeta = postings_store.read_bm25_meta(folded)
+    fmeta = artifacts.read_meta(folded)
     assert fmeta["n_docs"] == 4 and fmeta["max_postings"] == 64
 
     # mode guards fail loud
@@ -687,7 +693,7 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     test_ann_recall; this is the CLI wiring + reuse discipline)."""
     import pytest as _pytest
 
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import artifacts
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -699,8 +705,8 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
 
     cli.main(["annindex", "--lake", lake, "--out", out,
               "--n-cells", "4", "--iters", "1"])
-    assert "built" in capsys.readouterr().out
-    meta = ann_store.read_ann_meta(out)
+    assert "annindex: rebuild (absent)" in capsys.readouterr().out
+    meta = artifacts.read_meta(out)
     assert meta["n_cells"] == 4 and meta["kind"] == "ivf"
 
     cli.main(["annindex", "--lake", lake, "--out", out,
@@ -708,8 +714,10 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     assert "reuse" in capsys.readouterr().out
     cli.main(["annindex", "--lake", lake, "--out", out,
               "--n-cells", "2", "--iters", "1"])
-    assert "built" in capsys.readouterr().out
-    assert ann_store.read_ann_meta(out)["n_cells"] == 2
+    printed = capsys.readouterr().out
+    assert "annindex: rebuild (param:n_cells)" in printed
+    assert "built" in printed
+    assert artifacts.read_meta(out)["n_cells"] == 2
 
     lake2 = str(tmp_path / "lake2")
     os.makedirs(lake2)
@@ -721,7 +729,7 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     cli.main(["annindex", "--fold", lake2, "--base", out,
               "--out", folded])
     assert "folded" in capsys.readouterr().out
-    assert ann_store.read_ann_meta(folded)["n_vecs"] == 42
+    assert artifacts.read_meta(folded)["n_vecs"] == 42
 
     with _pytest.raises(SystemExit):
         cli.main(["annindex", "--out", out])
@@ -766,26 +774,26 @@ def test_artifacts_list_and_prune_cli(spark, tmp_path, capsys):
     cli.main(["artifacts", "prune", "--root", root, "--keep", "1"])
     out = capsys.readouterr().out
     assert "would-prune" in out and "bm25_base" in out
-    assert postings_store.read_bm25_meta(base_dir) is not None
+    assert artifacts.read_meta(base_dir) is not None
 
     # active-digest refusal: the base digest is pinned -> survives
     cli.main(["artifacts", "prune", "--root", root, "--keep", "1",
               "--active", base_meta["digest"], "--apply"])
     out = capsys.readouterr().out
     assert "refused (active digest)" in out
-    assert postings_store.read_bm25_meta(base_dir) is not None
+    assert artifacts.read_meta(base_dir) is not None
 
     # apply: folded kept, base removed
     cli.main(["artifacts", "prune", "--root", root, "--keep", "1",
               "--apply"])
-    assert postings_store.read_bm25_meta(fold_dir) is not None
-    assert postings_store.read_bm25_meta(base_dir) is None
+    assert artifacts.read_meta(fold_dir) is not None
+    assert artifacts.read_meta(base_dir) is None
     assert not os.path.exists(base_dir)
 
     # keep 0 still refuses the newest per kind
     res = artifacts.prune(root, keep=0, apply=True)
     assert len(res["kept"]) == 1 and not res["deleted"]
-    assert postings_store.read_bm25_meta(fold_dir) is not None
+    assert artifacts.read_meta(fold_dir) is not None
 
 
 def test_annindex_fold_drift_tripwire(spark, tmp_path, capsys):
@@ -794,7 +802,7 @@ def test_annindex_fold_drift_tripwire(spark, tmp_path, capsys):
     the build-time baseline), and `annindex --fold` WARNS and
     recommends a rebuild when a drifted batch trips the thresholds —
     folds never move centroids, so this is the staleness trip-wire."""
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import artifacts, ann_store
 
     # base: two tight clusters -> balanced cells, small cos-distance
     rows = [(i, [1.0, 0.05 * (i % 3), 0.0, 0.0]) for i in range(10)]
@@ -824,7 +832,7 @@ def test_annindex_fold_drift_tripwire(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "WARNING centroid drift" in out and "rebuild" in out
 
-    fmeta = ann_store.read_ann_meta(folded_dir)
+    fmeta = artifacts.read_meta(folded_dir)
     assert fmeta["baseline_occupancy_imbalance"] == \
         meta["occupancy_imbalance"]
     assert fmeta["occupancy_imbalance"] >= \
@@ -853,7 +861,7 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     centroids actually FIT the drifted distribution), the rebuilt
     meta keeps the fold's merged union digest, and the superseded
     base artifact is pruned (meta-first delete)."""
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import artifacts, ann_store
 
     # base: two tight clusters (same fixture as the trip-wire test)
     rows = [(i, [1.0, 0.05 * (i % 3), 0.0, 0.0]) for i in range(10)]
@@ -883,7 +891,7 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     assert "rebuilt" in printed and "pruned superseded base" in printed
 
     # the rebuild landed at the stored spec with a FRESH baseline …
-    rmeta = ann_store.read_ann_meta(out)
+    rmeta = artifacts.read_meta(out)
     assert rmeta is not None and rmeta["n_cells"] == 2
     assert "baseline_occupancy_imbalance" not in rmeta
     # … its retrained centroids fit the drifted distribution: the
@@ -899,7 +907,7 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     udigest = ann_store.embedding_digest(union, "embedding", "vec_id")
     assert rmeta["digest"] == udigest
     # … and the superseded base is gone (meta-first: absent either way)
-    assert ann_store.read_ann_meta(base) is None
+    assert artifacts.read_meta(base) is None
     assert not os.path.exists(base)
 
     # served probe over the rebuilt artifact finds the drifted batch's
@@ -934,7 +942,7 @@ def test_bm25index_query_stride_zero_indexes_all_docs(spark, tmp_path,
     (the retrieval convention, now a recorded+gated parameter), and
     `--query-stride 0` indexes every document; meta n_docs is the
     count idf/avgdl actually saw in both cases."""
-    from sc_crawler_spark.sinks import postings_store
+    from sc_crawler_spark.sinks import artifacts, postings_store
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -947,7 +955,7 @@ def test_bm25index_query_stride_zero_indexes_all_docs(spark, tmp_path,
     out = str(tmp_path / "idx_default")
     cli.main(["bm25index", "--lake", lake, "--out", out])
     assert "query_stride=13" in capsys.readouterr().out
-    meta = postings_store.read_bm25_meta(out)
+    meta = artifacts.read_meta(out)
     assert meta["query_stride"] == 13 and meta["n_docs"] == 2
     ids = {r.doc_id for r in
            postings_store.load_postings(spark, out).collect()}
@@ -957,7 +965,7 @@ def test_bm25index_query_stride_zero_indexes_all_docs(spark, tmp_path,
     cli.main(["bm25index", "--lake", lake, "--out", out2,
               "--query-stride", "0"])
     capsys.readouterr()
-    meta2 = postings_store.read_bm25_meta(out2)
+    meta2 = artifacts.read_meta(out2)
     assert meta2["query_stride"] is None and meta2["n_docs"] == 3
     ids2 = {r.doc_id for r in
             postings_store.load_postings(spark, out2).collect()}
@@ -965,10 +973,9 @@ def test_bm25index_query_stride_zero_indexes_all_docs(spark, tmp_path,
     # the stride is gated: a consumer expecting the 13-convention
     # must NOT match the index-all artifact
     digest = meta2["digest"]
-    assert postings_store.bm25_index_matches(out2, digest,
-                                             query_stride=None)
-    assert not postings_store.bm25_index_matches(out2, digest,
-                                                 query_stride=13)
+    assert artifacts.gate(out2, "bm25", digest, query_stride=None)[0]
+    assert artifacts.gate(out2, "bm25", digest, query_stride=13) == (
+        False, "param:query_stride")
 
 
 def test_artifacts_prune_never_deletes_the_root_itself(spark, tmp_path):
@@ -995,5 +1002,5 @@ def test_artifacts_prune_never_deletes_the_root_itself(spark, tmp_path):
     assert [e["path"] for e in res["refused"]] == [os.path.abspath(root)]
     assert not res["deleted"]
     # both artifacts still intact
-    assert postings_store.read_bm25_meta(root) is not None
-    assert postings_store.read_bm25_meta(inner) is not None
+    assert artifacts.read_meta(root) is not None
+    assert artifacts.read_meta(inner) is not None

@@ -306,7 +306,7 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
     import os
 
     from sc_crawler_spark.queries.pipeline import bm25_pruned_retrieval
-    from sc_crawler_spark.sinks import postings_store
+    from sc_crawler_spark.sinks import artifacts, postings_store
     from sc_crawler_spark.tables import load
 
     sf = "/root/testdata/sf0.001"
@@ -316,12 +316,15 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
                                            max_postings=256)
     digest = postings_store.corpus_digest(docs, "text", "doc_id")
     assert meta["digest"] == digest
-    assert postings_store.bm25_index_matches(out, digest,
-                                             max_postings=256)
-    assert not postings_store.bm25_index_matches(out, digest,
-                                                 max_postings=64)
-    assert not postings_store.bm25_index_matches(out, "bogus_0",
-                                                 max_postings=256)
+    gate = artifacts.gate
+    assert gate(out, "bm25", digest, max_postings=256) == (True, "hit")
+    assert gate(out, "bm25", digest, max_postings=64) == (
+        False, "param:max_postings")
+    assert gate(out, "bm25", "bogus_0", max_postings=256) == (
+        False, "digest")
+    # a BM25 artifact offered to the MinHash gate is refused by kind,
+    # not by a parameter the two stores happen not to share
+    assert gate(out, "minhash", digest) == (False, "kind")
 
     inplan = sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
                     for r in bm25_pruned_retrieval(spark, sf).collect())
@@ -345,43 +348,19 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
     # constants must refuse to serve — the query gates on k1/b now
     from sc_crawler_spark.queries.pipeline import _BM25_B, _BM25_K1
     assert meta["k1"] == _BM25_K1 and meta["b"] == _BM25_B
-    assert postings_store.bm25_index_matches(
-        out, digest, max_postings=256, k1=_BM25_K1, b=_BM25_B)
-    assert not postings_store.bm25_index_matches(
-        out, digest, max_postings=256, k1=_BM25_K1 + 0.1, b=_BM25_B)
+    assert gate(out, "bm25", digest, max_postings=256, k1=_BM25_K1,
+                b=_BM25_B)[0]
+    assert gate(out, "bm25", digest, max_postings=256,
+                k1=_BM25_K1 + 0.1, b=_BM25_B) == (False, "param:k1")
 
-
-def test_bm25_rebuild_crash_invalidates_stale_meta(spark, tmp_path,
-                                                   monkeypatch):
-    """r15 advice #3: a rebuild into an out dir that already holds a
-    complete artifact deletes the OLD meta before touching data, so a
-    crash mid-rebuild reads as absent (never old-meta + new-data)."""
-    from sc_crawler_spark.sinks import postings_store
-    from sc_crawler_spark.tables import load
-
-    sf = "/root/testdata/sf0.001"
-    out = str(tmp_path / "bm25_idx")
-    docs = load(spark, sf, "documents")
-    postings_store.write_bm25_index(docs, out, "text", "doc_id",
-                                    max_postings=16)
-    digest = postings_store.corpus_digest(docs, "text", "doc_id")
-    assert postings_store.bm25_index_matches(out, digest,
-                                             max_postings=16)
-
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash during rebuild")
-
-    import sc_crawler_spark.queries.pipeline as qp
-    monkeypatch.setattr(qp, "_bm25_prune_from_tf", _boom)
-    try:
-        postings_store.write_bm25_index(docs, out, "text", "doc_id",
-                                        max_postings=32)
-    except RuntimeError:
-        pass
-    # the old-spec gate must now refuse: meta was invalidated first
-    assert not postings_store.bm25_index_matches(out, digest,
-                                                 max_postings=16)
-    assert postings_store.read_bm25_meta(out) is None
+    # an artifact committed under an older FORMAT misses with reason
+    # "format" — derived data rebuilds, it is never shimmed
+    import pytest as _pytest
+    with _pytest.MonkeyPatch.context() as mp:
+        mp.setattr(artifacts, "FORMAT", artifacts.FORMAT - 1)
+        artifacts.commit_meta(out, meta)
+    assert gate(out, "bm25", digest, max_postings=256) == (
+        False, "format")
 
 
 def test_tf_from_toked_empty_token_array(spark):
@@ -409,7 +388,7 @@ def test_bm25_fold_equals_one_shot_build(spark, tmp_path):
     import pytest as _pytest
 
     from sc_crawler_spark.queries.pipeline import tokens
-    from sc_crawler_spark.sinks import postings_store
+    from sc_crawler_spark.sinks import artifacts, postings_store
     from sc_crawler_spark.tables import load
 
     sf = "/root/testdata/sf0.001"
@@ -454,10 +433,11 @@ def test_bm25_fold_equals_one_shot_build(spark, tmp_path):
     # the folded artifact's digest gate accepts the UNION corpus and
     # refuses the base corpus
     union_digest = postings_store.corpus_digest(docs, "text", "doc_id")
-    assert postings_store.bm25_index_matches(fold_dir, union_digest,
-                                             max_postings=64)
+    assert artifacts.gate(fold_dir, "bm25", union_digest,
+                          max_postings=64)[0]
     base_digest = postings_store.corpus_digest(base, "text", "doc_id")
-    assert not postings_store.bm25_index_matches(fold_dir, base_digest)
+    assert artifacts.gate(fold_dir, "bm25", base_digest) == (False,
+                                                             "digest")
 
     # refusal paths: fold into the base dir; fold from an incomplete base
     with _pytest.raises(ValueError):
@@ -468,52 +448,31 @@ def test_bm25_fold_equals_one_shot_build(spark, tmp_path):
             str(tmp_path / "f2"))
 
 
-def test_bm25_fold_upgrades_legacy_tf_format(spark, tmp_path):
-    """r18 (r17 verdict task 3): the landed tf table now carries
-    len_d so prune/fold skip the corpus-wide doc_id join. A legacy
-    (pre-r18) artifact landed tf WITHOUT len_d — folding over it must
-    shim len_d back from the lens table and still produce postings
-    bit-equal to a one-shot build, and the folded artifact must be
-    upgraded to the len_d-carrying format."""
-    from sc_crawler_spark.sinks import postings_store
+def test_bm25_fold_rejects_format_mismatched_base(spark, tmp_path):
+    """A fold base committed under an older artifact FORMAT is
+    refused with a ValueError naming the gate reason — derived
+    artifacts rebuild, they are never upgraded by a shim — and the
+    refused fold leaves no artifact at its target."""
+    import pytest as _pytest
+
+    from sc_crawler_spark.sinks import artifacts, postings_store
     from sc_crawler_spark.tables import load
 
-    sf = "/root/testdata/sf0.001"
-    docs = load(spark, sf, "documents").select("doc_id", "text")
-    base = docs.filter(F.col("doc_id") < 250)
-    batch = docs.filter(F.col("doc_id") >= 250)
+    docs = load(spark, "/root/testdata/sf0.001", "documents") \
+        .select("doc_id", "text")
     base_dir = str(tmp_path / "base")
     fold_dir = str(tmp_path / "folded")
-    full_dir = str(tmp_path / "oneshot")
-
-    postings_store.write_bm25_index(base, base_dir, "text", "doc_id",
-                                    max_postings=64)
-    # new-format build lands len_d inside tf
-    tf_path = f"{base_dir}/tf"
-    assert "len_d" in spark.read.parquet(tf_path).columns
-    # downgrade the base to the legacy layout: rewrite tf without len_d
-    legacy_tf = spark.read.parquet(tf_path).drop("len_d")
-    tmp_tf = str(tmp_path / "tf_legacy")
-    legacy_tf.write.parquet(tmp_tf)
-    import shutil
-    shutil.rmtree(tf_path)
-    shutil.move(tmp_tf, tf_path)
-    assert "len_d" not in spark.read.parquet(tf_path).columns
-
-    folded = postings_store.fold_bm25_index(spark, base_dir, batch,
-                                            fold_dir)
-    oneshot = postings_store.write_bm25_index(docs, full_dir, "text",
-                                              "doc_id", max_postings=64)
-    assert folded["digest"] == oneshot["digest"]
-
-    def _postings(d):
-        return sorted((r.term, r.doc_id, str(r.c)) for r in
-                      postings_store.load_postings(spark, d).collect())
-
-    assert _postings(fold_dir) == _postings(full_dir)
-    assert len(_postings(fold_dir)) > 0
-    # the folded artifact is upgraded: its tf carries len_d
-    assert "len_d" in spark.read.parquet(f"{fold_dir}/tf").columns
+    meta = postings_store.write_bm25_index(
+        docs.filter(F.col("doc_id") < 250), base_dir, "text", "doc_id",
+        max_postings=64)
+    with _pytest.MonkeyPatch.context() as mp:
+        mp.setattr(artifacts, "FORMAT", artifacts.FORMAT - 1)
+        artifacts.commit_meta(base_dir, meta)
+    with _pytest.raises(ValueError, match=r"\(format\)"):
+        postings_store.fold_bm25_index(
+            spark, base_dir, docs.filter(F.col("doc_id") >= 250),
+            fold_dir)
+    assert artifacts.gate(fold_dir, "bm25") == (False, "absent")
 
 
 def test_contrastive_triplets_ivf_served_variant(spark, tmp_path):

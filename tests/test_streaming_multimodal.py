@@ -790,7 +790,7 @@ def test_stream_near_dedup_rejects_mismatched_seed(spark, tmpdir):
                                     k=5)  # mismatched shingle width
     src = os.path.join(tmpdir, "in")
     os.makedirs(src)
-    with _pytest.raises(ValueError, match="different parameters"):
+    with _pytest.raises(ValueError, match=r"\(param:k\)"):
         stream_near_dedup(
             read_document_stream(spark, src),
             os.path.join(tmpdir, "pairs"), os.path.join(tmpdir, "idx"),
@@ -810,7 +810,7 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
     from sc_crawler_spark import cli, tables
     from sc_crawler_spark.operators.dedup import minhash_lsh_pairs
     from sc_crawler_spark.queries.pipeline import _PAIR_MEMO, doc_pagerank
-    from sc_crawler_spark.sinks import index_store
+    from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark.streaming import (
         read_document_stream, stream_near_dedup)
 
@@ -860,9 +860,16 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
     union_rows = base_rows + [(d, t) for rows in batches for d, t in rows]
     union = spark.createDataFrame(union_rows, "doc_id long, text string")
     want_digest = index_store.corpus_digest(union, "text", "doc_id")
-    assert index_store.read_index_meta(folded)["digest"] == want_digest
-    assert index_store.index_matches(folded, want_digest, k=3,
-                                     n_hashes=8, threshold=0.5)
+    gate = artifacts.gate
+    assert gate(folded, "minhash", want_digest, k=3, n_hashes=8,
+                threshold=0.5) == (True, "hit")
+    # the base corpus's digest misses the folded artifact, and a
+    # parameter the meta never recorded is a miss, not a wildcard
+    base_digest = index_store.corpus_digest(
+        union.filter("doc_id <= 2"), "text", "doc_id")
+    assert gate(folded, "minhash", base_digest) == (False, "digest")
+    assert gate(folded, "minhash", want_digest, n_docs=5) == (
+        False, "param:n_docs")
 
     # folded pair graph == full-corpus recomputation
     want_pairs = {(r.id_a, r.id_b, r.jaccard) for r in minhash_lsh_pairs(
@@ -872,7 +879,7 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
     assert got_pairs == want_pairs
 
     # the base artifact stayed read-only and true to ITS digest
-    assert index_store.read_index_meta(seed_dir)["digest"] != want_digest
+    assert artifacts.read_meta(seed_dir)["digest"] == base_digest
 
     # doc_pagerank reads the folded artifact through the digest gate:
     # land the unioned corpus as the lake, plant a sentinel pair in the
