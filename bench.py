@@ -86,10 +86,10 @@ SCALE_QUERIES = ["q1_pricing_summary", "session_counts", "dedup_exact_docs",
                  # pairs quadratic in copies (PLANS.md dedup_minhash
                  # note), which benchmarks the blowup, not the plan
                  "dedup_minhash_lsh", "training_set_select",
-                 # r7: text-analysis tier at 512x — the term-window
-                 # tf-idf and unigram-LM shapes (2.5M docs explode to
-                 # ~77M (doc,term) rows; Spark's partial aggregation +
-                 # term-partitioned windows beat DuckDB ~2-3x here).
+                 # r7: text-analysis tier at 512x — tf-idf and the
+                 # unigram LM (2.5M docs explode to ~77M (doc,term)
+                 # rows; Spark's partial aggregation + the broadcast
+                 # term dictionary beat DuckDB ~2-4x here).
                  # chunk_documents (Spark 24s vs DuckDB 210s) is NOT
                  # benched: the oracle's 8.6x loss would sit as an
                  # every-run 210 s tax or a permanent DNF row — the

@@ -114,6 +114,13 @@ _PRIORITY = [
     "weighted_sample_docs",
     "hybrid_rrf_retrieval",
     "contrastive_triplets",
+    # one vocabulary-dictionary plan (term-window regime deleted; the
+    # LM total now reuses the dictionary's exchange) — these three push
+    # the last three stalest-r14 names below just past the 50 cap,
+    # where they rotate first next round
+    "tfidf_keywords",
+    "doc_lm_perplexity",
+    "perplexity_bucket_filter",
     # stalest r14 greens (22 of 42)
     "approx_heavy_hitters",
     "cluster_balanced_sample",
@@ -176,9 +183,6 @@ _TAIL = [
     "cohort_retention",
     "chunk_documents",
     "q6_forecast_revenue",
-    "tfidf_keywords",
-    "doc_lm_perplexity",
-    "perplexity_bucket_filter",
     "q20_dominant_suppliers",
     "q14_promo_effect",
     "q22_global_sales_opportunity",

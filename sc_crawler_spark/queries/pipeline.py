@@ -24,7 +24,7 @@ from ..functions.text import (
     LANG_MARKERS, punct_ratio, quality_score, rolling_fingerprint, tokens,
 )
 from ..operators import chunking, dedup, graph, similarity
-from ..tables import load, table_disk_bytes
+from ..tables import gated_broadcast, load
 
 # ------------------------------------------------------------ corpus helpers
 
@@ -1020,30 +1020,26 @@ FROM c
 """
 
 
-def _term_dict_open(sf: str) -> bool:
-    """Gate for the broadcast term-dictionary regime of the tf-idf /
-    unigram-LM family (r17): True when the corpus's on-disk bytes are
-    KNOWN and small enough that its full vocabulary must comfortably
-    fit a broadcast.
+# Corpus on-disk bytes under which a VOCABULARY-sized dictionary (the
+# tf-idf df, the unigram LM's c, the BM25 prune df) carries a
+# broadcast hint. The vocabulary grows ~O(corpus^0.5) (Heaps' law):
+# an 8 GiB natural-language corpus has a few tens of MB of distinct
+# terms — inside the session's 64 MB broadcast budget with an order of
+# magnitude to spare — while at the 100 TB target it can be tens of GB
+# and a hard hint would OOM the driver. Disk bytes, not a vocab count:
+# counting the vocabulary is itself a corpus pass.
+_VOCAB_BROADCAST_MAX_BYTES = 8 << 30
 
-    Why a gate and not always-broadcast: the dictionary is the whole
-    vocabulary, which grows with the corpus (Heaps' law) — at the
-    100 TB target it can be tens of GB and broadcasting it would OOM
-    the driver, so past the gate (or when the size is unknowable —
-    object stores) the query keeps the term-partitioned-window shape,
-    which degrades to a shuffle instead of dying. Why disk bytes and
-    not a vocab count: counting the vocabulary is itself a corpus
-    pass, paid inside the timed query; the parquet footprint is the
-    same ground-truth listing gated_broadcast uses. The default (env
-    ``SC_SPARK_TERM_DICT_MAX_CORPUS_BYTES``) is deliberately
-    conservative: the vocabulary of an 8 GiB natural-language corpus
-    is a few tens of MB of strings — inside the session's 64 MB
-    broadcast budget with an order of magnitude to spare, because
-    vocabulary grows ~O(corpus^0.5) while the gate is linear."""
-    max_bytes = int(os.environ.get(
-        "SC_SPARK_TERM_DICT_MAX_CORPUS_BYTES", str(8 << 30)))
-    size = table_disk_bytes(sf, "documents")
-    return size is not None and size < max_bytes
+
+def _vocab_broadcast(dct: DataFrame, where: str,
+                     name: str | None = "documents") -> DataFrame:
+    """``dct`` (one row per term) with a broadcast hint while the
+    corpus sized by ``where``/``name`` (tables.gated_broadcast) is
+    under _VOCAB_BROADCAST_MAX_BYTES. Past it, with an unknown size,
+    or with broadcast disabled, the same plan joins on ``term``
+    through a shuffle — slower, never a driver OOM."""
+    return gated_broadcast(dct.sparkSession, where, name, dct,
+                           limit=_VOCAB_BROADCAST_MAX_BYTES)
 
 
 def tfidf_keywords(spark: SparkSession, sf: str) -> DataFrame:
@@ -1053,56 +1049,39 @@ def tfidf_keywords(spark: SparkSession, sf: str) -> DataFrame:
     engine-exact; rank on the ROUNDED score with a term tiebreak so the
     kept rows are deterministic).
 
-    Scale shape (r17, two regimes behind _term_dict_open — identical
-    integers either way, so the rounded scores and the oracle hash
-    never move):
-
-    - DICTIONARY regime (corpus under the gate): document frequency is
-      a broadcast (term, df) dictionary built from one row-local
-      corpus pass (explode array_distinct(toks) -> partially-
-      aggregated count — the exchange carries one row per term per map
-      task, not the tf table). tf then stays in SCAN partitioning all
-      the way to the top-k window, where a doc's rows are CONTIGUOUS
-      (they come off one explode), so the partial WindowGroupLimit
-      keeps exactly 3 rows/doc and the per-doc exchange ships 3
-      rows/doc instead of every (doc, term) row. The r14-r16 window
-      form shuffled the FULL tf table by term (vocab-skewed — hot
-      stopwords) and then shipped all of it again into the doc_id
-      exchange, where the partial limit barely filtered because each
-      doc's terms were spread over every term partition. Interleaved
-      best-of-3 at the 512x-docs corpus: 17.9 -> 13.6 s, and the same
-      change moves the unigram LM 19.6 -> 14.3 s (scripts/
-      ab_tfidf_dict_r17.py; exceptAll both ways = 0 at that scale,
-      vocabulary there 15,003 terms).
-    - WINDOW regime (past the gate / unknowable size): the r14-r16
-      shape — a term-partitioned window for df (no self-join, no
-      recomputed scan), vocab too big to broadcast, degrade to the
-      shuffle instead of dying.
-
-    The (doc,term) tf table is the ZERO-shuffle per-row run-length in
-    both regimes (_tf_from_toked, r14); the corpus-size scalar is a
-    1-row broadcast cross join (compute-once, q11 pattern), never a
-    driver collect; the ``rn <= 3`` filter compiles to
-    WindowGroupLimit in both regimes."""
+    Scale shape (r17): document frequency is a (term, df) dictionary
+    built from one row-local corpus pass (explode array_distinct(toks)
+    -> partially-aggregated count — the exchange carries one row per
+    term per map task, not the tf table) and joined to tf on term
+    through _vocab_broadcast. The tf table is the ZERO-shuffle per-row
+    run-length (_tf_from_toked, r14), so with the dictionary broadcast
+    tf stays in SCAN partitioning all the way to the top-k window,
+    where a doc's rows are CONTIGUOUS (they come off one explode): the
+    partial WindowGroupLimit keeps exactly 3 rows/doc and the per-doc
+    exchange ships 3 rows/doc instead of every (doc, term) row. The
+    r14-r16 term-partitioned df window shuffled the FULL tf table by
+    term (vocab-skewed) and then shipped all of it again; interleaved
+    best-of-3 at the 512x-docs corpus: 17.9 -> 13.6 s
+    (OPTIMIZATION_r17.md §4). Past the vocabulary limit the dictionary
+    join becomes a shuffle join on term — same integers, so the
+    rounded scores and the oracle hash never move. The corpus-size
+    scalar is a 1-row broadcast cross join (compute-once, q11
+    pattern), never a driver collect; ``rn <= 3`` compiles to
+    WindowGroupLimit."""
     docs = load(spark, sf, "documents")
     toked = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     tf = _tf_from_toked(toked)
     n_docs = docs.agg(F.count("*").alias("n_docs"))
-    if _term_dict_open(sf):
-        df_tbl = (toked.select(F.explode(F.array_distinct("toks"))
-                               .alias("term"))
-                  .groupBy("term").agg(F.count("*").alias("df")))
-        rel = tf.join(F.broadcast(df_tbl), "term")
-        df_val = F.col("df")
-    else:
-        rel = tf
-        df_val = F.count("*").over(Window.partitionBy("term"))
+    df_tbl = (toked.select(F.explode(F.array_distinct("toks"))
+                           .alias("term"))
+              .groupBy("term").agg(F.count("*").alias("df")))
     score = (
         F.col("tf")
-        * F.log2((F.col("n_docs") + F.lit(1.0)) / (df_val + F.lit(1.0)))
+        * F.log2((F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0)))
     ).cast("decimal(28,12)")
     scored = (
-        rel.join(F.broadcast(n_docs))
+        tf.join(_vocab_broadcast(df_tbl, sf), "term")
+        .join(F.broadcast(n_docs))
         .withColumn("tfidf", dround(score, 6))
     )
     topk = Window.partitionBy("doc_id").orderBy(
@@ -1141,16 +1120,10 @@ def doc_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     per-doc sum is order-independent and engine-exact, and perplexity
     = 2^bits is applied to the ALREADY-ROUNDED exponent.
 
-    Scale shape: same regimes as tf-idf (r17, _term_dict_open) — under
-    the gate the corpus count c is a broadcast (term, c) dictionary
-    from one row-local pass and the per-doc agg partial-aggregates in
-    scan partitioning (one corpus-sized exchange carrying one row per
-    doc); past it, the r14-r16 term-partitioned window (the LM is
-    never materialized driver-side). The total-token scalar is a 1-row
-    broadcast cross join computed map-side from token counts, not an
-    explode."""
+    Scale shape: _unigram_lm_per_doc — one plan at every corpus size,
+    the LM is never materialized driver-side."""
     docs = load(spark, sf, "documents")
-    per_doc = _unigram_lm_per_doc(docs, use_dict=_term_dict_open(sf))
+    per_doc = _unigram_lm_per_doc(docs, sf)
     xent = dround(
         F.col("sbits").cast("double") / F.col("n_tokens").cast("double"), 6)
     return per_doc.select(
@@ -1158,41 +1131,36 @@ def doc_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
         dround(F.pow(F.lit(2.0), xent), 4).alias("perplexity"))
 
 
-def _unigram_lm_per_doc(docs: DataFrame,
-                        use_dict: bool = False) -> DataFrame:
+def _unigram_lm_per_doc(docs: DataFrame, sf: str) -> DataFrame:
     """Per-doc unigram-LM tally (doc_id, n_tokens, sbits) — the chain
     shared by doc_lm_perplexity and perplexity_bucket_filter. sbits is
-    the DECIMAL(28,12)-routed sum of -tf*log2(c/total) per term. The
-    tf table is the zero-shuffle run-length (_tf_from_toked, r14).
+    the DECIMAL(28,12)-routed sum of -tf*log2(c/total) per term.
 
-    ``use_dict=True`` (r17, callers pass _term_dict_open's verdict)
-    sources the corpus term count c from a broadcast dictionary built
-    by one row-local corpus pass (explode toks -> partially-aggregated
-    count) instead of a term-partitioned window over tf: the window
-    shuffled the FULL tf table by term (vocab-skewed) and left the
-    per-doc groupBy re-shuffling from term partitioning; with the
-    dictionary, tf stays in scan partitioning where a doc's rows are
-    contiguous, so the groupBy partial-aggregates each doc to ONE row
-    before its exchange. Same exact c integers either way — bits and
-    the DECIMAL sums are bit-identical."""
+    Plan: the corpus term count c is a (term, c) dictionary from one
+    row-local pass (explode toks -> partially-aggregated count) joined
+    to the zero-shuffle tf run-length (_tf_from_toked, r14) through
+    _vocab_broadcast; broadcast, tf stays in scan partitioning where a
+    doc's rows are contiguous, so the per-doc groupBy partial-
+    aggregates each doc to ONE row before its exchange. The token
+    ``total`` is a 1-row aggregate over that same dictionary (sum of
+    c == sum of size(toks), the same integers), so it reuses the
+    dictionary's term exchange instead of paying a third scan and
+    tokenize: ``documents`` is read twice. Past the vocabulary limit
+    the dictionary join is a shuffle join on term; the total stays a
+    distributed aggregate at any vocabulary size."""
     toked = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     tf = _tf_from_toked(toked)
-    total = docs.agg(
-        F.sum(F.size(tokens(F.col("text")))).alias("total"))
-    if use_dict:
-        c_tbl = (toked.select(F.explode("toks").alias("term"))
-                 .groupBy("term").agg(F.count("*").alias("_c")))
-        tf = tf.join(F.broadcast(c_tbl), "term")
-        c_val = F.col("_c")
-    else:
-        c_val = F.sum("tf").over(Window.partitionBy("term"))
+    c_tbl = (toked.select(F.explode("toks").alias("term"))
+             .groupBy("term").agg(F.count("*").alias("_c")))
+    total = c_tbl.agg(F.sum("_c").alias("total"))
     bits = (
         -F.col("tf")
-        * F.log2(c_val.cast("double")
+        * F.log2(F.col("_c").cast("double")
                  / F.col("total").cast("double"))
     ).cast("decimal(28,12)")
     return (
-        tf.join(F.broadcast(total))
+        tf.join(_vocab_broadcast(c_tbl, sf), "term")
+        .join(F.broadcast(total))
         .withColumn("bits", bits)
         .groupBy("doc_id")
         .agg(F.sum("tf").alias("n_tokens"), F.sum("bits").alias("sbits"))
@@ -1402,10 +1370,10 @@ def source_token_kl(spark: SparkSession, sf: str) -> DataFrame:
     times a ratio of exact integer casts, DECIMAL(28,12)-routed before
     the per-source sum (log2-parity doctrine), output rounded to 6.
 
-    Scale shape: tf-idf's plan — one (source, term) groupBy off the
-    explode (map-side combined), a term-partitioned window for the
-    corpus count (the corpus LM is never a driver-side dict), then a
-    |sources|-row final agg."""
+    Scale shape: one (source, term) groupBy off the explode (map-side
+    combined), a term-partitioned window for the corpus count (the
+    corpus LM is never a driver-side dict), then a |sources|-row final
+    agg."""
     docs = load(spark, sf, "documents")
     st = (docs.select("source",
                       F.explode(tokens(F.col("text"))).alias("term"))
@@ -1479,13 +1447,15 @@ def bm25_retrieval(spark: SparkSession, sf: str,
     parenthesized doubles DECIMAL(28,12)-routed before the (query,
     doc) sum; the top-k rank has a total order.
 
-    Scale shape: one (doc, term) tf aggregate off the explode; the
-    query-term table is dictionary-sized and BROADCASTS into the tf
-    join (no corpus re-shuffle); df comes from a term-partitioned
-    window on the PRE-query-join slice ((doc, term) unique there, so
-    the window counts docs — after the query join it would
-    double-count shared terms); the rank<=k filter compiles to
-    WindowGroupLimit. Cost model: sum over query terms of |postings|.
+    Scale shape (_bm25_scored): the zero-shuffle tf run-length with
+    len_d riding each row; the query-term table is dictionary-sized
+    and BROADCASTS into the tf join (no corpus re-shuffle); df per
+    query term is a broadcast (term, df) dictionary from one row-local
+    pass over the distinct corpus tokens, filtered to query terms
+    (r17), so it stays query-vocabulary-sized at any corpus size; the
+    rank<=k filter compiles to WindowGroupLimit. Three corpus passes
+    (tf, df, stats) besides the query-term reads. Cost model: sum over
+    query terms of |postings|.
     ``query_stride`` bounds the query batch (doc_id % stride == 0;
     registry default 13 = the full prompt set) — the bench's 64x
     entry runs stride=1300 (~2k queries) on the ZIPFIAN fixture
@@ -1706,7 +1676,8 @@ BM25_SQL = bm25_sql()
 _BM25_MAX_POSTINGS = 256
 
 
-def _bm25_pruned_postings(toked: DataFrame, max_postings: int) -> DataFrame:
+def _bm25_pruned_postings(toked: DataFrame, max_postings: int,
+                          sf: str) -> DataFrame:
     """Impact-ordered static index pruning (Carmel et al. 2001; the
     WAND-family production answer to stopword postings): per TERM keep
     only the ``max_postings`` postings with the highest exact BM25
@@ -1728,9 +1699,10 @@ def _bm25_pruned_postings(toked: DataFrame, max_postings: int) -> DataFrame:
     gate (tests/test_selection_ops.py). This mirrors exactly why
     Lucene switched its formula.
 
-    Scale shape: tf + lens + one broadcast df dictionary; the
-    per-term top-M compiles to partial+final WindowGroupLimit, so the
-    map side discards past-M postings before the term shuffle — the
+    Scale shape: tf + lens + one df dictionary (broadcast while the
+    ``sf`` corpus is under the vocabulary limit); the per-term top-M
+    compiles to partial+final WindowGroupLimit, so the map side
+    discards past-M postings before the term shuffle — the
     window never materializes a stopword's full posting list.
 
     Split into the text pass (``_bm25_corpus_stats``) and the
@@ -1746,7 +1718,7 @@ def _bm25_pruned_postings(toked: DataFrame, max_postings: int) -> DataFrame:
     corpus-wide tf-to-lens SortMergeJoin — in-plan and over the
     artifact's stored tf alike."""
     tf, lens = _bm25_corpus_stats(toked)
-    return _bm25_prune_from_tf(tf, lens, max_postings)
+    return _bm25_prune_from_tf(tf, lens, max_postings, sf)
 
 
 def _bm25_corpus_stats(toked: DataFrame,
@@ -1765,13 +1737,17 @@ def _bm25_corpus_stats(toked: DataFrame,
 
 
 def _bm25_prune_from_tf(tf: DataFrame, lens: DataFrame,
-                        max_postings: int) -> DataFrame:
+                        max_postings: int, where: str,
+                        name: str | None = "documents") -> DataFrame:
     """The prune tail over raw (tf with len_d, lens): Lucene-idf
     contributions, 12-decimal rounding, per-term top-``max_postings``
     with the doc_id tiebreak — consumed by the in-plan query, the
     artifact build, and the artifact fold (all three produce
     bit-identical postings for the same raw tables). The 1-row stats
-    aggregate comes from lens (one row-local pass, no shuffle)."""
+    aggregate comes from lens (one row-local pass, no shuffle); the
+    vocabulary-sized df dictionary is hinted by _vocab_broadcast,
+    sized by the corpus at ``where``/``name`` (the lake documents
+    in-plan, the stored tf directory for the artifact writers)."""
     stats = lens.agg(
         F.count("*").alias("n_docs"),
         F.sum("len_d").alias("total_len"))
@@ -1794,7 +1770,7 @@ def _bm25_prune_from_tf(tf: DataFrame, lens: DataFrame,
         F.col("c").desc(), F.col("doc_id"))
     return (tf
             .join(F.broadcast(stats))
-            .join(F.broadcast(dfc), "term")
+            .join(_vocab_broadcast(dfc, where, name), "term")
             .withColumn("c", dround(contrib, 12))
             .withColumn("pr", F.row_number().over(wt))
             .filter(F.col("pr") <= max_postings)
@@ -1847,7 +1823,7 @@ def bm25_pruned_retrieval(spark: SparkSession, sf: str,
                 k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
             return postings_store.bm25_topk_served(
                 q_terms, spark, idx_dir, top_k=_BM25_TOP_K)
-    pruned = _bm25_pruned_postings(toked, max_postings)
+    pruned = _bm25_pruned_postings(toked, max_postings, sf)
     scored = (pruned.join(F.broadcast(q_terms), "term")
               .groupBy("query_id", "doc_id")
               .agg(F.sum(F.col("c").cast("decimal(28,12)")).alias("s")))
@@ -2013,7 +1989,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
                 .select("query_id", "doc_id",
                         F.col("rank").alias("rank_b")))
     if b_rank is None:
-        pruned = _bm25_pruned_postings(toked, _BM25_MAX_POSTINGS)
+        pruned = _bm25_pruned_postings(toked, _BM25_MAX_POSTINGS, sf)
         b_scored = (pruned.join(F.broadcast(q_terms), "term")
                     .groupBy("query_id", "doc_id")
                     .agg(F.sum(F.col("c").cast("decimal(28,12)"))
@@ -2621,8 +2597,11 @@ def perplexity_bucket_filter(spark: SparkSession, sf: str) -> DataFrame:
     cannot diverge), and F.percentile's linear interpolation is
     DuckDB's quantile_cont (the price_quartiles pair).
 
-    Scale shape: the LM chain's three shuffles + a 1-row cutoff agg
-    over the sample (broadcast back) + a stateless projection — the
+    Scale shape: the LM chain (_unigram_lm_per_doc: two corpus
+    passes, a partially-aggregated term exchange feeding the
+    dictionary and the token total, one per-doc exchange) + a 1-row
+    cutoff agg over the sample (broadcast back) + a stateless
+    projection — the
     full corpus never sorts globally and the percentile buffer holds
     only the sample.
 
@@ -2637,7 +2616,7 @@ def perplexity_bucket_filter(spark: SparkSession, sf: str) -> DataFrame:
     avoid, paid on every run for an edge only reachable on toy
     corpora."""
     docs = load(spark, sf, "documents")
-    per_doc = _unigram_lm_per_doc(docs, use_dict=_term_dict_open(sf))
+    per_doc = _unigram_lm_per_doc(docs, sf)
     xent = dround(
         F.col("sbits").cast("double") / F.col("n_tokens").cast("double"), 6)
     scored = per_doc.select(
@@ -3174,7 +3153,7 @@ def _corpus_fingerprint(sf: str):
     Driver-side stat only (same listing Spark's file index performs), so
     it's O(part files), not O(data). Walks part-file directories so
     nested/hive layouts fingerprint their CONTENTS, mirroring
-    tables.table_disk_bytes. Returns ``None`` on OSError (missing path,
+    tables.disk_bytes. Returns ``None`` on OSError (missing path,
     object store): missing paths still memoize consistently rather than
     raising before Spark gets the chance to report the real error."""
     p = os.path.join(sf, "documents.parquet")

@@ -103,12 +103,13 @@ def write_bm25_index(df: DataFrame, out: str, text_col: str,
         "n_docs": lens.count(),
     }
     spark = df.sparkSession
-    tf.repartition("term").write.mode("overwrite").parquet(
-        os.path.join(out, "tf"))
+    tf_dir = os.path.join(out, "tf")
+    tf.repartition("term").write.mode("overwrite").parquet(tf_dir)
     lens.write.mode("overwrite").parquet(os.path.join(out, "lens"))
-    tf_stored = spark.read.parquet(os.path.join(out, "tf"))
+    tf_stored = spark.read.parquet(tf_dir)
     lens_stored = spark.read.parquet(os.path.join(out, "lens"))
-    post = _bm25_prune_from_tf(tf_stored, lens_stored, max_postings)
+    post = _bm25_prune_from_tf(tf_stored, lens_stored, max_postings,
+                               tf_dir, None)
     post.repartition("term").write.mode("overwrite").parquet(
         os.path.join(out, "postings"))
     return artifacts.commit_meta(out, meta)
@@ -157,13 +158,13 @@ def fold_bm25_index(spark: SparkSession, base_dir: str,
     base_tf, base_lens = load_raw(spark, base_dir)
     tf = base_tf.unionByName(b_tf)
     lens = base_lens.unionByName(b_lens)
-    tf.repartition("term").write.mode("overwrite").parquet(
-        os.path.join(out, "tf"))
+    tf_dir = os.path.join(out, "tf")
+    tf.repartition("term").write.mode("overwrite").parquet(tf_dir)
     lens.write.mode("overwrite").parquet(os.path.join(out, "lens"))
-    tf_stored = spark.read.parquet(os.path.join(out, "tf"))
+    tf_stored = spark.read.parquet(tf_dir)
     lens_stored = spark.read.parquet(os.path.join(out, "lens"))
     post = _bm25_prune_from_tf(tf_stored, lens_stored,
-                               meta["max_postings"])
+                               meta["max_postings"], tf_dir, None)
     post.repartition("term").write.mode("overwrite").parquet(
         os.path.join(out, "postings"))
     return artifacts.commit_meta(out, dict(

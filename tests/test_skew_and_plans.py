@@ -321,63 +321,80 @@ def test_r17_pruned_inplan_no_lens_join(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_r17_tfidf_dict_regime_under_gate(spark):
-    """Under the _term_dict_open gate (sf0.01 is far under it),
-    document frequency is a BROADCAST dictionary: two broadcasts (the
-    1-row n_docs scalar + the (term, df) dictionary), no sort-merge /
-    cartesian, and tf flows to the top-k window in scan partitioning —
-    the only corpus-sized exchange is the per-doc one fed by a partial
+def _final_plan(spark, name):
+    """The final AQE plan of one registry query, after running it."""
+    df = REGISTRY[name][0](spark, SF_ORACLE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_tfidf_vocab_dict_broadcast_under_limit(spark):
+    """Under the vocabulary limit document frequency is a BROADCAST
+    (term, df) dictionary: two broadcasts (the 1-row n_docs scalar +
+    the dictionary), no sort-merge / cartesian, no term window — tf
+    flows to the top-k window in scan partitioning and the only
+    corpus-sized exchange is the per-doc one fed by a partial
     WindowGroupLimit (3 rows/doc)."""
     plan = _plan(spark, "tfidf_keywords")
     assert "WindowGroupLimit" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     assert plan.count("BroadcastExchange (") == 2
-    # the term-partitioned df window is gone in this regime
     assert "windowspecdefinition(term" not in plan
 
 
-def test_r17_tfidf_window_regime_past_gate(spark, monkeypatch):
-    """Past the gate (vocab too big to broadcast) the r14-r16 shape is
-    kept: df from a term-partitioned window, no self-join, exactly one
-    broadcast (the n_docs scalar) — degrade to shuffle, never OOM."""
-    monkeypatch.setenv("SC_SPARK_TERM_DICT_MAX_CORPUS_BYTES", "0")
-    plan = _plan(spark, "tfidf_keywords")
-    assert "WindowGroupLimit" in plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    assert plan.count("BroadcastExchange (") == 1
-    assert "windowspecdefinition(term" in plan
-
-
-def test_r17_lm_dict_regime_under_gate(spark):
-    """Under the gate the unigram LM is a broadcast (term, c)
-    dictionary: two broadcasts (total-tokens scalar + dictionary), no
-    sort-merge, and the per-doc aggregate partial-aggregates in scan
-    partitioning (no term window)."""
-    plan = _plan(spark, "doc_lm_perplexity")
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    assert plan.count("BroadcastExchange (") == 2
+def test_lm_vocab_dict_total_reuses_exchange(spark):
+    """The unigram LM's token total is a 1-row aggregate over the (term,
+    c) dictionary, so the final AQE plan REUSES the dictionary's term
+    exchange instead of scanning and tokenizing the corpus a third
+    time: documents is read twice (tf + dictionary), one
+    ReusedExchange, no sort-merge join."""
+    plan = _final_plan(spark, "doc_lm_perplexity")
+    assert len(re.findall(r"Scan parquet", plan)) == 2
+    assert plan.count("ReusedExchange") == 1
+    assert "SortMergeJoin" not in plan
     assert "windowspecdefinition(term" not in plan
 
 
-def test_r17_lm_window_regime_past_gate(spark, monkeypatch):
-    """Past the gate the LM stays a term-partitioned window — never
-    collected, never a second corpus scan joined back per token. Only
-    broadcast: the 1-row total-tokens scalar."""
-    monkeypatch.setenv("SC_SPARK_TERM_DICT_MAX_CORPUS_BYTES", "0")
-    plan = _plan(spark, "doc_lm_perplexity")
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    assert plan.count("BroadcastExchange (") == 1
-    assert "windowspecdefinition(term" in plan
+@pytest.fixture
+def past_vocab_limit(spark, monkeypatch):
+    """Corpus past the vocabulary limit AND broadcast off for the
+    session, so neither the gate nor AQE can broadcast a dictionary."""
+    from sc_crawler_spark.queries import pipeline
+
+    monkeypatch.setattr(pipeline, "_VOCAB_BROADCAST_MAX_BYTES", 0)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_r17_term_dict_regimes_bit_identical(spark, monkeypatch):
-    """The two regimes must return IDENTICAL rows (same df/c integers,
-    same DECIMAL routing) — the gate may only change the plan."""
-    dict_tfidf = _collect_sorted(spark, "tfidf_keywords")
-    dict_lm = _collect_sorted(spark, "doc_lm_perplexity")
-    monkeypatch.setenv("SC_SPARK_TERM_DICT_MAX_CORPUS_BYTES", "0")
-    assert _collect_sorted(spark, "tfidf_keywords") == dict_tfidf
-    assert _collect_sorted(spark, "doc_lm_perplexity") == dict_lm
+def test_vocab_dict_shuffle_join_past_limit(spark, past_vocab_limit):
+    """Past the limit the SAME plan runs unhinted: no dictionary is
+    broadcast (only the explicit 1-row scalars), and the dictionary
+    meets tf in a shuffle join on term — slower, never a driver OOM.
+    The BM25 prune's df dictionary goes through the same gate."""
+    for name, n_bx in (("tfidf_keywords", 1), ("doc_lm_perplexity", 1),
+                       ("bm25_pruned_retrieval", None)):
+        plan = _plan(spark, name)
+        if n_bx is not None:
+            assert plan.count("BroadcastExchange (") == n_bx, name
+        assert "CartesianProduct" not in plan, name
+        assert re.search(
+            r"(SortMergeJoin|ShuffledHashJoin)[^\n]*\n"
+            r"Left keys \[1\]: \[term#", plan), name
+
+
+@pytest.mark.parametrize("name", [
+    "tfidf_keywords", "doc_lm_perplexity", "perplexity_bucket_filter"])
+def test_vocab_dict_hinted_unhinted_bit_identical(spark, request, name):
+    """The vocabulary gate may only change the plan: the hinted and the
+    shuffle-join plans return IDENTICAL rows (same df/c integers, same
+    DECIMAL routing)."""
+    hinted = _collect_sorted(spark, name)
+    request.getfixturevalue("past_vocab_limit")
+    assert _collect_sorted(spark, name) == hinted
 
 
 def _collect_sorted(spark, name):
@@ -596,12 +613,15 @@ def test_r8_knn_classify_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_r8_gated_broadcast_unit_regimes(spark):
+def test_r8_gated_broadcast_unit_regimes(spark, tmp_path):
     """tables.gated_broadcast unit contract: hints under the session
     threshold, withholds past it, withholds when broadcast is disabled
     (-1), parses human-readable threshold spellings, and returns the
-    df unhinted for unknown (non-local) table sizes."""
-    from sc_crawler_spark.tables import gated_broadcast, load
+    df unhinted for unknown (non-local) table sizes. An explicit
+    ``limit`` replaces the threshold as the byte bound (still off under
+    -1), and ``name=None`` sizes a file or directory path directly."""
+    from sc_crawler_spark.tables import (
+        disk_bytes, gated_broadcast, load, table_disk_bytes)
 
     sf = SF_ORACLE
     df = load(spark, sf, "supplier")
@@ -624,6 +644,29 @@ def test_r8_gated_broadcast_unit_regimes(spark):
                        str(64 * 1024 * 1024))
         # unknown size (no such table file) -> no hint, no error
         assert not hinted(gated_broadcast(spark, "/nonexistent", "supplier", df))
+        # an explicit byte limit replaces the threshold as the bound ...
+        size = table_disk_bytes(sf, "supplier")
+        assert not hinted(gated_broadcast(spark, sf, "supplier", df,
+                                          limit=size))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+        assert hinted(gated_broadcast(spark, sf, "supplier", df,
+                                      limit=size + 1))
+        # ... but never re-enables a session with broadcast disabled
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert not hinted(gated_broadcast(spark, sf, "supplier", df,
+                                          limit=1 << 40))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(64 * 1024 * 1024))
+        # name=None sizes the path itself (an artifact's part-file dir)
+        path = str(tmp_path / "tf")
+        df.write.parquet(path)
+        dir_size = disk_bytes(path)
+        assert dir_size > 0
+        assert hinted(gated_broadcast(spark, path, None, df))
+        assert not hinted(gated_broadcast(spark, path, None, df,
+                                          limit=dir_size))
+        assert not hinted(gated_broadcast(spark, "/nonexistent/tf", None,
+                                          df, limit=1 << 40))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
