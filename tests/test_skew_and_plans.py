@@ -370,20 +370,37 @@ def past_vocab_limit(spark, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_vocab_dict_shuffle_join_past_limit(spark, past_vocab_limit):
-    """Past the limit the SAME plan runs unhinted: no dictionary is
-    broadcast (only the explicit 1-row scalars), and the dictionary
-    meets tf in a shuffle join on term — slower, never a driver OOM.
-    The BM25 prune's df dictionary goes through the same gate."""
-    for name, n_bx in (("tfidf_keywords", 1), ("doc_lm_perplexity", 1),
-                       ("bm25_pruned_retrieval", None)):
-        plan = _plan(spark, name)
-        if n_bx is not None:
-            assert plan.count("BroadcastExchange (") == n_bx, name
-        assert "CartesianProduct" not in plan, name
-        assert re.search(
-            r"(SortMergeJoin|ShuffledHashJoin)[^\n]*\n"
-            r"Left keys \[1\]: \[term#", plan), name
+def _assert_shuffle_join_on_term(plan):
+    assert "CartesianProduct" not in plan
+    assert re.search(
+        r"(SortMergeJoin|ShuffledHashJoin)[^\n]*\n"
+        r"Left keys \[1\]: \[term#", plan)
+
+
+def test_r17_tfidf_window_regime_past_gate(spark, past_vocab_limit):
+    """Past the gate tf-idf runs the SAME plan unhinted: the only
+    broadcast is the 1-row n_docs scalar, and the df dictionary meets
+    tf in a shuffle join on term — slower, never a driver OOM."""
+    plan = _plan(spark, "tfidf_keywords")
+    assert plan.count("BroadcastExchange (") == 1
+    assert "WindowGroupLimit" in plan
+    _assert_shuffle_join_on_term(plan)
+
+
+def test_r17_lm_window_regime_past_gate(spark, past_vocab_limit):
+    """Past the gate the unigram LM's (term, c) dictionary is never
+    collected: the only broadcast is the 1-row total-tokens scalar and
+    the dictionary meets tf in a shuffle join on term."""
+    plan = _plan(spark, "doc_lm_perplexity")
+    assert plan.count("BroadcastExchange (") == 1
+    _assert_shuffle_join_on_term(plan)
+
+
+def test_bm25_prune_vocab_dict_shuffle_join_past_limit(spark,
+                                                       past_vocab_limit):
+    """The BM25 prune's df dictionary goes through the same gate: past
+    it, a shuffle join on term instead of a broadcast."""
+    _assert_shuffle_join_on_term(_plan(spark, "bm25_pruned_retrieval"))
 
 
 @pytest.mark.parametrize("name", [
