@@ -442,6 +442,17 @@ def _mount_bucketed_facts(spark, s16_dir: str) -> dict:
     return facts
 
 
+def _timed(out: dict, key: str, build):
+    """``build`` wrapped to publish its own wall seconds as
+    ``out[key]`` — the artifact build only, not the digest or gate
+    that decide whether it runs (sinks/artifacts.ensure)."""
+    def run():
+        t0 = time.perf_counter()
+        build()
+        out[key] = round(time.perf_counter() - t0, 3)
+    return run
+
+
 def _duckdb_time(sql: str, sf_dir: str, reps: int = 2,
                  timeout_s: float | None = None) -> float:
     """Best-of-reps DuckDB wall time. With ``timeout_s``, each rep is
@@ -699,8 +710,8 @@ def main() -> None:
                 # PLANS.md r14. DuckDB replays the full CTE chain
                 # (index build included) — same asymmetry as
                 # doc_pagerank, documented.
-                from sc_crawler_spark.queries.pipeline import \
-                    bm25_pruned_sql
+                from sc_crawler_spark.queries.pipeline import (
+                    _BM25_B, _BM25_K1, bm25_pruned_sql)
                 from sc_crawler_spark.sinks import artifacts, postings_store
                 from sc_crawler_spark.tables import load as _bload
                 kw = {"query_stride": 1300}
@@ -709,18 +720,14 @@ def main() -> None:
                     "zipf_stride1300_M256_served"
                 bidx = os.path.join(s16_dir, "bm25_index")
                 bdocs = _bload(spark, qdir, "documents")
-                bdigest = postings_store.corpus_digest(
-                    bdocs, "text", "doc_id")
-                from sc_crawler_spark.queries.pipeline import (
-                    _BM25_B, _BM25_K1)
-                if not artifacts.gate(
-                        bidx, "bm25", bdigest, max_postings=256,
-                        k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
-                    t0 = time.perf_counter()
-                    postings_store.write_bm25_index(
-                        bdocs, bidx, "text", "doc_id", max_postings=256)
-                    scale["bm25_index_build_sec"] = round(
-                        time.perf_counter() - t0, 3)
+                artifacts.ensure(
+                    bidx, "bm25", bdocs, "text", "doc_id",
+                    _timed(scale, "bm25_index_build_sec",
+                           lambda: postings_store.write_bm25_index(
+                               bdocs, bidx, "text", "doc_id",
+                               max_postings=256)),
+                    max_postings=256, k1=_BM25_K1, b=_BM25_B,
+                    query_stride=13)
                 os.environ["SC_SPARK_BM25_INDEX_DIR"] = bidx
             if name == "hybrid_rrf_retrieval":
                 # r15 (r14 verdict task 1 — the weak-mark fix): BOTH
@@ -742,29 +749,23 @@ def main() -> None:
                     "served_postings+ivf"
                 hidx = os.path.join(s16_dir, "bm25_index_main")
                 hdocs = _bload(spark, qdir, "documents")
-                hdigest = postings_store.corpus_digest(
-                    hdocs, "text", "doc_id")
-                if not artifacts.gate(
-                        hidx, "bm25", hdigest, max_postings=256,
-                        k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
-                    t0 = time.perf_counter()
-                    postings_store.write_bm25_index(
-                        hdocs, hidx, "text", "doc_id",
-                        max_postings=256)
-                    scale["bm25_index_main_build_sec"] = round(
-                        time.perf_counter() - t0, 3)
+                artifacts.ensure(
+                    hidx, "bm25", hdocs, "text", "doc_id",
+                    _timed(scale, "bm25_index_main_build_sec",
+                           lambda: postings_store.write_bm25_index(
+                               hdocs, hidx, "text", "doc_id",
+                               max_postings=256)),
+                    max_postings=256, k1=_BM25_K1, b=_BM25_B,
+                    query_stride=13)
                 aidx = os.path.join(s16_dir, "ann_index")
                 hemb = _bload(spark, qdir, "embeddings")
-                adigest = ann_store.embedding_digest(
-                    hemb, "embedding", "vec_id")
-                if not artifacts.gate(
-                        aidx, "ivf", adigest, n_cells=8, iters=2)[0]:
-                    t0 = time.perf_counter()
-                    ann_store.write_ivf_index(
-                        hemb, aidx, "embedding", "vec_id",
-                        n_cells=8, iters=2)
-                    scale["hybrid_ann_index_build_sec"] = round(
-                        time.perf_counter() - t0, 3)
+                artifacts.ensure(
+                    aidx, "ivf", hemb, "embedding", "vec_id",
+                    _timed(scale, "hybrid_ann_index_build_sec",
+                           lambda: ann_store.write_ivf_index(
+                               hemb, aidx, "embedding", "vec_id",
+                               n_cells=8, iters=2)),
+                    n_cells=8, iters=2)
                 os.environ["SC_SPARK_BM25_INDEX_DIR"] = hidx
                 os.environ["SC_SPARK_ANN_INDEX_DIR"] = aidx
             if name == "embed_ann_ivf":
@@ -796,16 +797,13 @@ def main() -> None:
                     "x512_cells64_served_ivf_index"
                 aidx = os.path.join(qdir, "ann_index")
                 aemb = _bload(spark, qdir, "embeddings")
-                adigest = ann_store.embedding_digest(
-                    aemb, "embedding", "vec_id")
-                if not artifacts.gate(
-                        aidx, "ivf", adigest, n_cells=64, iters=2)[0]:
-                    t0 = time.perf_counter()
-                    ann_store.write_ivf_index(
-                        aemb, aidx, "embedding", "vec_id",
-                        n_cells=64, iters=2)
-                    scale["ann_index_build_sec"] = round(
-                        time.perf_counter() - t0, 3)
+                artifacts.ensure(
+                    aidx, "ivf", aemb, "embedding", "vec_id",
+                    _timed(scale, "ann_index_build_sec",
+                           lambda: ann_store.write_ivf_index(
+                               aemb, aidx, "embedding", "vec_id",
+                               n_cells=64, iters=2)),
+                    n_cells=64, iters=2)
                 os.environ["SC_SPARK_ANN_INDEX_DIR"] = aidx
             prerun = None
             if name == "doc_pagerank":
@@ -820,16 +818,12 @@ def main() -> None:
                 from sc_crawler_spark.sinks import artifacts, index_store
                 idx_dir = os.path.join(s16_dir, "dedup_index")
                 corpus = _docs_with_clones(spark, qdir)
-                digest = index_store.corpus_digest(corpus, "text",
-                                                   "doc_id")
-                if not artifacts.gate(
-                        idx_dir, "minhash", digest, k=3, n_hashes=8,
-                        band_rows=2, threshold=0.5)[0]:
-                    t0 = time.perf_counter()
-                    index_store.write_minhash_index(
-                        corpus, idx_dir, "text", "doc_id")
-                    scale["index_build_sec"] = round(
-                        time.perf_counter() - t0, 3)
+                artifacts.ensure(
+                    idx_dir, "minhash", corpus, "text", "doc_id",
+                    _timed(scale, "index_build_sec",
+                           lambda: index_store.write_minhash_index(
+                               corpus, idx_dir, "text", "doc_id")),
+                    k=3, n_hashes=8, band_rows=2, threshold=0.5)
                 os.environ["SC_SPARK_INDEX_DIR"] = idx_dir
                 prerun = _PAIR_MEMO.clear
             if use_bucketed:
@@ -1110,9 +1104,9 @@ def main() -> None:
                 # exactness gate: folded digest must equal the merge of
                 # the seed's digest with the batch digest computed
                 # directly from the batch text (partials == direct)
-                want = index_store.merge_digests([
+                want = artifacts.merge_digests([
                     seed_meta["digest"],
-                    index_store.corpus_digest(
+                    artifacts.corpus_digest(
                         spark.read.parquet(src), "text", "doc_id")])
                 got = artifacts.read_meta(folded)["digest"]
                 fc["digest_ok"] = bool(got == want)

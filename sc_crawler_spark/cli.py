@@ -1142,11 +1142,11 @@ def cmd_corpus(spark: SparkSession, lake: str, out: str,
     input-corpus digest, so a reader can prove which corpus + knobs
     produced the artifact."""
     from .queries.curation import emit_training_corpus
-    from .sinks import artifacts, index_store
+    from .sinks import artifacts
 
     artifacts.begin(out, "corpus")
     docs = _read_source(spark, lake, "documents")
-    digest = index_store.corpus_digest(
+    digest = artifacts.corpus_digest(
         docs.select("doc_id", "text"), "text", "doc_id")
     # Pass the RESOLVED source through: emit's default loader only
     # reads <lake>/documents.parquet, so on a snapshot-versioned lake
@@ -1185,22 +1185,19 @@ def cmd_index(spark: SparkSession, lake: str, out: str,
     from .sinks import artifacts, index_store
 
     df = _read_source(spark, lake, table).select(id_col, text_col)
-    digest = index_store.corpus_digest(df, text_col, id_col)
-    hit, why = (False, "force") if force else artifacts.gate(
-        out, "minhash", digest, k=k, n_hashes=n_hashes,
-        band_rows=band_rows, threshold=threshold, text_col=text_col,
-        id_col=id_col)
-    if hit:
-        n = spark.read.parquet(os.path.join(out, "pairs")).count()
-        print(f"index: reuse {out} digest={digest} pairs={n}")
-        return
-    print(f"index: rebuild ({why})")
-    index_store.write_minhash_index(df, out, text_col, id_col, k=k,
-                                    n_hashes=n_hashes,
-                                    band_rows=band_rows,
-                                    threshold=threshold)
+    why = artifacts.ensure(
+        out, "minhash", df, text_col, id_col,
+        lambda: index_store.write_minhash_index(
+            df, out, text_col, id_col, k=k, n_hashes=n_hashes,
+            band_rows=band_rows, threshold=threshold),
+        force=force, k=k, n_hashes=n_hashes, band_rows=band_rows,
+        threshold=threshold, text_col=text_col, id_col=id_col)
+    digest = artifacts.read_meta(out)["digest"]
     n = spark.read.parquet(os.path.join(out, "pairs")).count()
-    print(f"index: built {out} digest={digest} pairs={n}")
+    if why != "hit":
+        print(f"index: rebuild ({why})")
+    verb = "reuse" if why == "hit" else "built"
+    print(f"index: {verb} {out} digest={digest} pairs={n}")
 
 
 def cmd_index_fold(spark: SparkSession, base: str, stream_index: str,
@@ -1237,20 +1234,20 @@ def cmd_bm25_index(spark: SparkSession, lake: str, out: str,
     from .sinks import artifacts, postings_store
 
     df = _read_source(spark, lake, table).select(id_col, text_col)
-    digest = postings_store.corpus_digest(df, text_col, id_col)
-    hit, why = (False, "force") if force else artifacts.gate(
-        out, "bm25", digest, max_postings=max_postings,
-        text_col=text_col, id_col=id_col, k1=_BM25_K1, b=_BM25_B,
-        query_stride=query_stride)
-    if hit:
-        n = postings_store.load_postings(spark, out).count()
-        print(f"bm25index: reuse {out} digest={digest} postings={n}")
+    why = artifacts.ensure(
+        out, "bm25", df, text_col, id_col,
+        lambda: postings_store.write_bm25_index(
+            df, out, text_col, id_col, max_postings=max_postings,
+            query_stride=query_stride),
+        force=force, max_postings=max_postings, text_col=text_col,
+        id_col=id_col, k1=_BM25_K1, b=_BM25_B, query_stride=query_stride)
+    meta = artifacts.read_meta(out)
+    n = postings_store.load_postings(spark, out).count()
+    if why == "hit":
+        print(f"bm25index: reuse {out} digest={meta['digest']} "
+              f"postings={n}")
         return
     print(f"bm25index: rebuild ({why})")
-    meta = postings_store.write_bm25_index(df, out, text_col, id_col,
-                                           max_postings=max_postings,
-                                           query_stride=query_stride)
-    n = postings_store.load_postings(spark, out).count()
     print(f"bm25index: built {out} digest={meta['digest']} "
           f"postings={n} query_stride={meta['query_stride']} "
           f"indexed_docs={meta['n_docs']}")
@@ -1287,19 +1284,18 @@ def cmd_ann_index(spark: SparkSession, lake: str, out: str,
     from .sinks import ann_store, artifacts
 
     df = _read_source(spark, lake, table).select(id_col, vec_col)
-    digest = ann_store.embedding_digest(df, vec_col, id_col)
-    hit, why = (False, "force") if force else artifacts.gate(
-        out, "ivf", digest, n_cells=n_cells, iters=iters,
-        vec_col=vec_col, id_col=id_col)
-    if hit:
-        n = spark.read.parquet(os.path.join(out, "assign")).count()
-        print(f"annindex: reuse {out} digest={digest} vectors={n}")
-        return
-    print(f"annindex: rebuild ({why})")
-    meta = ann_store.write_ivf_index(df, out, vec_col, id_col,
-                                     n_cells=n_cells, iters=iters)
+    why = artifacts.ensure(
+        out, "ivf", df, vec_col, id_col,
+        lambda: ann_store.write_ivf_index(
+            df, out, vec_col, id_col, n_cells=n_cells, iters=iters),
+        force=force, n_cells=n_cells, iters=iters, vec_col=vec_col,
+        id_col=id_col)
+    digest = artifacts.read_meta(out)["digest"]
     n = spark.read.parquet(os.path.join(out, "assign")).count()
-    print(f"annindex: built {out} digest={meta['digest']} vectors={n}")
+    if why != "hit":
+        print(f"annindex: rebuild ({why})")
+    verb = "reuse" if why == "hit" else "built"
+    print(f"annindex: {verb} {out} digest={digest} vectors={n}")
 
 
 def cmd_ann_index_fold(spark: SparkSession, base: str, batch_lake: str,

@@ -63,20 +63,6 @@ def canonical_json_sha1_udf():
     return _sha1
 
 
-def canonical_struct_json(cols: list[str]) -> Column:
-    """Deterministic sorted-key JSON of the named columns — a NATIVE
-    canonical form for engine-internal use, NOT reference-parity:
-    Spark's ``to_json`` uses compact separators (no space after ':')
-    where Python's ``json.dumps`` inserts them, so digests of this
-    column never match a reference-produced ``jsoned_hash``. Use
-    :func:`canonical_json_sha1_udf` over a Python-formatted payload
-    where reference parity matters. ``ignoreNullFields`` is disabled so
-    a NULL field and an absent field stay distinguishable."""
-    ordered = sorted(cols)
-    return F.to_json(F.struct(*[F.col(c).alias(c) for c in ordered]),
-                     {"ignoreNullFields": "false"})
-
-
 def row_hash(cols: list[str], ignored: tuple[str, ...] = ("observed_at",)) -> Column:
     """Native, codegen-friendly content hash of the given columns.
 

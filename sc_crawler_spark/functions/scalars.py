@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 # Reference constants (utils.py:13-26; tables.py:263-283;
 # workload_profile_scores.py:372).
-HOURS_PER_MONTH = 730.0
 PRICE_DECIMALS = 4
 SCORE_SIG_FIGS = 3
 
@@ -40,25 +39,6 @@ def extract_last_number(col: Column) -> Column:
     """
     s = F.regexp_extract(col, r"([0-9]+\.?[0-9]*)[^0-9]*$", 1)
     return F.when(s != "", s.cast("double"))
-
-
-def monthly_to_hourly(price: Column) -> Column:
-    """Monthly price -> hourly (utils.py:13-14: 730 h/month)."""
-    return price / F.lit(HOURS_PER_MONTH)
-
-
-def hourly_to_monthly(price: Column) -> Column:
-    return price * F.lit(HOURS_PER_MONTH)
-
-
-def gib_to_gb(v: Column) -> Column:
-    """GiB -> GB (utils.py:211-214)."""
-    return v * F.lit(1.073741824)
-
-
-def mib_to_gb(v: Column) -> Column:
-    """MiB -> GB (utils.py:216-220)."""
-    return v * F.lit(1024 * 1024) / F.lit(1e9)
 
 
 def round_price(price: Column) -> Column:

@@ -52,15 +52,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.array_distinct(F.when(n < k, short_doc).otherwise(full))
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles of a document as an array<string>.
-
-    Convenience wrapper; for hot paths materialize the token array first
-    and use :func:`shingles_from_tokens` (see note there).
-    """
-    return shingles_from_tokens(tokens(text), k)
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of characters that are not [a-z0-9 ] (lowercased).
 
@@ -71,14 +62,6 @@ def punct_ratio(text: Column) -> Column:
     lower = F.lower(text)
     stripped = F.translate(lower, "abcdefghijklmnopqrstuvwxyz0123456789 ", "")
     return F.length(stripped) / F.length(lower)
-
-
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are common English stopwords."""
-    sw = stopwords or LANG_MARKERS["en"]
-    toks = tokens(text)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*sw)))
-    return hits / F.size(toks)
 
 
 def quality_score(text: Column, toks: Column | None = None) -> Column:

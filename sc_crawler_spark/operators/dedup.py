@@ -768,14 +768,6 @@ def _signatures_from_shingles(shingles: DataFrame, id_col: str,
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       k: int = 3, n_hashes: int = 8) -> DataFrame:
-    """(id, mh_0 .. mh_{n-1}): per-doc MinHash signature."""
-    return _signatures_from_shingles(
-        doc_shingles(df, text_col, id_col, k), id_col, n_hashes
-    )
-
-
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       k: int = 3, n_hashes: int = 8, band_rows: int = 2,
                       threshold: float = 0.6,

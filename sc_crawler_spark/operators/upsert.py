@@ -97,11 +97,3 @@ def scd2_append(history: DataFrame, changed: DataFrame) -> DataFrame:
     """SCD Type 2: append changed version rows; (pks + observed_at) is the
     history PK so this is a pure union (tables_scd.py:45-53)."""
     return history.unionByName(changed.select(*history.columns))
-
-
-def set_status_inactive(df: DataFrame, predicate) -> DataFrame:
-    """Soft-delete sweep (tables.py:256-260): status='inactive' where
-    predicate holds."""
-    return df.withColumn(
-        "status", F.when(predicate, F.lit("inactive")).otherwise(F.col("status"))
-    )

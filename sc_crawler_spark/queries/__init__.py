@@ -62,93 +62,24 @@ for mod in (tpch, lifecycle, pipeline, domain, extra, dims, curation):
 # rotate to the tail. After r8 greens, the oldest driver evidence is
 # the 29 r6 names past the cap -> they head the r9 window.
 _PRIORITY = [
-    # --- r17 rotation (r16 verdict task 1). Evidence ledger entering
-    # r17, from the r16 verdict's recomputed r1-r16 union: 50 names
-    # r16-fresh, 46 r15-fresh, 42 r14-fresh, 22 r13-stale, 5
-    # brand-new this round (retrieval_eval — the ranked-retrieval
-    # scoreboard, task 2; mmr_select — MMR diversity selection,
-    # task 8; ann_recall_eval — the ANN ladder's recall@5 as a
-    # driver-visible oracle row; corpus_diversity_stats — per-source
-    # type-token / distinct-bigram / entropy mode-collapse detectors;
-    # dedup_pair_eval — MinHash-LSH pair precision/recall vs the
-    # exact unblocked Jaccard truth). Window: the 22 r13-stale names
-    # FIRST (the staged head of the r16 _TAIL, keeping the promise
-    # that no name's driver evidence ages past 3 rounds), then the 9
-    # names whose CODE is new or changed this round — the five new
-    # entries; bm25_retrieval (Robertson -> Lucene idf after
-    # retrieval_eval exposed the negative-idf collapse);
-    # weighted_sample_docs (zero-length weight guard, ADVICE #2);
-    # hybrid_rrf_retrieval + contrastive_triplets (dense-arm serve
-    # probe 3 -> 4, task 3) — then the 19 stalest r14 greens. The 23
-    # remaining r14 names head _TAIL and rotate first in r18; after
-    # r17 greens no name's evidence is older than r14. ---
-    "benchmark_config_pk",
-    "config_tolerance_filter",
-    "dedup_boilerplate_chunks",
-    "dedup_embed_cosine",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_fingerprint",
-    "media_jpeg_color_stats",
-    "training_corpus_emit",
-    "doc_quality_lr_train",
-    "doc_quality_lr_apply",
-    "bpe_train_merges",
-    "bpe_tokenize_apply",
-    "doc_lm2_perplexity",
-    "doc_ngram_novelty",
-    "source_embed_similarity",
-    "bigram_pmi_top",
-    "lr_calibration_bins",
-    "source_token_kl",
-    "doc_oov_rate",
-    # new / code-changed this round (fresh evidence needed)
-    "retrieval_eval",
-    "mmr_select",
-    "ann_recall_eval",
-    "corpus_diversity_stats",
-    "dedup_pair_eval",
-    "bm25_retrieval",
-    "weighted_sample_docs",
-    "hybrid_rrf_retrieval",
-    "contrastive_triplets",
-    # one vocabulary-dictionary plan (term-window regime deleted; the
-    # LM total now reuses the dictionary's exchange) — these three push
-    # the last three stalest-r14 names below just past the 50 cap,
-    # where they rotate first next round
-    "tfidf_keywords",
-    "doc_lm_perplexity",
-    "perplexity_bucket_filter",
-    # stalest r14 greens (22 of 42)
-    "approx_heavy_hitters",
-    "cluster_balanced_sample",
-    "unimax_mixture_weights",
-    "dedup_edit_similarity",
-    "quality_quantile_normalize",
-    "dsir_select",
-    "doc_quality",
-    "doc_token_stats",
-    "ecpus_scalability",
-    "embed_ann_ivf",
-    "embed_cosine_topk",
-    "first_version_orders",
-    "hash_diff_sync",
-    "heavy_hitter_users",
-    "json_props_extract",
-    "merge_upsert_lifecycle",
-    "range_join_event_window",
-    "running_user_value",
-    "scd2_latest_event",
-]
-_TAIL = [
-    # The 23 r14-stale names left past the 50-slot cap
-    # (shuffled_sample_orders, standardize_part_names, and sync_stats
-    # displaced by the third through fifth new r17 entries:
-    # ann_recall_eval, corpus_diversity_stats, dedup_pair_eval) —
-    # they rotate FIRST in r18 (pytest re-runs their oracles every
-    # round meanwhile).
+    # --- r19 rotation. Evidence ledger entering r19 (CORRECTNESS_r16-
+    # r18 plus the r14/r15 files): the 23 names at the head of the old
+    # _TAIL were last green in r14 and the next 43 in r15; every name
+    # of the old 50-window except the three vocabulary-dictionary
+    # queries is r17/r18-green. Window: the 23 r14 names FIRST (no
+    # name's driver evidence ages past 3 rounds again), then the three
+    # names left just past the r18 cap, then the three queries whose
+    # code changed in r18 (one vocabulary-dictionary plan, no driver
+    # evidence since), then the 21 stalest r15 greens. The serve sites
+    # moved behind sinks/artifacts.serve this round, but the in-plan
+    # plans the driver runs (no env var set) are unchanged — the
+    # before/after dumps in plans/r19/ are identical for
+    # bm25_pruned_retrieval, hybrid_rrf_retrieval, contrastive_triplets,
+    # embed_ann_ivf, dedup_incremental_batch, doc_pagerank,
+    # dedup_canonical_by_rank and dedup_cluster_resolve — so those need
+    # no promotion for fresh evidence (the three graph queries are here
+    # for their r14 staleness alone). The 22 remaining r15 names head
+    # _TAIL and rotate first in r20. ---
     "shuffled_sample_orders",
     "standardize_part_names",
     "sync_stats",
@@ -172,7 +103,15 @@ _TAIL = [
     "domain_balanced_sample",
     "html_extract_text",
     "dedup_containment",
-    # r15-fresh (CORRECTNESS_r15 greens) — next-stalest.
+    # left past the r18 cap (r17/r18-green), promised this round
+    "range_join_event_window",
+    "running_user_value",
+    "scd2_latest_event",
+    # code changed in r18: one vocabulary-dictionary plan
+    "tfidf_keywords",
+    "doc_lm_perplexity",
+    "perplexity_bucket_filter",
+    # stalest r15 greens (21 of 43)
     "embed_ann_pq",
     "approx_median_price",
     "approx_distinct_users",
@@ -194,6 +133,10 @@ _TAIL = [
     "session_counts",
     "embed_ann_ivf_sq",
     "training_set_select",
+]
+_TAIL = [
+    # r15-fresh names past the 50-slot cap — they rotate FIRST in r20
+    # (pytest re-runs their oracles every round meanwhile).
     "q7_volume_shipping",
     "doc_repetition",
     "doc_pii_scrub",
@@ -216,9 +159,7 @@ _TAIL = [
     "anti_join_no_orders",
     "keep_last_dedup_lineitem",
     "except_building_buyers",
-    # r16-fresh (CORRECTNESS_r16 greens, minus this round's
-    # re-promoted code-changed names) — freshest evidence, deepest
-    # tail.
+    # r16-fresh (CORRECTNESS_r16 greens).
     "argmax_customer_per_nation",
     "media_jpeg_stats",
     "url_canonical_dedup",
@@ -265,6 +206,55 @@ _TAIL = [
     "pack_sequences_docs",
     "asof_latest_event_value",
     "benchmark_catalog_stats",
+    # r17/r18-fresh (the r17 and r18 windows, unchanged code) —
+    # freshest evidence, deepest tail.
+    "benchmark_config_pk",
+    "config_tolerance_filter",
+    "dedup_boilerplate_chunks",
+    "dedup_embed_cosine",
+    "dedup_exact_docs",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "doc_fingerprint",
+    "media_jpeg_color_stats",
+    "training_corpus_emit",
+    "doc_quality_lr_train",
+    "doc_quality_lr_apply",
+    "bpe_train_merges",
+    "bpe_tokenize_apply",
+    "doc_lm2_perplexity",
+    "doc_ngram_novelty",
+    "source_embed_similarity",
+    "bigram_pmi_top",
+    "lr_calibration_bins",
+    "source_token_kl",
+    "doc_oov_rate",
+    "retrieval_eval",
+    "mmr_select",
+    "ann_recall_eval",
+    "corpus_diversity_stats",
+    "dedup_pair_eval",
+    "bm25_retrieval",
+    "weighted_sample_docs",
+    "hybrid_rrf_retrieval",
+    "contrastive_triplets",
+    "approx_heavy_hitters",
+    "cluster_balanced_sample",
+    "unimax_mixture_weights",
+    "dedup_edit_similarity",
+    "quality_quantile_normalize",
+    "dsir_select",
+    "doc_quality",
+    "doc_token_stats",
+    "ecpus_scalability",
+    "embed_ann_ivf",
+    "embed_cosine_topk",
+    "first_version_orders",
+    "hash_diff_sync",
+    "heavy_hitter_users",
+    "json_props_extract",
+    "merge_upsert_lifecycle",
 ]
 REGISTRY = {
     n: REGISTRY[n]

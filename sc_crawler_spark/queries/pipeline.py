@@ -24,6 +24,7 @@ from ..functions.text import (
     LANG_MARKERS, punct_ratio, quality_score, rolling_fingerprint, tokens,
 )
 from ..operators import chunking, dedup, graph, similarity
+from ..sinks import artifacts
 from ..tables import gated_broadcast, load
 
 # ------------------------------------------------------------ corpus helpers
@@ -1806,23 +1807,19 @@ def bm25_pruned_retrieval(spark: SparkSession, sf: str,
     landing, so the served result is BIT-EQUAL to in-plan (pinned in
     tests) — unlike the IVF artifact there is no float caveat; the
     driver/oracle default (no env var) still runs fully in-plan."""
-    import os as _os
-
     docs = load(spark, sf, "documents")
     toked = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     q_terms = (toked.filter(F.col("doc_id") % query_stride == 0)
                .select(F.col("doc_id").alias("query_id"),
                        F.explode(F.array_distinct(
                            F.slice("toks", 1, 8))).alias("term")))
-    idx_dir = _os.environ.get("SC_SPARK_BM25_INDEX_DIR")
+    idx_dir, _ = artifacts.serve(
+        "bm25", docs, "text", "doc_id", max_postings=max_postings,
+        k1=_BM25_K1, b=_BM25_B, query_stride=13)
     if idx_dir:
-        from ..sinks import artifacts, postings_store
-        digest = postings_store.corpus_digest(docs, "text", "doc_id")
-        if artifacts.gate(
-                idx_dir, "bm25", digest, max_postings=max_postings,
-                k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
-            return postings_store.bm25_topk_served(
-                q_terms, spark, idx_dir, top_k=_BM25_TOP_K)
+        from ..sinks import postings_store
+        return postings_store.bm25_topk_served(
+            q_terms, spark, idx_dir, top_k=_BM25_TOP_K)
     pruned = _bm25_pruned_postings(toked, max_postings, sf)
     scored = (pruned.join(F.broadcast(q_terms), "term")
               .groupBy("query_id", "doc_id")
@@ -1964,8 +1961,6 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     against bounded postings (O(80 * M) rows, never Theta(corpus));
     the dense arm's probe is an equi-join on cell_id; fusion is a
     full-outer join of two (10 x 20)-row frames."""
-    import os as _os
-
     from ..operators import similarity
 
     docs = load(spark, sf, "documents")
@@ -1976,19 +1971,15 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
                .select(F.col("doc_id").alias("query_id"),
                        F.explode(F.array_distinct(
                            F.slice("toks", 1, 8))).alias("term")))
-    b_rank = None
-    bidx = _os.environ.get("SC_SPARK_BM25_INDEX_DIR")
+    bidx, _ = artifacts.serve(
+        "bm25", docs, "text", "doc_id", max_postings=_BM25_MAX_POSTINGS,
+        k1=_BM25_K1, b=_BM25_B, query_stride=13)
     if bidx:
-        from ..sinks import artifacts, postings_store
-        digest = postings_store.corpus_digest(docs, "text", "doc_id")
-        if artifacts.gate(
-                bidx, "bm25", digest, max_postings=_BM25_MAX_POSTINGS,
-                k1=_BM25_K1, b=_BM25_B, query_stride=13)[0]:
-            b_rank = (postings_store.bm25_topk_served(
-                q_terms, spark, bidx, top_k=_RRF_DEPTH)
-                .select("query_id", "doc_id",
-                        F.col("rank").alias("rank_b")))
-    if b_rank is None:
+        from ..sinks import postings_store
+        b_rank = (postings_store.bm25_topk_served(
+            q_terms, spark, bidx, top_k=_RRF_DEPTH)
+            .select("query_id", "doc_id", F.col("rank").alias("rank_b")))
+    else:
         pruned = _bm25_pruned_postings(toked, _BM25_MAX_POSTINGS, sf)
         b_scored = (pruned.join(F.broadcast(q_terms), "term")
                     .groupBy("query_id", "doc_id")
@@ -2002,36 +1993,30 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
                           F.col("rank_b").cast("long").alias("rank_b")))
     qv = emb.filter((F.col("vec_id") % 13 == 0) & (F.col("vec_id") < 130))
     cand = emb.filter(F.col("vec_id") % 13 != 0)
-    v_rank = None
-    aidx = _os.environ.get("SC_SPARK_ANN_INDEX_DIR")
+    # parameter-gate like every other serve — an artifact built at a
+    # different spec (e.g. the bench's 64-cell index) changes recall;
+    # a miss falls back to the exact in-plan arm instead of being
+    # silently probed.
+    aidx, _ = artifacts.serve("ivf", emb, "embedding", "vec_id",
+                              n_cells=_SERVE_IVF_N_CELLS,
+                              iters=_SERVE_IVF_ITERS)
     if aidx:
-        from ..sinks import ann_store, artifacts
-        adigest = ann_store.embedding_digest(emb, "embedding", "vec_id")
-        # parameter-gate like every other serve — an artifact built at
-        # a different spec (e.g. the bench's 64-cell index) changes
-        # recall; a miss falls back to the exact in-plan arm instead
-        # of being silently probed.
-        if artifacts.gate(aidx, "ivf", adigest,
-                          n_cells=_SERVE_IVF_N_CELLS,
-                          iters=_SERVE_IVF_ITERS)[0]:
-            cents, assigned = ann_store.load_ivf_index(spark, aidx)
-            # the artifact covers the FULL embedding corpus; the
-            # hybrid candidate set excludes query docs — filter the
-            # inverted lists BEFORE the probe join (cheap, and keeps
-            # each query's k candidates drawn from eligible docs)
-            v_rank = (similarity.ivf_probe_topk(
-                qv, cents,
-                assigned.filter(F.col("neighbor_id") % 13 != 0),
-                "embedding", "vec_id", k=_RRF_DEPTH,
-                n_probe=_SERVE_IVF_N_PROBE)
-                .select("query_id",
-                        F.col("neighbor_id").alias("doc_id"),
-                        F.col("rank").cast("long").alias("rank_v")))
-    if v_rank is None:
-        v_rank = (similarity.cosine_topk_bruteforce(
+        from ..sinks import ann_store
+        cents, assigned = ann_store.load_ivf_index(spark, aidx)
+        # the artifact covers the FULL embedding corpus; the hybrid
+        # candidate set excludes query docs — filter the inverted
+        # lists BEFORE the probe join (cheap, and keeps each query's
+        # k candidates drawn from eligible docs)
+        v_top = similarity.ivf_probe_topk(
+            qv, cents, assigned.filter(F.col("neighbor_id") % 13 != 0),
+            "embedding", "vec_id", k=_RRF_DEPTH,
+            n_probe=_SERVE_IVF_N_PROBE)
+    else:
+        v_top = similarity.cosine_topk_bruteforce(
             qv, cand, "embedding", "vec_id", k=_RRF_DEPTH)
-            .select("query_id", F.col("neighbor_id").alias("doc_id"),
-                    F.col("rank").cast("long").alias("rank_v")))
+    v_rank = v_top.select(
+        "query_id", F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").cast("long").alias("rank_v"))
     fused = b_rank.join(v_rank, ["query_id", "doc_id"], "full_outer")
     arm = lambda r: F.when(  # noqa: E731
         F.col(r).isNotNull(),
@@ -2384,30 +2369,23 @@ def contrastive_triplets(spark: SparkSession, sf: str) -> DataFrame:
     opt-in production serve; driver/oracle runs stay exact in-plan),
     making the triplet query production-shaped END-TO-END: bounded
     negative window + cell-pruned positive mining."""
-    import os as _os
-
     from ..operators import similarity
 
     emb = load(spark, sf, "embeddings")
     qv = emb.filter((F.col("vec_id") % 13 == 0) & (F.col("vec_id") < 130))
     cand = emb.filter(F.col("vec_id") % 13 != 0)
-    top = None
-    aidx = _os.environ.get("SC_SPARK_ANN_INDEX_DIR")
+    # same parameter gate as hybrid_rrf_retrieval — a wrong-spec
+    # artifact falls back to the exact in-plan arm.
+    aidx, _ = artifacts.serve("ivf", emb, "embedding", "vec_id",
+                              n_cells=_SERVE_IVF_N_CELLS,
+                              iters=_SERVE_IVF_ITERS)
     if aidx:
-        from ..sinks import ann_store, artifacts
-        adigest = ann_store.embedding_digest(emb, "embedding", "vec_id")
-        # same parameter gate as hybrid_rrf_retrieval — a wrong-spec
-        # artifact falls back to the exact in-plan arm.
-        if artifacts.gate(aidx, "ivf", adigest,
-                          n_cells=_SERVE_IVF_N_CELLS,
-                          iters=_SERVE_IVF_ITERS)[0]:
-            cents, assigned = ann_store.load_ivf_index(spark, aidx)
-            top = similarity.ivf_probe_topk(
-                qv, cents,
-                assigned.filter(F.col("neighbor_id") % 13 != 0),
-                "embedding", "vec_id", k=20,
-                n_probe=_SERVE_IVF_N_PROBE)
-    if top is None:
+        from ..sinks import ann_store
+        cents, assigned = ann_store.load_ivf_index(spark, aidx)
+        top = similarity.ivf_probe_topk(
+            qv, cents, assigned.filter(F.col("neighbor_id") % 13 != 0),
+            "embedding", "vec_id", k=20, n_probe=_SERVE_IVF_N_PROBE)
+    else:
         top = similarity.cosine_topk_bruteforce(
             qv, cand, "embedding", "vec_id", k=20)
     pos = (top.filter(F.col("rank") == 1)
@@ -3211,15 +3189,13 @@ def _lsh_pair_graph(spark: SparkSession, sf: str) -> DataFrame:
             stale.unpersist()
             del per_session[stale_key]
     corpus = _docs_with_clones(spark, sf)
-    pairs = None
-    idx_dir = os.environ.get("SC_SPARK_INDEX_DIR")
+    idx_dir, _ = artifacts.serve("minhash", corpus, "text", "doc_id",
+                                 k=3, n_hashes=8, band_rows=2,
+                                 threshold=0.5)
     if idx_dir:
-        from ..sinks import artifacts, index_store
-        digest = index_store.corpus_digest(corpus, "text", "doc_id")
-        if artifacts.gate(idx_dir, "minhash", digest, k=3, n_hashes=8,
-                          band_rows=2, threshold=0.5)[0]:
-            pairs = index_store.load_pair_graph(spark, idx_dir)
-    if pairs is None:
+        from ..sinks import index_store
+        pairs = index_store.load_pair_graph(spark, idx_dir)
+    else:
         pairs = dedup.minhash_lsh_pairs(
             corpus, "text", "doc_id", k=3, n_hashes=8, band_rows=2,
             threshold=0.5)
@@ -3247,15 +3223,14 @@ def dedup_incremental_batch(spark: SparkSession, sf: str) -> DataFrame:
     corpus = _docs_with_clones(spark, sf)
     new = corpus.filter(F.col("doc_id") % 7 == 0)
     base = corpus.filter(F.col("doc_id") % 7 != 0)
-    idx = None
-    idx_dir = os.environ.get("SC_SPARK_INDEX_DIR")
+    # gates k/n_hashes only: the stored shingles/signatures do not
+    # depend on the band or threshold dials
+    idx_dir, _ = artifacts.serve("minhash", base, "text", "doc_id", k=3,
+                                 n_hashes=8)
     if idx_dir:
-        from ..sinks import artifacts, index_store
-        digest = index_store.corpus_digest(base, "text", "doc_id")
-        if artifacts.gate(idx_dir, "minhash", digest, k=3,
-                          n_hashes=8)[0]:
-            idx = index_store.load_minhash_index(spark, idx_dir)
-    if idx is None:
+        from ..sinks import index_store
+        idx = index_store.load_minhash_index(spark, idx_dir)
+    else:
         idx = dedup.minhash_index(base, "text", "doc_id", k=3,
                                   n_hashes=8)
     return dedup.incremental_minhash_pairs(
@@ -3817,19 +3792,15 @@ def embed_ann_ivf(spark: SparkSession, sf: str, n_cells: int = 8,
     ``iters`` only gates the artifact (the in-plan form is the
     seeded-centroid chain the oracle replays; the artifact's Lloyd
     refinement is part of the documented serve approximation)."""
-    import os as _os
-
     emb = load(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    idx_dir = _os.environ.get("SC_SPARK_ANN_INDEX_DIR")
+    idx_dir, _ = artifacts.serve("ivf", emb, "embedding", "vec_id",
+                                 n_cells=n_cells, iters=iters)
     if idx_dir:
-        from ..sinks import ann_store, artifacts
-        digest = ann_store.embedding_digest(emb, "embedding", "vec_id")
-        if artifacts.gate(idx_dir, "ivf", digest,
-                          n_cells=n_cells, iters=iters)[0]:
-            return ann_store.cosine_topk_served(
-                queries, spark, idx_dir, "embedding", "vec_id",
-                k=5, n_probe=n_probe)
+        from ..sinks import ann_store
+        return ann_store.cosine_topk_served(
+            queries, spark, idx_dir, "embedding", "vec_id",
+            k=5, n_probe=n_probe)
     return similarity.cosine_topk_ivf(
         queries, emb, "embedding", "vec_id", k=5, n_cells=n_cells,
         n_probe=n_probe

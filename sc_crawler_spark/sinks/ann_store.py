@@ -5,10 +5,13 @@ structures IN-PLAN, which is self-contained and oracle-checkable but
 re-pays centroid training + cell assignment in every session that
 retrieves. This store lands the trained structure bronze — exactly the
 multi-session pattern the minhash dedup index established
-(sinks/index_store.py): the artifact is keyed by an order-independent
+(sinks/index_store.py): the artifact is keyed by the order-independent
 content digest of the exact (id, vector) corpus it was built from plus
-its build parameters, and the meta commit and gate are
-sinks/artifacts.py's: any gate miss means rebuild, never silent reuse.
+its build parameters. The digest, meta commit and gate are
+sinks/artifacts.py's — artifacts.corpus_digest hashes the ARRAY column
+directly (xxhash64 folds over the elements; rendering each vector to a
+string first made the digest scan cost more than the probe it gates,
+PLANS.md r15) — and any gate miss means rebuild, never silent reuse.
 
 Layout under one artifact root::
 
@@ -48,25 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import artifacts
-from .index_store import corpus_digest
-
-
-def embedding_digest(df: DataFrame, vec_col: str, id_col: str) -> str:
-    """Order-independent digest of an (id, vector) corpus — the same
-    ``bit_xor(xxhash64(id, vec)) _ count`` fold as
-    index_store.corpus_digest, hashing the ARRAY column directly
-    (xxhash64 folds over the elements). r15: the original form
-    rendered every vector to its canonical string first, which at a
-    1M x 64-dim corpus made the digest scan cost MORE than the probe
-    it was gating (~7 s of the 14.6 s served run in BENCH_r15's first
-    validation); hashing the raw floats cuts the gate to a plain
-    columnar scan. Format-compatible with merge_digests."""
-    row = df.agg(
-        F.coalesce(
-            F.expr(f"bit_xor(xxhash64({id_col}, {vec_col}))"),
-            F.lit(0).cast("long")).alias("d"),
-        F.count("*").alias("n")).first()
-    return f"{row['d']}_{row['n']}"
 
 
 def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
@@ -80,7 +64,7 @@ def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
     centroids, and meta commits last."""
     artifacts.begin(out, "ivf")
     return _build_ivf(df, out, vec_col, id_col, n_cells, iters,
-                      embedding_digest(df, vec_col, id_col))
+                      artifacts.corpus_digest(df, vec_col, id_col))
 
 
 def _build_ivf(df: DataFrame, out: str, vec_col: str, id_col: str,
@@ -168,11 +152,10 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
     their indexes. Batch ids must be disjoint from the base corpus.
     ``out`` must be a new directory; meta commits LAST."""
     from ..operators.similarity import as_double, ivf_assign, norm
-    from .index_store import merge_digests
 
     meta = artifacts.begin(out, "ivf", base_dir)
     vec_col, id_col = meta["vec_col"], meta["id_col"]
-    batch_digest = embedding_digest(batch, vec_col, id_col)
+    batch_digest = artifacts.corpus_digest(batch, vec_col, id_col)
     cents, base_assigned = load_ivf_index(spark, base_dir)
     c = batch.select(F.col(id_col).alias("neighbor_id"),
                      as_double(F.col(vec_col)).alias("cv"))
@@ -184,7 +167,8 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
      .repartition("cell_id")
      .write.mode("overwrite").parquet(os.path.join(out, "assign")))
     folded = dict(meta,
-                  digest=merge_digests([meta["digest"], batch_digest]),
+                  digest=artifacts.merge_digests(
+                      [meta["digest"], batch_digest]),
                   n_vecs=meta["n_vecs"] + batch.count())
     # post-fold health over the FOLDED lists (r16 drift trip-wire):
     # baseline_* preserves the BUILD-time numbers the current stats

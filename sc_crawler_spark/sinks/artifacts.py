@@ -1,6 +1,15 @@
 """The lifecycle of the three digest-keyed index artifacts (MinHash
-dedup, pruned BM25 postings, IVF ANN): one meta commit, one gate, one
-retention pass.
+dedup, pruned BM25 postings, IVF ANN): one corpus digest, one meta
+commit, one gate, one serve/ensure decision, one retention pass.
+
+The digest keys an artifact to the exact corpus it was built from:
+:func:`corpus_digest` is ``bit_xor(xxhash64(id, col)) _ count`` over
+the (id, text) or (id, vector) corpus — order-independent, one
+column-pruned scan, O(1) aggregation state. An empty corpus digests to
+``"0_0"`` (the xor identity), and :func:`merge_digests` combines the
+digests of disjoint corpora into their union's, which is what lets the
+streaming partials and every fold prove the union without re-reading
+text.
 
 An artifact is a directory of parquet tables plus ``_META.json``, and
 the meta is the commit record. Every builder and fold runs the same
@@ -21,7 +30,10 @@ build), ``kind`` (another store's artifact), ``format`` (written under
 another ``FORMAT``), ``digest`` (built from another corpus) or
 ``param:<name>`` (a requested build parameter is missing or differs).
 Artifacts are derived data, so any miss means rebuild, never a
-compatibility shim.
+compatibility shim. The two callers of the gate are :func:`serve`
+(a query: the artifact dir comes from the kind's env var in ``ENV``,
+and an unset var is the reason ``unset``, decided without a scan) and
+:func:`ensure` (a builder: reuse on a hit, else build).
 
 Retention: :func:`list_artifacts` walks a root for complete artifacts,
 :func:`prune` keeps the newest ``keep`` per kind and deletes the rest
@@ -36,12 +48,52 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 META_NAME = "_META.json"
 # bump when any store's on-disk tables change shape: every older
 # artifact then misses the gate with reason "format" and rebuilds
 FORMAT = 1
-KINDS = ("minhash", "bm25", "ivf")
+# the env var each kind's query-side consumers read the artifact dir from
+ENV = {"minhash": "SC_SPARK_INDEX_DIR", "bm25": "SC_SPARK_BM25_INDEX_DIR",
+       "ivf": "SC_SPARK_ANN_INDEX_DIR"}
+KINDS = tuple(ENV)
+
+
+def digest_cols(col: str, id_col: str) -> list[Column]:
+    """The two aggregates of a corpus digest: ``d`` (the xor of every
+    row's ``xxhash64(id, col)``, 0 over no rows) and ``n`` (the row
+    count — xor alone would miss duplicated rows canceling out).
+    xxhash64 of an array column folds over its elements."""
+    return [F.coalesce(F.expr(f"bit_xor(xxhash64({id_col}, {col}))"),
+                       F.lit(0).cast("long")).alias("d"),
+            F.count("*").alias("n")]
+
+
+def corpus_digest(df: DataFrame, col: str, id_col: str) -> str:
+    """Order-independent content digest ``<d>_<n>`` of an (id, col)
+    corpus: the same rows in any partitioning or arrival order digest
+    identically."""
+    row = df.agg(*digest_cols(col, id_col)).first()
+    return f"{row['d']}_{row['n']}"
+
+
+def merge_digests(digests: list[str]) -> str:
+    """The digest of the union of DISJOINT corpora from theirs — exact,
+    no text needed: xor and count both merge."""
+    xor, n = 0, 0
+    for d in digests:
+        x, _, c = d.rpartition("_")
+        xor ^= int(x)
+        n += int(c)
+    # wrap to Spark's signed 64-bit bit_xor convention
+    xor &= (1 << 64) - 1
+    if xor >= 1 << 63:
+        xor -= 1 << 64
+    return f"{xor}_{n}"
 
 
 def read_meta(path: str) -> dict | None:
@@ -87,6 +139,35 @@ def gate(path: str, kind: str, digest: str | None = None,
         if k not in meta or meta[k] != v:
             return False, f"param:{k}"
     return True, "hit"
+
+
+def serve(kind: str, df: DataFrame, col: str, id_col: str, /,
+          **params) -> tuple[str | None, str]:
+    """Which ``kind`` artifact serves the corpus ``df``: ``(path,
+    "hit")`` when the dir named by the kind's env var passes the gate
+    for ``df``'s digest and ``params``, else ``(None, reason)`` — with
+    reason ``unset`` (and no scan of ``df``) when the var is unset, or
+    the gate's miss reason. On None the caller computes in-plan."""
+    path = os.environ.get(ENV[kind])
+    if not path:
+        return None, "unset"
+    hit, why = gate(path, kind, corpus_digest(df, col, id_col), **params)
+    return (path if hit else None), why
+
+
+def ensure(out: str, kind: str, df: DataFrame, col: str, id_col: str,
+           build: Callable[[], object], /, force: bool = False,
+           **params) -> str:
+    """Make ``out`` hold the ``kind`` artifact of ``df`` under
+    ``params``: reuse it on a gate hit (returns ``"hit"``), else run
+    ``build()`` and return why — ``"force"`` (no digest computed) or
+    the gate's miss reason. The leading arguments are positional-only,
+    so ``params`` may gate on meta keys named ``id_col`` and the like."""
+    why = "force" if force else gate(
+        out, kind, corpus_digest(df, col, id_col), **params)[1]
+    if why != "hit":
+        build()
+    return why
 
 
 def begin(out: str, kind: str, *inputs: str) -> dict | None:

@@ -4,11 +4,12 @@
 A 100 TB corpus is shingled and signed ONCE; every later session —
 incremental daily batches, cluster resolution, PageRank canonicalization
 — reads the landed index instead of re-hashing the corpus. The artifact
-is keyed by an order-independent content digest of the exact (id, text)
-corpus it was built from, so a reader can prove the index still
-describes the corpus in front of it before trusting a single pair.
-The meta commit and the gate are sinks/artifacts.py's, shared by all
-three stores: the gate reports why it missed (absent / kind / format /
+is keyed by the order-independent content digest of the exact (id, text)
+corpus it was built from (artifacts.corpus_digest), so a reader can
+prove the index still describes the corpus in front of it before
+trusting a single pair. The digest, the meta commit, the gate and the
+serve/ensure decision are sinks/artifacts.py's, shared by all three
+stores: the gate reports why it missed (absent / kind / format /
 digest / param:<name>), and any miss means rebuild, never silent reuse.
 
 Layout under ``<out>/``::
@@ -39,21 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import artifacts
-# re-exported for callers that read an index's meta through this module
+# re-exported: callers (and the perfbench trace) reach the digest and
+# the meta through this module
+from .artifacts import corpus_digest, merge_digests
 from .artifacts import read_meta as read_index_meta  # noqa: F401
-
-
-def corpus_digest(df: DataFrame, text_col: str, id_col: str) -> str:
-    """Order-independent content digest of an (id, text) corpus:
-    ``bit_xor(xxhash64(id, text))`` plus the row count (xor alone would
-    miss duplicated rows canceling out). One column-pruned scan, fixed
-    aggregation state — O(1) memory at any corpus size, and the same
-    rows in any partitioning or arrival order digest identically."""
-    row = df.select(
-        F.expr(f"bit_xor(xxhash64({id_col}, {text_col}))").alias("d"),
-        F.count("*").alias("n"),
-    ).first()
-    return f"{row['d']}_{row['n']}"
 
 
 def write_minhash_index(df: DataFrame, out: str, text_col: str,
@@ -106,25 +96,6 @@ def write_minhash_index(df: DataFrame, out: str, text_col: str,
                                       threshold)
     pairs.write.mode("overwrite").parquet(os.path.join(out, "pairs"))
     return artifacts.commit_meta(out, meta)
-
-
-def merge_digests(digests: list[str]) -> str:
-    """Combine corpus digests of DISJOINT corpora into the digest of
-    their union — exact by construction, no text needed: the digest is
-    ``bit_xor(xxhash64(id, text)) _ count``, and xor/sum are both
-    associative-commutative-mergeable. This is what makes the streamed
-    index FOLDABLE: each micro-batch lands its own partial digest and
-    the fold proves the union without re-reading one byte of text."""
-    xor, n = 0, 0
-    for d in digests:
-        x, _, c = d.rpartition("_")
-        xor ^= int(x)
-        n += int(c)
-    # wrap to Spark's signed 64-bit bit_xor convention
-    xor &= (1 << 64) - 1
-    if xor >= 1 << 63:
-        xor -= 1 << 64
-    return f"{xor}_{n}"
 
 
 def fold_minhash_index(spark: SparkSession, base_dir: str,

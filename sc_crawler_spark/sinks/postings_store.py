@@ -6,10 +6,10 @@ df, per-term top-M impact pruning — every session (measured 57-62 s of
 the ~70 s total at the 512x Zipfian corpus; PLANS.md r14). This store
 lands the pruned postings bronze with the index_store/ann_store
 doctrine: keyed by the order-independent content digest of the exact
-(id, text) corpus plus build parameters; the meta commit and the gate
-are sinks/artifacts.py's (one ``FORMAT`` integer; a miss names its
-reason — absent / kind / format / digest / param:<name> — and means
-in-plan rebuild, never silent reuse).
+(id, text) corpus plus build parameters; the digest, meta commit and
+gate are sinks/artifacts.py's (artifacts.corpus_digest; one ``FORMAT``
+integer; a miss names its reason — absent / kind / format / digest /
+param:<name> — and means in-plan rebuild, never silent reuse).
 
 Layout::
 
@@ -49,7 +49,7 @@ EXACT: idf and avgdl are global, so adding documents changes every
 existing posting's contribution and can reorder any term's top-M; the
 folded artifact is therefore bit-equal to a one-shot build over
 base ∪ batch (pinned in tests), and its digest is the partial-merged
-union digest (index_store.merge_digests), provable without re-reading
+union digest (artifacts.merge_digests), provable without re-reading
 base text.
 """
 
@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import dround
 from . import artifacts
-from .index_store import corpus_digest
 
 
 def write_bm25_index(df: DataFrame, out: str, text_col: str,
@@ -88,7 +87,7 @@ def write_bm25_index(df: DataFrame, out: str, text_col: str,
             f"query_stride must be >= 2 or None (got {query_stride}); "
             "None indexes every document")
     artifacts.begin(out, "bm25")
-    digest = corpus_digest(df, text_col, id_col)
+    digest = artifacts.corpus_digest(df, text_col, id_col)
     toked = df.select(F.col(id_col).alias("doc_id"),
                       tokens(F.col(text_col)).alias("toks"))
     tf, lens = _bm25_corpus_stats(toked, query_stride=query_stride)
@@ -144,11 +143,10 @@ def fold_bm25_index(spark: SparkSession, base_dir: str,
     writing); the base must pass the kind/format gate."""
     from ..queries.pipeline import (
         _bm25_corpus_stats, _bm25_prune_from_tf, tokens)
-    from .index_store import merge_digests
 
     meta = artifacts.begin(out, "bm25", base_dir)
     text_col, id_col = meta["text_col"], meta["id_col"]
-    batch_digest = corpus_digest(batch, text_col, id_col)
+    batch_digest = artifacts.corpus_digest(batch, text_col, id_col)
     toked = batch.select(F.col(id_col).alias("doc_id"),
                          tokens(F.col(text_col)).alias("toks"))
     # the batch inherits the artifact's recorded query-doc stride — a
@@ -168,7 +166,8 @@ def fold_bm25_index(spark: SparkSession, base_dir: str,
     post.repartition("term").write.mode("overwrite").parquet(
         os.path.join(out, "postings"))
     return artifacts.commit_meta(out, dict(
-        meta, digest=merge_digests([meta["digest"], batch_digest]),
+        meta, digest=artifacts.merge_digests(
+            [meta["digest"], batch_digest]),
         n_docs=lens_stored.count()))
 
 

@@ -70,12 +70,6 @@ def parse_upcloud_plan(name: Column) -> Column:
     )
 
 
-def is_spot_sku(sku_name: Column) -> Column:
-    """Azure retail-price classifier (_azure.py:611-632): '... Spot' SKUs
-    are spot allocation; '... Low Priority' rows are dropped upstream."""
-    return sku_name.endswith(" Spot")
-
-
 def azure_residual_filters(df, meter_col: str = "meterName",
                            product_col: str = "productName",
                            price_col: str = "retailPrice"):

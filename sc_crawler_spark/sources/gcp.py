@@ -54,12 +54,6 @@ def derive_server_prices(servers: DataFrame, rates: DataFrame,
     )
 
 
-def sku_rate_from_pricing_info(units_col: str = "units",
-                               nanos_col: str = "nanos") -> F.Column:
-    """Billing-SKU unit price: units + nanos/1e9 (_gcp.py tiered_rates)."""
-    return F.col(units_col).cast("double") + F.col(nanos_col) / F.lit(1e9)
-
-
 def stack_premium_rates(rates: DataFrame, base_family: str = "m1",
                         premium_family: str = "m2") -> DataFrame:
     """m2 SKU prices are PREMIUMS on top of m1 (_gcp.py:274-284): for the

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from ..sinks import artifacts
+
 EVENT_SCHEMA = StructType([
     StructField("event_id", LongType()),
     StructField("ts", LongType()),        # ns epoch in the lake files
@@ -264,7 +266,6 @@ def _validate_seed_index(seed_index_dir: str | None, k: int,
     incomparable signatures."""
     if seed_index_dir is None:
         return
-    from ..sinks import artifacts
     want = dict(k=k, n_hashes=n_hashes, text_col=text_col,
                 id_col=id_col)
     hit, why = artifacts.gate(seed_index_dir, "minhash", **want)
@@ -348,17 +349,14 @@ def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
         os.path.join(sh_dir, f"batch={batch_id}"))
     new_sig.write.mode("overwrite").parquet(
         os.path.join(sig_dir, f"batch={batch_id}"))
-    # partial corpus digest (xor of xxhash64(id,text) + count):
-    # what makes the accumulated stream FOLDABLE into a new
-    # digest-keyed artifact (sinks/index_store.fold_minhash_index)
-    # without ever re-reading the batch texts — same overwrite-own-
-    # partition idempotence as the other per-batch writes
-    batch.agg(
-        F.coalesce(  # empty replayed batch: xor identity, not NULL
-            F.expr(f"bit_xor(xxhash64({id_col}, {text_col}))"),
-            F.lit(0).cast("long")).alias("d"),
-        F.count("*").alias("n"),
-    ).write.mode("overwrite").parquet(
+    # partial corpus digest (artifacts.digest_cols — an empty replayed
+    # batch lands the xor identity): what makes the accumulated stream
+    # FOLDABLE into a new digest-keyed artifact (sinks/index_store.
+    # fold_minhash_index) without ever re-reading the batch texts —
+    # same overwrite-own-partition idempotence as the other per-batch
+    # writes
+    batch.agg(*artifacts.digest_cols(text_col, id_col)).write.mode(
+        "overwrite").parquet(
         os.path.join(index_dir, "digest", f"batch={batch_id}"))
     for df_ in (new_sig, new_sh, batch):
         df_.unpersist()

@@ -145,13 +145,3 @@ def gated_broadcast(spark: SparkSession, sf_dir: str, name: str | None,
     if size is not None and size < (threshold if limit is None else limit):
         return F.broadcast(df)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every lake table as a temp view for spark.sql() queries."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

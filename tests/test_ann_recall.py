@@ -170,7 +170,7 @@ def test_ivf_artifact_serves_and_gates(spark, tmp_path):
     emb = load(spark, sf, "embeddings")
     meta = ann_store.write_ivf_index(emb, out, "embedding", "vec_id",
                                     n_cells=8, iters=2)
-    digest = ann_store.embedding_digest(emb, "embedding", "vec_id")
+    digest = artifacts.corpus_digest(emb, "embedding", "vec_id")
     assert meta["digest"] == digest
     gate = artifacts.gate
     assert gate(out, "ivf", digest, n_cells=8, iters=2) == (True, "hit")
@@ -307,7 +307,7 @@ def test_ivf_fold_equals_union_assignment(spark, tmp_path):
                               n_cells=4, iters=1)
     folded = ann_store.fold_ivf_index(spark, base_dir, batch, fold_dir)
 
-    assert folded["digest"] == ann_store.embedding_digest(
+    assert folded["digest"] == artifacts.corpus_digest(
         emb, "embedding", "vec_id")
     assert folded["n_vecs"] == emb.count()
     assert artifacts.gate(fold_dir, "ivf", folded["digest"], n_cells=4,

@@ -151,7 +151,7 @@ def _case(name: str, spark, d: str):
                     vbatch, out, "embedding", "vec_id", n_cells=4,
                     iters=1))
     assert name == "ivf_rebuild"
-    union = ann_store.embedding_digest(emb.unionByName(vbatch),
+    union = artifacts.corpus_digest(emb.unionByName(vbatch),
                                        "embedding", "vec_id")
     return ("ivf",
             lambda out: ann_store.rebuild_ivf_index(

@@ -904,7 +904,7 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     union = spark.read.parquet(
         os.path.join(lake, "embeddings.parquet")).unionByName(
         spark.read.parquet(os.path.join(lake2, "embeddings.parquet")))
-    udigest = ann_store.embedding_digest(union, "embedding", "vec_id")
+    udigest = artifacts.corpus_digest(union, "embedding", "vec_id")
     assert rmeta["digest"] == udigest
     # … and the superseded base is gone (meta-first: absent either way)
     assert artifacts.read_meta(base) is None

@@ -302,10 +302,13 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
     result BIT-EQUAL to the in-plan pruned query (every contribution
     is integer-derived and rounded before landing — no float-order
     caveat), the digest/param gate refuses mismatches, and the
-    env-gated query consumes the artifact only when both match."""
+    env-gated query consumes the artifact only when both match:
+    artifacts.serve names why it did not (``unset`` with no env var,
+    ``digest`` for an artifact of another corpus)."""
     import os
 
-    from sc_crawler_spark.queries.pipeline import bm25_pruned_retrieval
+    from sc_crawler_spark.queries.pipeline import (
+        _BM25_B, _BM25_K1, bm25_pruned_retrieval)
     from sc_crawler_spark.sinks import artifacts, postings_store
     from sc_crawler_spark.tables import load
 
@@ -314,7 +317,7 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
     docs = load(spark, sf, "documents")
     meta = postings_store.write_bm25_index(docs, out, "text", "doc_id",
                                            max_postings=256)
-    digest = postings_store.corpus_digest(docs, "text", "doc_id")
+    digest = artifacts.corpus_digest(docs, "text", "doc_id")
     assert meta["digest"] == digest
     gate = artifacts.gate
     assert gate(out, "bm25", digest, max_postings=256) == (True, "hit")
@@ -326,13 +329,30 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
     # not by a parameter the two stores happen not to share
     assert gate(out, "minhash", digest) == (False, "kind")
 
-    inplan = sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
-                    for r in bm25_pruned_retrieval(spark, sf).collect())
-    os.environ["SC_SPARK_BM25_INDEX_DIR"] = out
+    def _rows():
+        return sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
+                      for r in bm25_pruned_retrieval(spark, sf).collect())
+
+    served_params = dict(max_postings=256, k1=_BM25_K1, b=_BM25_B,
+                         query_stride=13)
+    os.environ.pop("SC_SPARK_BM25_INDEX_DIR", None)
+    assert artifacts.serve("bm25", docs, "text", "doc_id",
+                           **served_params) == (None, "unset")
+    inplan = _rows()
+    # an artifact built from ANOTHER corpus (the first 250 docs)
+    stale = str(tmp_path / "bm25_stale")
+    postings_store.write_bm25_index(
+        docs.filter(F.col("doc_id") < 250), stale, "text", "doc_id",
+        max_postings=256)
+    os.environ["SC_SPARK_BM25_INDEX_DIR"] = stale
     try:
-        served = sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
-                        for r in bm25_pruned_retrieval(spark, sf)
-                        .collect())
+        assert artifacts.serve("bm25", docs, "text", "doc_id",
+                               **served_params) == (None, "digest")
+        assert _rows() == inplan
+        os.environ["SC_SPARK_BM25_INDEX_DIR"] = out
+        assert artifacts.serve("bm25", docs, "text", "doc_id",
+                               **served_params) == (out, "hit")
+        served = _rows()
         assert served == inplan and len(served) > 0
         # mismatched params fall back in-plan (M=64 != artifact's 256)
         fell_back = sorted(
@@ -346,7 +366,6 @@ def test_bm25_postings_artifact_bit_equal_and_gated(spark, tmp_path):
     # scoring constants are recorded and gated (r15 advice): if
     # _BM25_K1/_BM25_B ever change, an artifact built under the old
     # constants must refuse to serve — the query gates on k1/b now
-    from sc_crawler_spark.queries.pipeline import _BM25_B, _BM25_K1
     assert meta["k1"] == _BM25_K1 and meta["b"] == _BM25_B
     assert gate(out, "bm25", digest, max_postings=256, k1=_BM25_K1,
                 b=_BM25_B)[0]
@@ -384,7 +403,8 @@ def test_bm25_fold_equals_one_shot_build(spark, tmp_path):
     postings artifact — no base text pass — must be BIT-EQUAL to a
     one-shot build over base ∪ batch: identical pruned postings,
     identical merged digest (partials == direct), identical served
-    top-k. Also pins the refusal paths."""
+    top-k. An empty batch folds to the base (digest and top-k). Also
+    pins the refusal paths."""
     import pytest as _pytest
 
     from sc_crawler_spark.queries.pipeline import tokens
@@ -422,20 +442,28 @@ def test_bm25_fold_equals_one_shot_build(spark, tmp_path):
                .select(F.col("doc_id").alias("query_id"),
                        F.explode(F.array_distinct(
                            F.slice("toks", 1, 8))).alias("term")))
-    a = sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
-               for r in postings_store.bm25_topk_served(
-                   q_terms, spark, fold_dir).collect())
-    b = sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
-               for r in postings_store.bm25_topk_served(
-                   q_terms, spark, full_dir).collect())
-    assert a == b and len(a) > 0
+
+    def _served(d):
+        return sorted((r.query_id, r.doc_id, r.bm25_score, r.rank)
+                      for r in postings_store.bm25_topk_served(
+                          q_terms, spark, d).collect())
+
+    a = _served(fold_dir)
+    assert a == _served(full_dir) and len(a) > 0
+
+    # an empty batch folds to the base: same digest, same served top-k
+    empty_dir = str(tmp_path / "folded_empty")
+    empty = postings_store.fold_bm25_index(spark, base_dir,
+                                           batch.limit(0), empty_dir)
+    assert empty["digest"] == artifacts.read_meta(base_dir)["digest"]
+    assert _served(empty_dir) == _served(base_dir) != []
 
     # the folded artifact's digest gate accepts the UNION corpus and
     # refuses the base corpus
-    union_digest = postings_store.corpus_digest(docs, "text", "doc_id")
+    union_digest = artifacts.corpus_digest(docs, "text", "doc_id")
     assert artifacts.gate(fold_dir, "bm25", union_digest,
                           max_postings=64)[0]
-    base_digest = postings_store.corpus_digest(base, "text", "doc_id")
+    base_digest = artifacts.corpus_digest(base, "text", "doc_id")
     assert artifacts.gate(fold_dir, "bm25", base_digest) == (False,
                                                              "digest")
 

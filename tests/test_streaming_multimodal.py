@@ -909,7 +909,8 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
 def test_fold_digest_partials_merge_exactly(spark, tmpdir):
     """merge_digests is exact under arbitrary splits: the digest of a
     corpus equals the merge of its parts' digests, including negative
-    xor values (signed 64-bit wrap) and an empty part (xor identity)."""
+    xor values (signed 64-bit wrap) and an empty part (xor identity) —
+    which corpus_digest itself returns for an empty frame."""
     from sc_crawler_spark.sinks.index_store import (
         corpus_digest, merge_digests)
 
@@ -923,6 +924,9 @@ def test_fold_digest_partials_merge_exactly(spark, tmpdir):
     ]
     assert merge_digests(parts) == whole
     assert merge_digests([whole, "0_0"]) == whole  # empty batch
+    empty = corpus_digest(df.limit(0), "text", "doc_id")
+    assert empty == "0_0"
+    assert merge_digests([whole, empty]) == whole
 
 
 def test_jpeg_codec_block_constant_exact_roundtrip():
