@@ -12,7 +12,8 @@ reproduce the reference semantics:
   report (cli.py:540-554), apply to target (or its ``_scd`` twin).
 - ``dump``  — JSON export partitioned by PK (cli.py:600-756) plus a
   ``_schema.json`` manifest per table.
-- ``copy``  — re-write a lake to a new location table by table.
+- ``copy``  — copy each table's committed snapshot to a new lake as
+  files (no Spark job).
 
 Usage: ``python -m sc_crawler_spark.cli <cmd> ...``
 """
@@ -32,8 +33,8 @@ from . import migrate, schemas
 from .operators.sync import hash_diff, with_row_hash
 from .operators.upsert import merge_upsert, scd2_append
 from .session import get_spark
-from .sinks.snapshot import (current_path, read_snapshot, snapshot_exists,
-                             write_snapshot)
+from .sinks.snapshot import (copy_snapshot, current_path, read_snapshot,
+                             snapshot_exists, version_rows, write_snapshot)
 from .sources import lookup
 
 
@@ -72,10 +73,11 @@ def _ensure_lake(lake: str) -> None:
         migrate.stamp_lake(lake)
 
 
-def _rewrite(spark: SparkSession, df: DataFrame, path: str) -> None:
+def _rewrite(spark: SparkSession, df: DataFrame, path: str) -> int:
     """Commit ``df`` as the table's next snapshot version (atomic pointer
-    swap; the plan may read the current snapshot of ``path`` itself)."""
-    write_snapshot(spark, df, path)
+    swap; the plan may read the current snapshot of ``path`` itself) and
+    return its row count, read from the committed footers."""
+    return version_rows(write_snapshot(spark, df, path))
 
 
 def cmd_pull(spark: SparkSession, lake: str) -> None:
@@ -125,8 +127,7 @@ def cmd_pull(spark: SparkSession, lake: str) -> None:
             )
         else:  # first pull: nothing to merge into
             merged = canon
-        _rewrite(spark, merged, path)
-        print(f"pull: {table}: {read_snapshot(spark, path).count()} rows")
+        print(f"pull: {table}: {_rewrite(spark, merged, path)} rows")
 
 
 def table_digest(spark: SparkSession, lake: str, table: str,
@@ -175,42 +176,44 @@ def cmd_sync(spark: SparkSession, source: str, target: str,
     src = _read(spark, source, table)
     tgt = _read(spark, target, table)
     pks = [c for c in schemas.PRIMARY_KEYS.get(table, []) if c in src.columns]
-    # diff feeds three consumers (stats, changed, deleted) — cache the
-    # narrow (pks, action) result so the full-outer join runs once
-    diff = hash_diff(src, tgt, pks).cache()
-    stats = {r["action"]: r["count"] for r in diff.groupBy("action").count().collect()}
-    print(json.dumps({"table": table, **stats,
-                      **({"dry_run": True} if dry_run else {})}))
-    if dry_run:  # reference cli.py:387-390: compare only, insert nothing
-        spark.catalog.clearCache()
-        return
-
-    changed = diff.filter(F.col("action").isin("new", "update")).select(*pks)
-    changed_rows = src.join(changed, pks, "left_semi")
-    deleted = diff.filter(F.col("action") == "deleted").select(*pks)
-    deleted_rows = (
-        tgt.join(deleted, pks, "left_semi")
-        .withColumn("status", F.lit("inactive"))
-        .withColumn("observed_at", F.current_timestamp())
-    )
-    apply_rows = changed_rows.unionByName(deleted_rows)
-    if scd:
-        out_table = f"{table}_scd"
-        # explicit existence check, not a blanket except: a genuine
-        # read failure must propagate rather than silently replacing
-        # the accumulated SCD history with just this sync's rows
-        if snapshot_exists(_table_path(target, out_table)):
-            hist = _read(spark, target, out_table)
-            result = scd2_append(hist, apply_rows)
-        else:  # first sync: no history yet
-            result = apply_rows
-    else:
-        out_table = table
-        result = merge_upsert(tgt, apply_rows, pks)
-    _rewrite(spark, result, _table_path(target, out_table))
-    # the sync is done — release the cached diff (a long-lived service
-    # leaks otherwise)
-    spark.catalog.clearCache()
+    # diff feeds three consumers (stats, changed, deleted) — persist the
+    # narrow (pks, action) result so the full-outer join runs once, and
+    # release exactly it when the sync ends: other frames cached in a
+    # long-lived session stay cached
+    diff = hash_diff(src, tgt, pks, cache=False).persist()
+    try:
+        stats = {r["action"]: r["count"]
+                 for r in diff.groupBy("action").count().collect()}
+        print(json.dumps({"table": table, **stats,
+                          **({"dry_run": True} if dry_run else {})}))
+        if dry_run:  # reference cli.py:387-390: compare only, insert nothing
+            return
+        changed = diff.filter(
+            F.col("action").isin("new", "update")).select(*pks)
+        changed_rows = src.join(changed, pks, "left_semi")
+        deleted = diff.filter(F.col("action") == "deleted").select(*pks)
+        deleted_rows = (
+            tgt.join(deleted, pks, "left_semi")
+            .withColumn("status", F.lit("inactive"))
+            .withColumn("observed_at", F.current_timestamp())
+        )
+        apply_rows = changed_rows.unionByName(deleted_rows)
+        if scd:
+            out_table = f"{table}_scd"
+            # explicit existence check, not a blanket except: a genuine
+            # read failure must propagate rather than silently replacing
+            # the accumulated SCD history with just this sync's rows
+            if snapshot_exists(_table_path(target, out_table)):
+                hist = _read(spark, target, out_table)
+                result = scd2_append(hist, apply_rows)
+            else:  # first sync: no history yet
+                result = apply_rows
+        else:
+            out_table = table
+            result = merge_upsert(tgt, apply_rows, pks)
+        _rewrite(spark, result, _table_path(target, out_table))
+    finally:
+        diff.unpersist()
 
 
 def dump_file_per_row(df: DataFrame, pks: list[str], dest: str,
@@ -330,8 +333,10 @@ def cmd_dump(spark: SparkSession, lake: str, out: str,
 
 
 def cmd_copy(spark: SparkSession, source: str, target: str) -> None:
+    """Copy every table's committed snapshot to ``target`` as files (see
+    ``copy_snapshot``): no table is read or re-encoded through Spark."""
     for t in _tables_in(source):
-        write_snapshot(spark, _read(spark, source, t), _table_path(target, t))
+        copy_snapshot(_table_path(source, t), _table_path(target, t))
         print(f"copy: {t}")
     # the copy carries the source's schema revision verbatim
     migrate.stamp_lake(target, migrate.lake_version(source))
@@ -448,16 +453,35 @@ def cmd_inventory(spark: SparkSession, bronze: str, lake: str,
     _aws.py:1541-1758), ``traffic_price`` with full price tiers
     (traffic_products.json, _aws.py:1268-1309) and ``ipv4_price``
     (ipv4_products.json, _aws.py:1312-1349).
+
+    Each standardized source is validated once: its flagged frame is
+    persisted for the run (``validate_items(held=...)``), so the table
+    merge, the price assembly and the error-side union all read one
+    computation. Exactly those frames are released when the run ends.
     """
+    from .sources.catalog import VENDOR_SERVER_SPECS
+
+    held: list[DataFrame] = []
+    try:
+        if vendor == "azure" or vendor in VENDOR_SERVER_SPECS:
+            _inventory_catalog_vendor(spark, bronze, lake, vendor, records,
+                                      held)
+        else:
+            _inventory_aws(spark, bronze, lake, vendor, records, held)
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def _inventory_aws(spark: SparkSession, bronze: str, lake: str,
+                   vendor: str, records: list[str] | None,
+                   held: list[DataFrame]) -> None:
+    """AWS-shaped inventory: instance types, products (terms walk),
+    regions/zones, spot prices and the service record types."""
     from .operators.validate import validate_items
     from .operators.windows import keep_last_dedup
     from .sources import aws
 
-    from .sources.catalog import VENDOR_SERVER_SPECS
-
-    if vendor == "azure" or vendor in VENDOR_SERVER_SPECS:
-        _inventory_catalog_vendor(spark, bronze, lake, vendor, records)
-        return
     vroot = os.path.join(bronze, vendor)
     raw = spark.read.schema(aws.RAW_INSTANCE_TYPE).json(
         os.path.join(vroot, "instance_types.json")
@@ -472,7 +496,7 @@ def cmd_inventory(spark: SparkSession, bronze: str, lake: str,
     servers = keep_last_dedup(
         servers, ["vendor_id", "server_id"], "_pos"
     ).drop("_pos")
-    valid, invalid = validate_items(servers, "server")
+    valid, invalid = validate_items(servers, "server", held)
 
     # every bronze file is existence-gated (a servers-only crawl is a
     # legal partial tree — stream_server_inventory produces exactly
@@ -514,16 +538,16 @@ def cmd_inventory(spark: SparkSession, bronze: str, lake: str,
             svc.assemble_spot_prices(raw_spot, valid, zones, vendor),
             allowMissingColumns=True,
         )
-    prices_valid, prices_invalid = validate_items(prices, "server_price")
+    prices_valid, prices_invalid = validate_items(prices, "server_price", held)
 
     svc_outputs, svc_invalids = _service_inventories(
-        spark, vroot, regions, valid, vendor
+        spark, vroot, regions, valid, vendor, held
     )
     all_invalid = invalid.unionByName(prices_invalid, allowMissingColumns=True)
     for inv in svc_invalids:
         all_invalid = all_invalid.unionByName(inv, allowMissingColumns=True)
 
-    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor)
+    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor, held)
     for inv in rz_invalids:
         all_invalid = all_invalid.unionByName(inv, allowMissingColumns=True)
 
@@ -547,7 +571,8 @@ _REGION_BRONZE_SCHEMA = (
 )
 
 
-def _region_zone_tables(spark: SparkSession, vroot: str, vendor: str):
+def _region_zone_tables(spark: SparkSession, vroot: str, vendor: str,
+                        held: list[DataFrame]):
     """region / zone dim rows from the bronze fan-out files — the
     reference's per-vendor `inventory_regions` / `inventory_zones`
     (tables.py:165-168) land as tables, not just price fan-out inputs.
@@ -568,7 +593,7 @@ def _region_zone_tables(spark: SparkSession, vroot: str, vendor: str):
             "aliases", "country_id", "state", "city",
             "lon", "lat", "founding_year", "green_energy",
         )
-        v, inv = validate_items(reg, "region")
+        v, inv = validate_items(reg, "region", held)
         # an all-invalid file (e.g. fan-out-only bronze without
         # country facts) must not sweep the vendor's landed regions
         # inactive — land only when something validated
@@ -586,7 +611,7 @@ def _region_zone_tables(spark: SparkSession, vroot: str, vendor: str):
             F.col("zone_id").alias("api_reference"),
             F.col("zone_id").alias("display_name"),
         )
-        v, inv = validate_items(zz, "zone")
+        v, inv = validate_items(zz, "zone", held)
         if v.take(1):  # same sweep guard as regions above
             out["zone"] = (v, schemas.PRIMARY_KEYS["zone"])
         invalids.append(inv)
@@ -634,12 +659,12 @@ def _land_tables(spark: SparkSession, lake: str, outputs: dict,
         elif not pks and snapshot_exists(path):
             df = read_snapshot(spark, path).unionByName(
                 df, allowMissingColumns=True)
-        _rewrite(spark, df, path)
-        print(f"inventory: {table}: {read_snapshot(spark, path).count()} rows")
+        print(f"inventory: {table}: {_rewrite(spark, df, path)} rows")
 
 
 def _service_inventories(spark: SparkSession, vroot: str, regions: DataFrame,
-                         servers_valid: DataFrame, vendor: str):
+                         servers_valid: DataFrame, vendor: str,
+                         held: list[DataFrame]):
     """Non-server record types, each landing iff its bronze file exists
     (the reference's 14 per-vendor inventory methods, tables.py:165-184).
     Returns ({table: (valid_df, pks)}, [invalid_dfs])."""
@@ -654,7 +679,7 @@ def _service_inventories(spark: SparkSession, vroot: str, regions: DataFrame,
         return p if os.path.exists(p) else None
 
     def _add(table: str, df: DataFrame) -> DataFrame:
-        valid, invalid = validate_items(df, table)
+        valid, invalid = validate_items(df, table, held)
         outputs[table] = (valid, schemas.PRIMARY_KEYS[table])
         invalids.append(invalid)
         return valid
@@ -717,8 +742,8 @@ _AZURE_SKU_SCHEMA = (
 
 
 def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
-                              vendor: str,
-                              records: list[str] | None = None) -> None:
+                              vendor: str, records: list[str] | None,
+                              held: list[DataFrame]) -> None:
     """GCP/Azure server inventory: bronze JSON -> standardize (P1) ->
     validate (P8) -> vendor-scoped merge into the shared server table."""
     from .operators.validate import validate_items
@@ -744,7 +769,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
     if "display_name" not in servers.columns:
         # ScModel default: display_name falls back to the plan name
         servers = servers.withColumn("display_name", F.col("name"))
-    valid, invalid = validate_items(servers, "server")
+    valid, invalid = validate_items(servers, "server", held)
 
     os.makedirs(lake, exist_ok=True)
     _ensure_lake(lake)
@@ -764,11 +789,11 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
     )
     if vendor in STATIC_SERVICE_CATALOGS:
         for t, df in static_service_tables(spark, vendor, regions).items():
-            v, inv = validate_items(df, t)
+            v, inv = validate_items(df, t, held)
             outputs[t] = (v, schemas.PRIMARY_KEYS[t])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
 
-    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor)
+    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor, held)
     outputs.update(rz_outputs)
     for inv in rz_invalids:
         invalid = invalid.unionByName(inv, allowMissingColumns=True)
@@ -780,7 +805,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
 
         v, inv = validate_items(
             catalog_server_prices(generic_raw, regions, vendor),
-            "server_price")
+            "server_price", held)
         outputs["server_price"] = (v, schemas.PRIMARY_KEYS["server_price"])
         invalid = invalid.unionByName(inv, allowMissingColumns=True)
 
@@ -815,7 +840,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
             # storage/traffic/ipv4 prices ride the SAME zone price list
             # (_upcloud.py:524-583)
             for t, df in cat.upcloud_service_prices(spark, zp_path).items():
-                v, inv = validate_items(df, t)
+                v, inv = validate_items(df, t, held)
                 outputs[t] = (v, schemas.PRIMARY_KEYS[t])
                 invalid = invalid.unionByName(inv, allowMissingColumns=True)
     elif vendor == "ovh" and generic_raw is not None and regions is not None:
@@ -856,14 +881,14 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
             p = os.path.join(vroot, fname)
             if os.path.exists(p):
                 sk = spark.read.schema(cat.RAW_ALICLOUD_SERVICE_SKU).json(p)
-                v, inv = validate_items(fn(sk, regions), table)
+                v, inv = validate_items(fn(sk, regions), table, held)
                 outputs[table] = (v, schemas.PRIMARY_KEYS[table])
                 invalid = invalid.unionByName(inv, allowMissingColumns=True)
     if price_frames:
         sp = price_frames[0]
         for f in price_frames[1:]:
             sp = sp.unionByName(f, allowMissingColumns=True)
-        v, inv = validate_items(sp, "server_price")
+        v, inv = validate_items(sp, "server_price", held)
         if "server_price" in outputs:  # embedded + assembled both present
             v = outputs["server_price"][0].unionByName(v)
         outputs["server_price"] = (v, schemas.PRIMARY_KEYS["server_price"])
@@ -877,7 +902,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
         if os.path.exists(disks_path):
             raw = spark.read.schema(gcp_src.RAW_DISK_TYPE).json(disks_path)
             storage_valid, inv = validate_items(
-                gcp_src.gcp_storage_catalog(raw), "storage")
+                gcp_src.gcp_storage_catalog(raw), "storage", held)
             outputs["storage"] = (storage_valid,
                                   schemas.PRIMARY_KEYS["storage"])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
@@ -886,7 +911,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
                 skus = spark.read.schema(gcp_src.RAW_STORAGE_SKU).json(sku_path)
                 v, inv = validate_items(
                     gcp_src.gcp_storage_prices(skus, storage_valid, regions),
-                    "storage_price")
+                    "storage_price", held)
                 outputs["storage_price"] = (
                     v, schemas.PRIMARY_KEYS["storage_price"])
                 invalid = invalid.unionByName(inv, allowMissingColumns=True)
@@ -894,7 +919,8 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
         if os.path.exists(net_path):
             skus = spark.read.schema(gcp_src.RAW_NETWORK_SKU).json(net_path)
             v, inv = validate_items(
-                gcp_src.gcp_traffic_prices(skus, regions), "traffic_price")
+                gcp_src.gcp_traffic_prices(skus, regions),
+                "traffic_price", held)
             outputs["traffic_price"] = (
                 v, schemas.PRIMARY_KEYS["traffic_price"])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
@@ -927,7 +953,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
                     gcp_sql.gcp_sql_database_storage_prices(
                         sql_skus, regions),
             }.items():
-                v, inv = validate_items(df, table)
+                v, inv = validate_items(df, table, held)
                 outputs[table] = (v, schemas.PRIMARY_KEYS[table])
                 invalid = invalid.unionByName(inv, allowMissingColumns=True)
 
@@ -944,25 +970,26 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
         if os.path.exists(disks_path):
             disks = spark.read.schema(az.RAW_AZURE_DISK).json(disks_path)
             storage_valid, inv = validate_items(
-                az.azure_storage_catalog(disks), "storage")
+                az.azure_storage_catalog(disks), "storage", held)
             outputs["storage"] = (storage_valid,
                                   schemas.PRIMARY_KEYS["storage"])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
             if retail is not None:
                 v, inv = validate_items(
                     az.azure_storage_prices(retail, storage_valid, regions),
-                    "storage_price")
+                    "storage_price", held)
                 outputs["storage_price"] = (
                     v, schemas.PRIMARY_KEYS["storage_price"])
                 invalid = invalid.unionByName(inv, allowMissingColumns=True)
         if retail is not None:
             v, inv = validate_items(
-                az.azure_traffic_prices(retail, regions), "traffic_price")
+                az.azure_traffic_prices(retail, regions),
+                "traffic_price", held)
             outputs["traffic_price"] = (
                 v, schemas.PRIMARY_KEYS["traffic_price"])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
             v, inv = validate_items(
-                az.azure_ipv4_prices(retail, regions), "ipv4_price")
+                az.azure_ipv4_prices(retail, regions), "ipv4_price", held)
             outputs["ipv4_price"] = (v, schemas.PRIMARY_KEYS["ipv4_price"])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
 
@@ -975,7 +1002,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
                 retail, valid, regions, zone_off, "ondemand"
             ).unionByName(az.azure_server_prices(
                 retail, valid, regions, zone_off, "spot"))
-            v, inv = validate_items(sp, "server_price")
+            v, inv = validate_items(sp, "server_price", held)
             outputs["server_price"] = (
                 v, schemas.PRIMARY_KEYS["server_price"])
             invalid = invalid.unionByName(inv, allowMissingColumns=True)
@@ -997,7 +1024,7 @@ def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
                     azure_sql.azure_pg_database_storage_prices(
                         retail, svc["database_storage"], regions))
             for table, df in svc.items():
-                v, inv = validate_items(df, table)
+                v, inv = validate_items(df, table, held)
                 outputs[table] = (v, schemas.PRIMARY_KEYS[table])
                 invalid = invalid.unionByName(inv, allowMissingColumns=True)
 
@@ -1068,9 +1095,8 @@ def cmd_compact(spark: SparkSession, lake: str, table: str | None = None,
                    .sortWithinPartitions(*pks)
         else:
             df = df.coalesce(n_files)
-        write_snapshot(spark, df, root)
-        print(f"compact: {t}: {n_files} file(s), "
-              f"{read_snapshot(spark, root).count()} rows")
+        rows = version_rows(write_snapshot(spark, df, root))
+        print(f"compact: {t}: {n_files} file(s), {rows} rows")
 
 
 def cmd_score(spark: SparkSession, lake: str) -> None:

@@ -44,11 +44,11 @@ def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
 
     Cache contract: with ``cache=True`` (default) the two narrow
     (pks, hash) projections persist for the SESSION — repeated
-    consumers (sync stats + changed/deleted re-fetch) skip the
-    scan+hash stage, but the entries stay in the cache manager until
-    ``spark.catalog.clearCache()`` (cmd_sync does this when finished)
-    or session end. Long-lived services diffing many tables should
-    pass ``cache=False`` or clear between tables.
+    consumers of the returned plan skip the scan+hash stage, but the
+    entries stay in the cache manager until session end (this function
+    does not hand them back, so no caller can release them). Long-lived
+    services pass ``cache=False`` and persist the returned diff
+    themselves, as ``cmd_sync`` does, unpersisting exactly it when done.
     """
     if not pks:
         # a key-less full-outer join degenerates to a cartesian product

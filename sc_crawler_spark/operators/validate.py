@@ -93,12 +93,20 @@ def apply_schema(df: DataFrame, schema: StructType,
     return df.select(*out)
 
 
-def validate_items(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
+def validate_items(df: DataFrame, table: str,
+                   held: list[DataFrame] | None = None,
+                   ) -> tuple[DataFrame, DataFrame]:
     """Normalize rows for a silver table; returns (valid, invalid).
 
     Invalid = any non-nullable column NULL after coercion (the analog of
     a pydantic validation error, insert.py:96-110). Both outputs carry
     the full declared schema; ``invalid`` adds ``_errors``.
+
+    The two outputs are filters over one flagged plan. Each action on
+    either re-runs that plan from ``df``'s sources unless ``held`` is
+    given: then the flagged frame is persisted and appended to it, so
+    every consumer reads one computation, and the caller unpersists the
+    list once its consumers are done.
     """
     schema = schemas.TABLES[table]
     coerced = apply_schema(df, schema, table)
@@ -139,6 +147,9 @@ def validate_items(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame]:
         F.filter(F.array(*checks), lambda c: c.isNotNull())
         if checks else F.array().cast("array<string>"),
     )
+    if held is not None:
+        flagged = flagged.persist()
+        held.append(flagged)
     valid = flagged.filter(F.size("_errors") == 0).drop("_errors")
     invalid = flagged.filter(F.size("_errors") > 0)
     return valid, invalid

@@ -2,7 +2,8 @@
 
 Layout under one table root::
 
-    <root>/v-00000001/   part-*.parquet + _SUCCESS   (immutable version)
+    <root>/v-00000001/   part-*.parquet + _SUCCESS + _schema.json
+                         (+ any sidecars; an immutable version)
     <root>/v-00000002/   ...
     <root>/_CURRENT      pointer file naming the committed version
 
@@ -14,6 +15,15 @@ transactional insert cycle (insert.py:115-173) without requiring
 Delta/Iceberg in this container; on a real cluster these call sites map
 1:1 onto ``MERGE INTO`` over a transactional table format.
 
+``write_snapshot`` (Spark writes the parts) and ``copy_snapshot`` (the
+committed files of another root are copied as files, no Spark job)
+share that one commit: marker check, pointer swap, retention.
+
+``_schema.json`` is the schema the version was written with, so
+``read_snapshot`` hands it to the reader instead of running Spark's
+one-task footer-inference job on every read. A version without it
+(legacy, or committed before the sidecar existed) is inferred.
+
 Also fixes the rewrite-self double-write: because the new version is a
 sibling directory, a plan that *reads the current snapshot* can write
 the next one directly — one write instead of stage-then-copy.
@@ -24,12 +34,15 @@ parquet directory, so pre-existing lakes keep working.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 POINTER = "_CURRENT"
+SCHEMA = "_schema.json"
 
 
 def current_path(root: str) -> str:
@@ -105,7 +118,7 @@ def read_snapshot(spark: SparkSession, root: str,
                 f"snapshot version {version} under {root} is incomplete "
                 f"(no _SUCCESS marker — crashed write); complete versions: "
                 f"{[v for v, _ in list_versions(root)]}")
-        return spark.read.parquet(vdir)
+        return _read_version(spark, vdir)
     path = current_path(root)
     if path == root and os.path.isdir(root):
         # Legacy layout (no pointer). A crash during the FIRST versioned
@@ -134,7 +147,29 @@ def read_snapshot(spark: SparkSession, root: str,
                 f"{root} holds only uncommitted v-* data (crashed first "
                 f"versioned commit) and no legacy content — nothing "
                 f"committed to read")
-    return spark.read.parquet(path)
+    return _read_version(spark, path)
+
+
+def _read_version(spark: SparkSession, path: str) -> DataFrame:
+    """Read one data directory with the schema its commit recorded, so
+    no inference job runs; without the sidecar, infer."""
+    sidecar = os.path.join(path, SCHEMA)
+    if not os.path.isfile(sidecar):
+        return spark.read.parquet(path)
+    with open(sidecar) as f:
+        schema = StructType.fromJson(json.loads(f.read()))
+    return spark.read.schema(schema).parquet(path)
+
+
+def version_rows(vdir: str) -> int:
+    """Rows in a version directory, summed from its parquet footers —
+    a count of what was just committed without a Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+               for d, _subdirs, files in os.walk(vdir)
+               for f in files
+               if f.endswith(".parquet") and not f.startswith((".", "_")))
 
 
 def _next_version(root: str) -> str:
@@ -173,19 +208,62 @@ def write_snapshot(spark: SparkSession, df: DataFrame, root: str,
     new version directory BEFORE the pointer swap, so they are covered
     by the same commit point as the parquet data (see ``read_extra``).
     Names must not collide with part files; convention is a leading
-    underscore (e.g. ``_manifest.json``).
+    underscore (e.g. ``_manifest.json``). ``_schema.json`` is always
+    written, from ``df.schema``.
     """
     os.makedirs(root, exist_ok=True)
     version = _next_version(root)
     vdir = os.path.join(root, version)
     df.write.mode("overwrite").parquet(vdir)
-    if not os.path.exists(os.path.join(vdir, "_SUCCESS")):
-        raise IOError(f"snapshot write incomplete (no _SUCCESS): {vdir}")
-    for name, content in (extras or {}).items():
+    for name, content in {**(extras or {}), SCHEMA: df.schema.json()}.items():
         with open(os.path.join(vdir, name), "w") as f:
             f.write(content)
             f.flush()
             os.fsync(f.fileno())
+    return _commit(root, version, keep)
+
+
+def copy_snapshot(src_root: str, dst_root: str, keep: int = 2) -> str:
+    """Copy the committed snapshot of ``src_root`` into the next version
+    of ``dst_root`` as files, and commit it like ``write_snapshot``.
+
+    The copied files are the ones ``read_snapshot`` would read: the
+    committed version directory with its ``_SUCCESS`` marker and every
+    sidecar (``_schema.json`` included), or for a legacy root (no
+    pointer) its non-``v-*`` content. An immutable version moves as a
+    set of files, not re-encoded through Spark, so no job runs. The
+    marker is copied (or, for a legacy root without one, created)
+    last: a crash mid-copy leaves a version without ``_SUCCESS``,
+    which the commit refuses and retention deletes."""
+    src = current_path(src_root)
+    if not os.path.isdir(src):
+        raise FileNotFoundError(f"no committed snapshot under {src_root}")
+    legacy = src == src_root
+    names = sorted(
+        (n for n in os.listdir(src)
+         if not (legacy and n.startswith(("v-", POINTER)))),
+        key=lambda n: (n == "_SUCCESS", n))
+    os.makedirs(dst_root, exist_ok=True)
+    version = _next_version(dst_root)
+    vdir = os.path.join(dst_root, version)
+    os.makedirs(vdir)
+    for name in names:
+        s, d = os.path.join(src, name), os.path.join(vdir, name)
+        if os.path.isdir(s):
+            shutil.copytree(s, d)
+        else:
+            shutil.copyfile(s, d)
+    open(os.path.join(vdir, "_SUCCESS"), "a").close()
+    return _commit(dst_root, version, keep)
+
+
+def _commit(root: str, version: str, keep: int) -> str:
+    """The one commit of a version directory already complete under
+    ``root``: refuse it without Spark's ``_SUCCESS`` marker, swap the
+    pointer (tmp file, fsync, atomic rename), then apply retention."""
+    vdir = os.path.join(root, version)
+    if not os.path.exists(os.path.join(vdir, "_SUCCESS")):
+        raise IOError(f"snapshot write incomplete (no _SUCCESS): {vdir}")
     tmp = os.path.join(root, POINTER + ".tmp")
     with open(tmp, "w") as f:
         f.write(version)

@@ -289,16 +289,19 @@ def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
     from ..operators.dedup import (
         _band_table, _signatures_from_shingles, doc_shingles,
         incremental_minhash_pairs, verified_pairs_from_index)
+    from ..sinks.snapshot import snapshot_exists
 
     spark = batch.sparkSession
     sh_dir = os.path.join(index_dir, "shingles")
     sig_dir = os.path.join(index_dir, "signatures")
 
     def _read_part(d: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(d).drop("batch")
-        except Exception:
-            return None  # no batches landed yet
+        # gate on existence, never on a caught read error: a corrupt
+        # standing partition must fail the batch, not read as "no
+        # batches landed yet" and empty the standing index
+        if not snapshot_exists(d):
+            return None
+        return spark.read.parquet(d).drop("batch")
 
     def _union(a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
         if a is None:

@@ -1004,3 +1004,158 @@ def test_artifacts_prune_never_deletes_the_root_itself(spark, tmp_path):
     # both artifacts still intact
     assert artifacts.read_meta(root) is not None
     assert artifacts.read_meta(inner) is not None
+
+
+def _jobs_during(spark, fn):
+    """(result of ``fn()``, ids of the Spark jobs it started on this
+    thread), read back from the status tracker via a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_snapshot_uses_committed_schema_without_a_job(spark, tmp_path):
+    """A committed version is read with the schema its commit recorded
+    (``_schema.json``): no inference job before the first action, for
+    the current version and for time travel. A version without the
+    sidecar, and a pointer-less legacy root, still infer."""
+    from sc_crawler_spark.sinks.snapshot import SCHEMA, current_path
+
+    root = str(tmp_path / "t")
+    df = spark.range(4).select(
+        "id",
+        F.struct(F.col("id").alias("a"),
+                 F.lit("x").alias("b")).alias("s"),
+        F.array(F.struct(F.col("id").cast("double").alias("lo"))
+                ).alias("tiers"),
+        F.filter(F.array(F.lit("e"), F.lit(None).cast("string")),
+                 lambda c: c.isNotNull()).alias("_errors"))
+    write_snapshot(spark, df, root)
+    write_snapshot(spark, df.filter("id < 2"), root)
+    inferred = spark.read.parquet(current_path(root)).schema
+
+    got, jobs = _jobs_during(spark, lambda: read_snapshot(spark, root))
+    assert jobs == [] and got.schema == inferred
+    assert got.count() == 2
+    old, jobs = _jobs_during(
+        spark, lambda: read_snapshot(spark, root, version="v-00000001"))
+    assert jobs == [] and old.schema == inferred and old.count() == 4
+
+    # committed before the sidecar existed: inference, same result
+    os.remove(os.path.join(current_path(root), SCHEMA))
+    got, jobs = _jobs_during(spark, lambda: read_snapshot(spark, root))
+    assert jobs and got.schema == inferred and got.count() == 2
+
+    legacy = str(tmp_path / "legacy")
+    df.write.parquet(legacy)
+    got, jobs = _jobs_during(spark, lambda: read_snapshot(spark, legacy))
+    assert jobs and got.schema == inferred and got.count() == 4
+
+
+def test_copy_moves_committed_files_without_spark_jobs(spark, tmp_path,
+                                                        monkeypatch):
+    """cmd_copy copies each table's committed files (parts, _SUCCESS and
+    every sidecar) into the replica's next version and commits it with
+    write_snapshot's pointer swap: no Spark job, every table digest
+    equal, and a crash before the swap leaves the replica's previous
+    version committed."""
+    import shutil
+
+    import pytest
+
+    from sc_crawler_spark.sinks import snapshot
+    from sc_crawler_spark.sinks.snapshot import (
+        SCHEMA, copy_snapshot, current_path, list_versions, read_extra)
+
+    lake, replica = str(tmp_path / "lake"), str(tmp_path / "replica")
+    cli.cmd_pull(spark, lake)
+    k = spark.range(5).withColumnRenamed("id", "k")
+    write_snapshot(spark, k, os.path.join(lake, "extra_t"),
+                   extras={"_manifest.json": "[1, 2]"})
+    k.coalesce(1).write.parquet(os.path.join(lake, "legacy_t"))  # no pointer
+
+    _, jobs = _jobs_during(spark, lambda: cli.cmd_copy(spark, lake, replica))
+    assert jobs == []
+    tables = cli._tables_in(lake)
+    assert cli._tables_in(replica) == tables and len(tables) == 8
+    digests = {t: cli.table_digest(spark, lake, t) for t in tables}
+    assert {t: cli.table_digest(spark, replica, t) for t in tables} == digests
+    for t in tables:
+        if t != "legacy_t":
+            assert read_extra(os.path.join(replica, t), SCHEMA) == \
+                read_extra(os.path.join(lake, t), SCHEMA) is not None
+    assert read_extra(os.path.join(replica, "extra_t"),
+                      "_manifest.json") == "[1, 2]"
+    assert list_versions(os.path.join(replica, "legacy_t")) == \
+        [("v-00000001", True)]
+    assert read_snapshot(spark, os.path.join(replica, "legacy_t")).count() == 5
+
+    # a new source version; each crash below must leave v-00000001
+    src, dst = os.path.join(lake, "country"), os.path.join(replica, "country")
+    write_snapshot(spark, read_snapshot(spark, src).filter(
+        F.col("country_id") != "DE"), src)
+
+    def crash(*_a, **_k):
+        raise OSError("injected crash")
+
+    real_copyfile = shutil.copyfile
+    copied = []
+
+    def copy_then_crash(s, d, *a, **kw):  # dies after the first file
+        if copied:
+            raise OSError("injected crash")
+        copied.append(d)
+        return real_copyfile(s, d, *a, **kw)
+
+    for target, name, fn in ((shutil, "copyfile", copy_then_crash),
+                             (os, "replace", crash)):
+        with monkeypatch.context() as m:
+            m.setattr(target, name, fn)
+            with pytest.raises(OSError, match="injected crash"):
+                copy_snapshot(src, dst)
+        assert os.path.basename(current_path(dst)) == "v-00000001"
+        assert cli.table_digest(spark, replica, "country") == \
+            digests["country"]
+        assert [v for v, cur in list_versions(dst) if cur] == ["v-00000001"]
+
+    # the next copy lands, and retention deletes the crashed dirs
+    copy_snapshot(src, dst)
+    assert cli.table_digest(spark, replica, "country") == \
+        cli.table_digest(spark, lake, "country") != digests["country"]
+    assert [v for v, _ in list_versions(dst)] == \
+        sorted(d for d in os.listdir(dst) if d.startswith("v-"))
+    assert snapshot.read_extra(dst, SCHEMA) == snapshot.read_extra(src, SCHEMA)
+
+
+def test_sync_releases_exactly_its_own_cache(spark, tmp_path):
+    """cmd_sync unpersists the diff it cached, and only that: a frame
+    the caller cached stays cached (a session-wide clearCache would
+    drop it), and no frame of the sync stays behind, on the dry-run
+    and the applying path alike."""
+    from pyspark import StorageLevel
+
+    lake, lake2 = str(tmp_path / "lake"), str(tmp_path / "lake2")
+    cli.cmd_pull(spark, lake)
+    cli.cmd_copy(spark, lake, lake2)
+    path = os.path.join(lake2, "country")
+    write_snapshot(spark, read_snapshot(spark, path).filter(
+        F.col("country_id") != "DE"), path)
+
+    mine = spark.range(50).withColumnRenamed("id", "k").cache()
+    assert mine.count() == 50
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    for dry_run in (True, False):
+        cli.cmd_sync(spark, lake, lake2, "country", dry_run=dry_run)
+        assert mine.storageLevel != StorageLevel.NONE
+        assert set(persisted().keys()) == before
+    assert cli.table_digest(spark, lake2, "country") == \
+        cli.table_digest(spark, lake, "country")
+    mine.unpersist()

@@ -10,7 +10,8 @@ import os
 from pyspark.sql import functions as F
 
 from sc_crawler_spark import cli
-from sc_crawler_spark.sinks.snapshot import read_snapshot
+from sc_crawler_spark.sinks.snapshot import (SCHEMA, current_path, read_extra,
+                                             read_snapshot)
 
 
 def _instance(name, vcpus, mib):
@@ -36,6 +37,17 @@ def _product(itype, location, price):
     })
 
 
+def _assert_printed_counts(spark, lake, out):
+    """Every ``inventory: <table>: N rows`` line names the committed
+    snapshot's row count."""
+    lines = [ln for ln in out.splitlines() if ln.startswith("inventory: ")]
+    assert lines
+    for line in lines:
+        _, table, rows = line.split(": ")
+        n = read_snapshot(spark, os.path.join(lake, table)).count()
+        assert rows == f"{n} rows", line
+
+
 def _write_bronze(root, instances, products):
     d = os.path.join(root, "aws")
     os.makedirs(d, exist_ok=True)
@@ -52,7 +64,7 @@ def _write_bronze(root, instances, products):
                              "zones": ["use1-az1", "use1-az2"]}))
 
 
-def test_inventory_pull_and_repull(spark, tmp_path):
+def test_inventory_pull_and_repull(spark, tmp_path, capsys):
     bronze = str(tmp_path / "bronze")
     lake = str(tmp_path / "lake")
     _write_bronze(
@@ -63,6 +75,7 @@ def test_inventory_pull_and_repull(spark, tmp_path):
          _product("unknown.x", "Virginia", 1.0)],       # not in catalog
     )
     cli.cmd_inventory(spark, bronze, lake)
+    _assert_printed_counts(spark, lake, capsys.readouterr().out)
 
     servers = read_snapshot(spark, os.path.join(lake, "server"))
     assert servers.count() == 2
@@ -82,6 +95,7 @@ def test_inventory_pull_and_repull(spark, tmp_path):
         [_product("m5.large", "US East (N. Virginia)", 0.099)],
     )
     cli.cmd_inventory(spark, bronze, lake)
+    _assert_printed_counts(spark, lake, capsys.readouterr().out)
     servers = read_snapshot(spark, os.path.join(lake, "server"))
     by_id = {r["server_id"]: r for r in servers.collect()}
     assert by_id["m5.large"]["status"] == "active"
@@ -195,7 +209,7 @@ def test_inventory_gcp_azure_hcloud_e2e(spark, tmp_path):
     assert status[("hcloud", "22")] == "active"
 
 
-def test_inventory_vultr_and_invalid_side_table(spark, tmp_path):
+def test_inventory_vultr_and_invalid_side_table(spark, tmp_path, capsys):
     """The generic servers.json path works for flat specs (vultr), and
     rows failing validation land in server_invalid instead of aborting
     (P8 quarantine semantics)."""
@@ -213,6 +227,7 @@ def test_inventory_vultr_and_invalid_side_table(spark, tmp_path):
             "cpu_threads": None, "cpu_mhz": None, "ram": 512, "disk": 10,
             "cpu_family": None}))
     cli.cmd_inventory(spark, bronze, lake, vendor="vultr")
+    _assert_printed_counts(spark, lake, capsys.readouterr().out)
 
     servers = read_snapshot(spark, os.path.join(lake, "server"))
     rows = {r["server_id"]: r for r in servers.collect()}
@@ -352,7 +367,7 @@ def _write_service_bronze(root):
                              "terms": _terms(0.005)}))
 
 
-def test_inventory_lands_all_service_record_types(spark, tmp_path):
+def test_inventory_lands_all_service_record_types(spark, tmp_path, capsys):
     """storage/storage_price/database/database_price/database_storage/
     database_storage_price/traffic_price/ipv4_price all land end-to-end
     from one bronze tree (_aws.py:1169-1758 semantics)."""
@@ -360,6 +375,7 @@ def test_inventory_lands_all_service_record_types(spark, tmp_path):
     lake = str(tmp_path / "lake")
     _write_service_bronze(bronze)
     cli.cmd_inventory(spark, bronze, lake)
+    _assert_printed_counts(spark, lake, capsys.readouterr().out)
 
     # ---- storage catalog (A7-ish bounds + unit conversions)
     storage = {r["storage_id"]: r for r in
@@ -455,6 +471,36 @@ def test_inventory_lands_all_service_record_types(spark, tmp_path):
     db_status = {r["database_id"]: r["status"] for r in
                  read_snapshot(spark, os.path.join(lake, "database")).collect()}
     assert set(db_status.values()) == {"active"}
+
+
+def test_committed_schema_equals_inferred_for_every_table(spark, tmp_path):
+    """Every table the inventory lands carries ``_schema.json``, and
+    reading with it gives exactly the schema and rows that parquet
+    inference gives: server_invalid's ``_errors``, the server's nested
+    struct arrays and traffic_price's tier array included."""
+    bronze, lake = str(tmp_path / "bronze"), str(tmp_path / "lake")
+    _write_service_bronze(bronze)
+    with open(os.path.join(bronze, "aws", "instance_types.json"), "a") as fh:
+        fh.write("\n" + json.dumps({"InstanceType": "broken.x"}))
+    cli.cmd_inventory(spark, bronze, lake)
+
+    tables = cli._tables_in(lake)
+    assert {"server", "server_invalid", "traffic_price"} <= set(tables)
+    nested = set()
+    for t in tables:
+        root = os.path.join(lake, t)
+        assert read_extra(root, SCHEMA) is not None, t
+        got = read_snapshot(spark, root)
+        want = spark.read.parquet(current_path(root))
+        assert got.schema == want.schema, t
+        assert sorted(map(str, got.collect())) == \
+            sorted(map(str, want.collect())), t
+        nested |= {(t, f.name) for f in got.schema.fields
+                   if f.dataType.typeName() in ("struct", "array")}
+    assert ("server_invalid", "_errors") in nested
+    assert ("traffic_price", "price_tiered") in nested
+    assert read_snapshot(spark, os.path.join(lake, "server_invalid")).filter(
+        F.col("server_id") == "broken.x").count() == 1
 
 
 def test_inventory_spot_prices_land_with_reported_observed_at(spark, tmp_path):

@@ -716,6 +716,36 @@ def test_stream_near_dedup_batch_equal(spark, tmpdir):
     assert sigs.select("doc_id").distinct().count() == 5
 
 
+def test_near_dedup_batch_fails_on_corrupt_standing_index(spark, tmpdir):
+    """The standing index is read only if it exists, and then any read
+    failure propagates: a corrupt standing shingles partition must fail
+    the micro-batch, not read as "no batches landed yet" (which would
+    empty the standing index and let the novelty gate pass dups)."""
+    from sc_crawler_spark.streaming.pipeline import _near_dedup_batch
+
+    txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    index_dir = os.path.join(tmpdir, "index")
+
+    def run(batch_id, doc_id):
+        batch = spark.createDataFrame([(doc_id, txt)],
+                                      "doc_id long, text string")
+        return _near_dedup_batch(
+            batch, batch_id, os.path.join(tmpdir, "pairs"), index_dir,
+            "text", "doc_id", k=3, n_hashes=8, band_rows=2, threshold=0.5,
+            seed_index_dir=None)
+
+    run(0, 1)   # first batch: no standing index yet, lands one
+    sh_dir = os.path.join(index_dir, "shingles")
+    parts = [os.path.join(d, f) for d, _s, fs in os.walk(sh_dir)
+             for f in fs if f.endswith(".parquet")]
+    assert parts
+    for p in parts:
+        with open(p, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run(1, 2)
+
+
 def test_stream_near_dedup_seeded_from_lake_artifact(spark, tmpdir):
     """The production wiring: the standing corpus index is a cmd_index
     lake artifact (built ONCE, read-only), the stream only accumulates
