@@ -786,8 +786,9 @@ def main() -> None:
                 from sc_crawler_spark.sinks import ann_store, artifacts
                 from sc_crawler_spark.tables import load as _bload
                 # r17 (verdict task 3): probe 8 -> 12 after the A/B
-                # (scripts/ab_ivf_probe.py): recall@5 at the 64-cell
-                # spec 0.800/0.820/0.880/0.900 for n_probe 8/10/12/16
+                # (PLANS.md, "r17: IVF probe-depth A/B"): recall@5 at
+                # the 64-cell spec 0.800/0.820/0.880/0.900 for n_probe
+                # 8/10/12/16
                 # — 12 is the knee, buying 0.08 headroom over the 0.8
                 # gate for +50% stage-1 candidates (18.75% of corpus
                 # per query); oracle re-parameterized in lockstep.

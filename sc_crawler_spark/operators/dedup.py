@@ -970,12 +970,13 @@ def incremental_minhash_pairs(new_df: DataFrame,
         .distinct()
     )
     if probe_prefilter_max > 0:
-        rows = cand.limit(probe_prefilter_max + 1).collect()
-        if len(rows) <= probe_prefilter_max:
-            spark = new_df.sparkSession
-            cand = spark.createDataFrame(rows, cand.schema)
-            cross_ids = sorted({r["id_e"] for r in rows
-                                if r["is_cross"]})
+        # Arrow both ways: the JVM encodes and decodes the candidates
+        # (a LocalTableScan), so no Python worker starts per batch
+        table = cand.limit(probe_prefilter_max + 1).toArrow()
+        if table.num_rows <= probe_prefilter_max:
+            cand = new_df.sparkSession.createDataFrame(table)
+            cross_ids = sorted(set(
+                table.filter(table["is_cross"])["id_e"].to_pylist()))
             base_sh = (base_sh.filter(F.col(id_col).isin(cross_ids))
                        if cross_ids
                        else base_sh.filter(F.lit(False)))

@@ -207,20 +207,21 @@ def _lr_z(wb, wl, wt, wp):
     return wb + wl * F.col("x1") + wt * F.col("x2") + wp * F.col("x3")
 
 
-def lr_features(docs: DataFrame) -> DataFrame:
-    """The classifier's feature projection (doc_id, x1, x2, x3, y) —
-    shared by the batch training chain and the streaming quality gate
-    (stream_lr_quality_gate), so offline training and in-stream
-    serving provably compute the SAME features. Centered, ~unit-range:
-    GD from zero init needs the uninformative directions to sit near 0
-    mean or the bias soaks epochs re-centering them."""
+def lr_features(docs: DataFrame, keep: str = "doc_id") -> DataFrame:
+    """The classifier's feature projection (``keep``, x1, x2, x3, y) —
+    shared by the batch training chain (keep = doc_id) and the
+    streaming quality gate (stream_lr_quality_gate, keep = ``*``: the
+    features ride next to the input columns), so offline training and
+    in-stream serving provably compute the SAME features. Centered,
+    ~unit-range: GD from zero init needs the uninformative directions
+    to sit near 0 mean or the bias soaks epochs re-centering them."""
     from ..functions.text import LANG_MARKERS
 
     toks = F.split(F.lower(F.col("text")), " ")
     n_tok = F.size(toks)
     hits = F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS["en"])))
     return docs.select(
-        "doc_id",
+        keep,
         ((F.least(F.length("text"), F.lit(2000)) - 300.0) / 300.0)
         .alias("x1"),
         ((F.least(F.length("text") / n_tok.cast("double"), F.lit(12.0))
@@ -1915,7 +1916,7 @@ _RRF_TOP_K = 5
 _SERVE_IVF_N_CELLS = 8
 _SERVE_IVF_ITERS = 2
 # Dense-arm probe depth for the opt-in serve. r17: 3 -> 4 after the
-# overlap A/B (scripts/ab_hybrid_probe.py): fused-top-5 overlap
+# overlap A/B (PLANS.md, "r17: IVF probe-depth A/B"): fused-top-5
 # served-vs-in-plan 0.72 -> 0.78 -> 0.86 at n_probe 3/4/5 on sf0.01;
 # 4 is the knee (+0.06 overlap for +1/8 corpus scanned per query,
 # probe 5 would scan 62.5% and stop being approximate). The 64x bench

@@ -244,10 +244,13 @@ def stream_near_dedup(docs: DataFrame, pairs_dir: str, index_dir: str,
     _validate_seed_index(seed_index_dir, k, n_hashes, text_col, id_col)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        _near_dedup_batch(batch.select(id_col, text_col), batch_id,
-                          pairs_dir, index_dir, text_col, id_col, k,
-                          n_hashes, band_rows, threshold,
-                          seed_index_dir)
+        batch = batch.select(id_col, text_col).cache()
+        try:
+            _near_dedup_batch(batch, batch_id, pairs_dir, index_dir,
+                              text_col, id_col, k, n_hashes, band_rows,
+                              threshold, seed_index_dir)
+        finally:
+            batch.unpersist()
 
     return (
         docs.writeStream.foreachBatch(_apply)
@@ -275,6 +278,12 @@ def _validate_seed_index(seed_index_dir: str | None, k: int,
             f"want a minhash index built with {want}")
 
 
+# Candidate-pair cap of the streaming probe's pushdown
+# (incremental_minhash_pairs(probe_prefilter_max=...)): a micro-batch
+# with more candidates falls back to the collect-free plan.
+_PROBE_PREFILTER_MAX = 64 * 1024
+
+
 def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
                       index_dir: str, text_col: str, id_col: str,
                       k: int, n_hashes: int, band_rows: int,
@@ -285,7 +294,14 @@ def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
     the standing index (seed artifact ∪ accumulated batches), land the
     verified pairs + the batch's shingles/signatures/digest partial
     (all overwrite-own-``batch=<id>``-partition — idempotent under
-    checkpoint replay), and return the landed pair partition's path."""
+    checkpoint replay), and return the landed pair partition's path.
+
+    The caller caches ``batch`` and owns its release: the batch's
+    per-batch actions (pairs, shingles, signatures, digest, and the
+    gate's accepted write) each re-read it. The batch's own shingle
+    and signature tables are cached here and released in a
+    ``finally``, so a failing batch leaks no cache into the
+    session."""
     from ..operators.dedup import (
         _band_table, _signatures_from_shingles, doc_shingles,
         incremental_minhash_pairs, verified_pairs_from_index)
@@ -317,52 +333,52 @@ def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
         base_sh = _union(seed_sh, base_sh)
         base_sig = _union(seed_sig, base_sig)
     # The batch's own tables are computed ONCE and cached for the
-    # micro-batch's lifetime: the five per-batch actions (pairs,
-    # shingles, signatures, digest, and the gate's accepted write)
-    # would otherwise each re-run the tokenize/shingle/md5-aggregate
-    # chain from raw text — measured as the bulk of the ingest-gate
-    # leg at 512x seed scale (r17). Unpersisted before return so
-    # per-batch cache never accumulates across micro-batches.
-    batch = batch.cache()
+    # micro-batch's lifetime: the per-batch actions would otherwise
+    # each re-run the tokenize/shingle/md5-aggregate chain from raw
+    # text — measured as the bulk of the ingest-gate leg at 512x seed
+    # scale (r17). Released in the finally so per-batch cache never
+    # accumulates across micro-batches, failed ones included.
     new_sh = doc_shingles(batch, text_col, id_col, k).cache()
     new_sig = _signatures_from_shingles(new_sh, id_col, n_hashes).cache()
-    if base_sh is not None and base_sig is not None:
-        # candidate-id pushdown (r18): the probe's verify stage reads
-        # the STANDING corpus-sized shingle table per micro-batch; a
-        # micro-batch only ever needs the few candidate rows, so the
-        # streaming path opts into the gated bounded-collect + In
-        # filter (row-group pruning against the id-clustered layout).
-        # Registry/offline callers keep the collect-free plan.
-        pre_max = int(os.environ.get(
-            "SC_SPARK_PROBE_PREFILTER_MAX", str(64 * 1024)))
-        pairs = incremental_minhash_pairs(
-            batch, (base_sh, base_sig), text_col, id_col, k=k,
-            n_hashes=n_hashes, band_rows=band_rows,
-            threshold=threshold, new_index=(new_sh, new_sig),
-            probe_prefilter_max=pre_max)
-    else:  # first batch: nothing standing, the batch IS the corpus —
-        # same body as minhash_lsh_pairs, over the already-cached tables
-        pairs = verified_pairs_from_index(
-            new_sh, _band_table(new_sig, id_col, n_hashes, band_rows),
-            id_col, threshold
-        ).withColumn("is_cross", F.lit(False))
-    pair_part = os.path.join(pairs_dir, f"batch={batch_id}")
-    pairs.write.mode("overwrite").parquet(pair_part)
-    new_sh.write.mode("overwrite").parquet(
-        os.path.join(sh_dir, f"batch={batch_id}"))
-    new_sig.write.mode("overwrite").parquet(
-        os.path.join(sig_dir, f"batch={batch_id}"))
-    # partial corpus digest (artifacts.digest_cols — an empty replayed
-    # batch lands the xor identity): what makes the accumulated stream
-    # FOLDABLE into a new digest-keyed artifact (sinks/index_store.
-    # fold_minhash_index) without ever re-reading the batch texts —
-    # same overwrite-own-partition idempotence as the other per-batch
-    # writes
-    batch.agg(*artifacts.digest_cols(text_col, id_col)).write.mode(
-        "overwrite").parquet(
-        os.path.join(index_dir, "digest", f"batch={batch_id}"))
-    for df_ in (new_sig, new_sh, batch):
-        df_.unpersist()
+    try:
+        if base_sh is not None and base_sig is not None:
+            # candidate-id pushdown (r18): the probe's verify stage
+            # reads the STANDING corpus-sized shingle table per
+            # micro-batch; a micro-batch only ever needs the few
+            # candidate rows, so the streaming path opts into the
+            # gated bounded-collect + In filter (row-group pruning
+            # against the id-clustered layout). Registry/offline
+            # callers keep the collect-free plan.
+            pairs = incremental_minhash_pairs(
+                batch, (base_sh, base_sig), text_col, id_col, k=k,
+                n_hashes=n_hashes, band_rows=band_rows,
+                threshold=threshold, new_index=(new_sh, new_sig),
+                probe_prefilter_max=_PROBE_PREFILTER_MAX)
+        else:  # first batch: nothing standing, the batch IS the
+            # corpus — same body as minhash_lsh_pairs, over the
+            # already-cached tables
+            pairs = verified_pairs_from_index(
+                new_sh, _band_table(new_sig, id_col, n_hashes, band_rows),
+                id_col, threshold
+            ).withColumn("is_cross", F.lit(False))
+        pair_part = os.path.join(pairs_dir, f"batch={batch_id}")
+        pairs.write.mode("overwrite").parquet(pair_part)
+        new_sh.write.mode("overwrite").parquet(
+            os.path.join(sh_dir, f"batch={batch_id}"))
+        new_sig.write.mode("overwrite").parquet(
+            os.path.join(sig_dir, f"batch={batch_id}"))
+        # partial corpus digest (artifacts.digest_cols — an empty
+        # replayed batch lands the xor identity): what makes the
+        # accumulated stream FOLDABLE into a new digest-keyed artifact
+        # (sinks/index_store.fold_minhash_index) without ever
+        # re-reading the batch texts — same overwrite-own-partition
+        # idempotence as the other per-batch writes
+        batch.agg(*artifacts.digest_cols(text_col, id_col)).write.mode(
+            "overwrite").parquet(
+            os.path.join(index_dir, "digest", f"batch={batch_id}"))
+    finally:
+        new_sig.unpersist()
+        new_sh.unpersist()
     return pair_part
 
 
@@ -379,11 +395,13 @@ def stream_ingest_gate(docs: DataFrame, out_dir: str, pairs_dir: str,
     (stream_lr_quality_gate's exact scoring), the offline-fitted DSIR
     importance gate (stream_dsir_gate's exact scoring), and near-dup
     NOVELTY against the standing minhash index; survivors land under
-    ``out_dir`` with both scores attached.
+    ``out_dir`` as (doc_id, text, prob, log_weight), one row per
+    accepted arriving row.
 
     Order is the production one: the two row-local gates run FIRST
-    (cheap, shuffle-free — Theta(batch) expression work), so only
-    their survivors pay shingling and the band-bucket probe. The
+    (cheap, shuffle-free — Theta(batch) expression work), nested as
+    filters over one read of the batch — no join decides a gate — so
+    only their survivors pay shingling and the band-bucket probe. The
     near-dedup stage is the stream_near_dedup body verbatim
     (_near_dedup_batch): survivors' pairs/shingles/signatures/digest
     partials land exactly like the standalone stream, so the
@@ -408,36 +426,37 @@ def stream_ingest_gate(docs: DataFrame, out_dir: str, pairs_dir: str,
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        quality = stream_lr_quality_gate(batch, weights) \
-            .select("doc_id", "prob")
-        importance = stream_dsir_gate(batch, lr_by_bucket,
-                                      dsir_threshold) \
-            .select("doc_id", "log_weight")
-        surv = (batch.select("doc_id", "text")
-                .join(quality, "doc_id")       # inner joins = AND of
-                .join(importance, "doc_id")    # the row-local gates
-                # cached: the dedup stage's five actions and the
-                # accepted write below each re-evaluate surv, and the
-                # two gates tokenize the batch per evaluation (r17)
+        # the row-local gates nest as filters over ONE scan of the
+        # batch (each arriving row lands at most once); cached: the
+        # dedup stage's actions and the accepted write below each
+        # re-evaluate surv, and the gates tokenize per evaluation
+        surv = (stream_dsir_gate(
+                    stream_lr_quality_gate(
+                        batch.select("doc_id", "text"), weights),
+                    lr_by_bucket, dsir_threshold)
+                .select("doc_id", "text", "prob", "log_weight")
                 .cache())
-        pair_part = _near_dedup_batch(
-            surv.select("doc_id", "text"), batch_id, pairs_dir,
-            index_dir, "text", "doc_id", k, n_hashes, band_rows,
-            threshold, seed_index_dir)
-        pairs = spark.read.parquet(pair_part)
-        # drop a batch doc that duplicates the standing corpus (either
-        # pair side when cross) or a smaller-id batch survivor (id_b
-        # of an intra pair); the anti join only ever removes BATCH
-        # docs, so a cross pair's standing side is a no-op here
-        dropped = (pairs.select(F.col("id_b").alias("doc_id"))
-                   .unionByName(
-                       pairs.filter("is_cross")
-                       .select(F.col("id_a").alias("doc_id")))
-                   .distinct())
-        accepted = surv.join(dropped, "doc_id", "left_anti")
-        accepted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}"))
-        surv.unpersist()
+        try:
+            pair_part = _near_dedup_batch(
+                surv.select("doc_id", "text"), batch_id, pairs_dir,
+                index_dir, "text", "doc_id", k, n_hashes, band_rows,
+                threshold, seed_index_dir)
+            pairs = spark.read.parquet(pair_part)
+            # drop a batch doc that duplicates the standing corpus
+            # (either pair side when cross) or a smaller-id batch
+            # survivor (id_b of an intra pair); the anti join only
+            # ever removes BATCH docs, so a cross pair's standing side
+            # is a no-op here
+            dropped = (pairs.select(F.col("id_b").alias("doc_id"))
+                       .unionByName(
+                           pairs.filter("is_cross")
+                           .select(F.col("id_a").alias("doc_id")))
+                       .distinct())
+            accepted = surv.join(dropped, "doc_id", "left_anti")
+            accepted.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch={batch_id}"))
+        finally:
+            surv.unpersist()
 
     return (
         docs.writeStream.foreachBatch(_apply)
@@ -687,21 +706,23 @@ def stream_lr_quality_gate(docs: DataFrame, weights: dict) -> DataFrame:
     batch == stream by construction (asserted e2e); per-batch cost is
     proportional to the batch's own files.
 
+    A filter: the output is the input's columns (it needs ``text``)
+    plus ``prob``, one row per accepted input row, so it composes with
+    stream_dsir_gate by nesting — no join.
+
     ``weights``: mapping with w_b / w_l / w_t / w_p floats, e.g.
     ``{k: row[k] for k in ("w_b","w_l","w_t","w_p")}`` from the
     trained chain's one-row frame (or a lake weights artifact)."""
     from ..functions.scalars import dround
     from ..queries.pipeline import _lr_sigmoid, lr_features
 
-    feat = lr_features(docs)
     z = (F.lit(float(weights["w_b"]))
          + F.lit(float(weights["w_l"])) * F.col("x1")
          + F.lit(float(weights["w_t"])) * F.col("x2")
          + F.lit(float(weights["w_p"])) * F.col("x3"))
-    return (feat.select(
-        "doc_id", dround(_lr_sigmoid(z), 6).alias("prob"),
-        (z > 0).alias("kept"))
-        .filter(F.col("kept")))
+    return (lr_features(docs, "*").filter(z > 0)
+            .withColumn("prob", dround(_lr_sigmoid(z), 6))
+            .drop("x1", "x2", "x3", "y"))
 
 
 def stream_dsir_gate(docs: DataFrame, lr_by_bucket: list,
@@ -723,6 +744,10 @@ def stream_dsir_gate(docs: DataFrame, lr_by_bucket: list,
     watermark; per-batch cost is proportional to the batch's own
     files at any corpus size.
 
+    A filter like stream_lr_quality_gate: the output is the input's
+    columns (it needs ``text``) plus ``n_grams`` and ``log_weight``,
+    one row per kept input row.
+
     ``lr_by_bucket``: the ``_DSIR_B`` floats from
     ``dsir_log_ratios(...).orderBy("bucket")`` (or a lake model
     artifact), indexed by bucket id."""
@@ -735,7 +760,7 @@ def stream_dsir_gate(docs: DataFrame, lr_by_bucket: list,
             f"stream_dsir_gate: expected {_DSIR_B} bucket ratios, "
             f"got {len(lr_by_bucket)}")
     # token array materialized once — see dsir_select (5 refs) (r17)
-    toked = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
+    toked = docs.select("*", tokens(F.col("text")).alias("_toks"))
     ts = F.col("_toks")
     n = F.size(ts)
     big = F.when(n >= 2, _grams(ts, 2)) \
@@ -745,14 +770,14 @@ def stream_dsir_gate(docs: DataFrame, lr_by_bucket: list,
         F.concat(ts, big),
         lambda g: (F.conv(F.substring(F.md5(g), 1, 15), 16, 10)
                    .cast("long") % _DSIR_B).cast("int"))
-    w = toked.select("doc_id", buckets.alias("bks"))
-    s = F.aggregate(F.col("bks"), F.lit(0.0),
+    w = toked.select("*", buckets.alias("_bks")).drop("_toks")
+    s = F.aggregate(F.col("_bks"), F.lit(0.0),
                     lambda acc, b: acc + F.element_at(lr_arr, b + 1))
     return (w.select(
-        "doc_id", F.size("bks").cast("long").alias("n_grams"),
+        "*", F.size("_bks").cast("long").alias("n_grams"),
         dround(s, 6).alias("log_weight"))
-        .withColumn("kept", F.col("log_weight") >= F.lit(threshold))
-        .filter(F.col("kept")))
+        .drop("_bks")
+        .filter(F.col("log_weight") >= F.lit(threshold)))
 
 
 def streaming_cms_sketch(events: DataFrame, state_dir: str,

@@ -214,8 +214,9 @@ def test_ivf_artifact_recall_at_production_spec(spark, tmp_path):
     artifact SERVE at the production spec — 64 Lloyd-trained cells —
     so the speed claim carries an explicit recall gate at the same
     spec. r17 (verdict task 3): probe depth 8 -> 12 after the A/B
-    (scripts/ab_ivf_probe.py: recall@5 0.800/0.820/0.880/0.900 at
-    n_probe 8/10/12/16, serve time flat at this sf) — the old spec
+    (PLANS.md, "r17: IVF probe-depth A/B": recall@5
+    0.800/0.820/0.880/0.900 at n_probe 8/10/12/16, serve time flat
+    at this sf) — the old spec
     sat EXACTLY at the 0.8 gate, one centroid-init flake from red
     (r16 ADVICE #3: centroid float sums are partitioning-dependent);
     12 probes buy 0.08 measured headroom for 18.75% of the corpus
@@ -248,9 +249,10 @@ def test_hybrid_served_fused_overlap(spark, tmp_path):
     top-5 can differ from the exact in-plan fusion. Gate the drift:
     fused (query, doc) overlap served-vs-in-plan >= 0.6 on the sf0.01
     fixture (r17: n_probe 3 -> 4 measured 0.72 -> 0.78 — the A/B knee,
-    scripts/ab_hybrid_probe.py; the lexical arm is bit-equal, so all
-    drift is the dense arm's cell pruning). The bench publishes the
-    same overlap at 64x scale (scale.hybrid_fused_overlap)."""
+    PLANS.md, "r17: IVF probe-depth A/B"; the lexical arm is
+    bit-equal, so all drift is the dense arm's cell pruning). The
+    bench publishes the same overlap at 64x scale
+    (scale.hybrid_fused_overlap)."""
     import os
 
     from sc_crawler_spark.queries.pipeline import hybrid_rrf_retrieval

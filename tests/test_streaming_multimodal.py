@@ -1144,6 +1144,42 @@ def test_stream_dsir_gate_matches_batch_and_offline_fit(spark, tmpdir):
     assert overlap > 0
 
 
+def test_failed_micro_batch_releases_its_caches(spark, tmpdir):
+    """A micro-batch that fails mid-way (its pairs write lands under a
+    regular file) must leave the session's persisted RDDs exactly as
+    they were: the near-dedup stream's batch and the ingest gate's
+    survivors, and the shingle/signature tables of both, are released
+    in a ``finally``, not only on the success path."""
+    from sc_crawler_spark.queries.curation import _DSIR_B
+    from sc_crawler_spark.streaming import (
+        read_document_stream, stream_ingest_gate, stream_near_dedup)
+    from sc_crawler_spark.tables import load
+
+    src = os.path.join(tmpdir, "docs")
+    load(spark, SF, "documents").limit(40).coalesce(1) \
+        .write.parquet(src)
+    blocker = os.path.join(tmpdir, "blocker")
+    open(blocker, "w").close()
+    pairs_dir = os.path.join(blocker, "pairs")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    for name, start in (
+            ("dedup", lambda ck: stream_near_dedup(
+                read_document_stream(spark, src), pairs_dir,
+                os.path.join(tmpdir, "idx_dedup"), ck)),
+            ("gate", lambda ck: stream_ingest_gate(
+                read_document_stream(spark, src),
+                os.path.join(tmpdir, "out"), pairs_dir,
+                os.path.join(tmpdir, "idx_gate"), ck,
+                {"w_b": 1.0, "w_l": 0.0, "w_t": 0.0, "w_p": 0.0},
+                [0.0] * _DSIR_B))):
+        q = start(os.path.join(tmpdir, f"ckpt_{name}"))
+        with pytest.raises(Exception):
+            q.awaitTermination(120)
+        assert set(jsc.getPersistentRDDs().keySet()) == before, name
+
+
 def test_fold_guard_carries_manifest_on_no_lineage(spark, tmpdir):
     """r15 ADVICE (medium): when a micro-batch has no file lineage
     (inputFiles() empty — e.g. an empty batch on a file source) the
@@ -1195,8 +1231,14 @@ def test_stream_ingest_gate_composes_three_gates(spark, tmpdir):
     filter ∘ minhash-pair drop-larger-id, with bit-equal per-doc
     scores (the two row-local gates are stateless and the novelty
     fold covers all survivors, so batch boundaries cannot move the
-    accepted set when ids are arrival-monotone)."""
+    accepted set when ids are arrival-monotone).
+
+    The gates are filters, not joins: a batch that repeats a doc_id
+    (here with another survivor's text) lands each surviving arriving
+    row exactly once, with its own text and scores — compared as a
+    multiset."""
     import glob as _glob
+    from collections import Counter
 
     from sc_crawler_spark.operators.dedup import minhash_lsh_pairs
     from sc_crawler_spark.queries.curation import dsir_log_ratios
@@ -1214,12 +1256,24 @@ def test_stream_ingest_gate_composes_three_gates(spark, tmpdir):
     lr = [float(r.lr) for r in
           dsir_log_ratios(docs).orderBy("bucket").collect()]
 
+    def gates(df):
+        return stream_dsir_gate(
+            stream_lr_quality_gate(df.select("doc_id", "text"), weights),
+            lr, 0.0).select("doc_id", "text", "prob", "log_weight")
+
+    # batch 2 repeats survivor d's id, carrying survivor e's text
+    d, e = [r.doc_id for r in gates(docs.filter(F.col("doc_id") >= 250))
+            .orderBy("doc_id").limit(2).collect()]
+    dup = docs.filter(F.col("doc_id") == d).withColumn(
+        "text", F.lit(docs.filter(F.col("doc_id") == e).first().text))
+    arriving = docs.unionByName(dup)
+
     # arrival-monotone split (the crawl convention the novelty
     # semantics assume): every batch-1 id < every batch-2 id
     src = os.path.join(tmpdir, "docs")
     os.makedirs(src)
-    for name, half in (("a", docs.filter(F.col("doc_id") < 250)),
-                       ("b", docs.filter(F.col("doc_id") >= 250))):
+    for name, half in (("a", arriving.filter(F.col("doc_id") < 250)),
+                       ("b", arriving.filter(F.col("doc_id") >= 250))):
         stage = os.path.join(tmpdir, f"_stage_{name}")
         half.coalesce(1).write.parquet(stage)
         part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
@@ -1231,22 +1285,20 @@ def test_stream_ingest_gate_composes_three_gates(spark, tmpdir):
         out, os.path.join(tmpdir, "pairs"), os.path.join(tmpdir, "idx"),
         os.path.join(tmpdir, "ckpt"), weights, lr, dsir_threshold=0.0)
     q.awaitTermination(300)
-    got = {r.doc_id: (r.prob, r.log_weight)
-           for r in spark.read.parquet(out).collect()}
 
-    # the offline twin, composed from the SAME gate transforms
-    quality = stream_lr_quality_gate(docs, weights) \
-        .select("doc_id", "prob")
-    importance = stream_dsir_gate(docs, lr, 0.0) \
-        .select("doc_id", "log_weight")
-    surv = (docs.select("doc_id", "text")
-            .join(quality, "doc_id").join(importance, "doc_id"))
+    def rows(df):
+        return sorted((r.doc_id, r.text, r.prob, r.log_weight)
+                      for r in df.collect())
+    got = rows(spark.read.parquet(out))
+
+    # the offline twin, composed from the SAME two gate filters
+    surv = gates(arriving)
     pairs = minhash_lsh_pairs(surv, "text", "doc_id", k=3, n_hashes=8,
                               band_rows=2, threshold=0.5)
-    dropped = {r.id_b for r in pairs.collect()}
-    want = {r.doc_id: (r.prob, r.log_weight) for r in surv.collect()
-            if r.doc_id not in dropped}
+    dropped = [r.id_b for r in pairs.collect()]
+    want = rows(surv.filter(~F.col("doc_id").isin(dropped)))
     assert got == want
+    assert Counter(r[0] for r in got)[d] == 2   # one row per arrival
     # every stage actually filters: quality+importance < corpus, and
     # the novelty stage dropped at least one near-dup survivor
     assert 0 < len(got) < docs.count()

@@ -214,33 +214,48 @@ def test_incremental_minhash_probe_prefilter_identical(spark):
     candidate pushdown (bounded-collect of the candidate set + In
     filter on the base shingle scan) must be result-identical to the
     collect-free plan — both when the candidate set fits the gate and
-    when it overflows (fallback)."""
+    when it overflows (fallback). The admitted candidate table goes
+    through Arrow both ways: a LocalTableScan decoded by the JVM, never
+    a Python RDD (ExistingRDD) that starts Python workers per batch."""
+    import pyarrow as pa
+
     from sc_crawler_spark.operators.dedup import (
         incremental_minhash_pairs, minhash_index)
 
+    def frame(rows):
+        # Arrow-built, so the only Python-row scan a plan could hold
+        # is the probe's own candidate table
+        ids, texts = zip(*rows)
+        return spark.createDataFrame(pa.table(
+            {"doc_id": pa.array(ids, pa.int64()), "text": texts}))
+
     txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    base = spark.createDataFrame(
+    base = frame(
         [(1, txt), (2, txt),
-         (3, "totally different words entirely unrelated here now")],
-        "doc_id long, text string")
-    new = spark.createDataFrame(
+         (3, "totally different words entirely unrelated here now")])
+    new = frame(
         [(10, txt), (11, txt),
-         (12, "nothing in common with anything whatsoever at all")],
-        "doc_id long, text string")
+         (12, "nothing in common with anything whatsoever at all")])
     idx = minhash_index(base, "text", "doc_id", k=3, n_hashes=8)
 
+    def pairs(pre_max):
+        return incremental_minhash_pairs(
+            new, idx, "text", "doc_id", k=3, n_hashes=8, band_rows=2,
+            threshold=0.5, probe_prefilter_max=pre_max)
+
     def run(pre_max):
-        return sorted(
-            (r.id_a, r.id_b, r.jaccard, r.is_cross)
-            for r in incremental_minhash_pairs(
-                new, idx, "text", "doc_id", k=3, n_hashes=8,
-                band_rows=2, threshold=0.5,
-                probe_prefilter_max=pre_max).collect())
+        return sorted((r.id_a, r.id_b, r.jaccard, r.is_cross)
+                      for r in pairs(pre_max).collect())
 
     off = run(0)
     assert off == run(10_000)       # gate admits: pushdown plan
     assert off == run(1)            # gate overflows: fallback plan
     assert len(off) == 5            # same edges as the contract test
+
+    admitted = pairs(10_000)._jdf.queryExecution().executedPlan() \
+        .toString()
+    assert "LocalTableScan" in admitted
+    assert "ExistingRDD" not in admitted
 
     # a batch with NO candidates at all: the pushdown must produce
     # the empty result, not error on an empty In list
