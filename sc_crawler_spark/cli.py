@@ -14,6 +14,12 @@ reproduce the reference semantics:
   ``_schema.json`` manifest per table.
 - ``copy``  — copy each table's committed snapshot to a new lake as
   files (no Spark job).
+- ``inventory`` — the per-vendor pull (cli.py:868-906) over a landed
+  bronze tree, one driver for every vendor: one bronze reader, one
+  validate-and-record step per source, one landing. Quarantined rows
+  append to the ``server_invalid`` audit table, which gets a new
+  version only when the run quarantined a row or the table does not
+  exist yet.
 
 Usage: ``python -m sc_crawler_spark.cli <cmd> ...``
 """
@@ -21,10 +27,12 @@ Usage: ``python -m sc_crawler_spark.cli <cmd> ...``
 from __future__ import annotations
 
 import argparse
+import glob
 import hashlib
 import json
 import os
 import shutil
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,8 +41,9 @@ from . import migrate, schemas
 from .operators.sync import hash_diff, with_row_hash
 from .operators.upsert import merge_upsert, scd2_append
 from .session import get_spark
-from .sinks.snapshot import (copy_snapshot, current_path, read_snapshot,
-                             snapshot_exists, version_rows, write_snapshot)
+from .sinks.snapshot import (append_snapshot, copy_snapshot, current_path,
+                             read_snapshot, snapshot_exists, version_rows,
+                             write_snapshot)
 from .sources import lookup
 
 
@@ -180,7 +189,7 @@ def cmd_sync(spark: SparkSession, source: str, target: str,
     # narrow (pks, action) result so the full-outer join runs once, and
     # release exactly it when the sync ends: other frames cached in a
     # long-lived session stay cached
-    diff = hash_diff(src, tgt, pks, cache=False).persist()
+    diff = hash_diff(src, tgt, pks).persist()
     try:
         stats = {r["action"]: r["count"]
                  for r in diff.groupBy("action").count().collect()}
@@ -422,200 +431,358 @@ def cmd_schemas(spark: SparkSession, action: str, lake: str,
                       "added_columns": added}))
 
 
-def cmd_inventory(spark: SparkSession, bronze: str, lake: str,
-                  vendor: str = "aws",
-                  records: list[str] | None = None) -> None:
-    """The reference's per-vendor `pull` (cli.py:868-906, §3.1) over a
-    landed bronze tree:
-
-    - ``<bronze>/<vendor>/instance_types.json`` — one raw
-      describe-instance-types payload per line (S1),
-    - ``<bronze>/<vendor>/products.json`` — pricing rows with the nested
-      ``terms`` JSON (P2 walk),
-    - ``<bronze>/<vendor>/regions.json`` / ``zones.json`` — dims.
-
-    standardize (P1) -> keep-last dedup (A4) -> validate/default-fill
-    (P8) -> price assembly with zone fan-out (J2) -> merge-upsert into
-    the lake with inactivate-missing (K1+T1). Invalid rows go to an
-    error-side table, never fail the job.
-
-    GCP (``machine_types.json``, _gcp.py:289-350) and Azure
-    (``skus.json``, _azure.py:453-579) land server shapes through their
-    own standardizers; all vendors share the same silver merge path with
-    a per-vendor inactivation scope.
-
-    Beyond servers, every OTHER record type the reference inventories
-    (tables.py:165-184) lands when its bronze file is present:
-    ``storage``/``storage_price`` (storage_products.json,
-    _aws.py:1169-1266), ``database``/``database_price``/
-    ``database_storage``/``database_storage_price`` (rds_products.json
-    + rds_orderable_options.json + rds_engine_versions.json,
-    _aws.py:1541-1758), ``traffic_price`` with full price tiers
-    (traffic_products.json, _aws.py:1268-1309) and ``ipv4_price``
-    (ipv4_products.json, _aws.py:1312-1349).
-
-    Each standardized source is validated once: its flagged frame is
-    persisted for the run (``validate_items(held=...)``), so the table
-    merge, the price assembly and the error-side union all read one
-    computation. Exactly those frames are released when the run ends.
-    """
-    from .sources.catalog import VENDOR_SERVER_SPECS
-
-    held: list[DataFrame] = []
-    try:
-        if vendor == "azure" or vendor in VENDOR_SERVER_SPECS:
-            _inventory_catalog_vendor(spark, bronze, lake, vendor, records,
-                                      held)
-        else:
-            _inventory_aws(spark, bronze, lake, vendor, records, held)
-    finally:
-        for df in held:
-            df.unpersist()
-
-
-def _inventory_aws(spark: SparkSession, bronze: str, lake: str,
-                   vendor: str, records: list[str] | None,
-                   held: list[DataFrame]) -> None:
-    """AWS-shaped inventory: instance types, products (terms walk),
-    regions/zones, spot prices and the service record types."""
-    from .operators.validate import validate_items
-    from .operators.windows import keep_last_dedup
-    from .sources import aws
-
-    vroot = os.path.join(bronze, vendor)
-    raw = spark.read.schema(aws.RAW_INSTANCE_TYPE).json(
-        os.path.join(vroot, "instance_types.json")
-    )
-    payload = raw.select(
-        F.struct(*[F.col(f.name) for f in aws.RAW_INSTANCE_TYPE.fields])
-        .alias("payload")
-    )
-    servers = aws.standardize_instance_types(payload, vendor).withColumn(
-        "_pos", F.monotonically_increasing_id()
-    )
-    servers = keep_last_dedup(
-        servers, ["vendor_id", "server_id"], "_pos"
-    ).drop("_pos")
-    valid, invalid = validate_items(servers, "server", held)
-
-    # every bronze file is existence-gated (a servers-only crawl is a
-    # legal partial tree — stream_server_inventory produces exactly
-    # that); a missing pricing/region file degrades to an empty frame
-    # so the server table still lands instead of the whole run dying
-    # on PATH_NOT_FOUND
-    def _read_or_empty(fname: str, schema: str):
-        p = os.path.join(vroot, fname)
-        if os.path.exists(p):
-            return spark.read.schema(schema).json(p)
-        return spark.createDataFrame([], schema)
-
-    prods = _read_or_empty(
-        "products.json",
-        "instance_type string, location string, operating_system string, "
-        "terms string")
-    products = prods.select(
-        "instance_type", "location", "operating_system",
-        F.round(
-            aws.extract_ondemand_price(
-                F.from_json("terms", aws.TERMS_SCHEMA)
-            ), 4,
-        ).alias("price"),
-    ).filter(F.col("price").isNotNull())
-    regions = _read_or_empty(
-        "regions.json",
-        "region_id string, name string, aliases array<string>")
-    zones = _read_or_empty(
-        "zones.json", "region_id string, zones array<string>")
-    prices = aws.assemble_server_prices(
-        products, valid.select("vendor_id", "server_id"), regions, zones
-    )
-    spot_path = os.path.join(vroot, "spot_prices.json")
-    if os.path.exists(spot_path):
-        from .sources import aws_services as svc
-
-        raw_spot = spark.read.schema(svc.RAW_SPOT_PRICE).json(spot_path)
-        prices = prices.unionByName(
-            svc.assemble_spot_prices(raw_spot, valid, zones, vendor),
-            allowMissingColumns=True,
-        )
-    prices_valid, prices_invalid = validate_items(prices, "server_price", held)
-
-    svc_outputs, svc_invalids = _service_inventories(
-        spark, vroot, regions, valid, vendor, held
-    )
-    all_invalid = invalid.unionByName(prices_invalid, allowMissingColumns=True)
-    for inv in svc_invalids:
-        all_invalid = all_invalid.unionByName(inv, allowMissingColumns=True)
-
-    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor, held)
-    for inv in rz_invalids:
-        all_invalid = all_invalid.unionByName(inv, allowMissingColumns=True)
-
-    os.makedirs(lake, exist_ok=True)
-    _ensure_lake(lake)
-    outputs = {
-        "server": (valid, schemas.PRIMARY_KEYS["server"]),
-        "server_price": (prices_valid, schemas.PRIMARY_KEYS["server_price"]),
-        **svc_outputs,
-        **rz_outputs,
-        "server_invalid": (all_invalid, None),
-    }
-    _land_tables(spark, lake, outputs, vendor, records)
-
-
 _REGION_BRONZE_SCHEMA = (
     "region_id string, name string, aliases array<string>, "
     "api_reference string, options array<string>, country_id string, "
     "state string, city string, lon double, lat double, "
     "founding_year int, green_energy boolean"
 )
+# the region list the price assemblies fan out over
+_FANOUT_REGION_SCHEMA = "region_id string, name string, aliases array<string>"
+_CATALOG_REGION_SCHEMA = (
+    _FANOUT_REGION_SCHEMA + ", api_reference string, options array<string>")
+_ZONE_SCHEMA = "region_id string, zones array<string>"
+_GCP_MACHINE_TYPE_SCHEMA = (
+    "id long, name string, description string, guest_cpus int, "
+    "memory_mb long, is_shared_cpu boolean, "
+    "accelerators array<struct<guest_accelerator_count:int,"
+    "guest_accelerator_type:string>>, deprecated struct<state:string>"
+)
+_AZURE_SKU_SCHEMA = (
+    "name string, family string, "
+    "capabilities array<struct<name:string,value:string>>"
+)
 
 
-def _region_zone_tables(spark: SparkSession, vroot: str, vendor: str,
-                        held: list[DataFrame]):
-    """region / zone dim rows from the bronze fan-out files — the
-    reference's per-vendor `inventory_regions` / `inventory_zones`
-    (tables.py:165-168) land as tables, not just price fan-out inputs.
-    Rows missing required facts (e.g. country_id) quarantine to the
-    invalid side like every other record type."""
+def _read_bronze(spark: SparkSession, root: str, name: str, schema=None,
+                 empty: bool = False, parse=None) -> DataFrame | None:
+    """The one bronze reader: ``<root>/<name>`` (a glob reads every
+    landed match) as JSON Lines under ``schema`` (inferred without one),
+    or through ``parse(spark, path)``. When nothing is landed there: an
+    empty frame under ``schema`` if ``empty``, else None."""
+    path = os.path.join(root, name)
+    if not glob.glob(path):
+        return spark.createDataFrame([], schema) if empty else None
+    if parse is not None:
+        return parse(spark, path)
+    return (spark.read.schema(schema) if schema else spark.read).json(path)
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  frames)
+
+
+def cmd_inventory(spark: SparkSession, bronze: str, lake: str,
+                  vendor: str = "aws",
+                  records: list[str] | None = None) -> None:
+    """The reference's per-vendor `pull` (cli.py:868-906, §3.1) over a
+    landed bronze tree ``<bronze>/<vendor>/*.json`` (JSON Lines):
+    standardize (P1) -> keep-last dedup (A4) -> validate/default-fill
+    (P8) -> price assembly with zone fan-out (J2) -> merge-upsert into
+    the lake with inactivate-missing (K1+T1). Invalid rows go to the
+    ``server_invalid`` audit table, never fail the job.
+
+    One driver for every vendor, in three pieces:
+
+    - ``read(name, schema)`` (``_read_bronze`` under ``<vendor>/``):
+      the file's frame or, when it is absent, an empty frame or None;
+    - ``add(table, df)`` validates a standardized source once, records
+      its valid rows for ``table`` and collects its quarantined rows;
+    - ``_land_tables`` lands every recorded table, then appends the
+      quarantined rows to the audit table (``append_snapshot``: a run
+      that quarantined nothing writes no new version of it).
+
+    Each vendor contributes only its ``add`` calls, in dependency order,
+    over its standardizers in ``sources/``: AWS-shaped trees
+    (``instance_types.json``, ``products.json`` with the nested
+    ``terms``, spot prices, and the storage / RDS / traffic / IPv4
+    product files, _aws.py:1169-1758), the long-tail catalog vendors
+    (``servers.json`` and their price lists), GCP
+    (``machine_types.json``, billing SKU pages, Cloud SQL) and Azure
+    (``skus.json``, disks, Retail Prices pages, PostgreSQL Flexible
+    Server). Every vendor's ``regions.json`` / ``zones.json`` also land
+    as region/zone tables. A record type lands when its bronze file is
+    present; all vendors share one silver merge with a per-vendor
+    inactivation scope.
+
+    Each source is validated once: its flagged frame is persisted for
+    the run (``validate_items(held=...)``), so the table merge, the
+    price assembly and the audit union all read one computation.
+    Exactly those frames are released when the run ends.
+    """
     from .operators.validate import validate_items
+    from .sources import aws, catalog as cat
 
-    out: dict = {}
-    invalids = []
-    rp = os.path.join(vroot, "regions.json")
-    if os.path.exists(rp):
-        r = spark.read.schema(_REGION_BRONZE_SCHEMA).json(rp)
-        reg = r.select(
-            F.lit(vendor).alias("vendor_id"), "region_id",
-            F.coalesce("name", "region_id").alias("name"),
-            F.coalesce("api_reference", "region_id").alias("api_reference"),
-            F.coalesce("name", "region_id").alias("display_name"),
-            "aliases", "country_id", "state", "city",
-            "lon", "lat", "founding_year", "green_energy",
-        )
-        v, inv = validate_items(reg, "region", held)
-        # an all-invalid file (e.g. fan-out-only bronze without
-        # country facts) must not sweep the vendor's landed regions
-        # inactive — land only when something validated
-        if v.take(1):
-            out["region"] = (v, schemas.PRIMARY_KEYS["region"])
-        invalids.append(inv)
-    zp = os.path.join(vroot, "zones.json")
-    if os.path.exists(zp):
-        z = spark.read.schema(
-            "region_id string, zones array<string>").json(zp)
-        zz = z.select("region_id",
-                      F.explode("zones").alias("zone_id")).select(
-            F.lit(vendor).alias("vendor_id"), "region_id", "zone_id",
-            F.col("zone_id").alias("name"),
-            F.col("zone_id").alias("api_reference"),
-            F.col("zone_id").alias("display_name"),
-        )
-        v, inv = validate_items(zz, "zone", held)
-        if v.take(1):  # same sweep guard as regions above
-            out["zone"] = (v, schemas.PRIMARY_KEYS["zone"])
-        invalids.append(inv)
-    return out, invalids
+    vroot = os.path.join(bronze, vendor)
+    outputs: dict = {}
+    quarantined: list[DataFrame] = []
+    held: list[DataFrame] = []
+
+    read = partial(_read_bronze, spark, vroot)
+
+    def add(table: str, df: DataFrame) -> DataFrame:
+        valid, invalid = validate_items(df, table, held)
+        if table in outputs:  # embedded + assembled server prices
+            valid = outputs[table][0].unionByName(valid)
+        outputs[table] = (valid, schemas.PRIMARY_KEYS[table])
+        quarantined.append(invalid)
+        return valid
+
+    aws_shaped = vendor != "azure" and vendor not in cat.VENDOR_SERVER_SPECS
+    server_file, server_schema = (
+        ("instance_types.json", aws.RAW_INSTANCE_TYPE) if aws_shaped
+        else {"gcp": ("machine_types.json", _GCP_MACHINE_TYPE_SCHEMA),
+              "azure": ("skus.json", _AZURE_SKU_SCHEMA)}.get(
+                  vendor, ("servers.json", None)))
+    raw = read(server_file, server_schema)
+    if raw is None:
+        raise FileNotFoundError(
+            f"inventory: {vendor}: no {os.path.join(vroot, server_file)}")
+    try:
+        if aws_shaped:
+            servers = aws.instance_type_servers(raw, vendor)
+        elif vendor == "azure":
+            from .sources.azure import standardize_azure_servers
+
+            servers = standardize_azure_servers(raw)
+        else:
+            servers = cat.standardize_catalog(raw, vendor)
+        if "display_name" not in servers.columns:
+            # ScModel default: display_name falls back to the plan name
+            servers = servers.withColumn("display_name", F.col("name"))
+        valid = add("server", servers)
+
+        if aws_shaped:
+            from .sources import aws_services as svc
+
+            regions = read("regions.json", _FANOUT_REGION_SCHEMA, empty=True)
+            zone_offers = read("zones.json", _ZONE_SCHEMA, empty=True)
+            products = read(
+                "products.json", "instance_type string, location string, "
+                "operating_system string, terms string", empty=True)
+            prices = aws.assemble_server_prices(
+                products.select(
+                    "instance_type", "location", "operating_system",
+                    F.round(aws.extract_ondemand_price(
+                        F.from_json("terms", aws.TERMS_SCHEMA)), 4
+                    ).alias("price"),
+                ).filter(F.col("price").isNotNull()),
+                valid.select("vendor_id", "server_id"), regions, zone_offers)
+            spot = read("spot_prices.json", svc.RAW_SPOT_PRICE)
+            if spot is not None:
+                prices = prices.unionByName(
+                    svc.assemble_spot_prices(spot, valid, zone_offers, vendor),
+                    allowMissingColumns=True)
+            add("server_price", prices)
+
+            storage = read("storage_products.json", svc.RAW_STORAGE_PRODUCT)
+            if storage is not None:
+                add("storage", svc.storage_catalog(storage, vendor))
+                add("storage_price",
+                    svc.assemble_storage_prices(storage, regions, vendor))
+            rds = read("rds_products.json", svc.RAW_RDS_PRODUCT)
+            if rds is not None:
+                options = read("rds_orderable_options.json",
+                               svc.RAW_ORDERABLE_OPTION, empty=True)
+                versions = read("rds_engine_versions.json", "version string",
+                                empty=True)
+                add("database", svc.standardize_databases(
+                    rds, valid.select("server_id"), versions, options,
+                    vendor))
+                add("database_price",
+                    svc.assemble_database_prices(rds, regions, vendor))
+                db_storage = add("database_storage",
+                                 svc.database_storage_catalog(options, vendor))
+                add("database_storage_price",
+                    svc.assemble_database_storage_prices(
+                        rds, regions, db_storage, vendor))
+            traffic = read("traffic_products.json", svc.RAW_TRAFFIC_PRODUCT)
+            if traffic is not None:
+                add("traffic_price",
+                    svc.assemble_traffic_prices(traffic, regions, vendor))
+            ipv4 = read("ipv4_products.json", svc.RAW_IPV4_PRODUCT)
+            if ipv4 is not None:
+                add("ipv4_price",
+                    svc.assemble_ipv4_prices(ipv4, regions, vendor))
+        else:
+            regions = read("regions.json", _CATALOG_REGION_SCHEMA)
+            # static service catalogs (storage/traffic/ipv4 documented
+            # constants, reference _hcloud.py:294-386) fan out over the
+            # landed region list
+            for table, df in cat.static_service_tables(
+                    spark, vendor, regions).items():
+                add(table, df)
+
+        # the per-vendor inventory_regions / inventory_zones
+        # (tables.py:165-168) land as tables, not just as fan-out
+        # inputs; rows missing required facts (e.g. country_id)
+        # quarantine like every other record type
+        region_rows = read("regions.json", _REGION_BRONZE_SCHEMA)
+        if region_rows is not None:
+            add("region", region_rows.select(
+                F.lit(vendor).alias("vendor_id"), "region_id",
+                F.coalesce("name", "region_id").alias("name"),
+                F.coalesce("api_reference", "region_id").alias(
+                    "api_reference"),
+                F.coalesce("name", "region_id").alias("display_name"),
+                "aliases", "country_id", "state", "city",
+                "lon", "lat", "founding_year", "green_energy"))
+        zones = read("zones.json", _ZONE_SCHEMA)
+        if zones is not None:
+            add("zone", zones.select(
+                "region_id", F.explode("zones").alias("zone_id")).select(
+                F.lit(vendor).alias("vendor_id"), "region_id", "zone_id",
+                F.col("zone_id").alias("name"),
+                F.col("zone_id").alias("api_reference"),
+                F.col("zone_id").alias("display_name")))
+        # an all-invalid file (e.g. fan-out-only bronze without country
+        # facts) must not sweep the vendor's landed rows inactive: the
+        # dim lands only when something validated
+        for table in ("region", "zone"):
+            if table in outputs and not outputs[table][0].take(1):
+                del outputs[table]
+
+        # embedded per-location price lists (hcloud-style monthly-cap
+        # tiers); gcp/azure server payloads carry no `prices`
+        if (not aws_shaped and regions is not None
+                and "prices" in raw.columns):
+            add("server_price",
+                cat.catalog_server_prices(raw, regions, vendor))
+
+        # long-tail vendor server prices: vultr embedded costs + location
+        # overrides (_vultr.py:546-627), upcloud zone price list + GPU
+        # gate (_upcloud.py:446-521), ovh addon-catalog join
+        # (_ovh.py:751-800), alicloud SKU prices + availability gate
+        # (_alicloud.py:1030-1124)
+        server_prices = []
+        if vendor == "vultr":
+            costs = read("servers.json", cat.RAW_VULTR_PRICE)
+            server_prices += [cat.vultr_server_prices(costs, "ondemand"),
+                              cat.vultr_server_prices(costs, "spot")]
+        elif vendor == "upcloud":
+            lines = read("zone_prices.json",
+                         parse=lambda session, path: session.read.text(path))
+            if lines is not None:
+                zp = cat.upcloud_zone_prices(lines)
+                gpus = read("gpu_availability.json",
+                            "region_id string, plan string, amount int",
+                            empty=True)
+                server_prices += [
+                    cat.upcloud_server_prices(zp, gpus, "ondemand"),
+                    cat.upcloud_server_prices(zp, gpus, "spot")]
+                # storage/traffic/ipv4 prices ride the SAME zone price
+                # list (_upcloud.py:524-583)
+                for table, df in cat.upcloud_service_prices(lines).items():
+                    add(table, df)
+        elif vendor == "ovh" and regions is not None:
+            flavors = read("flavors.json", cat.RAW_OVH_FLAVOR)
+            if flavors is not None:
+                currency = "USD"  # catalog locale currency (_ovh.py:793)
+                meta_path = os.path.join(vroot, "catalog_meta.json")
+                if os.path.exists(meta_path):
+                    with open(meta_path) as fh:
+                        currency = json.loads(
+                            fh.readline()).get("currencyCode", "USD")
+                server_prices.append(cat.ovh_server_prices(
+                    raw, flavors, regions, zones, currency))
+        elif vendor == "alicloud" and regions is not None:
+            skus = read("sku_prices.json", cat.RAW_ALICLOUD_SKU)
+            if skus is not None:
+                avail = read("availability.json", cat.RAW_ALICLOUD_AVAIL,
+                             empty=True)
+                server_prices.append(cat.alicloud_server_prices(
+                    skus, avail, regions, zones))
+            # time-budget-sampled spot responses (_alicloud.py:1118-1206);
+            # the probe plan itself is cat.alicloud_spot_probe_list
+            spot = read("spot_prices.json", cat.RAW_ALICLOUD_SPOT)
+            if spot is not None:
+                server_prices.append(cat.alicloud_spot_prices(spot))
+            # storage/traffic SKU pages (_alicloud.py:1355-1438)
+            for name, table, prices_of in [
+                ("storage_sku_prices.json", "storage_price",
+                 cat.alicloud_storage_prices),
+                ("traffic_sku_prices.json", "traffic_price",
+                 cat.alicloud_traffic_prices),
+            ]:
+                page = read(name, cat.RAW_ALICLOUD_SERVICE_SKU)
+                if page is not None:
+                    add(table, prices_of(page, regions))
+        if server_prices:
+            add("server_price", _union_all(server_prices))
+
+        # GCP billing-catalog service inventories (bronze SKU pages)
+        if vendor == "gcp" and regions is not None:
+            from .sources import gcp, gcp_sql
+
+            disks = read("disk_types.json", gcp.RAW_DISK_TYPE)
+            if disks is not None:
+                storage = add("storage", gcp.gcp_storage_catalog(disks))
+                skus = read("storage_skus.json", gcp.RAW_STORAGE_SKU)
+                if skus is not None:
+                    add("storage_price",
+                        gcp.gcp_storage_prices(skus, storage, regions))
+            network = read("network_skus.json", gcp.RAW_NETWORK_SKU)
+            if network is not None:
+                add("traffic_price", gcp.gcp_traffic_prices(network, regions))
+            # Cloud SQL (PostgreSQL) databases + storage
+            sql_skus = read("cloudsql_skus.json", gcp_sql.RAW_CLOUDSQL_SKU)
+            tiers = read("sql_tiers.json", gcp_sql.RAW_SQL_TIER)
+            if sql_skus is not None and tiers is not None:
+                meta = read("sql_metadata.json", gcp_sql.RAW_SQL_METADATA)
+                if meta is None:
+                    meta = spark.createDataFrame(
+                        [([], None, None)], gcp_sql.RAW_SQL_METADATA)
+                add("database", gcp_sql.gcp_sql_databases(
+                    tiers, meta, sql_skus, valid))
+                add("database_price", gcp_sql.gcp_sql_database_prices(
+                    tiers, sql_skus, regions))
+                add("database_storage",
+                    gcp_sql.gcp_sql_database_storages(sql_skus))
+                add("database_storage_price",
+                    gcp_sql.gcp_sql_database_storage_prices(
+                        sql_skus, regions))
+
+        # Azure compute-resource disks + Retail Prices API pages
+        if vendor == "azure" and regions is not None:
+            from .sources import azure as az, azure_sql
+
+            retail = read("retail_prices.json", az.RAW_RETAIL_PRICE)
+            disks = read("disks.json", az.RAW_AZURE_DISK)
+            if disks is not None:
+                storage = add("storage", az.azure_storage_catalog(disks))
+                if retail is not None:
+                    add("storage_price",
+                        az.azure_storage_prices(retail, storage, regions))
+            if retail is not None:
+                add("traffic_price", az.azure_traffic_prices(retail, regions))
+                add("ipv4_price", az.azure_ipv4_prices(retail, regions))
+                # VM server prices (ondemand + spot) fanned per zone
+                if zones is not None:
+                    add("server_price", az.azure_server_prices(
+                        retail, valid, regions, zones, "ondemand"
+                    ).unionByName(az.azure_server_prices(
+                        retail, valid, regions, zones, "spot")))
+            # PostgreSQL Flexible Server databases + storage
+            caps = read("pg_capabilities.json", azure_sql.RAW_PG_CAPABILITY)
+            if caps is not None:
+                add("database", azure_sql.azure_pg_databases(caps))
+                pg_storage = azure_sql.azure_pg_database_storages(caps)
+                add("database_storage", pg_storage)
+                if retail is not None:
+                    add("database_price", azure_sql.azure_pg_database_prices(
+                        caps, retail, regions))
+                    add("database_storage_price",
+                        azure_sql.azure_pg_database_storage_prices(
+                            retail, pg_storage, regions))
+
+        os.makedirs(lake, exist_ok=True)
+        _ensure_lake(lake)
+        outputs["server_invalid"] = (_union_all(quarantined), None)
+        _land_tables(spark, lake, outputs, vendor, records)
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def _land_tables(spark: SparkSession, lake: str, outputs: dict,
@@ -632,19 +799,24 @@ def _land_tables(spark: SparkSession, lake: str, outputs: dict,
     ``scopes`` overrides the inactivation sweep per table (a boolean
     Column over the current snapshot); tables not named keep the
     default per-vendor scope. PK-less tables (the ``*_invalid`` audit
-    trails) APPEND to the existing snapshot — replacing it would wipe
-    other vendors' quarantined rows."""
+    trails) go through ``append_snapshot``: replacing them would wipe
+    other vendors' quarantined rows, and a run that quarantined nothing
+    leaves them at their committed version."""
     if records is not None:
         keep = set(records)
         outputs = {t: v for t, v in outputs.items()
                    if t in keep or t.endswith("_invalid")}
     for table, (df, pks) in outputs.items():
         path = _table_path(lake, table)
+        if not pks:
+            print(f"inventory: {table}: "
+                  f"{version_rows(append_snapshot(spark, df, path))} rows")
+            continue
         # explicit existence gate, never a blanket except: a genuine
         # read/merge failure must propagate — swallowing it would land
         # ONLY this vendor's rows and silently wipe every other
         # vendor's data from the table
-        if pks and snapshot_exists(path):
+        if snapshot_exists(path):
             current = read_snapshot(spark, path)
             scope = (scopes or {}).get(
                 table,
@@ -656,387 +828,7 @@ def _land_tables(spark: SparkSession, lake: str, outputs: dict,
                 current, df.select(*current.columns), pks,
                 inactivate_missing=True, scope=scope,
             )
-        elif not pks and snapshot_exists(path):
-            df = read_snapshot(spark, path).unionByName(
-                df, allowMissingColumns=True)
         print(f"inventory: {table}: {_rewrite(spark, df, path)} rows")
-
-
-def _service_inventories(spark: SparkSession, vroot: str, regions: DataFrame,
-                         servers_valid: DataFrame, vendor: str,
-                         held: list[DataFrame]):
-    """Non-server record types, each landing iff its bronze file exists
-    (the reference's 14 per-vendor inventory methods, tables.py:165-184).
-    Returns ({table: (valid_df, pks)}, [invalid_dfs])."""
-    from .operators.validate import validate_items
-    from .sources import aws_services as svc
-
-    outputs: dict = {}
-    invalids: list[DataFrame] = []
-
-    def _path(name: str) -> str | None:
-        p = os.path.join(vroot, name)
-        return p if os.path.exists(p) else None
-
-    def _add(table: str, df: DataFrame) -> DataFrame:
-        valid, invalid = validate_items(df, table, held)
-        outputs[table] = (valid, schemas.PRIMARY_KEYS[table])
-        invalids.append(invalid)
-        return valid
-
-    storage_path = _path("storage_products.json")
-    if storage_path:
-        raw = spark.read.schema(svc.RAW_STORAGE_PRODUCT).json(storage_path)
-        _add("storage", svc.storage_catalog(raw, vendor))
-        _add("storage_price",
-             svc.assemble_storage_prices(raw, regions, vendor))
-
-    rds_path = _path("rds_products.json")
-    if rds_path:
-        rds = spark.read.schema(svc.RAW_RDS_PRODUCT).json(rds_path)
-        opts_path = _path("rds_orderable_options.json")
-        options = (
-            spark.read.schema(svc.RAW_ORDERABLE_OPTION).json(opts_path)
-            if opts_path
-            else spark.createDataFrame([], svc.RAW_ORDERABLE_OPTION)
-        )
-        vers_path = _path("rds_engine_versions.json")
-        versions = (
-            spark.read.schema("version string").json(vers_path)
-            if vers_path
-            else spark.createDataFrame([], "version string")
-        )
-        _add("database", svc.standardize_databases(
-            rds, servers_valid.select("server_id"), versions, options, vendor))
-        _add("database_price",
-             svc.assemble_database_prices(rds, regions, vendor))
-        db_storage = _add(
-            "database_storage", svc.database_storage_catalog(options, vendor))
-        _add("database_storage_price", svc.assemble_database_storage_prices(
-            rds, regions, db_storage, vendor))
-
-    traffic_path = _path("traffic_products.json")
-    if traffic_path:
-        raw = spark.read.schema(svc.RAW_TRAFFIC_PRODUCT).json(traffic_path)
-        _add("traffic_price",
-             svc.assemble_traffic_prices(raw, regions, vendor))
-
-    ipv4_path = _path("ipv4_products.json")
-    if ipv4_path:
-        raw = spark.read.schema(svc.RAW_IPV4_PRODUCT).json(ipv4_path)
-        _add("ipv4_price", svc.assemble_ipv4_prices(raw, regions, vendor))
-
-    return outputs, invalids
-
-
-_GCP_MACHINE_TYPE_SCHEMA = (
-    "id long, name string, description string, guest_cpus int, "
-    "memory_mb long, is_shared_cpu boolean, "
-    "accelerators array<struct<guest_accelerator_count:int,"
-    "guest_accelerator_type:string>>, deprecated struct<state:string>"
-)
-_AZURE_SKU_SCHEMA = (
-    "name string, family string, "
-    "capabilities array<struct<name:string,value:string>>"
-)
-
-
-def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
-                              vendor: str, records: list[str] | None,
-                              held: list[DataFrame]) -> None:
-    """GCP/Azure server inventory: bronze JSON -> standardize (P1) ->
-    validate (P8) -> vendor-scoped merge into the shared server table."""
-    from .operators.validate import validate_items
-    from .sources.azure import standardize_azure_servers
-    from .sources.catalog import standardize_catalog
-
-    vroot = os.path.join(bronze, vendor)
-    generic_raw = None
-    if vendor == "gcp":
-        raw = spark.read.schema(_GCP_MACHINE_TYPE_SCHEMA).json(
-            os.path.join(vroot, "machine_types.json"))
-        servers = standardize_catalog(raw, "gcp")
-    elif vendor == "azure":
-        raw = spark.read.schema(_AZURE_SKU_SCHEMA).json(
-            os.path.join(vroot, "skus.json"))
-        servers = standardize_azure_servers(raw)
-    else:  # long-tail catalog vendors: data-driven spec over servers.json
-        # bronze convention is JSON Lines (one payload per line), like
-        # every other vendor landing in this tree
-        raw = spark.read.json(os.path.join(vroot, "servers.json"))
-        servers = standardize_catalog(raw, vendor)
-        generic_raw = raw
-    if "display_name" not in servers.columns:
-        # ScModel default: display_name falls back to the plan name
-        servers = servers.withColumn("display_name", F.col("name"))
-    valid, invalid = validate_items(servers, "server", held)
-
-    os.makedirs(lake, exist_ok=True)
-    _ensure_lake(lake)
-    outputs = {"server": (valid, schemas.PRIMARY_KEYS["server"])}
-
-    # static service catalogs (storage/traffic/ipv4 documented constants,
-    # reference _hcloud.py:294-386) fan out over the landed region list
-    from .sources.catalog import STATIC_SERVICE_CATALOGS, static_service_tables
-
-    regions_path = os.path.join(vroot, "regions.json")
-    regions = (
-        spark.read.schema(
-            "region_id string, name string, aliases array<string>, "
-            "api_reference string, options array<string>"
-        ).json(regions_path)
-        if os.path.exists(regions_path) else None
-    )
-    if vendor in STATIC_SERVICE_CATALOGS:
-        for t, df in static_service_tables(spark, vendor, regions).items():
-            v, inv = validate_items(df, t, held)
-            outputs[t] = (v, schemas.PRIMARY_KEYS[t])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor, held)
-    outputs.update(rz_outputs)
-    for inv in rz_invalids:
-        invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    # embedded per-location price lists (hcloud-style monthly-cap tiers)
-    if (generic_raw is not None and regions is not None
-            and "prices" in generic_raw.columns):
-        from .sources.catalog import catalog_server_prices
-
-        v, inv = validate_items(
-            catalog_server_prices(generic_raw, regions, vendor),
-            "server_price", held)
-        outputs["server_price"] = (v, schemas.PRIMARY_KEYS["server_price"])
-        invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    # long-tail vendor server prices: vultr embedded costs + location
-    # overrides (_vultr.py:546-627), upcloud zone price list + GPU gate
-    # (_upcloud.py:446-521), ovh addon-catalog join (_ovh.py:751-800),
-    # alicloud SKU prices + availability gate (_alicloud.py:1030-1124)
-    from .sources import catalog as cat
-
-    zones_path = os.path.join(vroot, "zones.json")
-    zone_off = (
-        spark.read.schema("region_id string, zones array<string>")
-        .json(zones_path) if os.path.exists(zones_path) else None
-    )
-    price_frames = []
-    if vendor == "vultr" and generic_raw is not None:
-        raw_p = spark.read.schema(cat.RAW_VULTR_PRICE).json(
-            os.path.join(vroot, "servers.json"))
-        price_frames += [cat.vultr_server_prices(raw_p, "ondemand"),
-                         cat.vultr_server_prices(raw_p, "spot")]
-    elif vendor == "upcloud":
-        zp_path = os.path.join(vroot, "zone_prices.json")
-        if os.path.exists(zp_path):
-            zp = cat.upcloud_zone_prices(spark, zp_path)
-            ga_schema = "region_id string, plan string, amount int"
-            ga_path = os.path.join(vroot, "gpu_availability.json")
-            ga = (spark.read.schema(ga_schema).json(ga_path)
-                  if os.path.exists(ga_path)
-                  else spark.createDataFrame([], ga_schema))
-            price_frames += [cat.upcloud_server_prices(zp, ga, "ondemand"),
-                             cat.upcloud_server_prices(zp, ga, "spot")]
-            # storage/traffic/ipv4 prices ride the SAME zone price list
-            # (_upcloud.py:524-583)
-            for t, df in cat.upcloud_service_prices(spark, zp_path).items():
-                v, inv = validate_items(df, t, held)
-                outputs[t] = (v, schemas.PRIMARY_KEYS[t])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-    elif vendor == "ovh" and generic_raw is not None and regions is not None:
-        fl_path = os.path.join(vroot, "flavors.json")
-        if os.path.exists(fl_path):
-            flavors = spark.read.schema(cat.RAW_OVH_FLAVOR).json(fl_path)
-            currency = "USD"  # catalog locale currency (_ovh.py:793)
-            meta_path = os.path.join(vroot, "catalog_meta.json")
-            if os.path.exists(meta_path):
-                with open(meta_path) as fh:
-                    currency = json.loads(
-                        fh.readline()).get("currencyCode", "USD")
-            price_frames.append(cat.ovh_server_prices(
-                generic_raw, flavors, regions, zone_off, currency))
-    elif vendor == "alicloud" and regions is not None:
-        sku_path = os.path.join(vroot, "sku_prices.json")
-        if os.path.exists(sku_path):
-            skus = spark.read.schema(cat.RAW_ALICLOUD_SKU).json(sku_path)
-            av_path = os.path.join(vroot, "availability.json")
-            av = (spark.read.schema(cat.RAW_ALICLOUD_AVAIL).json(av_path)
-                  if os.path.exists(av_path)
-                  else spark.createDataFrame([], cat.RAW_ALICLOUD_AVAIL))
-            price_frames.append(cat.alicloud_server_prices(
-                skus, av, regions, zone_off))
-        # time-budget-sampled spot responses (_alicloud.py:1118-1206);
-        # the probe plan itself is cat.alicloud_spot_probe_list
-        spot_path = os.path.join(vroot, "spot_prices.json")
-        if os.path.exists(spot_path):
-            resp = spark.read.schema(cat.RAW_ALICLOUD_SPOT).json(spot_path)
-            price_frames.append(cat.alicloud_spot_prices(resp))
-        # storage/traffic SKU pages (_alicloud.py:1355-1438)
-        for fname, fn, table in [
-            ("storage_sku_prices.json", cat.alicloud_storage_prices,
-             "storage_price"),
-            ("traffic_sku_prices.json", cat.alicloud_traffic_prices,
-             "traffic_price"),
-        ]:
-            p = os.path.join(vroot, fname)
-            if os.path.exists(p):
-                sk = spark.read.schema(cat.RAW_ALICLOUD_SERVICE_SKU).json(p)
-                v, inv = validate_items(fn(sk, regions), table, held)
-                outputs[table] = (v, schemas.PRIMARY_KEYS[table])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-    if price_frames:
-        sp = price_frames[0]
-        for f in price_frames[1:]:
-            sp = sp.unionByName(f, allowMissingColumns=True)
-        v, inv = validate_items(sp, "server_price", held)
-        if "server_price" in outputs:  # embedded + assembled both present
-            v = outputs["server_price"][0].unionByName(v)
-        outputs["server_price"] = (v, schemas.PRIMARY_KEYS["server_price"])
-        invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    # GCP billing-catalog service inventories (bronze SKU pages)
-    if vendor == "gcp" and regions is not None:
-        from .sources import gcp as gcp_src
-
-        disks_path = os.path.join(vroot, "disk_types.json")
-        if os.path.exists(disks_path):
-            raw = spark.read.schema(gcp_src.RAW_DISK_TYPE).json(disks_path)
-            storage_valid, inv = validate_items(
-                gcp_src.gcp_storage_catalog(raw), "storage", held)
-            outputs["storage"] = (storage_valid,
-                                  schemas.PRIMARY_KEYS["storage"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-            sku_path = os.path.join(vroot, "storage_skus.json")
-            if os.path.exists(sku_path):
-                skus = spark.read.schema(gcp_src.RAW_STORAGE_SKU).json(sku_path)
-                v, inv = validate_items(
-                    gcp_src.gcp_storage_prices(skus, storage_valid, regions),
-                    "storage_price", held)
-                outputs["storage_price"] = (
-                    v, schemas.PRIMARY_KEYS["storage_price"])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-        net_path = os.path.join(vroot, "network_skus.json")
-        if os.path.exists(net_path):
-            skus = spark.read.schema(gcp_src.RAW_NETWORK_SKU).json(net_path)
-            v, inv = validate_items(
-                gcp_src.gcp_traffic_prices(skus, regions),
-                "traffic_price", held)
-            outputs["traffic_price"] = (
-                v, schemas.PRIMARY_KEYS["traffic_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-        # Cloud SQL (PostgreSQL) databases + storage
-        sql_skus_path = os.path.join(vroot, "cloudsql_skus.json")
-        tiers_path = os.path.join(vroot, "sql_tiers.json")
-        if os.path.exists(sql_skus_path) and os.path.exists(tiers_path):
-            from .sources import gcp_sql
-
-            sql_skus = spark.read.schema(
-                gcp_sql.RAW_CLOUDSQL_SKU).json(sql_skus_path)
-            tiers = spark.read.schema(gcp_sql.RAW_SQL_TIER).json(tiers_path)
-            meta_path = os.path.join(vroot, "sql_metadata.json")
-            meta = (
-                spark.read.schema(gcp_sql.RAW_SQL_METADATA).json(meta_path)
-                if os.path.exists(meta_path)
-                else spark.createDataFrame(
-                    [([], None, None)], gcp_sql.RAW_SQL_METADATA)
-            )
-            srv = valid if "api_reference" in valid.columns else None
-            for table, df in {
-                "database": gcp_sql.gcp_sql_databases(
-                    tiers, meta, sql_skus, srv),
-                "database_price": gcp_sql.gcp_sql_database_prices(
-                    tiers, sql_skus, regions),
-                "database_storage": gcp_sql.gcp_sql_database_storages(
-                    sql_skus),
-                "database_storage_price":
-                    gcp_sql.gcp_sql_database_storage_prices(
-                        sql_skus, regions),
-            }.items():
-                v, inv = validate_items(df, table, held)
-                outputs[table] = (v, schemas.PRIMARY_KEYS[table])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    # Azure compute-resource disks + Retail Prices API pages
-    if vendor == "azure" and regions is not None:
-        from .sources import azure as az
-
-        disks_path = os.path.join(vroot, "disks.json")
-        retail_path = os.path.join(vroot, "retail_prices.json")
-        retail = (
-            spark.read.schema(az.RAW_RETAIL_PRICE).json(retail_path)
-            if os.path.exists(retail_path) else None
-        )
-        if os.path.exists(disks_path):
-            disks = spark.read.schema(az.RAW_AZURE_DISK).json(disks_path)
-            storage_valid, inv = validate_items(
-                az.azure_storage_catalog(disks), "storage", held)
-            outputs["storage"] = (storage_valid,
-                                  schemas.PRIMARY_KEYS["storage"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-            if retail is not None:
-                v, inv = validate_items(
-                    az.azure_storage_prices(retail, storage_valid, regions),
-                    "storage_price", held)
-                outputs["storage_price"] = (
-                    v, schemas.PRIMARY_KEYS["storage_price"])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-        if retail is not None:
-            v, inv = validate_items(
-                az.azure_traffic_prices(retail, regions),
-                "traffic_price", held)
-            outputs["traffic_price"] = (
-                v, schemas.PRIMARY_KEYS["traffic_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-            v, inv = validate_items(
-                az.azure_ipv4_prices(retail, regions), "ipv4_price", held)
-            outputs["ipv4_price"] = (v, schemas.PRIMARY_KEYS["ipv4_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-        # VM server prices (ondemand + spot) fanned per zone
-        zones_path = os.path.join(vroot, "zones.json")
-        if retail is not None and os.path.exists(zones_path):
-            zone_off = spark.read.schema(
-                "region_id string, zones array<string>").json(zones_path)
-            sp = az.azure_server_prices(
-                retail, valid, regions, zone_off, "ondemand"
-            ).unionByName(az.azure_server_prices(
-                retail, valid, regions, zone_off, "spot"))
-            v, inv = validate_items(sp, "server_price", held)
-            outputs["server_price"] = (
-                v, schemas.PRIMARY_KEYS["server_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-        # PostgreSQL Flexible Server databases + storage
-        caps_path = os.path.join(vroot, "pg_capabilities.json")
-        if os.path.exists(caps_path):
-            from .sources import azure_sql
-
-            caps = spark.read.schema(
-                azure_sql.RAW_PG_CAPABILITY).json(caps_path)
-            svc = {"database": azure_sql.azure_pg_databases(caps),
-                   "database_storage":
-                       azure_sql.azure_pg_database_storages(caps)}
-            if retail is not None:
-                svc["database_price"] = azure_sql.azure_pg_database_prices(
-                    caps, retail, regions)
-                svc["database_storage_price"] = (
-                    azure_sql.azure_pg_database_storage_prices(
-                        retail, svc["database_storage"], regions))
-            for table, df in svc.items():
-                v, inv = validate_items(df, table, held)
-                outputs[table] = (v, schemas.PRIMARY_KEYS[table])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    _land_tables(spark, lake, outputs, vendor, records)
-    if invalid.limit(1).count():
-        inv_path = _table_path(lake, "server_invalid")
-        if snapshot_exists(inv_path):
-            inv = read_snapshot(spark, inv_path).unionByName(
-                invalid, allowMissingColumns=True)
-        else:
-            inv = invalid
-        _rewrite(spark, inv, inv_path)
 
 
 def cmd_sql(spark: SparkSession, lake: str, query: str,
@@ -1485,159 +1277,161 @@ def cmd_inspect(spark: SparkSession, bronze: str, lake: str,
       inspector-overrides-vendor semantics of
       ``inspect_update_server_dict``.
     """
-    import glob as globmod
-
     from .operators.validate import validate_items
     from .sources import inspector as insp
 
-    root = os.path.join(bronze, "inspector", vendor)
+    # every landed server's copy of a framework file
+    read = partial(_read_bronze, spark,
+                   os.path.join(bronze, "inspector", vendor, "*"))
 
-    def maybe(fname, reader):
-        if globmod.glob(os.path.join(root, "*", fname)):
-            return reader(spark, os.path.join(root, "*", fname))
-        return None
-
-    lscpu = maybe("lscpu.json", insp.read_lscpu_json)
-    lscpu_caches = maybe("lscpu.json", insp.read_lscpu_caches)
-    lstopo_caches = maybe("lstopo.xml", insp.read_lstopo_caches)
+    lscpu = read("lscpu.json", parse=insp.read_lscpu_json)
+    lscpu_caches = read("lscpu.json", parse=insp.read_lscpu_caches)
+    lstopo_caches = read("lstopo.xml", parse=insp.read_lstopo_caches)
     cache_cols = (insp.cpu_cache_columns(lscpu_caches, lstopo_caches)
                   if lscpu_caches is not None else None)
     kw = dict(
-        openssl=maybe("openssl.json", insp.read_openssl_json),
-        membench=maybe("membench.csv", insp.read_membench_csv),
-        compression=maybe("compression_text.json",
-                          insp.read_compression_text_json),
+        openssl=read("openssl.json", parse=insp.read_openssl_json),
+        membench=read("membench.csv", parse=insp.read_membench_csv),
+        compression=read("compression_text.json",
+                          parse=insp.read_compression_text_json),
         cache=cache_cols,
-        llm=maybe("llm_speed.jsonl", insp.read_llm_speed_json),
+        llm=read("llm_speed.jsonl", parse=insp.read_llm_speed_json),
         lscpu=lscpu,
-        bw_mem=maybe("bw_mem.txt", insp.read_bw_mem_lines),
-        geekbench=maybe("results.json", insp.read_geekbench_results),
-        passmark=maybe("passmark.yml", insp.parse_passmark_yaml),
-        stressng=maybe("stressngfull.csv", insp.read_stressng_csv),
-        redis=maybe("redis.csv", insp.read_redis_csv),
-        static_web=maybe("static_web.csv", insp.read_redis_csv),
+        bw_mem=read("bw_mem.txt", parse=insp.read_bw_mem_lines),
+        geekbench=read("results.json", parse=insp.read_geekbench_results),
+        passmark=read("passmark.yml", parse=insp.parse_passmark_yaml),
+        stressng=read("stressngfull.csv", parse=insp.read_stressng_csv),
+        redis=read("redis.csv", parse=insp.read_redis_csv),
+        static_web=read("static_web.csv", parse=insp.read_redis_csv),
         vcpus=lscpu,
     )
     outputs: dict = {}
-    if any(v is not None for k, v in kw.items()
-           if k not in ("cache", "vcpus")):
-        scores = insp.inspector_benchmarks(**kw).select(
-            F.lit(vendor).alias("vendor_id"),
-            "server_id", "benchmark_id",
-            # config is a PK component; the reference's HashableDict
-            # defaults to {} (table_bases.py:1262-1267)
-            F.coalesce("config", F.lit("{}")).alias("config"),
-            "score",
-        )
-        # the reference collapses PK duplicates before bulk insert
-        # (insert.py dedupe_items, last occurrence wins) — e.g. a
-        # single-row stressng curve emits cpu_all for both the first
-        # and last record
-        from .operators.windows import keep_last_dedup
-
-        scores = keep_last_dedup(
-            scores.withColumn("_pos", F.monotonically_increasing_id()),
-            schemas.PRIMARY_KEYS["benchmark_score"], "_pos",
-        ).drop("_pos")
-        valid, invalid = validate_items(scores, "benchmark_score")
-        outputs["benchmark_score"] = (
-            valid, schemas.PRIMARY_KEYS["benchmark_score"])
-        outputs["benchmark_score_invalid"] = (invalid, None)
-
-    all_servers = (_read(spark, lake, "server")
-                   if snapshot_exists(_table_path(lake, "server"))
-                   else None)
-    if all_servers is not None:
-        from .operators.validate import apply_schema
-
-        # widen to the full declared schema up front: enrichment adds
-        # columns (hw_virt, cache KiBs, memory facts) the lake snapshot
-        # may not carry yet. server_id is only unique per vendor, so
-        # enrichment is scoped to THIS vendor's rows.
-        all_servers = apply_schema(all_servers, schemas.TABLES["server"],
-                                   "server")
-        servers = all_servers.filter(F.col("vendor_id") == vendor)
-        others = all_servers.filter(F.col("vendor_id") != vendor)
-        dmi_sections = maybe("dmidecode.json", insp.read_dmidecode_json)
-        dmi = (insp.dmidecode_facts(dmi_sections)
-               if dmi_sections is not None else None)
-        gpus_raw = maybe("nvidia_smi.xml", insp.read_nvidia_smi_xml)
-        gpu = (insp.gpu_facts(gpus_raw).drop("gpus")
-               if gpus_raw is not None else None)
-        enriched = insp.enrich_servers(
-            servers, lscpu=lscpu, stressng=kw["stressng"],
-            cache_cols=cache_cols, dmidecode=dmi, gpu=gpu,
-            virtualization=maybe("virtualization.json",
-                                 insp.read_virtualization_json),
-        )
-        # vendor-aware storage discovery (lsblk-wins-else-lshw,
-        # inspector.py:1182-1219) overrides the vendor-declared
-        # storage_type/storage_size/storages columns
-        lsblk_disks = maybe("lsblk.json", insp.storage_disks_lsblk)
-        lshw_disks = maybe("lshw.json", insp.storage_disks_lshw)
-        if lsblk_disks is not None or lshw_disks is not None:
-            empty = "server_id string, size long, storage_type string, " \
-                    "description string"
-            sinfo = insp.storage_info(
-                lsblk_disks.drop("vendor_id") if lsblk_disks is not None
-                else spark.createDataFrame([], empty),
-                lshw_disks.drop("vendor_id") if lshw_disks is not None
-                else None,
-            ).select(
-                "server_id",
-                F.col("storage_type").alias("_s_type"),
-                F.col("storage_size").alias("_s_size"),
-                F.col("storages").alias("_s_disks"),
+    held: list[DataFrame] = []
+    try:
+        if any(v is not None for k, v in kw.items()
+               if k not in ("cache", "vcpus")):
+            scores = insp.inspector_benchmarks(**kw).select(
+                F.lit(vendor).alias("vendor_id"),
+                "server_id", "benchmark_id",
+                # config is a PK component; the reference's HashableDict
+                # defaults to {} (table_bases.py:1262-1267)
+                F.coalesce("config", F.lit("{}")).alias("config"),
+                "score",
             )
-            enriched = enriched.join(F.broadcast(sinfo), "server_id", "left")
-            for tgt, src in [("storage_type", "_s_type"),
-                             ("storage_size", "_s_size"),
-                             ("storages", "_s_disks")]:
-                base = (F.col(tgt) if tgt in enriched.columns
+            # the reference collapses PK duplicates before bulk insert
+            # (insert.py dedupe_items, last occurrence wins) — e.g. a
+            # single-row stressng curve emits cpu_all for both the first
+            # and last record
+            from .operators.windows import keep_last_dedup
+
+            scores = keep_last_dedup(
+                scores.withColumn("_pos", F.monotonically_increasing_id()),
+                schemas.PRIMARY_KEYS["benchmark_score"], "_pos",
+            ).drop("_pos")
+            valid, invalid = validate_items(scores, "benchmark_score", held)
+            outputs["benchmark_score"] = (
+                valid, schemas.PRIMARY_KEYS["benchmark_score"])
+            outputs["benchmark_score_invalid"] = (invalid, None)
+
+        all_servers = (_read(spark, lake, "server")
+                       if snapshot_exists(_table_path(lake, "server"))
+                       else None)
+        if all_servers is not None:
+            from .operators.validate import apply_schema
+
+            # widen to the full declared schema up front: enrichment adds
+            # columns (hw_virt, cache KiBs, memory facts) the lake snapshot
+            # may not carry yet. server_id is only unique per vendor, so
+            # enrichment is scoped to THIS vendor's rows.
+            all_servers = apply_schema(all_servers, schemas.TABLES["server"],
+                                       "server")
+            servers = all_servers.filter(F.col("vendor_id") == vendor)
+            others = all_servers.filter(F.col("vendor_id") != vendor)
+            dmi_sections = read("dmidecode.json",
+                                parse=insp.read_dmidecode_json)
+            dmi = (insp.dmidecode_facts(dmi_sections)
+                   if dmi_sections is not None else None)
+            gpus_raw = read("nvidia_smi.xml", parse=insp.read_nvidia_smi_xml)
+            gpu = (insp.gpu_facts(gpus_raw).drop("gpus")
+                   if gpus_raw is not None else None)
+            enriched = insp.enrich_servers(
+                servers, lscpu=lscpu, stressng=kw["stressng"],
+                cache_cols=cache_cols, dmidecode=dmi, gpu=gpu,
+                virtualization=read("virtualization.json",
+                                     parse=insp.read_virtualization_json),
+            )
+            # vendor-aware storage discovery (lsblk-wins-else-lshw,
+            # inspector.py:1182-1219) overrides the vendor-declared
+            # storage_type/storage_size/storages columns
+            lsblk_disks = read("lsblk.json", parse=insp.storage_disks_lsblk)
+            lshw_disks = read("lshw.json", parse=insp.storage_disks_lshw)
+            if lsblk_disks is not None or lshw_disks is not None:
+                empty = "server_id string, size long, storage_type string, " \
+                        "description string"
+                sinfo = insp.storage_info(
+                    lsblk_disks.drop("vendor_id") if lsblk_disks is not None
+                    else spark.createDataFrame([], empty),
+                    lshw_disks.drop("vendor_id") if lshw_disks is not None
+                    else None,
+                ).select(
+                    "server_id",
+                    F.col("storage_type").alias("_s_type"),
+                    F.col("storage_size").alias("_s_size"),
+                    F.col("storages").alias("_s_disks"),
+                )
+                enriched = enriched.join(F.broadcast(sinfo), "server_id",
+                                         "left")
+                for tgt, src in [("storage_type", "_s_type"),
+                                 ("storage_size", "_s_size"),
+                                 ("storages", "_s_disks")]:
+                    base = (F.col(tgt) if tgt in enriched.columns
+                            else F.lit(None))
+                    enriched = enriched.withColumn(
+                        tgt, F.coalesce(F.col(src), base))
+                enriched = enriched.drop("_s_type", "_s_size", "_s_disks")
+            lshw = read("lshw.json", parse=insp.read_lshw_json)
+            lstopo = read("lstopo.xml", parse=insp.read_lstopo_xml)
+            if lshw is not None or lstopo is not None or dmi is not None:
+                mem = insp.memory_amount_actual(lstopo, lshw, dmi)
+                enriched = enriched.join(
+                    F.broadcast(mem.withColumnRenamed(
+                        "memory_amount_actual", "_mem")), "server_id", "left")
+                base = (F.col("memory_amount_actual")
+                        if "memory_amount_actual" in enriched.columns
                         else F.lit(None))
                 enriched = enriched.withColumn(
-                    tgt, F.coalesce(F.col(src), base))
-            enriched = enriched.drop("_s_type", "_s_size", "_s_disks")
-        lshw = maybe("lshw.json", insp.read_lshw_json)
-        lstopo = maybe("lstopo.xml", insp.read_lstopo_xml)
-        if lshw is not None or lstopo is not None or dmi is not None:
-            mem = insp.memory_amount_actual(lstopo, lshw, dmi)
-            enriched = enriched.join(
-                F.broadcast(mem.withColumnRenamed(
-                    "memory_amount_actual", "_mem")), "server_id", "left")
-            base = (F.col("memory_amount_actual")
-                    if "memory_amount_actual" in enriched.columns
-                    else F.lit(None))
-            enriched = enriched.withColumn(
-                "memory_amount_actual", F.coalesce(F.col("_mem"), base)
-            ).drop("_mem")
-        valid_srv, _invalid_srv = validate_items(enriched, "server")
-        # a row the enrichment made invalid keeps its pre-inspection
-        # form — inspection must never lose a server
-        pks = schemas.PRIMARY_KEYS["server"]
-        kept = servers.join(valid_srv.select(*pks), pks, "left_anti")
-        out = others.unionByName(valid_srv.select(*all_servers.columns)
-                                 ).unionByName(kept)
-        _rewrite(spark, out, _table_path(lake, "server"))
-        print(f"inspect: server: enriched "
-              f"{read_snapshot(spark, _table_path(lake, 'server')).count()}"
-              " rows")
+                    "memory_amount_actual", F.coalesce(F.col("_mem"), base)
+                ).drop("_mem")
+            # validated once: the anti-join and the union both read it
+            valid_srv, _invalid_srv = validate_items(enriched, "server",
+                                                     held)
+            # a row the enrichment made invalid keeps its pre-inspection
+            # form — inspection must never lose a server
+            pks = schemas.PRIMARY_KEYS["server"]
+            kept = servers.join(valid_srv.select(*pks), pks, "left_anti")
+            out = others.unionByName(valid_srv.select(*all_servers.columns)
+                                     ).unionByName(kept)
+            rows = _rewrite(spark, out, _table_path(lake, "server"))
+            print(f"inspect: server: enriched {rows} rows")
 
-    if not outputs:
-        print("inspect: nothing to land (no framework files found)")
-        return
-    _land_tables(
-        spark, lake, outputs, vendor,
-        scopes={
-            # inspect re-emits the vendor's MEASURED benchmark rows;
-            # workload_profile:* rows belong to cmd_score (which scopes
-            # its own sweep the mirror way) — a vendor-wide sweep here
-            # would silently flip every composite score inactive on each
-            # re-inspect
-            "benchmark_score": (
-                (F.col("vendor_id") == vendor)
-                & ~F.col("benchmark_id").startswith("workload_profile:")),
-        })
+        if not outputs:
+            print("inspect: nothing to land (no framework files found)")
+            return
+        _land_tables(
+            spark, lake, outputs, vendor,
+            scopes={
+                # inspect re-emits the vendor's MEASURED benchmark rows;
+                # workload_profile:* rows belong to cmd_score (which scopes
+                # its own sweep the mirror way) — a vendor-wide sweep here
+                # would silently flip every composite score inactive on each
+                # re-inspect
+                "benchmark_score": (
+                    (F.col("vendor_id") == vendor)
+                    & ~F.col("benchmark_id").startswith("workload_profile:")),
+            })
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def cmd_publish(spark: SparkSession, lake: str, out: str,

@@ -918,7 +918,10 @@ def incremental_minhash_pairs(new_df: DataFrame,
     anyway, so recomputing the md5 signature aggregate from text here
     would pay the batch's most expensive stage twice (r17). Must be
     exactly ``minhash_index(new_df, ...)`` under the same k/n_hashes;
-    results are identical by construction.
+    results are identical by construction. Without it the batch's
+    tables are part of the returned lazy plan and no session cache is
+    held; AQE reuses the batch's ``doc_id`` exchange across the probe
+    and build arms instead.
 
     ``probe_prefilter_max`` > 0 (r18, the streaming probe's opt-in —
     the registry query path keeps its collect-free plan at the
@@ -943,10 +946,9 @@ def incremental_minhash_pairs(new_df: DataFrame,
         new_sh, new_sig = new_index
         new_bands = _band_table(new_sig, id_col, n_hashes, band_rows)
     else:
-        new_sh = doc_shingles(new_df, text_col, id_col, k).cache()
+        new_sh = doc_shingles(new_df, text_col, id_col, k)
         new_sig = _signatures_from_shingles(new_sh, id_col, n_hashes)
-        new_bands = _band_table(new_sig, id_col, n_hashes,
-                                band_rows).cache()
+        new_bands = _band_table(new_sig, id_col, n_hashes, band_rows)
     base_bands = _band_table(base_sig, id_col, n_hashes, band_rows)
     probe = new_bands.select(F.col(id_col).alias("id_n"), "band", "sig")
     build = (

@@ -30,8 +30,7 @@ def with_row_hash(df: DataFrame, pks: list[str],
 
 
 def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
-              ignored: tuple[str, ...] = ("observed_at",),
-              cache: bool = True) -> DataFrame:
+              ignored: tuple[str, ...] = ("observed_at",)) -> DataFrame:
     """Return source/target rows classified with an ``action`` column
     (new | update | deleted). Projection keeps (pks, action).
 
@@ -42,13 +41,9 @@ def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
     that reads both sides three times. At 100 TB with both tables
     bucketed on the PK the single join is shuffle-free.
 
-    Cache contract: with ``cache=True`` (default) the two narrow
-    (pks, hash) projections persist for the SESSION — repeated
-    consumers of the returned plan skip the scan+hash stage, but the
-    entries stay in the cache manager until session end (this function
-    does not hand them back, so no caller can release them). Long-lived
-    services pass ``cache=False`` and persist the returned diff
-    themselves, as ``cmd_sync`` does, unpersisting exactly it when done.
+    The returned plan is lazy and holds no session cache. A caller
+    that consumes the diff more than once persists the returned frame
+    itself and unpersists exactly it when done, as ``cmd_sync`` does.
     """
     if not pks:
         # a key-less full-outer join degenerates to a cartesian product
@@ -62,8 +57,6 @@ def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
         *pks, F.col("row_sha").alias("_s_sha"))
     t = with_row_hash(target, pks, ignored).select(
         *pks, F.col("row_sha").alias("_t_sha"))
-    if cache:
-        s, t = s.cache(), t.cache()
     # full-outer can't broadcast; hint the hash variant so neither side
     # pays a sort — per-partition hash build on the (pks, sha) projection
     # is small and spill-safe at any shuffle-partition count

@@ -93,6 +93,9 @@ def apply_schema(df: DataFrame, schema: StructType,
     return df.select(*out)
 
 
+_COALESCE_CACHED = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
 def validate_items(df: DataFrame, table: str,
                    held: list[DataFrame] | None = None,
                    ) -> tuple[DataFrame, DataFrame]:
@@ -107,6 +110,14 @@ def validate_items(df: DataFrame, table: str,
     given: then the flagged frame is persisted and appended to it, so
     every consumer reads one computation, and the caller unpersists the
     list once its consumers are done.
+
+    The cache is partitioned as the unpersisted plan would be. By
+    default Spark builds a cache with AQE's final-stage coalescing off,
+    so a flagged plan ending in a shuffle would keep one partition per
+    ``spark.sql.shuffle.partitions`` and every write of it one file per
+    partition. ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is read when the cache entry is built, so it is on for that one
+    ``persist()`` call and restored right after.
     """
     schema = schemas.TABLES[table]
     coerced = apply_schema(df, schema, table)
@@ -148,7 +159,13 @@ def validate_items(df: DataFrame, table: str,
         if checks else F.array().cast("array<string>"),
     )
     if held is not None:
-        flagged = flagged.persist()
+        conf = flagged.sparkSession.conf
+        before = conf.get(_COALESCE_CACHED)
+        conf.set(_COALESCE_CACHED, "true")
+        try:
+            flagged = flagged.persist()
+        finally:
+            conf.set(_COALESCE_CACHED, before)
         held.append(flagged)
     valid = flagged.filter(F.size("_errors") == 0).drop("_errors")
     invalid = flagged.filter(F.size("_errors") > 0)

@@ -18,6 +18,8 @@ Delta/Iceberg in this container; on a real cluster these call sites map
 ``write_snapshot`` (Spark writes the parts) and ``copy_snapshot`` (the
 committed files of another root are copied as files, no Spark job)
 share that one commit: marker check, pointer swap, retention.
+``append_snapshot`` is the one append (the key-less audit tables): it
+writes a version only when there are rows to add or no snapshot yet.
 
 ``_schema.json`` is the schema the version was written with, so
 ``read_snapshot`` hands it to the reader instead of running Spark's
@@ -221,6 +223,23 @@ def write_snapshot(spark: SparkSession, df: DataFrame, root: str,
             f.flush()
             os.fsync(f.fileno())
     return _commit(root, version, keep)
+
+
+def append_snapshot(spark: SparkSession, df: DataFrame, root: str) -> str:
+    """Append ``df``'s rows to the table at ``root`` and return its
+    committed version directory. The key-less audit tables (the rows
+    every run quarantined, across vendors) land only through here.
+
+    A new version is written only when ``df`` has a row or ``root`` has
+    no snapshot yet: appending nothing leaves the committed version and
+    the retained history as they are. An append writes the current
+    rows plus ``df`` (columns unioned by name) as the next version."""
+    if snapshot_exists(root):
+        if df.isEmpty():
+            return current_path(root)
+        df = read_snapshot(spark, root).unionByName(
+            df, allowMissingColumns=True)
+    return write_snapshot(spark, df, root)
 
 
 def copy_snapshot(src_root: str, dst_root: str, keep: int = 2) -> str:

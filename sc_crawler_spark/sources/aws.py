@@ -20,6 +20,8 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from ..operators.windows import keep_last_dedup
+
 # ------------------------------------------------- describe_instance_types
 
 _GPU = StructType([
@@ -166,6 +168,20 @@ def standardize_instance_types(raw: DataFrame, vendor_id: str = "aws") -> DataFr
     return out.withColumn(
         "storage_type", F.element_at(F.col("storages"), 1)["storage_type"]
     ).drop("_gpus_expanded")
+
+
+def instance_type_servers(raw: DataFrame, vendor_id: str = "aws") -> DataFrame:
+    """Bronze describe-instance-types rows (RAW_INSTANCE_TYPE columns) ->
+    standardized servers (P1), keep-last deduped per
+    (vendor_id, server_id) in arrival order (A4). The batch inventory and
+    the streaming server inventory share it."""
+    payload = raw.select(
+        F.struct(*[F.col(f.name) for f in RAW_INSTANCE_TYPE.fields])
+        .alias("payload"))
+    servers = standardize_instance_types(payload, vendor_id).withColumn(
+        "_pos", F.monotonically_increasing_id())
+    return keep_last_dedup(
+        servers, ["vendor_id", "server_id"], "_pos").drop("_pos")
 
 
 # ----------------------------------------------------- pricing `terms` walk

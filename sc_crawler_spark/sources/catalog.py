@@ -775,14 +775,14 @@ def vultr_server_prices(raw: DataFrame, allocation: str = "ondemand",
     )
 
 
-def upcloud_zone_prices(spark: SparkSession, path: str) -> DataFrame:
-    """Parse the UpCloud zone price list (one raw zone object per line,
-    dynamic ``server_plan_<PLAN>`` keys) into long
-    ``(region_id, plan_key, price)`` rows. Dynamic keys have no fixed
-    schema, so the object parses as ``map<string,string>`` (nested
-    objects stay JSON text) and explodes — native expressions, no UDF."""
-    raw = spark.read.text(path)
-    m = raw.select(
+def upcloud_zone_prices(lines: DataFrame) -> DataFrame:
+    """Parse the UpCloud zone price list (``lines``: the file read as
+    text, one raw zone object per ``value``, dynamic
+    ``server_plan_<PLAN>`` keys) into long ``(region_id, plan_key,
+    price)`` rows. Dynamic keys have no fixed schema, so the object
+    parses as ``map<string,string>`` (nested objects stay JSON text)
+    and explodes — native expressions, no UDF."""
+    m = lines.select(
         F.from_json("value", "map<string,string>").alias("m")
     ).select(
         F.col("m")["name"].alias("region_id"),
@@ -795,17 +795,15 @@ def upcloud_zone_prices(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def upcloud_service_prices(spark: SparkSession, path: str,
-                           vendor_id: str = "upcloud"
+def upcloud_service_prices(lines: DataFrame, vendor_id: str = "upcloud"
                            ) -> dict[str, DataFrame]:
     """The non-server prices embedded in the SAME zone price list
     (reference _upcloud.py:524-583): ``storage_<id>`` keys ->
     storage_price (cents/h -> EUR per GB/month via x/100*24*30),
     ``public_ipv4_bandwidth_out`` -> traffic_price (outbound cents/GB,
     inbound free), ``ipv4_address`` -> ipv4_price (cents/h -> EUR/h).
-    One scan, dynamic-key map parse like upcloud_zone_prices."""
-    raw = spark.read.text(path)
-    kv = raw.select(
+    ``lines`` as for upcloud_zone_prices; one dynamic-key map parse."""
+    kv = lines.select(
         F.from_json("value", "map<string,string>").alias("m")
     ).select(
         F.col("m")["name"].alias("region_id"),

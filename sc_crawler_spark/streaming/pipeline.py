@@ -916,34 +916,24 @@ def stream_server_inventory(spark: SparkSession, bronze_dir: str,
     (cron-friendly); without it the same query tails the directory
     24/7 on a cluster.
 
-    Validation-failed rows append to ``<state_dir>_invalid`` — the same
-    audit-trail contract as the batch inventory path; a fully-invalid
-    drop file must not stream through as a silent no-op.
+    Validation-failed rows append to ``<state_dir>_invalid`` through
+    ``append_snapshot`` — the same audit-trail rule as the batch
+    inventory path, so a fully-invalid drop file must not stream
+    through as a silent no-op, and a clean one adds no version.
     """
     from ..operators.upsert import merge_upsert
     from ..operators.validate import validate_items
-    from ..operators.windows import keep_last_dedup
-    from ..sinks.snapshot import read_snapshot, snapshot_exists, write_snapshot
+    from ..sinks.snapshot import (append_snapshot, read_snapshot,
+                                  snapshot_exists, write_snapshot)
     from ..sources import aws
 
     raw = spark.readStream.schema(aws.RAW_INSTANCE_TYPE).json(bronze_dir)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         bspark = batch.sparkSession
-        payload = batch.select(
-            F.struct(*[F.col(f.name) for f in aws.RAW_INSTANCE_TYPE.fields])
-            .alias("payload"))
-        servers = aws.standardize_instance_types(payload, vendor) \
-            .withColumn("_pos", F.monotonically_increasing_id())
-        servers = keep_last_dedup(
-            servers, ["vendor_id", "server_id"], "_pos").drop("_pos")
-        valid, invalid = validate_items(servers, "server")
-        if invalid.limit(1).count():
-            inv_dir = state_dir.rstrip("/") + "_invalid"
-            if snapshot_exists(inv_dir):
-                invalid = read_snapshot(bspark, inv_dir).unionByName(
-                    invalid, allowMissingColumns=True)
-            write_snapshot(bspark, invalid, inv_dir)
+        valid, invalid = validate_items(
+            aws.instance_type_servers(batch, vendor), "server")
+        append_snapshot(bspark, invalid, state_dir.rstrip("/") + "_invalid")
         if snapshot_exists(state_dir):
             # genuine read/merge failures must PROPAGATE so the batch
             # retries — a broad except here would silently reset the

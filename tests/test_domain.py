@@ -314,6 +314,23 @@ def test_hash_diff_classification(spark):
     assert out == {"a": "new", "c": "update", "d": "deleted"}
 
 
+def test_hash_diff_holds_no_session_cache(spark):
+    """hash_diff returns a lazy plan and caches nothing: collecting it,
+    and the registry's lifecycle query built on it, leaves the
+    session's persisted RDDs as they were."""
+    from sc_crawler_spark.queries.lifecycle import hash_diff_sync
+
+    from .conftest import SF_SMOKE
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    src = spark.createDataFrame([("a", 1), ("b", 2)], ["pk", "v"])
+    tgt = spark.createDataFrame([("b", 3), ("c", 4)], ["pk", "v"])
+    assert len(hash_diff(src, tgt, ["pk"]).collect()) == 3
+    assert hash_diff_sync(spark, SF_SMOKE).collect()
+    assert set(persisted().keys()) == before
+
+
 def test_row_hash_null_vs_empty(spark):
     df = spark.createDataFrame([("k", None), ("k", "")], ["pk", "v"])
     hashes = [r.h for r in df.select(row_hash(["v"]).alias("h")).collect()]

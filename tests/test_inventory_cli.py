@@ -7,10 +7,12 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sc_crawler_spark import cli
-from sc_crawler_spark.sinks.snapshot import (SCHEMA, current_path, read_extra,
+from sc_crawler_spark.sinks.snapshot import (SCHEMA, current_path,
+                                             list_versions, read_extra,
                                              read_snapshot)
 
 
@@ -1629,3 +1631,66 @@ def test_invalid_audit_table_accumulates_across_vendors(spark, tmp_path):
     rows = read_snapshot(
         spark, os.path.join(lake, "server_invalid")).collect()
     assert sorted(r.vendor_id for r in rows) == ["aws", "hcloud"]
+
+
+def _write_audit_bronze(root, vendor, bad_regions):
+    """One server and one valid region for ``vendor``, plus a
+    country-less region row (quarantined) per name in ``bad_regions``."""
+    d = os.path.join(root, vendor)
+    os.makedirs(d, exist_ok=True)
+    server_file, server = (
+        ("instance_types.json", _instance("m5.large", 2, 8192))
+        if vendor == "aws" else
+        ("servers.json", json.dumps({"id": 22, "name": "cx22", "cores": 2,
+                                     "memory": 4.0, "disk": 40,
+                                     "cpu_type": "shared",
+                                     "architecture": "x86"})))
+    with open(os.path.join(d, server_file), "w") as fh:
+        fh.write(server)
+    regions = [{"region_id": "de-fra1", "name": "Frankfurt #1",
+                "api_reference": "de-fra1", "aliases": [],
+                "country_id": "DE"}]
+    regions += [{"region_id": r, "name": "No country"} for r in bad_regions]
+    with open(os.path.join(d, "regions.json"), "w") as fh:
+        fh.write("\n".join(json.dumps(r) for r in regions))
+
+
+@pytest.mark.parametrize("vendor", ["aws", "hcloud"])
+def test_audit_table_gets_a_version_only_for_quarantined_rows(
+        spark, tmp_path, vendor):
+    """A re-pull that quarantines nothing leaves the audit table's
+    versions as they were; one that quarantines a row adds exactly that
+    row and keeps the earlier ones."""
+    bronze, lake = str(tmp_path / "bronze"), str(tmp_path / "lake")
+    audit = os.path.join(lake, "server_invalid")
+
+    def pull(bad_regions):
+        _write_audit_bronze(bronze, vendor, bad_regions)
+        cli.cmd_inventory(spark, bronze, lake, vendor=vendor)
+        return sorted(r.region_id
+                      for r in read_snapshot(spark, audit).collect())
+
+    assert pull(["xx-bad1"]) == ["xx-bad1"]
+    versions = list_versions(audit)
+    assert pull([]) == ["xx-bad1"]
+    assert list_versions(audit) == versions
+    assert pull(["xx-bad2"]) == ["xx-bad1", "xx-bad2"]
+    assert list_versions(audit) != versions
+
+
+def test_first_landing_writes_what_the_unpersisted_plan_would(spark,
+                                                              tmp_path):
+    """The validated server source is persisted for the run and ends in
+    the keep-last dedup's shuffle; its first landing must still be
+    written as the unpersisted plan would (AQE coalesces the shuffle to
+    one partition at this size), not as one file per shuffle
+    partition."""
+    bronze, lake = str(tmp_path / "bronze"), str(tmp_path / "lake")
+    _write_bronze(
+        bronze, [_instance(f"m{i}.large", 2, 8192) for i in range(40)],
+        [_product("m0.large", "US East (N. Virginia)", 0.096)])
+    cli.cmd_inventory(spark, bronze, lake)
+    vdir = current_path(os.path.join(lake, "server"))
+    parts = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+    assert len(parts) == 1, parts
+    assert read_snapshot(spark, os.path.join(lake, "server")).count() == 40

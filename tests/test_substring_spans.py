@@ -172,6 +172,30 @@ def test_incremental_minhash_no_base_x_base(spark):
     assert {p: r.jaccard for p, r in out.items()} == want
 
 
+def test_incremental_minhash_holds_no_session_cache(spark):
+    """Without ``new_index`` the batch's shingle and band tables are
+    part of the returned lazy plan: collecting it leaves the session's
+    persisted RDDs as they were."""
+    from sc_crawler_spark.operators.dedup import (
+        incremental_minhash_pairs, minhash_index)
+
+    txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    base = spark.createDataFrame(
+        [(1, txt), (2, "totally different words entirely unrelated here")],
+        "doc_id long, text string")
+    new = spark.createDataFrame([(10, txt), (11, txt)],
+                                "doc_id long, text string")
+    idx = minhash_index(base, "text", "doc_id", k=3, n_hashes=8)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    rows = incremental_minhash_pairs(
+        new, idx, "text", "doc_id", k=3, n_hashes=8, band_rows=2,
+        threshold=0.5).collect()
+    assert sorted((r.id_a, r.id_b) for r in rows) == [
+        (1, 10), (1, 11), (10, 11)]
+    assert set(persisted().keys()) == before
+
+
 def test_incremental_minhash_reingested_ids(spark):
     """r9's re-ingestion guard + r9-advice edge collapse, now tested:
     a replayed batch carries ids that ALREADY sit in the corpus index.
