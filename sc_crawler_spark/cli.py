@@ -848,7 +848,7 @@ def cmd_sql(spark: SparkSession, lake: str, query: str,
     df = spark.sql(query)
     if out:
         df.write.mode("overwrite").parquet(out)
-        print(f"sql: wrote {read_snapshot(spark, out).count()} rows to {out}")
+        print(f"sql: wrote {version_rows(out)} rows to {out}")
         return
     cols = df.columns
     print("\t".join(cols))
@@ -921,12 +921,6 @@ def cmd_score(spark: SparkSession, lake: str) -> None:
         scope=F.col("benchmark_id").startswith("workload_profile:"),
     )
     _rewrite(spark, merged, path)
-    # the snapshot is written — release the `best` frame workloads
-    # cached for this scoring pass (otherwise each cmd_score in a
-    # long-lived session pins another executor-storage entry forever)
-    from .workloads import release_scored_caches
-
-    release_scored_caches()
     n = read_snapshot(spark, path).filter(
         F.col("benchmark_id").startswith("workload_profile:")
         & (F.col("status") == "active")).count()
@@ -943,7 +937,7 @@ def cmd_shards(spark: SparkSession, lake: str, table: str, out: str,
 
     df = _read(spark, lake, table)
     write_training_shards(df, out, id_col, n_shards, seed)
-    n = spark.read.parquet(out).count()
+    n = version_rows(out)
     print(f"shards: {table}: {n} rows into {n_shards} shards at {out}")
 
 
@@ -1011,7 +1005,7 @@ def cmd_index(spark: SparkSession, lake: str, out: str,
         force=force, k=k, n_hashes=n_hashes, band_rows=band_rows,
         threshold=threshold, text_col=text_col, id_col=id_col)
     digest = artifacts.read_meta(out)["digest"]
-    n = spark.read.parquet(os.path.join(out, "pairs")).count()
+    n = version_rows(os.path.join(out, "pairs"))
     if why != "hit":
         print(f"index: rebuild ({why})")
     verb = "reuse" if why == "hit" else "built"
@@ -1031,7 +1025,7 @@ def cmd_index_fold(spark: SparkSession, base: str, stream_index: str,
 
     meta = index_store.fold_minhash_index(spark, base, stream_index,
                                           stream_pairs, out)
-    n = spark.read.parquet(os.path.join(out, "pairs")).count()
+    n = version_rows(os.path.join(out, "pairs"))
     print(f"index: folded {out} digest={meta['digest']} pairs={n}")
 
 
@@ -1060,7 +1054,7 @@ def cmd_bm25_index(spark: SparkSession, lake: str, out: str,
         force=force, max_postings=max_postings, text_col=text_col,
         id_col=id_col, k1=_BM25_K1, b=_BM25_B, query_stride=query_stride)
     meta = artifacts.read_meta(out)
-    n = postings_store.load_postings(spark, out).count()
+    n = version_rows(os.path.join(out, "postings"))
     if why == "hit":
         print(f"bm25index: reuse {out} digest={meta['digest']} "
               f"postings={n}")
@@ -1082,7 +1076,7 @@ def cmd_bm25_index_fold(spark: SparkSession, base: str, batch_lake: str,
 
     folded = postings_store.fold_bm25_index(
         spark, base, _read_source(spark, batch_lake, table), out)
-    n = postings_store.load_postings(spark, out).count()
+    n = version_rows(os.path.join(out, "postings"))
     print(f"bm25index: folded {out} digest={folded['digest']} "
           f"postings={n}")
 
@@ -1109,7 +1103,7 @@ def cmd_ann_index(spark: SparkSession, lake: str, out: str,
         force=force, n_cells=n_cells, iters=iters, vec_col=vec_col,
         id_col=id_col)
     digest = artifacts.read_meta(out)["digest"]
-    n = spark.read.parquet(os.path.join(out, "assign")).count()
+    n = version_rows(os.path.join(out, "assign"))
     if why != "hit":
         print(f"annindex: rebuild ({why})")
     verb = "reuse" if why == "hit" else "built"
@@ -1136,7 +1130,7 @@ def cmd_ann_index_fold(spark: SparkSession, base: str, batch_lake: str,
 
     batch = _read_source(spark, batch_lake, table)
     folded = ann_store.fold_ivf_index(spark, base, batch, out)
-    n = spark.read.parquet(os.path.join(out, "assign")).count()
+    n = version_rows(os.path.join(out, "assign"))
     print(f"annindex: folded {out} digest={folded['digest']} "
           f"vectors={n}")
     # drift trip-wire: folds never move centroids, so cell balance and
@@ -1255,7 +1249,7 @@ def cmd_versions(spark: SparkSession, lake: str,
     for t in tables:
         root = _table_path(lake, t)
         for v, is_current in list_versions(root):
-            n = read_snapshot(spark, root, version=v).count()
+            n = version_rows(os.path.join(root, v))
             star = " *" if is_current else ""
             print(f"versions: {t}: {v} rows={n}{star}")
 

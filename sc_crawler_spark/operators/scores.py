@@ -1,33 +1,39 @@
 """Workload-profile composite scoring — the reference's flagship analytic
-(SURVEY.md §2.5 A1-A3; workload_profile_scores.py:156-442).
+(SURVEY.md §2.5 A1-A3; workload_profile_scores.py:156-442). The one
+implementation: every composite query and ``cmd_score`` is a final
+projection over :func:`entry_scores` + :func:`composite` /
+:func:`breakdown`.
 
-Pipeline (all relational, 3 shuffles total, partial aggregation free):
+Input: matched fact rows ``(subject_keys..., entry_idx, score)`` and an
+entry catalog in the ``workloads.ENTRIES`` shape — dicts with
+``entry_idx, workload_key, weight, label, on_missing, penalty, hib``.
 
-1. ``best_per_entry``  — max (or min when lower-is-better) score per
-   (subject, entry) over rows passing the entry's config filter (A1).
-2. ``fleet_median``    — EXACT median of best scores per entry (A2;
-   ``percentile`` not ``approx_percentile`` — medians feed every score).
-3. ``composite``       — weighted geometric mean of median-normalized
-   scores: ``2^(Σ wᵢ·log2(rawᵢ/medianᵢ) / Σ wᵢ)`` with orientation flip
-   and missing-component policies IGNORE/PENALIZE/REQUIRE (A3).
+1. A1 — best score per (subject, entry), max or (lower-is-better) min:
+   ONE pivoted conditional aggregate per subject, the only shuffle.
+2. A2 — EXACT fleet median per entry (``percentile``, not
+   ``approx_percentile`` — medians feed every score): one single-row
+   aggregate over the wide frame, broadcast back.
+3. Unpivot to one row per (subject, catalog entry) — missing entries
+   carry a NULL best — and normalize: ``ratio`` = raw/median (flipped
+   for lower-is-better), valid only when raw > 0 AND median > 0
+   (reference ``_normalise``, :226-232).
+4. A3 per (subject, workload): REQUIRE suppresses, PENALIZE substitutes
+   ``log2(penalty)``, IGNORE renormalizes; composite =
+   ``2^(Σ w·log2 ratio / Σ w)``. :func:`composite` groups and
+   :func:`breakdown` windows on (subject, workload), which the subject
+   hash partitioning of step 1 already satisfies — no further exchange.
 
-Determinism: the log-sum is accumulated in DECIMAL so partial-aggregation
-order can't perturb the double sum (oracle parity).
+Determinism: each ``w·log2`` term is cast to DECIMAL(28,12) before the
+sum, so partial-aggregation order can't perturb it (oracle parity). No
+step caches: the wide frame's two consumers share one exchange.
 """
 
 from __future__ import annotations
 
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-PENALTY_DEFAULT = 1e-4  # workload_profile_scores.py penalize default
-
-
-def _bq(ident: str) -> str:
-    """Backtick-quote an identifier for F.expr strings (entry names like
-    'membench:latency' are not bare-identifier-safe)."""
-    return "`" + ident.replace("`", "``") + "`"
+from ..functions.scalars import round_sig_figs, round_sig_figs_pure
 
 
 def _sq(s: str) -> str:
@@ -35,260 +41,114 @@ def _sq(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def best_per_entry(scores: DataFrame, subject_keys: list[str], entry_key: str,
-                   score_col: str = "score",
-                   higher_is_better_col: str | None = None) -> DataFrame:
-    """A1: best score per (subject, entry); max, or min when the entry is
-    lower-is-better (workload_profile_scores.py:182-213)."""
-    if higher_is_better_col:
-        best = F.max(
-            F.when(F.col(higher_is_better_col), F.col(score_col))
-        ).alias("_best_hi")
-        worst = F.min(
-            F.when(~F.col(higher_is_better_col), F.col(score_col))
-        ).alias("_best_lo")
-        out = scores.groupBy(*subject_keys, entry_key).agg(best, worst)
-        return out.withColumn(
-            "best_score", F.coalesce(F.col("_best_hi"), F.col("_best_lo"))
-        ).drop("_best_hi", "_best_lo")
-    return scores.groupBy(*subject_keys, entry_key).agg(
-        F.max(score_col).alias("best_score")
+def _entry_struct(e: dict) -> str:
+    i, pen = e["entry_idx"], e["penalty"]
+    return (
+        f"named_struct('entry_idx', {i}, "
+        f"'workload_key', {_sq(e['workload_key'])}, "
+        f"'weight', CAST({e['weight']} AS DECIMAL(10,4)), "
+        f"'label', {_sq(e['label'])}, "
+        f"'on_missing', {_sq(e['on_missing'])}, "
+        f"'penalty', {'CAST(NULL AS DOUBLE)' if pen is None else f'{pen!r}D'}, "
+        f"'hib', {'true' if e['hib'] else 'false'}, "
+        f"'best_score', _b.b{i}, 'median_score', _m.m{i})"
     )
 
 
-def fleet_median(best: DataFrame, entry_key: str,
-                 score_col: str = "best_score") -> DataFrame:
-    """A2: exact fleet median per entry. ``percentile(…, 0.5)`` linearly
-    interpolates on even counts — same as ``statistics.median``."""
-    return best.groupBy(entry_key).agg(
-        F.percentile(F.col(score_col), F.lit(0.5)).alias("median_score")
+def entry_scores(matched: DataFrame, subject_keys: list[str],
+                 entries: list[dict]) -> DataFrame:
+    """A1 + A2 + normalization: one row per (subject, catalog entry) for
+    every subject with at least one matched row — the catalog fields
+    plus ``best_score``, ``median_score``, ``ratio`` (NULL unless
+    valid), ``norm`` = log2(ratio), and the A3 terms ``counted``
+    (scored or penalized), ``w`` (counted weight), ``wlog`` and
+    ``req_miss`` (a missing REQUIRE component)."""
+    # The per-entry aggregates ride in ONE struct expression each: a
+    # single JVM-side parse instead of one py4j roundtrip per entry —
+    # plan construction is on every cold query's critical path.
+    best = ", ".join(
+        f"'b{e['entry_idx']}', {'max' if e['hib'] else 'min'}"
+        f"(CASE WHEN entry_idx = {e['entry_idx']} THEN score END)"
+        for e in entries)
+    wide = matched.groupBy(*subject_keys).agg(
+        F.expr(f"named_struct({best}) AS _b"))
+    meds = wide.agg(F.expr("named_struct(" + ", ".join(
+        f"'m{e['entry_idx']}', percentile(_b.b{e['entry_idx']}, 0.5)"
+        for e in entries) + ") AS _m"))
+    rows = ", ".join(_entry_struct(e) for e in entries)
+    return wide.crossJoin(F.broadcast(meds)).selectExpr(
+        *subject_keys, f"inline(array({rows}))"
+    ).selectExpr(
+        "*",
+        "CASE WHEN best_score > 0 AND median_score > 0 THEN"
+        " CASE WHEN hib THEN best_score / median_score"
+        " ELSE median_score / best_score END END AS ratio",
+        "log2(ratio) AS norm",
+        "norm IS NOT NULL OR on_missing = 'penalize' AS counted",
+        "CASE WHEN counted THEN weight"
+        " ELSE CAST(0 AS DECIMAL(10,4)) END AS w",
+        "CAST(CASE WHEN norm IS NOT NULL THEN norm * CAST(weight AS DOUBLE)"
+        " WHEN on_missing = 'penalize'"
+        " THEN log2(penalty) * CAST(weight AS DOUBLE)"
+        " ELSE 0.0D END AS DECIMAL(28,12)) AS wlog",
+        "on_missing = 'require' AND norm IS NULL AS req_miss",
     )
 
 
-def composite_breakdown(best: DataFrame, medians: DataFrame,
-                        weights: DataFrame, subject_keys: list[str],
-                        entry_key: str) -> DataFrame:
-    """A3 — per-component ``score_breakdown`` published next to the
-    composite (workload_profile_scores.py:340-400): for each component,
-    {label, weight, weight_share, raw, reference, normalized,
-    higher_is_better, impact} where
+def composite(scored: DataFrame, subject_keys: list[str],
+              *aggs: Column) -> DataFrame:
+    """A3: one row per published (subject, workload) — not suppressed,
+    some counted weight — with ``sum_wlog``, ``total_w`` (scored +
+    penalized weight), ``n_scored``, the unrounded ``geomean`` and the
+    3-sig-fig ``score``. ``aggs`` ride along in the same aggregate."""
+    return scored.groupBy(*subject_keys, "workload_key").agg(
+        F.expr("sum(wlog) AS sum_wlog"),
+        F.expr("sum(w) AS total_w"),
+        F.expr("max(req_miss) AS suppressed"),
+        F.expr("sum(CAST(norm IS NOT NULL AS BIGINT)) AS n_scored"),
+        *aggs,
+    ).where("NOT suppressed AND total_w > 0").select(
+        "*",
+        F.expr("power(2.0D, CAST(sum_wlog AS DOUBLE)"
+               " / CAST(total_w AS DOUBLE)) AS geomean"),
+        round_sig_figs_pure(F.col("geomean"), 3).alias("score"),
+    )
 
-    - weight_share = weight / Σ weight, 3 sig figs,
-    - impact = (normalized^weight_share - 1) * 100, 3 sig figs
-      (`_component_impact_pct`, :60-76),
-    - raw/reference use measurement rounding (4 sig figs, integers kept
-      whole above 1000 — `_round_measurement`, :37-51),
-    - score = 2^(Σ w·log2(norm) / Σ w), 3 sig figs.
 
-    The struct array is sorted by label (struct comparison leads with the
-    first field) so output is deterministic under any partitioning.
-    """
-    from ..functions.scalars import round_sig_figs, round_sig_figs_pure
+def impact_pct(normalized: Column, share: Column) -> Column:
+    """``(normalized^weight_share - 1)·100`` at 3 sig figs
+    (``_component_impact_pct``, workload_profile_scores.py:60-76)."""
+    return round_sig_figs_pure((F.pow(normalized, share) - 1) * 100, 3)
 
-    j = best.join(F.broadcast(medians), entry_key).join(
-        F.broadcast(weights), entry_key
-    )
-    hib = (
-        F.col("higher_is_better")
-        if "higher_is_better" in weights.columns
-        else F.lit(True)
-    )
-    ratio = F.when(hib, F.col("best_score") / F.col("median_score")).otherwise(
-        F.col("median_score") / F.col("best_score")
-    )
-    # reference _normalise (workload_profile_scores.py:226-232): a
-    # nonpositive raw OR median invalidates the component — the term
-    # AND its weight drop (not weight-only, which would silently skew
-    # the renormalized composite)
-    j = j.filter((F.col("median_score") > 0)
-                 & (F.col("best_score") > 0)).withColumn("_norm", ratio)
-    w = Window.partitionBy(*subject_keys)
-    j = j.withColumn("_total_w", F.sum("weight").over(w)).withColumn(
-        "_wshare", round_sig_figs_pure(F.col("weight") / F.col("_total_w"), 3)
-    )
-    component = F.struct(
-        F.col(entry_key).alias("label"),
-        F.col("weight").alias("weight"),
-        F.col("_wshare").alias("weight_share"),
+
+def breakdown(scored: DataFrame, subject_keys: list[str]) -> DataFrame:
+    """A3 per component (``score_breakdown``, workload_profile_scores.py:
+    283-366): every entry row of each published (subject, workload),
+    adding ``total_w``, ``weight_share`` (3 sig figs; 0.0 for ignored
+    components), ``normalized`` (2^norm or the penalty, 3 sig figs),
+    ``impact`` over those two (NULL for ignored components), and
+    ``raw``/``reference`` at measurement rounding (4 sig figs, integers
+    kept whole above 1000 — ``_round_measurement``, :37-51)."""
+    grp = Window.partitionBy(*subject_keys, "workload_key")
+    normalized = round_sig_figs_pure(
+        F.when(F.col("norm").isNotNull(), F.pow(F.lit(2.0), F.col("norm")))
+        .when(F.col("on_missing") == "penalize", F.col("penalty")), 3)
+    share = F.when(
+        F.col("counted"),
+        round_sig_figs_pure(F.col("weight").cast("double")
+                            / F.col("total_w").cast("double"), 3),
+    ).otherwise(F.lit(0.0))
+    return scored.select(
+        "*",
+        F.sum("w").over(grp).alias("total_w"),
+        F.max("req_miss").over(grp).alias("suppressed"),
+    ).where("NOT suppressed AND total_w > 0").select(
+        "*",
+        share.alias("weight_share"),
+        normalized.alias("normalized"),
+        F.when(F.col("counted"),
+               impact_pct(F.col("normalized"), F.col("weight_share")))
+        .alias("impact"),
         round_sig_figs(F.col("best_score"), 4).alias("raw"),
         round_sig_figs(F.col("median_score"), 4).alias("reference"),
-        F.col("_norm").alias("normalized"),
-        hib.alias("higher_is_better"),
-        round_sig_figs_pure(
-            (F.pow(F.col("_norm"), F.col("_wshare")) - 1) * 100, 3
-        ).alias("impact"),
-    )
-    wlog = (F.col("weight") * F.log2(F.col("_norm"))).cast("decimal(28,12)")
-    return (
-        j.withColumn("_c", component)
-        .groupBy(*subject_keys)
-        .agg(
-            F.sort_array(F.collect_list("_c")).alias("components"),
-            F.sum(wlog).alias("_sum_wlog"),
-            F.first("_total_w").alias("coverage"),
-        )
-        .select(
-            *subject_keys,
-            round_sig_figs_pure(
-                F.pow(
-                    F.lit(2.0),
-                    F.col("_sum_wlog").cast("double") / F.col("coverage"),
-                ),
-                3,
-            ).alias("score"),
-            "coverage",
-            "components",
-        )
-    )
-
-
-def best_per_entry_wide(scores: DataFrame, subject_keys: list[str],
-                        entry_key: str, score_col: str,
-                        entries: list[tuple[str, float, bool]]) -> DataFrame:
-    """A1 fast path for a STATIC entry catalog: one conditional aggregate
-    per entry, pivoted wide — ``best_<entry>`` columns.
-
-    vs ``best_per_entry``: the groupBy key is the subject alone, so the
-    plan is ONE shuffle carrying one row per subject (not one per
-    subject×entry), and downstream composite math needs no second
-    subject shuffle at all. Same W1/A1 contract
-    (workload_profile_scores.py:182-213); orientation flip (min for
-    lower-is-better) is applied per entry at aggregate build time.
-    """
-    if not entries:
-        raise ValueError("best_per_entry_wide needs at least one entry")
-    known = ", ".join(_sq(e) for e, _, _ in entries)
-    ek, sc = _bq(entry_key), _bq(score_col)
-    filtered = scores.filter(F.expr(f"{ek} IN ({known})"))
-    # One F.expr per aggregate: a single JVM-side parse beats building
-    # the when/max Column tree through ~6 py4j roundtrips each — plan
-    # construction is on every cold query's critical path. Entry names
-    # reach SQL only as escaped string literals; the output alias goes
-    # through Column.alias, which quotes anything.
-    aggs = [
-        F.expr(f"{'max' if hib else 'min'}"
-               f"(CASE WHEN {ek} = {_sq(name)} THEN {sc} END)")
-        .alias(f"best_{name}")
-        for name, _w, hib in entries
-    ]
-    return filtered.groupBy(*subject_keys).agg(*aggs)
-
-
-def composite_scores_wide(wide: DataFrame, subject_keys: list[str],
-                          entries: list[tuple[str, float, bool]]) -> DataFrame:
-    """A2+A3 over the wide frame: exact fleet medians as ONE single-row
-    global aggregate (broadcast back via crossJoin), then the weighted
-    geomean as pure column expressions — zero additional shuffles on the
-    subject key.
-
-    Numerically identical to ``fleet_median`` + ``composite_scores(…,
-    on_missing='ignore')``: each present term is ``weight·log2(ratio)``
-    individually cast to DECIMAL(28,12) then summed (decimal addition is
-    exact, so term order can't perturb the result), medians ignore
-    absent subjects (percentile skips NULLs), zero medians drop the
-    component, and subjects with no surviving component drop out.
-    """
-    # Single-parse SQL strings instead of per-entry Column trees: the
-    # expressions below are identical to the F.when/F.lit construction
-    # they replace (same CASE/CAST/log2 operators, double literals via
-    # the D suffix), but the whole projection costs ONE py4j roundtrip.
-    meds = wide.agg(*[
-        F.expr(f"percentile({_bq(f'best_{n}')}, 0.5)").alias(f"med_{n}")
-        for n, _, _ in entries
-    ])
-    j = wide.crossJoin(F.broadcast(meds))
-    zero = "CAST(0 AS DECIMAL(28,12))"
-    wlogs, ws, ns = [], [], []
-    for name, weight, hib in entries:
-        b, m = _bq(f"best_{name}"), _bq(f"med_{name}")
-        ratio = f"({b} / {m})" if hib else f"({m} / {b})"
-        # present requires POSITIVE best and median (reference
-        # _normalise): with only `m != 0`, log2 of a nonpositive ratio
-        # yields NULL inside the term and the hand-built (t1 + t2 + ...)
-        # sum would NULL the whole score
-        present = f"{b} > 0 AND {m} > 0"
-        wlogs.append(
-            f"CASE WHEN {present} THEN CAST({weight!r}D * log2({ratio}) "
-            f"AS DECIMAL(28,12)) ELSE {zero} END")
-        ws.append(f"CASE WHEN {present} THEN {float(weight)!r}D ELSE 0.0D END")
-        ns.append(f"CASE WHEN {present} THEN 1 ELSE 0 END")
-    def sum_(exprs):
-        return "(" + " + ".join(exprs) + ")"
-
-    score = f"power(2.0D, CAST({sum_(wlogs)} AS DOUBLE) / {sum_(ws)})"
-    return (
-        j.selectExpr(
-            *subject_keys,
-            f"{score} AS score",
-            "1.0D AS coverage",
-            f"CAST({sum_(ns)} AS BIGINT) AS n_components",
-        )
-        .filter(F.col("n_components") > 0)
-    )
-
-
-def composite_scores(best: DataFrame, medians: DataFrame, weights: DataFrame,
-                     subject_keys: list[str], entry_key: str,
-                     n_components: int | None = None,
-                     on_missing: str = "ignore") -> DataFrame:
-    """A3: weighted geometric mean of median-normalized best scores.
-
-    ``weights``: (entry_key, weight [, higher_is_better]). Orientation flip
-    happens on the ratio (median/raw for lower-is-better).
-    ``on_missing``: 'ignore' renormalizes over present components;
-    'require' suppresses subjects missing any of ``n_components``;
-    'penalize' substitutes ``PENALTY_DEFAULT`` for missing normalized
-    values (needs ``n_components``).
-    Output: subject_keys + score (3 sig figs upstream of rounding caller),
-    coverage = present weight share.
-    """
-    j = best.join(F.broadcast(medians), entry_key).join(F.broadcast(weights), entry_key)
-    hib = (
-        F.col("higher_is_better")
-        if "higher_is_better" in weights.columns
-        else F.lit(True)
-    )
-    ratio = F.when(hib, F.col("best_score") / F.col("median_score")).otherwise(
-        F.col("median_score") / F.col("best_score")
-    )
-    # reference _normalise: raw <= 0 or median <= 0 -> the component is
-    # INVALID and behaves as missing (term and weight both drop; under
-    # 'require' the subject suppresses, under 'penalize' it penalizes)
-    j = j.filter((F.col("median_score") > 0)
-                 & (F.col("best_score") > 0)).withColumn(
-        "_wlog", (F.col("weight") * F.log2(ratio)).cast("decimal(28,12)")
-    )
-    agg = j.groupBy(*subject_keys).agg(
-        F.sum("_wlog").alias("_sum_wlog"),
-        F.sum(F.col("weight").cast("decimal(28,12)")).alias("_sum_w"),
-        F.count("*").alias("_n_present"),
-    )
-    if n_components is not None and on_missing == "require":
-        agg = agg.filter(F.col("_n_present") == n_components)
-    if n_components is not None and on_missing == "penalize":
-        # Total weight as a lazy broadcast of the 1-row aggregate — no
-        # driver-side collect mid-plan-build; the cross join against a
-        # single broadcast row is a free BroadcastNestedLoopJoin.
-        total = weights.agg(
-            F.sum(F.col("weight").cast("double")).alias("_total_w")
-        )
-        agg = agg.crossJoin(F.broadcast(total))
-        total_w = F.col("_total_w")
-        missing_w = total_w - F.col("_sum_w").cast("double")
-        penal = missing_w * F.lit(float(__import__("math").log2(PENALTY_DEFAULT)))
-        score = F.pow(
-            F.lit(2.0),
-            (F.col("_sum_wlog").cast("double") + penal) / total_w,
-        )
-        coverage = F.col("_sum_w").cast("double") / total_w
-    else:
-        score = F.pow(
-            F.lit(2.0), F.col("_sum_wlog").cast("double") / F.col("_sum_w").cast("double")
-        )
-        coverage = F.lit(1.0)
-    return agg.select(
-        *subject_keys,
-        score.alias("score"),
-        coverage.alias("coverage"),
-        F.col("_n_present").alias("n_components"),
     )

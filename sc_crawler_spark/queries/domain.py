@@ -7,8 +7,10 @@ entry = event_type (plays the benchmark), score = value. One entry
 ('error') is lower-is-better to exercise the orientation flip; weights are
 a static recipe like WORKLOADS (workload_profiles.py:125-470).
 
-Pipeline: best-per-entry (A1) -> exact fleet median (A2) -> weighted
-geometric mean of median-normalized scores (A3), decimal-accumulated.
+Pipeline: the one scorer (operators/scores.py) — best-per-entry (A1)
+-> exact fleet median (A2) -> weighted geometric mean of
+median-normalized scores (A3), decimal-accumulated; the two queries
+here are projections over it.
 """
 
 from __future__ import annotations
@@ -17,71 +19,64 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dround, sql_round
-from ..operators.scores import best_per_entry, composite_scores, fleet_median
+from ..operators.scores import breakdown, composite, entry_scores, impact_pct
 from ..tables import load
 
-# Static workload recipe: (entry, weight, higher_is_better).
+# Static workload recipe in the workloads.ENTRIES shape: one workload,
+# every entry IGNORE with no config filter; (event_type, weight, hib).
 WORKLOAD_WEIGHTS = [
-    ("view", 1.0, True),
-    ("click", 2.0, True),
-    ("purchase", 4.0, True),
-    ("signup", 2.0, True),
-    ("error", 1.0, False),  # latency-style: lower is better
+    {"entry_idx": i, "workload_key": "events", "benchmark_id": e,
+     "weight": w, "label": e, "flt": None, "on_missing": "ignore",
+     "penalty": None, "hib": hib}
+    for i, (e, w, hib) in enumerate([
+        ("view", "1.0", True),
+        ("click", "2.0", True),
+        ("purchase", "4.0", True),
+        ("signup", "2.0", True),
+        ("error", "1.0", False),  # latency-style: lower is better
+    ])
 ]
 
 
-def workload_scores(spark: SparkSession, sf: str) -> DataFrame:
-    """Wide (pivoted) composite path: the entry catalog is static, so
-    best-per-entry compiles to conditional aggregates in ONE shuffle on
-    user_id; medians are a single-row global agg crossJoined back, and
-    the geomean is column math — no second subject shuffle, no cache
-    needed (the wide frame is one row per user). Long path with dynamic
-    catalogs: workload_profiles_catalog (operators/scores.py)."""
-    from ..operators.scores import best_per_entry_wide, composite_scores_wide
+def _entry_scores(spark: SparkSession, sf: str) -> DataFrame:
+    """The one scorer over ``events``: the recipe's event types map to
+    their entry index in a projection — a pushed-down IN filter, no
+    join."""
+    types = ", ".join(f"'{e['benchmark_id']}'" for e in WORKLOAD_WEIGHTS)
+    idx = " ".join(f"WHEN '{e['benchmark_id']}' THEN {e['entry_idx']}"
+                   for e in WORKLOAD_WEIGHTS)
+    matched = load(spark, sf, "events").where(
+        f"event_type IN ({types})"
+    ).selectExpr("user_id", f"CASE event_type {idx} END AS entry_idx",
+                 "value AS score")
+    return entry_scores(matched, ["user_id"], WORKLOAD_WEIGHTS)
 
-    ev = load(spark, sf, "events")
-    wide = best_per_entry_wide(
-        ev, ["user_id"], "event_type", "value", WORKLOAD_WEIGHTS
-    ).cache()
-    comp = composite_scores_wide(wide, ["user_id"], WORKLOAD_WEIGHTS)
+
+def workload_scores(spark: SparkSession, sf: str) -> DataFrame:
+    """One composite row per user: the scorer's unrounded geomean at 4
+    decimals, coverage fixed at 1.0 (IGNORE renormalizes over the
+    present components), and the number of scored components."""
+    comp = composite(_entry_scores(spark, sf), ["user_id"])
     return comp.select(
         "user_id",
-        dround(F.col("score"), 4).alias("score"),
-        F.col("coverage").cast("double").alias("coverage"),
-        "n_components",
+        dround(F.col("geomean"), 4).alias("score"),
+        F.lit(1.0).alias("coverage"),
+        F.col("n_scored").cast("long").alias("n_components"),
     )
 
 
 def workload_breakdown(spark: SparkSession, sf: str) -> DataFrame:
-    """A3 breakdown published per component (workload_profile_scores.py:
-    340-400), exploded to rows so the oracle can hash it: weight_share
-    (3 sig figs), normalized ratio, impact = (norm^share - 1)*100."""
-    from ..operators.scores import composite_breakdown
-
-    ev = load(spark, sf, "events")
-    values = ", ".join(
-        f"('{e}', CAST({w} AS DOUBLE), {str(h).lower()})"
-        for e, w, h in WORKLOAD_WEIGHTS
+    """A3 breakdown published per scored component (workload_profile_
+    scores.py:340-400), one row each so the oracle can hash it:
+    weight_share (3 sig figs), the unrounded normalized ratio at 6
+    decimals, impact = (ratio^share - 1)*100."""
+    bd = breakdown(_entry_scores(spark, sf), ["user_id"]) \
+        .filter(F.col("counted"))
+    return bd.select(
+        "user_id", "label", "weight_share",
+        dround(F.col("ratio"), 6).alias("normalized"),
+        impact_pct(F.col("ratio"), F.col("weight_share")).alias("impact"),
     )
-    weights = spark.sql(
-        f"SELECT * FROM VALUES {values} AS t(event_type, weight, higher_is_better)"
-    )
-    scored = ev.join(F.broadcast(weights), "event_type")
-    best = best_per_entry(
-        scored, ["user_id"], "event_type",
-        score_col="value", higher_is_better_col="higher_is_better",
-    ).cache()
-    medians = fleet_median(best, "event_type")
-    bd = composite_breakdown(best, medians, weights, ["user_id"], "event_type")
-    c = F.explode("components").alias("c")
-    flat = bd.select("user_id", c).select(
-        "user_id",
-        F.col("c.label").alias("label"),
-        F.col("c.weight_share").alias("weight_share"),
-        dround(F.col("c.normalized"), 6).alias("normalized"),
-        F.col("c.impact").alias("impact"),
-    )
-    return flat
 
 
 def _sql_sigfigs_pure(expr: str, figs: int = 3) -> str:
@@ -139,7 +134,8 @@ def _breakdown_sql() -> str:
 
 
 _WEIGHT_VALUES = ", ".join(
-    f"('{e}', {w}, {str(h).lower()})" for e, w, h in WORKLOAD_WEIGHTS
+    f"('{e['benchmark_id']}', {e['weight']}, {str(e['hib']).lower()})"
+    for e in WORKLOAD_WEIGHTS
 )
 
 WORKLOAD_SQL = f"""

@@ -468,7 +468,7 @@ def stream_ingest_gate(docs: DataFrame, out_dir: str, pairs_dir: str,
 
 def stateful_best_scores(events: DataFrame) -> DataFrame:
     """Custom stateful operator: running best score per (user_id,
-    event_type) — the streaming form of A1 ``best_per_entry``
+    event_type) — the streaming form of A1 (operators/scores.py)
     (workload_profile_scores.py:182-213), kept incrementally via
     ``applyInPandasWithState``.
 
@@ -617,6 +617,58 @@ def _fold_guard(batch: DataFrame, batch_id: int, state_dir: str,
     return batch, manifest
 
 
+def _merge_add_stream(events: DataFrame, state_dir: str,
+                      checkpoint_dir: str, partial, keys: list[str],
+                      measures: list[str]):
+    """The guarded merge-ADD fold behind incremental_daily_rollup and
+    streaming_cms_sketch: each micro-batch's ``partial(batch)`` frame
+    (``keys`` + additive ``measures``) full-outer merges into the stored
+    snapshot, adding the measures, and commits with the folded-input
+    manifest (``_fold_guard``) in the same pointer swap. The first
+    batch's partial IS the table. Returns the started query."""
+    import json
+    import os
+
+    from ..sinks.snapshot import POINTER, read_snapshot, write_snapshot
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        manifest = None
+        # existence check, not try/except: a transient read failure on
+        # batch N>1 must surface (and be retried by the stream), never
+        # be mistaken for "first batch" and truncate the table
+        first = not os.path.exists(os.path.join(state_dir, POINTER))
+        if not first:
+            cur = read_snapshot(spark, state_dir)
+            batch, manifest = _fold_guard(batch, batch_id, state_dir, cur)
+            if batch is None:
+                return  # replayed input: already folded in
+        elif batch.inputFiles():
+            manifest = json.dumps(sorted(set(batch.inputFiles())))
+        merged = delta = partial(batch)
+        if not first:
+            zero = {m: F.lit(0).cast(delta.schema[m].dataType)
+                    for m in measures}
+            merged = cur.join(
+                delta.select(*keys, *[F.col(m).alias(f"_{m}")
+                                      for m in measures]),
+                keys, "full_outer",
+            ).select(*keys, *[
+                (F.coalesce(m, zero[m]) + F.coalesce(f"_{m}", zero[m]))
+                .alias(m) for m in measures])
+        write_snapshot(
+            spark, merged.withColumn("_last_batch_id", F.lit(batch_id)),
+            state_dir,
+            extras={FOLD_MANIFEST: manifest} if manifest else None)
+
+    return (
+        events.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def incremental_daily_rollup(events: DataFrame, state_dir: str,
                              checkpoint_dir: str):
     """Continuous aggregate (hypertable-rollup style): a (day,
@@ -638,61 +690,16 @@ def incremental_daily_rollup(events: DataFrame, state_dir: str,
     IN the snapshot version directory, so cells and guard commit in
     one pointer swap — there is no window where one is updated without
     the other. Returns the streaming query (caller awaits)."""
-    import json
-    import os
-
-    from ..sinks.snapshot import POINTER, read_snapshot, write_snapshot
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        manifest = None
-        # existence check, not try/except: a transient read failure on
-        # batch N>1 must surface (and be retried by the stream), never
-        # be mistaken for "first batch" and truncate the rollup
-        first = not os.path.exists(os.path.join(state_dir, POINTER))
-        if not first:
-            cur = read_snapshot(spark, state_dir)
-            batch, manifest = _fold_guard(batch, batch_id, state_dir, cur)
-            if batch is None:
-                return  # replayed input: already folded in
-        elif batch.inputFiles():
-            manifest = json.dumps(sorted(set(batch.inputFiles())))
-        delta = batch.groupBy(
+    return _merge_add_stream(
+        events, state_dir, checkpoint_dir,
+        lambda batch: batch.groupBy(
             F.date_trunc("DAY", F.col("ts")).alias("wstart"),
             F.col("event_type"),
         ).agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_value"),
-        )
-        if not first:
-            merged = (
-                cur.join(delta.withColumnRenamed("n_events", "_n")
-                         .withColumnRenamed("sum_value", "_s"),
-                         ["wstart", "event_type"], "full_outer")
-                .select(
-                    "wstart", "event_type",
-                    (F.coalesce("n_events", F.lit(0))
-                     + F.coalesce("_n", F.lit(0))).alias("n_events"),
-                    (F.coalesce(F.col("sum_value"),
-                                F.lit(0).cast("decimal(28,6)"))
-                     + F.coalesce(F.col("_s"),
-                                  F.lit(0).cast("decimal(28,6)")))
-                    .alias("sum_value"),
-                )
-            )
-        else:  # first batch: the delta IS the rollup
-            merged = delta
-        write_snapshot(
-            spark, merged.withColumn("_last_batch_id", F.lit(batch_id)),
-            state_dir,
-            extras={FOLD_MANIFEST: manifest} if manifest else None)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        ),
+        ["wstart", "event_type"], ["n_events", "sum_value"])
 
 
 def stream_lr_quality_gate(docs: DataFrame, weights: dict) -> DataFrame:
@@ -798,46 +805,11 @@ def streaming_cms_sketch(events: DataFrame, state_dir: str,
     a grown source folds only the unseen files instead of silently
     dropping them behind the old batch-id marker) in the same atomic
     pointer swap as the cells."""
-    import json
-    import os
-
     from ..operators.sketch import cms_partial
-    from ..sinks.snapshot import POINTER, read_snapshot, write_snapshot
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        manifest = None
-        first = not os.path.exists(os.path.join(state_dir, POINTER))
-        if not first:
-            cur = read_snapshot(spark, state_dir)
-            batch, manifest = _fold_guard(batch, batch_id, state_dir, cur)
-            if batch is None:
-                return  # replayed input: already folded in
-        elif batch.inputFiles():
-            manifest = json.dumps(sorted(set(batch.inputFiles())))
-        delta = cms_partial(batch, key_col)
-        if not first:
-            merged = (
-                cur.join(delta.withColumnRenamed("cnt", "_c"),
-                         ["row", "cell"], "full_outer")
-                .select(
-                    "row", "cell",
-                    (F.coalesce("cnt", F.lit(0))
-                     + F.coalesce("_c", F.lit(0))).alias("cnt"))
-            )
-        else:
-            merged = delta
-        write_snapshot(
-            spark, merged.withColumn("_last_batch_id", F.lit(batch_id)),
-            state_dir,
-            extras={FOLD_MANIFEST: manifest} if manifest else None)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_add_stream(
+        events, state_dir, checkpoint_dir,
+        lambda batch: cms_partial(batch, key_col), ["row", "cell"], ["cnt"])
 
 
 def stateful_best_scores_tws(events: DataFrame) -> DataFrame:

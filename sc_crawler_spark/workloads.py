@@ -14,28 +14,27 @@ workload_profile_scores.py:37-442:
    the sorted-JSON config against the entry's config_filter** (float
    tolerance 1e-6, `_config_matches`, workload_profile_scores.py:79-99)
    — a broadcast join, the fact table never shuffles for matching;
-3. best score per (server, entry) with orientation flip (A1,
-   :136-213), exact fleet median per entry (A2, :214-224), log2
-   median-ratio normalization (:226-232);
-4. per (server, workload): REQUIRE suppresses, PENALIZE substitutes
-   ``log2(penalty)``, IGNORE renormalizes; composite =
-   ``2^(Σ w·log2 ratio / Σ w)`` at 3 significant figures (:240-400).
+3. the one scorer (operators/scores.py) does the rest: best score per
+   (server, entry) with orientation flip (A1, :136-213), exact fleet
+   median per entry (A2, :214-224), log2 median-ratio normalization
+   (:226-232), and per (server, workload) the REQUIRE/PENALIZE/IGNORE
+   policies and the composite ``2^(Σ w·log2 ratio / Σ w)`` at 3
+   significant figures (:240-400). The three public functions here are
+   projections over it.
 
 Scale: entries/variants are literal broadcast dims (LocalRelation — no
-Python-RDD round trip); the only shuffles are the best-per-entry
-aggregate and the per-(server,workload) composite — both partial-agg
-friendly. The (servers × entries) frame is a broadcast nested loop over
-a ~35-row dim, linear in servers.
+Python-RDD round trip); the only fact-side shuffle is the scorer's
+per-server best aggregate, partial-agg friendly.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.scalars import round_sig_figs, round_sig_figs_pure
+from .operators.scores import breakdown, composite, entry_scores
 from .tables import load
 
 PENALTY_DEFAULT = 1e-4  # workload_profiles.py:25
@@ -340,14 +339,17 @@ def entries_df(spark: SparkSession) -> DataFrame:
     )
 
 
+def _variants_df(spark: SparkSession) -> DataFrame:
+    return spark.sql(
+        f"SELECT * FROM VALUES {_variants_values()} "
+        "AS t(variant_id, benchmark_id, config)"
+    )
+
+
 def benchmark_scores(spark: SparkSession, sf: str) -> DataFrame:
     """The benchmark_score-shaped fixture: deterministic projection of
     ``events`` joined to the broadcast variant dim. Mirrored 1:1 in the
     DuckDB oracle so the whole path is checkable end-to-end."""
-    variants = spark.sql(
-        f"SELECT * FROM VALUES {_variants_values()} "
-        "AS t(variant_id, benchmark_id, config)"
-    )
     ev = load(spark, sf, "events")
     return (
         ev.select(
@@ -358,117 +360,61 @@ def benchmark_scores(spark: SparkSession, sf: str) -> DataFrame:
             .alias("server_id"),
             F.col("value").alias("score"),
         )
-        .join(F.broadcast(variants), "variant_id")
+        .join(F.broadcast(_variants_df(spark)), "variant_id")
     )
 
 
-# Cached `best` frames handed out by _scored_frame, released via
-# release_scored_caches() (long-lived sessions would otherwise hold
-# executor storage until sparkContext teardown / clearCache).
-_CACHED_FRAMES: list[DataFrame] = []
+SUBJECT = ["vendor_id", "server_id"]
 
 
-def release_scored_caches() -> None:
-    """Unpersist every `best` frame cached by :func:`_scored_frame`."""
-    while _CACHED_FRAMES:
-        _CACHED_FRAMES.pop().unpersist()
-
-
-def _scored_frame(spark: SparkSession, sf: str | None,
-                  scores: DataFrame | None = None) -> DataFrame:
-    """(servers × entries) left-joined with best scores and fleet
-    medians; ``norm`` is the log2 median-ratio or NULL when missing or
-    invalid (raw/median <= 0).
-
-    ``scores`` overrides the events-derived fixture with any
-    benchmark_score-shaped frame (vendor_id, server_id, benchmark_id,
-    config, score) — the path `cmd_score` uses against a real lake."""
-    if scores is None:
-        scores = benchmark_scores(spark, sf)
-    entries = entries_df(spark).withColumnRenamed("benchmark_id", "bid_e")
-    matched = scores.join(
+def _entry_scores(spark: SparkSession, scores: DataFrame,
+                  pairs: DataFrame | None = None) -> DataFrame:
+    """The one scorer over a benchmark_score-shaped frame (vendor_id,
+    server_id, benchmark_id, config, score). The P6 config match is a
+    function of (benchmark_id, config) alone, so it runs once per
+    distinct pair — ``pairs``, by default the frame's own distinct
+    pairs (a benchmark's parameterizations: a dim-sized set) — against
+    the broadcast entry dim; the facts then broadcast-hash-join the
+    matched pairs and never shuffle for matching. Evaluated per fact
+    row instead, the JSON-parsing match costs several times the rest
+    of the query."""
+    if pairs is None:
+        pairs = scores.select("benchmark_id", "config").distinct()
+    entries = entries_df(spark).select(
+        F.col("benchmark_id").alias("bid_e"), "entry_idx", "flt")
+    hits = pairs.join(
         F.broadcast(entries),
         (F.col("benchmark_id") == F.col("bid_e")) & F.expr(_MATCH_SPARK),
-    ).select("vendor_id", "server_id", "entry_idx", "hib", "score")
-    # best feeds THREE consumers (frame join, medians, server list); the
-    # cache keeps the fact-table scan+match+aggregate to ONE pass — at
-    # 100 TB the uncached plan re-reads the whole benchmark_score table
-    # twice more for two tiny derived dims. Spark's CacheManager dedups
-    # identical plans, so repeated calls at the same sf reuse one entry;
-    # distinct sf dirs accumulate until release_scored_caches().
-    best = matched.groupBy("vendor_id", "server_id", "entry_idx").agg(
-        F.when(F.first("hib"), F.max("score"))
-        .otherwise(F.min("score")).alias("best_score")
-    ).cache()
-    _CACHED_FRAMES.append(best)
-    medians = best.groupBy("entry_idx").agg(
-        F.percentile(F.col("best_score"), F.lit(0.5)).alias("median_score")
-    )
-    # One row per server holding its entry->best map (≤35 entries), then
-    # a broadcast nested loop over the 35-row entry dim + map lookup.
-    # This avoids a sort-merge join of two server×entry-sized sides: the
-    # only wide-side shuffle is the (vendor, server) aggregate.
-    best_maps = best.groupBy("vendor_id", "server_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("entry_idx", "best_score"))).alias("_m")
-    )
-    frame = (
-        best_maps.crossJoin(F.broadcast(entries_df(spark)))
-        .withColumn("best_score", F.element_at("_m", F.col("entry_idx")))
-        .drop("_m")
-        .join(F.broadcast(medians), "entry_idx", "left")
-    )
-    ratio = F.when(F.col("hib"),
-                   F.col("best_score") / F.col("median_score")) \
-             .otherwise(F.col("median_score") / F.col("best_score"))
-    return frame.withColumn(
-        "norm",
-        F.when((F.col("best_score") > 0) & (F.col("median_score") > 0),
-               F.log2(ratio)),
-    )
+    ).select(F.col("benchmark_id").alias("_bid"),
+             F.col("config").alias("_cfg"), "entry_idx")
+    matched = scores.join(
+        F.broadcast(hits),
+        (F.col("benchmark_id") == F.col("_bid"))
+        & F.col("config").eqNullSafe(F.col("_cfg")),
+    ).select(*SUBJECT, "entry_idx", "score")
+    return entry_scores(matched, SUBJECT, ENTRIES)
+
+
+def _fixture_scores(spark: SparkSession, sf: str) -> DataFrame:
+    """The scorer over the events fixture: its pairs are the variant
+    dim, so the match never touches the fact table."""
+    return _entry_scores(spark, benchmark_scores(spark, sf),
+                         _variants_df(spark))
+
+
+def _benchmark_id() -> Column:
+    return F.concat(F.lit("workload_profile:"), F.col("workload_key")) \
+        .alias("benchmark_id")
 
 
 def workload_profiles_catalog(spark: SparkSession, sf: str) -> DataFrame:
     """Composite workload-profile rows (BenchmarkScore-shaped): one row
     per (vendor, server, workload) with coverage and 3-sig-fig score."""
-    normed = _scored_frame(spark, sf)
-    wlog = F.when(
-        F.col("norm").isNotNull(),
-        F.col("norm") * F.col("weight").cast("double"),
-    ).when(
-        F.col("on_missing") == "penalize",
-        F.log2(F.col("penalty")) * F.col("weight").cast("double"),
-    ).otherwise(F.lit(0.0))
-    w = F.when(
-        F.col("norm").isNotNull() | (F.col("on_missing") == "penalize"),
-        F.col("weight"),
-    ).otherwise(F.lit(0).cast("decimal(10,4)"))
-    agg = (
-        normed.withColumn("_wlog", wlog.cast("decimal(28,12)"))
-        .withColumn("_w", w)
-        .groupBy("vendor_id", "server_id", "workload_key")
-        .agg(
-            F.sum("_wlog").alias("sum_wlog"),
-            F.sum("_w").alias("total_w"),
-            F.max((F.col("on_missing") == "require")
-                  & F.col("norm").isNull()).alias("suppressed"),
-            F.sum(F.col("norm").isNotNull().cast("long")).alias("n_scored"),
-        )
-    )
-    return (
-        agg.filter(~F.col("suppressed") & (F.col("total_w") > 0))
-        .select(
-            "vendor_id", "server_id",
-            F.concat(F.lit("workload_profile:"), F.col("workload_key"))
-            .alias("benchmark_id"),
-            round_sig_figs_pure(
-                F.pow(F.lit(2.0),
-                      F.col("sum_wlog").cast("double")
-                      / F.col("total_w").cast("double")), 3
-            ).alias("score"),
-            F.col("total_w").cast("double").alias("coverage"),
-            F.col("n_scored").cast("long").alias("n_scored"),
-        )
+    comp = composite(_fixture_scores(spark, sf), SUBJECT)
+    return comp.select(
+        *SUBJECT, _benchmark_id(), "score",
+        F.col("total_w").cast("double").alias("coverage"),
+        F.col("n_scored").cast("long").alias("n_scored"),
     )
 
 
@@ -477,47 +423,12 @@ def workload_catalog_breakdown(spark: SparkSession, sf: str) -> DataFrame:
     penalized component; workload_profile_scores.py:283-366): weight_share
     and normalized at 3 sig figs, raw/reference at measurement rounding,
     impact = (normalized^weight_share - 1)·100."""
-    from pyspark.sql import Window
-
-    normed = _scored_frame(spark, sf)
-    w = F.when(
-        F.col("norm").isNotNull() | (F.col("on_missing") == "penalize"),
-        F.col("weight"),
-    ).otherwise(F.lit(0).cast("decimal(10,4)"))
-    grp = Window.partitionBy("vendor_id", "server_id", "workload_key")
-    df = (
-        normed.withColumn("_w", w)
-        .withColumn("total_w", F.sum("_w").over(grp))
-        .withColumn(
-            "suppressed",
-            F.max((F.col("on_missing") == "require")
-                  & F.col("norm").isNull()).over(grp),
-        )
-        .filter(
-            ~F.col("suppressed") & (F.col("total_w") > 0)
-            & (F.col("norm").isNotNull()
-               | (F.col("on_missing") == "penalize"))
-        )
-    )
-    norm2 = F.when(F.col("norm").isNotNull(),
-                   F.pow(F.lit(2.0), F.col("norm"))) \
-             .otherwise(F.col("penalty"))
-    df = df.withColumn("norm3", round_sig_figs_pure(norm2, 3)).withColumn(
-        "share3",
-        round_sig_figs_pure(
-            F.col("weight").cast("double")
-            / F.col("total_w").cast("double"), 3),
-    )
-    return df.select(
-        "vendor_id", "server_id", "workload_key", "label",
+    bd = breakdown(_fixture_scores(spark, sf), SUBJECT) \
+        .filter(F.col("counted"))
+    return bd.select(
+        *SUBJECT, "workload_key", "label",
         F.col("weight").cast("double").alias("weight"),
-        F.col("share3").alias("weight_share"),
-        round_sig_figs(F.col("best_score"), 4).alias("raw"),
-        round_sig_figs(F.col("median_score"), 4).alias("reference"),
-        F.col("norm3").alias("normalized"),
-        round_sig_figs_pure(
-            (F.pow(F.col("norm3"), F.col("share3")) - 1) * 100, 3
-        ).alias("impact"),
+        "weight_share", "raw", "reference", "normalized", "impact",
         F.when(F.col("norm").isNull(),
                F.lit("penalized: no usable measurement")).alias("note"),
     )
@@ -532,45 +443,11 @@ def workload_score_rows(spark: SparkSession,
     a partial-coverage note listing the ignored-missing labels, and the
     full ``score_breakdown`` JSON with scored AND penalized AND ignored
     components in entry order."""
-    normed = _scored_frame(spark, None, scores=scores)
-    grp = Window.partitionBy("vendor_id", "server_id", "workload_key")
-    scored_or_pen = F.col("norm").isNotNull() | (
-        F.col("on_missing") == "penalize")
-    w = F.when(scored_or_pen, F.col("weight")) \
-         .otherwise(F.lit(0).cast("decimal(10,4)"))
-    wlog = F.when(F.col("norm").isNotNull(),
-                  F.col("norm") * F.col("weight").cast("double")) \
-            .when(F.col("on_missing") == "penalize",
-                  F.log2(F.col("penalty"))
-                  * F.col("weight").cast("double")) \
-            .otherwise(F.lit(0.0))
-    df = (
-        normed.withColumn("_w", w)
-        .withColumn("_wlog", wlog.cast("decimal(28,12)"))
-        .withColumn("total_w", F.sum("_w").over(grp))
-        .withColumn(
-            "suppressed",
-            F.max((F.col("on_missing") == "require")
-                  & F.col("norm").isNull()).over(grp),
-        )
-        .filter(~F.col("suppressed") & (F.col("total_w") > 0))
-    )
-    norm2 = F.when(F.col("norm").isNotNull(),
-                   F.pow(F.lit(2.0), F.col("norm"))) \
-             .when(F.col("on_missing") == "penalize", F.col("penalty"))
-    norm3 = round_sig_figs_pure(norm2, 3)
-    share3 = F.when(
-        scored_or_pen,
-        round_sig_figs_pure(F.col("weight").cast("double")
-                            / F.col("total_w").cast("double"), 3),
-    ).otherwise(F.lit(0.0))  # ignored components publish 0.0 (:347)
+    bd = breakdown(_entry_scores(spark, scores), SUBJECT)
     component = F.struct(
-        F.col("label").alias("label"),
+        "label",
         F.col("weight").cast("double").alias("weight"),
-        share3.alias("weight_share"),
-        round_sig_figs(F.col("best_score"), 4).alias("raw"),
-        round_sig_figs(F.col("median_score"), 4).alias("reference"),
-        norm3.alias("normalized"),
+        "weight_share", "raw", "reference", "normalized",
         F.col("hib").alias("higher_is_better"),
         # note precedence mirrors the reference branch order
         # (workload_profile_scores.py:322-352): a PENALIZE component
@@ -587,21 +464,17 @@ def workload_score_rows(spark: SparkSession,
               F.concat(F.lit("invalid value: "),
                        F.col("best_score").cast("string")))
         .alias("note"),
-        F.when(scored_or_pen,
-               round_sig_figs_pure(
-                   (F.pow(norm3, share3) - 1) * 100, 3)).alias("impact"),
+        "impact",
     )
-    # missing labels keep ENTRY order (reference appends them as it
-    # walks the component list — _compute_workload_score_rows), so sort
-    # (entry_idx, label) structs and strip the index, same trick as
-    # _comps above; a bare array_sort(label) would publish them
-    # alphabetically.
+    # components and missing labels keep ENTRY order (reference appends
+    # them as it walks the component list — _compute_workload_score_rows),
+    # so sort (entry_idx, value) structs and strip the index; a bare
+    # array_sort(label) would publish them alphabetically.
     missing = F.when(F.col("norm").isNull() & (F.col("on_missing") == "ignore"),
                      F.struct(F.col("entry_idx").alias("i"),
                               F.col("label").alias("l")))
-    agg = df.groupBy("vendor_id", "server_id", "workload_key").agg(
-        F.first("total_w").alias("total_w"),
-        F.sum("_wlog").alias("sum_wlog"),
+    agg = composite(
+        bd, SUBJECT,
         F.array_sort(
             F.collect_list(F.struct(F.col("entry_idx").alias("i"),
                                     component.alias("c")))
@@ -612,28 +485,24 @@ def workload_score_rows(spark: SparkSession,
     version_map = F.create_map(
         *[F.lit(x) for kv in WORKLOADS.items()
           for x in (kv[0], kv[1]["version"])])
-    breakdown = F.to_json(F.struct(
+    score_breakdown = F.to_json(F.struct(
         F.lit("weighted_geometric_mean").alias("aggregation"),
         F.lit("median_ratio").alias("normalization"),
         F.col("total_w").cast("double").alias("coverage"),
         F.transform("_comps", lambda s: s["c"]).alias("components"),
     ))
     return agg.select(
-        "vendor_id", "server_id",
-        F.concat(F.lit("workload_profile:"), F.col("workload_key"))
-        .alias("benchmark_id"),
+        *SUBJECT, _benchmark_id(),
         F.lit("{}").alias("config"),
         version_map[F.col("workload_key")].alias("framework_version"),
-        round_sig_figs_pure(
-            F.pow(F.lit(2.0), F.col("sum_wlog").cast("double")
-                  / F.col("total_w").cast("double")), 3).alias("score"),
+        "score",
         F.when(
             F.size("_missing") > 0,
             F.concat(F.lit("Partial coverage: missing component "
                            "benchmark(s): "),
                      F.array_join("_missing", ", "), F.lit(".")),
         ).alias("note"),
-        breakdown.alias("score_breakdown"),
+        score_breakdown.alias("score_breakdown"),
     )
 
 

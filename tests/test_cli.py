@@ -1134,6 +1134,23 @@ def test_copy_moves_committed_files_without_spark_jobs(spark, tmp_path,
     assert snapshot.read_extra(dst, SCHEMA) == snapshot.read_extra(src, SCHEMA)
 
 
+def test_versions_counts_rows_from_footers_without_spark_jobs(
+        spark, tmp_path, capsys):
+    """`versions` sums each retained version's parquet footers: the
+    same lines as a read-back count, and no Spark job."""
+    lake = str(tmp_path / "lake")
+    root = os.path.join(lake, "t")
+    write_snapshot(spark, spark.range(0, 5).toDF("k"), root)
+    write_snapshot(spark, spark.range(0, 9).toDF("k").repartition(3), root)
+    capsys.readouterr()
+
+    _, jobs = _jobs_during(spark, lambda: cli.cmd_versions(spark, lake))
+    assert jobs == []
+    assert capsys.readouterr().out.strip().splitlines() == [
+        "versions: t: v-00000001 rows=5",
+        "versions: t: v-00000002 rows=9 *"]
+
+
 def test_sync_releases_exactly_its_own_cache(spark, tmp_path):
     """cmd_sync unpersists the diff it cached, and only that: a frame
     the caller cached stays cached (a session-wide clearCache would

@@ -7,6 +7,7 @@ Reference analogs cited per test (tests/* in /root/reference)."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -15,11 +16,12 @@ from pyspark.sql import functions as F
 from sc_crawler_spark import schemas
 from sc_crawler_spark.functions.hashing import jsoned_hash, row_hash
 from sc_crawler_spark.operators.scores import (
-    best_per_entry, composite_scores, fleet_median,
+    breakdown, composite, entry_scores,
 )
 from sc_crawler_spark.operators.sync import hash_diff
 from sc_crawler_spark.operators.upsert import merge_upsert, scd2_append
 from sc_crawler_spark.operators.windows import keep_last_dedup, latest_snapshot
+from sc_crawler_spark.sinks.snapshot import write_snapshot
 from sc_crawler_spark.sources import aws, azure, gcp
 
 
@@ -391,89 +393,88 @@ def test_scd2_as_of_time_travel(spark):
 
 
 def _score_fixture(spark, per_server: dict[str, dict[str, float]],
-                   hib: dict[str, bool] | None = None):
-    rows = [
-        (srv, entry, score)
-        for srv, entries in per_server.items()
-        for entry, score in entries.items()
-    ]
-    scores = spark.createDataFrame(rows, ["server_id", "entry", "score"])
-    entries = sorted({e for v in per_server.values() for e in v})
+                   hib: dict[str, bool] | None = None,
+                   on_missing: str = "ignore"):
+    """One-workload catalog (weight 1.0 per entry, ``on_missing`` on
+    every entry) and the scorer's (server, entry) rows over it."""
+    from sc_crawler_spark.workloads import PENALTY_DEFAULT
+
+    names = sorted({e for v in per_server.values() for e in v})
     hib = hib or {}
-    weights = spark.createDataFrame(
-        [(e, 1.0, hib.get(e, True)) for e in entries],
-        ["entry", "weight", "higher_is_better"],
-    )
-    scored = scores.join(F.broadcast(weights), "entry")
-    best = best_per_entry(scored, ["server_id"], "entry",
-                          higher_is_better_col="higher_is_better")
-    medians = fleet_median(best, "entry")
-    return best, medians, weights, len(entries)
+    entries = [
+        {"entry_idx": i, "workload_key": "w", "weight": "1.0", "label": e,
+         "on_missing": on_missing,
+         "penalty": PENALTY_DEFAULT if on_missing == "penalize" else None,
+         "hib": hib.get(e, True)}
+        for i, e in enumerate(names)
+    ]
+    matched = spark.createDataFrame(
+        [(srv, names.index(entry), score)
+         for srv, got in per_server.items()
+         for entry, score in got.items()],
+        "server_id string, entry_idx int, score double")
+    return entry_scores(matched, ["server_id"], entries)
+
+
+def _composite(scored):
+    return {r.server_id: r for r in composite(scored, ["server_id"]).collect()}
 
 
 def test_score_one_at_fleet_median(spark):
     # test_workload_profile_scores.py:94 — server at median on every
     # component scores exactly 1.0
-    best, med, w, n = _score_fixture(spark, {
+    out = _composite(_score_fixture(spark, {
         "s1": {"e1": 10.0, "e2": 100.0},
         "s2": {"e1": 20.0, "e2": 200.0},
         "s3": {"e1": 30.0, "e2": 300.0},
-    })
-    out = {r.server_id: r.score for r in composite_scores(
-        best, med, w, ["server_id"], "entry").collect()}
-    assert out["s2"] == pytest.approx(1.0)
+    }))
+    assert out["s2"].geomean == pytest.approx(1.0)
 
 
 def test_score_two_at_double_median(spark):
     # :118 — 2x median on every component -> 2.0
-    best, med, w, n = _score_fixture(spark, {
+    out = _composite(_score_fixture(spark, {
         "s1": {"e1": 10.0}, "s2": {"e1": 20.0}, "s3": {"e1": 40.0},
-    })
-    out = {r.server_id: r.score for r in composite_scores(
-        best, med, w, ["server_id"], "entry").collect()}
-    assert out["s3"] == pytest.approx(2.0)
+    }))
+    assert out["s3"].geomean == pytest.approx(2.0)
 
 
 def test_lower_is_better_flip(spark):
     # :175 — latency-style entry: half the median latency doubles the score
-    best, med, w, n = _score_fixture(
+    out = _composite(_score_fixture(
         spark,
         {"s1": {"lat": 5.0}, "s2": {"lat": 10.0}, "s3": {"lat": 20.0}},
         hib={"lat": False},
-    )
-    out = {r.server_id: r.score for r in composite_scores(
-        best, med, w, ["server_id"], "entry").collect()}
-    assert out["s1"] == pytest.approx(2.0)
-    assert out["s3"] == pytest.approx(0.5)
+    ))
+    assert out["s1"].geomean == pytest.approx(2.0)
+    assert out["s3"].geomean == pytest.approx(0.5)
 
 
 def test_missing_require_suppresses(spark):
     # :370 — REQUIRE: server missing a component is dropped
-    best, med, w, n = _score_fixture(spark, {
+    out = _composite(_score_fixture(spark, {
         "s1": {"e1": 10.0, "e2": 1.0},
         "s2": {"e1": 20.0},
         "s3": {"e1": 30.0, "e2": 3.0},
-    })
-    out = composite_scores(best, med, w, ["server_id"], "entry",
-                           n_components=n, on_missing="require")
-    assert {r.server_id for r in out.collect()} == {"s1", "s3"}
+    }, on_missing="require"))
+    assert set(out) == {"s1", "s3"}
 
 
 def test_missing_penalize(spark):
     # :283 — PENALIZE: missing component contributes penalty normalized
-    best, med, w, n = _score_fixture(spark, {
+    out = _composite(_score_fixture(spark, {
         "s1": {"e1": 10.0, "e2": 1.0},
         "s2": {"e1": 10.0},
         "s3": {"e1": 10.0, "e2": 1.0},
-    })
-    out = {r.server_id: r for r in composite_scores(
-        best, med, w, ["server_id"], "entry",
-        n_components=n, on_missing="penalize").collect()}
+    }, on_missing="penalize"))
     # s2 at median on e1, penalized 1e-4 on e2:
     # 2^((0 + log2(1e-4))/2) = 1e-2
-    assert out["s2"].score == pytest.approx(1e-2, rel=1e-6)
-    assert out["s2"].coverage == pytest.approx(0.5)
-    assert out["s1"].score == pytest.approx(1.0)
+    assert out["s2"].geomean == pytest.approx(1e-2, rel=1e-6)
+    # coverage is the scored + penalized weight (the catalog's
+    # published value): both unit-weight components count
+    assert float(out["s2"].total_w) == pytest.approx(2.0)
+    assert out["s2"].n_scored == 1
+    assert out["s1"].geomean == pytest.approx(1.0)
 
 
 def test_reconstruction_property(spark):
@@ -481,43 +482,40 @@ def test_reconstruction_property(spark):
     # 2^(sum w*log2(normalized) / sum w) rebuilt from its own parts
     import math
 
-    best, med, w, n = _score_fixture(spark, {
+    scored = _score_fixture(spark, {
         "s1": {"e1": 12.0, "e2": 180.0},
         "s2": {"e1": 25.0, "e2": 90.0},
         "s3": {"e1": 31.0, "e2": 310.0},
     })
-    parts = best.join(med, "entry").join(w, "entry").collect()
     manual: dict[str, float] = {}
     weights_sum: dict[str, float] = {}
-    for r in parts:
+    for r in scored.collect():
         norm = r.best_score / r.median_score
         manual[r.server_id] = manual.get(r.server_id, 0.0) + 1.0 * math.log2(norm)
         weights_sum[r.server_id] = weights_sum.get(r.server_id, 0.0) + 1.0
     expect = {s: 2 ** (v / weights_sum[s]) for s, v in manual.items()}
-    out = {r.server_id: r.score for r in composite_scores(
-        best, med, w, ["server_id"], "entry").collect()}
+    out = _composite(scored)
     for s, v in expect.items():
-        assert out[s] == pytest.approx(v, rel=1e-9)
+        assert out[s].geomean == pytest.approx(v, rel=1e-9)
 
 
 def test_breakdown_reconstruction_and_impact(spark):
     """The published breakdown rebuilds its own composite
     (test_workload_profile_scores.py:27-41) and the impact formula is
     (normalized^weight_share - 1)*100 at 3 sig figs (:60-76)."""
-    import math
-
-    best, med, w, n = _score_fixture(spark, {
+    scored = _score_fixture(spark, {
         "s1": {"e1": 12.0, "e2": 180.0},
         "s2": {"e1": 25.0, "e2": 90.0},
     })
-    from sc_crawler_spark.operators.scores import composite_breakdown
-
-    out = {r.server_id: r for r in composite_breakdown(
-        best, med, w, ["server_id"], "entry").collect()}
-    for s, row in out.items():
+    score = {s: r.score for s, r in _composite(scored).items()}
+    rows: dict[str, list] = {}
+    for r in breakdown(scored, ["server_id"]).orderBy("entry_idx").collect():
+        rows.setdefault(r.server_id, []).append(r)
+    assert set(rows) == set(score)
+    for s, components in rows.items():
         # reconstruct: product of normalized^weight_share ~= score
         rebuilt = 1.0
-        for c in row.components:
+        for c in components:
             rebuilt *= c.normalized ** c.weight_share
             # impact consistency with its own published parts
             expect_impact = (c.normalized ** c.weight_share - 1) * 100
@@ -525,11 +523,41 @@ def test_breakdown_reconstruction_and_impact(spark):
             # unit in the 3rd significant digit
             assert c.impact == pytest.approx(expect_impact, rel=5e-3)
             assert c.weight_share == 0.5
-        assert row.score == pytest.approx(rebuilt, rel=1e-2)
-        # deterministic ordering by label
-        assert [c.label for c in row.components] == ["e1", "e2"]
+        assert score[s] == pytest.approx(rebuilt, rel=1e-2)
+        # deterministic component order: the catalog's entry order
+        assert [c.label for c in components] == ["e1", "e2"]
     # measurement rounding: >=1000 stays integral
-    big, _, _, _ = _score_fixture(spark, {"s1": {"e1": 251435.6, "e2": 1.0}})
-    r = composite_breakdown(big, med, w, ["server_id"], "entry").collect()
-    raws = {c.label: c.raw for row in r for c in row.components}
+    big = _score_fixture(spark, {"s1": {"e1": 251435.6, "e2": 1.0}})
+    raws = {c.label: c.raw
+            for c in breakdown(big, ["server_id"]).collect()}
     assert raws["e1"] == 251436.0
+
+
+def test_scoring_holds_no_session_cache(spark, tmp_path):
+    """No composite query and no `score` run leaves a persisted frame
+    in the session."""
+    from sc_crawler_spark import cli
+    from sc_crawler_spark.queries import REGISTRY
+
+    from .conftest import SF_SMOKE
+
+    def persisted():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persisted()
+    for name in ("workload_scores", "workload_breakdown",
+                 "workload_profiles_catalog", "workload_catalog_breakdown"):
+        assert REGISTRY[name][0](spark, SF_SMOKE).collect(), name
+        assert persisted() == before, name
+
+    lake = str(tmp_path / "lake")
+    now = datetime.datetime(2024, 1, 1)
+    scores = spark.createDataFrame(
+        [("aws", s, "stress_ng:best1", "{}", None, None, v, None, None,
+          "active", now)
+         for s, v in (("a", 100.0), ("b", 200.0), ("c", 300.0))],
+        schemas.BENCHMARK_SCORE)
+    write_snapshot(spark, scores, os.path.join(lake, "benchmark_score"))
+    before = persisted()
+    cli.cmd_score(spark, lake)
+    assert persisted() == before

@@ -619,7 +619,7 @@ def test_membench_scores_through_fleet_pipeline(spark, tmp_path):
     marks membench:latency lower-is-better), bandwidth picks MAX."""
     from pyspark.sql import functions as F
 
-    from sc_crawler_spark.operators.scores import best_per_entry
+    from sc_crawler_spark.operators.scores import entry_scores
     from sc_crawler_spark.sources import lookup
 
     d = tmp_path / "aws" / "m1.small"
@@ -630,13 +630,18 @@ def test_membench_scores_through_fleet_pipeline(spark, tmp_path):
         "read,64,0,50000\nread,1024,0,12000\n")
     mem = insp.read_membench_csv(spark, str(d / "membench.csv"))
     rows = insp.membench_benchmarks(mem)
-    scored = rows.join(
-        F.broadcast(lookup.benchmarks(spark).select(
-            "benchmark_id", "higher_is_better")), "benchmark_id")
-    best = best_per_entry(
-        scored, ["server_id"], "benchmark_id",
-        score_col="score", higher_is_better_col="higher_is_better")
-    got = {r["benchmark_id"]: r["best_score"] for r in best.collect()}
+    hib = {r["benchmark_id"]: r["higher_is_better"]
+           for r in lookup.benchmarks(spark).collect()}
+    bids = sorted(r["benchmark_id"]
+                  for r in rows.select("benchmark_id").distinct().collect())
+    entries = [{"entry_idx": i, "workload_key": "membench", "weight": "1",
+                "label": b, "on_missing": "ignore", "penalty": None,
+                "hib": hib[b]} for i, b in enumerate(bids)]
+    idx = spark.createDataFrame(list(enumerate(bids)),
+                                "entry_idx int, benchmark_id string")
+    matched = rows.join(F.broadcast(idx), "benchmark_id")
+    got = {r["label"]: r["best_score"] for r in entry_scores(
+        matched, ["server_id"], entries).collect()}
     assert got["membench:latency"] == 1.2          # min (lower is better)
     assert got["membench:bandwidth_read"] == 50000.0  # max
 

@@ -330,6 +330,23 @@ def _final_plan(spark, name):
     return plan.split("== Initial Plan ==")[0]
 
 
+def test_workload_scores_one_scan_no_cache(spark):
+    """The one scorer keeps workload_scores' plan: events scanned once,
+    no cached relation, and at most the parent's three exchanges — the
+    per-user hash shuffle (its second consumer, the medians, reads it
+    as a ReusedExchange), the single-row median aggregate and its
+    broadcast. The per-(user, workload) composite rides the user hash
+    partitioning with no further exchange."""
+    plan = _final_plan(spark, "workload_scores")
+    assert len(re.findall(r"FileScan parquet", plan)) == 1
+    assert "InMemoryRelation" not in plan
+    # node headers only: a ReusedExchange line names the exchange it reuses
+    shuffles = re.findall(r"[+:]- Exchange (\w+)", plan)
+    assert sorted(shuffles) == ["SinglePartition", "hashpartitioning"]
+    assert len(re.findall(r"[+:]- BroadcastExchange", plan)) == 1
+    assert len(re.findall(r"[+:]- ReusedExchange", plan)) == 1
+
+
 def test_tfidf_vocab_dict_broadcast_under_limit(spark):
     """Under the vocabulary limit document frequency is a BROADCAST
     (term, df) dictionary: two broadcasts (the 1-row n_docs scalar +
