@@ -6,11 +6,13 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Protocol (documented so the numbers are interpretable):
 
-- **Prepared-plan timing.** Each query's DataFrame is built once
-  (Catalyst analysis + Python API round-trips — a one-time cost in any
-  long-lived service, analogous to a prepared statement), then executed
-  to completion 3x; the per-query second is the best execution. The
-  one-time build cost is NOT hidden: it is published as ``build_sec``.
+- **Execution timing, no cache carried.** Before each of 3 reps the
+  session cache is cleared and the query's DataFrame rebuilt; only the
+  execution is timed, and the per-query second is the best one. The
+  build cost (Catalyst analysis + Python API round-trips) is NOT
+  hidden: the first build is published as ``build_sec``. The scale
+  block and the fold-cycle legs clear the cache before every rep too,
+  so no published reading is a read of an earlier rep's cache.
 - **Warm pass** at sf0.001 first: whole-stage codegen + JIT compilation
   are one-time JVM costs, not engine throughput.
 - **Interleaved best-of-3 per engine** (r15): each graded query's
@@ -562,12 +564,18 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         for name in HEADLINE:
-            t0 = time.perf_counter()
-            df = REGISTRY[name][0](spark, sf_dir)
-            build_total += time.perf_counter() - t0
             best_s = best_d = float("inf")
             first: list = [None, None]
             for rep in range(3):
+                # every rep does the query's whole work: the cache is
+                # cleared and the frame rebuilt (a cache the build
+                # registers is only read by the count that follows it);
+                # build_total keeps counting the first build alone
+                spark.catalog.clearCache()
+                t0 = time.perf_counter()
+                df = REGISTRY[name][0](spark, sf_dir)
+                if rep == 0:
+                    build_total += time.perf_counter() - t0
                 t0 = time.perf_counter()
                 df.count()
                 el = time.perf_counter() - t0
@@ -806,16 +814,13 @@ def main() -> None:
                                n_cells=64, iters=2)),
                     n_cells=64, iters=2)
                 os.environ["SC_SPARK_ANN_INDEX_DIR"] = aidx
-            prerun = None
             if name == "doc_pagerank":
                 # graph/index tier: ensure the digest-keyed lake
                 # artifact exists (built ONCE per corpus digest —
-                # later rounds reuse it for free), point the digest
-                # gate at it, and clear the per-session pair memo
-                # before every timed run so each run re-reads the
-                # landed pairs (the multi-session cost, not the memo)
-                from sc_crawler_spark.queries.pipeline import (
-                    _PAIR_MEMO, _docs_with_clones)
+                # later rounds reuse it for free) and point the digest
+                # gate at it, so each timed run reads the landed pairs
+                from sc_crawler_spark.queries.pipeline import \
+                    _docs_with_clones
                 from sc_crawler_spark.sinks import artifacts, index_store
                 idx_dir = os.path.join(s16_dir, "dedup_index")
                 corpus = _docs_with_clones(spark, qdir)
@@ -826,7 +831,6 @@ def main() -> None:
                                corpus, idx_dir, "text", "doc_id")),
                     k=3, n_hashes=8, band_rows=2, threshold=0.5)
                 os.environ["SC_SPARK_INDEX_DIR"] = idx_dir
-                prerun = _PAIR_MEMO.clear
             if use_bucketed:
                 # subset-key co-partitioning: the join adds the
                 # same-nation equality on top of the bucket key;
@@ -838,19 +842,17 @@ def main() -> None:
                 cold = best = None
                 for attempt in (0, 1):
                     try:
-                        if prerun:
-                            prerun()
+                        # no rep reads an earlier rep's cache
+                        spark.catalog.clearCache()
                         t0 = time.perf_counter()
                         REGISTRY[name][0](spark, qdir, **kw).count()  # build INCLUDED
                         cold = time.perf_counter() - t0
                         best = cold
                         break
                     except Exception:
-                        # local mode runs task.maxFailures=1: one
-                        # transient task loss (co-tenant OOM during the
-                        # multi-GB minhash cache build) aborts the job.
-                        # Clear caches and retry once before giving up.
-                        spark.catalog.clearCache()
+                        # one transient task loss (a co-tenant memory
+                        # spike) can abort the job: retry once before
+                        # giving up
                         if attempt:
                             raise
                         scale.setdefault("spark_retried", []).append(name)
@@ -867,8 +869,7 @@ def main() -> None:
                 # element so the spread is driver-visible.
                 warm: list[float] = []
                 for _ in range(2):
-                    if prerun:
-                        prerun()
+                    spark.catalog.clearCache()
                     t0 = time.perf_counter()
                     REGISTRY[name][0](spark, qdir, **kw).count()
                     el = time.perf_counter() - t0
@@ -964,9 +965,9 @@ def main() -> None:
                     REGISTRY[name][0](spark, qdir).count()
                     plain = min(plain, time.perf_counter() - t0)
                 scale[f"{short}_plain_sec"] = round(plain, 3)
-            # the dedup/training queries cache multi-hundred-MB
-            # intermediates (shingles, signatures); left resident they
-            # steal executor memory from every later scale query
+            # the caches some dedup/training/graph queries keep
+            # (shingles, signatures, features) would otherwise stay
+            # resident and take executor memory from later entries
             spark.catalog.clearCache()
             try:
                 # per-oracle interrupt guards: minhash is a known hard
@@ -1072,6 +1073,7 @@ def main() -> None:
                 def _best2(leg: str, run_fn) -> None:
                     best = float("inf")
                     for rep in range(2):
+                        spark.catalog.clearCache()
                         t0 = time.perf_counter()
                         run_fn(rep)
                         el = time.perf_counter() - t0
@@ -1130,11 +1132,9 @@ def main() -> None:
                     _lr_trained
                 from sc_crawler_spark.streaming import \
                     stream_ingest_gate
-                feat, it = _lr_trained(spark, sf_dir)
-                row = it.first()
+                row = _lr_trained(spark, sf_dir)[1].first()
                 weights = {k: row[k]
                            for k in ("w_b", "w_l", "w_t", "w_p")}
-                feat.unpersist()
                 lr_buckets = [float(r.lr) for r in dsir_log_ratios(
                     _load(spark, sf_dir, "documents"))
                     .orderBy("bucket").collect()]
@@ -1188,7 +1188,7 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "build_sec": round(build_total, 3),
-        "protocol": "prepared-plan interleaved best-of-3 per engine, "
+        "protocol": "cache-cleared interleaved best-of-3 per engine, "
                     "sf0.1 block AQE-off/4-part (statically broadcast-"
                     "hinted at KB scale; build published separately; "
                     "single_run kept); scale block best-of-3 (cold + "

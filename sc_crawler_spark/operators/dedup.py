@@ -431,6 +431,10 @@ def _verified_shingle_pairs(df: DataFrame, text_col: str, id_col: str,
     and containment (same sparse-candidate verify shape as
     minhash_lsh_pairs)."""
     extra = [block_col] if block_col else []
+    # Kept cache: uncached, the two branches infer different filters
+    # (explode: a shingle; block join: a block; verify: an id), push
+    # them below any shared exchange and shingle twice; one stated-
+    # filter exchange measured slower than this cache (CHANGES.md).
     shing = doc_shingles(df, text_col, id_col, k, extra_cols=extra).cache()
     sh = shing.select(F.col(id_col), *extra,
                       F.explode("shingles").alias("shingle"))
@@ -802,11 +806,12 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(
             f"minhash_lsh_pairs: band_rows={band_rows} must divide "
             f"n_hashes={n_hashes}")
-    # Repartition before the per-doc compute: a single-file corpus would
-    # otherwise tokenize/hash on 1-2 tasks regardless of cores. Shingles
-    # feed both sides of the verify join AND the signature derivation;
-    # the signature table feeds both sides of the band join — cache both
-    # narrow intermediates.
+    # Shingles feed both sides of the verify join AND the signature
+    # derivation; the signature table feeds both sides of the band
+    # join. Kept caches: uncached, the signature branch's explode and
+    # the verify branch's join infer different filters and shingle
+    # twice, and one stated-filter shingle exchange plus a band
+    # exchange still measured slower than the caches (CHANGES.md).
     shingles = doc_shingles(df, text_col, id_col, k).cache()
     make_sig = (_fast_signatures_from_shingles if fast_signatures
                 else _signatures_from_shingles)
@@ -1062,6 +1067,8 @@ def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(
             f"simhash_pairs: max_hamming={max_hamming} needs "
             f"{n_chunks} bands but the signature has only {n_bits} bits")
+    # Kept cache: uncached, each side of the band self-join re-runs the
+    # per-doc sign aggregate (2.4x slower at sf0.1, CHANGES.md)
     sig = simhash_bits(df, text_col, id_col, n_bits, k).cache()
     # chunk i covers [bounds[i], bounds[i+1]) — sizes differ by at most
     # one bit when n_chunks doesn't divide n_bits

@@ -18,7 +18,8 @@ is the component minimum.
 
 Scale notes (the 100 TB story):
 - state per round is one (node, label) row per node — narrow, hashed on
-  node; the edge list is cached once, symmetrized.
+  node; the input edge list is cached for the duration of the call and
+  released when it returns or raises.
 - each round is a fixed number of shuffles (neighbor join, min groupBy,
   jump self-join); `localCheckpoint` truncates the lineage so the plan
   does not grow with the iteration count (the classic iterative-Spark
@@ -42,61 +43,65 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     Raises if `max_iter` rounds do not converge — with pointer jumping
     that needs a component of diameter > 2^max_iter.
     """
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = e0.filter(F.col("u") != F.col("v"))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).cache()
+    # one cache of the input edges: the node set and every round's
+    # symmetrized edges derive from it, so the (typically expensive)
+    # pair source is computed once; released however the loop ends
+    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).cache()
+    try:
+        e = e0.filter(F.col("u") != F.col("v"))
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    # node set from ALL endpoints (self-loops included) so a node that
-    # appears only as (x, x) still lands as the singleton (x, x) —
-    # dropping self-loops before collecting nodes would silently erase
-    # such a doc from the cluster listing
-    labels = (
-        e0.select("u").union(e0.select(F.col("v").alias("u")))
-        .distinct()
-        .select(F.col("u").alias("node"), F.col("u").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iter):
-        # Neighbor round: min label over the closed neighborhood. The
-        # union feeds ONE partial-aggregated groupBy — map-side combine
-        # collapses the per-neighbor rows before the shuffle.
-        nbr = sym.join(labels, sym["v"] == labels["node"]).select(
-            F.col("u").alias("node"), "label"
-        )
-        merged = labels.union(nbr).groupBy("node").agg(
-            F.min("label").alias("label")
-        )
-        # Pointer jump: node -> label -> label(label). Doubles the hop
-        # distance covered per round (union-find path halving, but as a
-        # pure self-join so it stays a declarative plan).
-        lab2 = merged.select(
-            F.col("node").alias("jnode"), F.col("label").alias("jlabel")
-        )
-        jumped = (
-            merged.join(lab2, merged["label"] == lab2["jnode"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("jlabel"), F.col("label"))
-                ).alias("label"),
-            )
+        # node set from ALL endpoints (self-loops included) so a node
+        # that appears only as (x, x) still lands as the singleton
+        # (x, x) — dropping self-loops before collecting nodes would
+        # silently erase such a doc from the cluster listing
+        labels = (
+            e0.select("u").union(e0.select(F.col("v").alias("u")))
+            .distinct()
+            .select(F.col("u").alias("node"), F.col("u").alias("label"))
             .localCheckpoint(eager=True)
         )
-        # Labels only ever decrease, so "no row changed" is the exact
-        # fixpoint test; both sides are already hashed on node.
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("p"), "node")
-            .filter(F.col("n.label") != F.col("p.label"))
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            sym.unpersist()
-            return labels.select("node", F.col("label").alias("component"))
 
-    sym.unpersist()
+        for _ in range(max_iter):
+            # Neighbor round: min label over the closed neighborhood.
+            # The union feeds ONE partial-aggregated groupBy — map-side
+            # combine collapses the per-neighbor rows before the shuffle.
+            nbr = sym.join(labels, sym["v"] == labels["node"]).select(
+                F.col("u").alias("node"), "label"
+            )
+            merged = labels.union(nbr).groupBy("node").agg(
+                F.min("label").alias("label")
+            )
+            # Pointer jump: node -> label -> label(label). Doubles the
+            # hop distance covered per round (union-find path halving,
+            # but as a pure self-join so it stays a declarative plan).
+            lab2 = merged.select(
+                F.col("node").alias("jnode"), F.col("label").alias("jlabel")
+            )
+            jumped = (
+                merged.join(lab2, merged["label"] == lab2["jnode"], "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("jlabel"), F.col("label"))
+                    ).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            # Labels only ever decrease, so "no row changed" is the
+            # exact fixpoint test; both sides are already hashed on node.
+            changed = (
+                jumped.alias("n")
+                .join(labels.alias("p"), "node")
+                .filter(F.col("n.label") != F.col("p.label"))
+                .count()
+            )
+            labels = jumped
+            if changed == 0:
+                return labels.select("node", F.col("label").alias("component"))
+    finally:
+        e0.unpersist()
     raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
 
 
@@ -129,12 +134,15 @@ def canonical_by_rank(pairs: DataFrame, src: str = "id_a",
     the version the most other documents agree with. Both selectors
     share the same component computation; only the argmax changes.
 
-    Ranks and components come from the SAME pair DataFrame — pass a
-    persisted/cached pair source (see queries/pipeline._lsh_pair_graph)
-    or the expensive candidate generation runs once per consumer.
+    Ranks and components come from the SAME pair DataFrame: it is
+    localCheckpointed once, so the expensive candidate generation
+    (queries/pipeline._lsh_pair_graph) runs once for both passes.
+    That runs at build time, as connected components' rounds do
+    anyway, and holds no CacheManager entry a later call could read.
     """
     from pyspark.sql import Window
 
+    pairs = pairs.localCheckpoint(eager=True)
     cc = connected_components(pairs, src, dst)
     pr = pagerank(pairs, src, dst, iters=iters, damping=damping)
     joined = cc.join(pr, "node")
@@ -183,11 +191,10 @@ def pagerank(pairs: DataFrame, src: str = "id_a", dst: str = "id_b",
         .distinct()
         # cache: the edge list is consumed 2x per iteration plus the
         # degree/init aggregates, and `pairs` is typically an EXPENSIVE
-        # upstream (the minhash-LSH candidate pipeline) — without this,
-        # every unrolled iteration recomputes the whole pair generation
-        # concurrently (measured: OOM at the 512x-documents corpus;
-        # cached, the pair gen runs once). Same convention as
-        # connected_components' symmetrized edge cache.
+        # upstream. The consumers could share the `distinct` exchange,
+        # but under AQE no exchange above a cached relation is reused,
+        # and the in-plan pair source sits on minhash_lsh_pairs'
+        # caches: uncached, doc_pagerank ran 2.3x slower (CHANGES.md).
         .cache()
     )
     deg = edges.groupBy("u").agg(F.count("*").alias("deg"))

@@ -448,9 +448,9 @@ def _signed_frame(df: DataFrame, src_id: str, src_vec: str, id_out: str,
                   vec_out: str, norm_out: str,
                   planes: list[list[int]]) -> DataFrame:
     """(id, double-vector, norm, lsh_sig) — the one projection every
-    LSH consumer (band explode + cosine verify) reads; callers cache
-    it so the parquet scan, the double cast, the norm fold, and the
-    n_planes sign fold run once per session, not once per run."""
+    LSH consumer (band explode + cosine verify) reads, so the parquet
+    scan, the double cast, the norm fold and the n_planes sign fold
+    run once per call."""
     sig = _sig_expr(planes)
     return (df.select(F.col(src_id).alias(id_out),
                       as_double(F.col(src_vec)).alias(vec_out))
@@ -484,13 +484,13 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, vec_col: str,
     verified and ranked by exact cosine.
 
     Shape (r16 rewrite — was broadcast-bands -> distinct -> re-join
-    both vector sources): each side is ONE cached (id, vector, norm,
-    signature) projection — scan, cast, norm and the n_planes sign
-    fold run once per session. The QUERY bands ride a broadcast
-    carrying (qv, qn) — the query batch is bounded at any corpus
-    scale — and the verify scores INSIDE the band-join stage, so a
-    corpus vector is read once in its scan (or cache-read) stage and
-    never crosses an exchange. Band-duplicate pairs are collapsed by
+    both vector sources): each side is ONE (id, vector, norm,
+    signature) projection with one consumer — scan, cast, norm and the
+    n_planes sign fold run once per call. The QUERY bands ride a
+    broadcast carrying (qv, qn) — the query batch is bounded at any
+    corpus scale — and the verify scores INSIDE the band-join stage,
+    so a corpus vector is read once in its scan stage and never
+    crosses an exchange. Band-duplicate pairs are collapsed by
     a narrow max-aggregate (duplicates carry the identical rounded
     score, so max == any; map-side combine eats most of them before
     the shuffle). Two narrow exchanges total — (query,neighbor)
@@ -504,9 +504,9 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, vec_col: str,
     planes = hyperplane_signs(n_planes, dim)
     chunk = n_planes // n_bands
     qsig = _signed_frame(queries, id_col, vec_col,
-                         "query_id", "qv", "qn", planes).cache()
+                         "query_id", "qv", "qn", planes)
     csig = _signed_frame(corpus, id_col, vec_col,
-                         "neighbor_id", "cv", "cn", planes).cache()
+                         "neighbor_id", "cv", "cn", planes)
     qb = _explode_bands(qsig, "query_id", chunk, n_bands,
                         keep=("qv", "qn"))
     cb = _explode_bands(csig, "neighbor_id", chunk, n_bands,
@@ -642,6 +642,10 @@ def cosine_topk_pq(queries: DataFrame, corpus: DataFrame, vec_col: str,
     ceiling on a large batch; unhinted they shuffle and AQE upgrades
     small sides at runtime. True for known-tiny interactive sets like
     the registry's 10-query driver entry."""
+    # Kept caches (codebooks, queries): uncached, each reference inlines
+    # the unrolled Lloyd training and the plan passes the trainer's
+    # node ceiling (245 > 220 here, 718 > 430 for ivf_pq; the plan
+    # guards in test_skew_and_plans), at no measured speed difference
     cents = pq_train_codebooks(corpus, vec_col, id_col, m, subdim,
                                k_cents).cache()
     c0 = corpus.select(F.col(id_col).alias("vid"),
@@ -760,6 +764,7 @@ def cosine_topk_ivf_pq(queries: DataFrame, corpus: DataFrame, vec_col: str,
         c0.select(F.col("vid").alias("neighbor_id"),
                   F.col("_v").alias("cv")), cents, "cv", "centv")
     cells = assigned.select("neighbor_id", "cell_id")
+    # codebooks and queries cached for plan size, see cosine_topk_pq
     if residual:
         # r = v - centroid(cell): same float op (a - b) as the oracle's
         # list_transform, so codebooks stay engine-exact

@@ -62,6 +62,20 @@ for mod in (tpch, lifecycle, pipeline, domain, extra, dims, curation):
 # rotate to the tail. After r8 greens, the oldest driver evidence is
 # the 29 r6 names past the cap -> they head the r9 window.
 _PRIORITY = [
+    # --- r20 head: the queries whose plans the cache cleanup changed
+    # (before/after dumps in plans/r20/), then dedup_incremental_batch
+    # and hash_diff_sync, whose code changed in r19 with no driver
+    # evidence since. ---
+    "doc_quality_lr_train",
+    "doc_quality_lr_apply",
+    "lr_calibration_bins",
+    "embed_ann_lsh",
+    "ann_recall_eval",
+    "dedup_cluster_resolve",
+    "dedup_canonical_by_rank",
+    "doc_pagerank",
+    "dedup_incremental_batch",
+    "hash_diff_sync",
     # --- r19 rotation. Evidence ledger entering r19 (CORRECTNESS_r16-
     # r18 plus the r14/r15 files): the 23 names at the head of the old
     # _TAIL were last green in r14 and the next 43 in r15; every name
@@ -92,9 +106,6 @@ _PRIORITY = [
     "embed_kmeans_clusters",
     "embed_ann_sq",
     "q10_returned_items",
-    "dedup_canonical_by_rank",
-    "dedup_cluster_resolve",
-    "doc_pagerank",
     "dedup_span_removal",
     "media_pcm_stats",
     "media_pixel_stats",
@@ -180,7 +191,6 @@ _TAIL = [
     "gopher_quality_rules",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
-    "embed_ann_lsh",
     "bm25_pruned_retrieval",
     "count_expansion",
     "weighted_geomean_price",
@@ -188,7 +198,6 @@ _TAIL = [
     "longtail_price_assembly",
     "dedup_substring_spans",
     "decontaminate_spans",
-    "dedup_incremental_batch",
     "embed_ann_ivf_pq",
     "gap_fill_interp_value",
     "embed_knn_classify",
@@ -219,20 +228,16 @@ _TAIL = [
     "doc_fingerprint",
     "media_jpeg_color_stats",
     "training_corpus_emit",
-    "doc_quality_lr_train",
-    "doc_quality_lr_apply",
     "bpe_train_merges",
     "bpe_tokenize_apply",
     "doc_lm2_perplexity",
     "doc_ngram_novelty",
     "source_embed_similarity",
     "bigram_pmi_top",
-    "lr_calibration_bins",
     "source_token_kl",
     "doc_oov_rate",
     "retrieval_eval",
     "mmr_select",
-    "ann_recall_eval",
     "corpus_diversity_stats",
     "dedup_pair_eval",
     "bm25_retrieval",
@@ -251,7 +256,6 @@ _TAIL = [
     "embed_ann_ivf",
     "embed_cosine_topk",
     "first_version_orders",
-    "hash_diff_sync",
     "heavy_hitter_users",
     "json_props_extract",
     "merge_upsert_lifecycle",

@@ -959,6 +959,9 @@ def dsir_select(spark: SparkSession, sf: str) -> DataFrame:
         F.concat(ts, big),
         lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10)
         .cast("long") % _DSIR_B)
+    # Kept persist: uncached, the scoring branch pushes its target
+    # filter below any shared exchange and the text is hashed twice; a
+    # doc_id exchange both branches reuse measured slower (CHANGES.md)
     feat = (toked.select("doc_id", "source", buckets.alias("bks"))
             .persist(StorageLevel.MEMORY_AND_DISK))
     inst = feat.select("doc_id", "source", F.explode("bks").alias("bucket"))
@@ -1337,7 +1340,9 @@ def emit_training_corpus(spark: SparkSession, sf: str, *,
     # whole langid+quality chain re-runs per consumer (plan showed 6
     # documents scans). At 100 TB this frame lands bronze once instead
     # (the filtered corpus IS a pipeline artifact); in-session,
-    # MEMORY_AND_DISK caps the recompute the same way.
+    # MEMORY_AND_DISK caps the recompute the same way. An explicit
+    # doc_id exchange cannot replace it: Spark drops it as redundant
+    # after the doc_id join, and the chain re-runs per consumer.
     from pyspark.storagelevel import StorageLevel
 
     base = (docs.join(lang_ids, "doc_id")

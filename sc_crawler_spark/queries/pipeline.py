@@ -14,8 +14,6 @@ dropped (doc_id+200000 for doc_id%10=5).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -234,14 +232,18 @@ def lr_features(docs: DataFrame, keep: str = "doc_id") -> DataFrame:
 
 def _lr_trained(spark: SparkSession, sf: str):
     """Shared training chain for doc_quality_lr_train (weights +
-    accuracy) and doc_quality_lr_apply (per-doc inference): the cached
+    accuracy) and doc_quality_lr_apply (per-doc inference): the
     feature frame (doc_id, x1, x2, x3, y) and the one-row frame of
     trained weights after 5 in-plan GD epochs (w_b, w_l, w_t, w_p,
-    n)."""
-    from pyspark.storagelevel import StorageLevel
+    n).
 
+    The features end in one explicit-count exchange that every epoch
+    and the scoring pass read: the plan computes them once and reuses
+    the exchange (ReusedExchange) instead of caching a frame a later
+    call could read."""
     docs = load(spark, sf, "documents")
-    feat = lr_features(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    feat = lr_features(docs).repartition(n_part, "doc_id")
 
     def step(z, carry):
         """One GD iteration: 4 DECIMAL gradient sums + the weight
@@ -3119,90 +3121,32 @@ JOIN corpus b ON p.id_b = b.doc_id
 """
 
 
-import weakref
-
-_PAIR_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
-    weakref.WeakKeyDictionary()
-
-
-def _corpus_fingerprint(sf: str):
-    """(total bytes, newest mtime_ns) of the ``documents`` table under
-    ``sf`` — the memo-invalidation key for :func:`_lsh_pair_graph`.
-
-    Driver-side stat only (same listing Spark's file index performs), so
-    it's O(part files), not O(data). Walks part-file directories so
-    nested/hive layouts fingerprint their CONTENTS, mirroring
-    tables.disk_bytes. Returns ``None`` on OSError (missing path,
-    object store): missing paths still memoize consistently rather than
-    raising before Spark gets the chance to report the real error."""
-    p = os.path.join(sf, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            total, newest = 0, 0
-            for root, dirs, files in os.walk(p):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue
-                    st = os.stat(os.path.join(root, f))
-                    total += st.st_size
-                    newest = max(newest, st.st_mtime_ns)
-            return (total, newest)
-        st = os.stat(p)
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return None
-
-
 def _lsh_pair_graph(spark: SparkSession, sf: str) -> DataFrame:
-    """The ONE shared MinHash-LSH pair source for every graph query
-    (r7 verdict item 6): the candidate pipeline (shingles -> signatures
-    -> banded bucket join -> jaccard verify) measured ~87 s at the
-    512x corpus, and three registry queries consume its output
-    (dedup_cluster_resolve, doc_pagerank, dedup_canonical_by_rank) —
-    plus pagerank alone walks the edges once per unrolled iteration.
+    """The ONE MinHash-LSH pair source for every graph query
+    (dedup_cluster_resolve, doc_pagerank, dedup_canonical_by_rank):
+    the landed pair graph when $SC_SPARK_INDEX_DIR holds a minhash
+    artifact whose corpus digest and parameters match THIS corpus
+    (cli.py cmd_index / sinks/index_store.py), else the in-plan
+    candidate pipeline (shingles -> signatures -> banded bucket join
+    -> jaccard verify). A stale or mismatched artifact is ignored,
+    never trusted.
 
-    Persisted MEMORY_AND_DISK and memoized per (session, sf_dir,
-    corpus fingerprint): the pair pass runs once per session, every
-    consumer reads the materialized pairs. The memo key includes the
-    documents file's (size, mtime) fingerprint, so a corpus
-    REGENERATED at the same path within one session (tests, notebooks)
-    invalidates the memo instead of silently reusing stale pairs (r8
-    advice); a session-scoped persist rather than a bronze parquet
-    write keeps the blast radius of any staleness to one session.
-
-    The multi-session 100 TB deployment lands this frame bronze with an
-    explicit corpus-digest key instead (cli.py cmd_index /
-    sinks/index_store.py): when $SC_SPARK_INDEX_DIR points at an
-    artifact whose digest matches THIS corpus (and whose parameters
-    match), the landed pair graph is read instead of recomputed — the
-    87 s pair pass amortizes across sessions, not just within one. A
-    stale or mismatched artifact is ignored, never trusted."""
-    from pyspark.storagelevel import StorageLevel
-
-    per_session = _PAIR_MEMO.setdefault(spark, {})
-    key = (sf, _corpus_fingerprint(sf))
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    for stale_key, stale in list(per_session.items()):
-        if stale_key[0] == sf:  # same path, different fingerprint
-            stale.unpersist()
-            del per_session[stale_key]
+    Nothing is persisted or memoized here: reuse across calls and
+    sessions is the artifact's job, under an explicit digest key.
+    Within one call the graph operators share the pairs themselves
+    (operators/graph.py: connected components caches its input edges
+    for the call, pagerank caches its edge list, canonical_by_rank
+    localCheckpoints the pairs)."""
     corpus = _docs_with_clones(spark, sf)
     idx_dir, _ = artifacts.serve("minhash", corpus, "text", "doc_id",
                                  k=3, n_hashes=8, band_rows=2,
                                  threshold=0.5)
     if idx_dir:
         from ..sinks import index_store
-        pairs = index_store.load_pair_graph(spark, idx_dir)
-    else:
-        pairs = dedup.minhash_lsh_pairs(
-            corpus, "text", "doc_id", k=3, n_hashes=8, band_rows=2,
-            threshold=0.5)
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    per_session[key] = pairs
-    return pairs
+        return index_store.load_pair_graph(spark, idx_dir)
+    return dedup.minhash_lsh_pairs(
+        corpus, "text", "doc_id", k=3, n_hashes=8, band_rows=2,
+        threshold=0.5)
 
 
 def dedup_incremental_batch(spark: SparkSession, sf: str) -> DataFrame:
@@ -3302,9 +3246,9 @@ def dedup_canonical_by_rank(spark: SparkSession, sf: str) -> DataFrame:
     clusters, PageRank picks the SURVIVOR — the highest-centrality
     member (min-id tiebreak) instead of duplicate_clusters' arbitrary
     smallest id, because the hub a near-dup cluster syndicated from is
-    the copy worth keeping. Both graph passes read the one persisted
-    pair source (_lsh_pair_graph) — the ~87 s candidate pipeline runs
-    once per session across all three graph queries."""
+    the copy worth keeping. Both graph passes read one localCheckpoint
+    of the pair source (_lsh_pair_graph), so the candidate pipeline
+    runs once per call."""
     out = graph.canonical_by_rank(_lsh_pair_graph(spark, sf),
                                   iters=2, damping=0.85)
     return out.select("doc_id", "canonical_id", "cluster_size",

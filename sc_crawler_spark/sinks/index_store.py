@@ -1,5 +1,5 @@
 """Digest-keyed dedup index as a LAKE ARTIFACT (r8/r9 verdict task:
-``cmd_index``) — the multi-session form of the per-session pair memo.
+``cmd_index``) — the one form of pair-graph reuse across calls and sessions.
 
 A 100 TB corpus is shingled and signed ONCE; every later session —
 incremental daily batches, cluster resolution, PageRank canonicalization

@@ -417,7 +417,7 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     dedup path reads the stored shingle/signature index — while a
     MISMATCHED digest is ignored, never trusted."""
     from sc_crawler_spark.queries.pipeline import (
-        _PAIR_MEMO, _docs_with_clones, _lsh_pair_graph)
+        _docs_with_clones, _lsh_pair_graph)
     from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark import tables
 
@@ -450,7 +450,7 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     cli.cmd_index(spark, lake, out, k=4)
     assert "index: rebuild (param:k)" in capsys.readouterr().out
 
-    # consumer: the pair-graph memo reads the artifact when the digest
+    # consumer: the shared pair source reads the artifact when the digest
     # matches ITS corpus. Build the index over the CLONE corpus (what
     # _lsh_pair_graph actually walks), plant a sentinel row in the
     # stored pairs, and the sentinel must come back — proof the landed
@@ -467,13 +467,11 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     spark.read.parquet(str(tmp_path / "pairs_new")).write.mode(
         "overwrite").parquet(os.path.join(idx2, "pairs"))
     monkeypatch.setenv("SC_SPARK_INDEX_DIR", idx2)
-    _PAIR_MEMO.clear()
     got = _lsh_pair_graph(spark, lake).collect()
     assert (777, 888) in {(r.id_a, r.id_b) for r in got}
 
     # mismatched digest: corpus changes, artifact must be IGNORED
     tables.clear_load_memo()
-    _PAIR_MEMO.clear()
     docs2 = docs.unionByName(spark.createDataFrame(
         [(4, "yet another brand new document text", "en")],
         "doc_id long, text string, lang string"))
@@ -482,7 +480,6 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     tables.clear_load_memo()
     got2 = _lsh_pair_graph(spark, lake).collect()
     assert (777, 888) not in {(r.id_a, r.id_b) for r in got2}
-    _PAIR_MEMO.clear()
 
     # content change at the ORIGINAL lake: digest differs -> rebuild
     cli.cmd_index(spark, lake, out)

@@ -152,45 +152,15 @@ def test_canonical_by_rank_picks_hub_not_min_id(spark):
     assert len({by_rank[d].canonical_pr for d in (1, 2, 3, 4, 5)}) == 1
 
 
-def test_pair_graph_memo_invalidates_on_corpus_regen(spark, tmp_path):
-    """r9 regression + its intent: _lsh_pair_graph memoizes the pair
-    source per (session, sf_dir, corpus fingerprint). Same corpus ->
-    same persisted frame (no second 87 s pair pass); a corpus
-    REGENERATED at the same path -> fingerprint changes, the stale
-    frame is unpersisted and a fresh one is built (r8 advice — the
-    scenario the fingerprint exists for)."""
-    import os
-
-    from sc_crawler_spark import tables
-    from sc_crawler_spark.queries.pipeline import (
-        _corpus_fingerprint, _lsh_pair_graph)
-
-    sf = str(tmp_path)
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta {i}", "en")
-         for i in range(10)],
-        "doc_id long, text string, lang string")
-    docs.coalesce(1).write.parquet(os.path.join(sf, "documents.parquet"))
-
-    first = _lsh_pair_graph(spark, sf)
-    assert _lsh_pair_graph(spark, sf) is first  # memo hit
-
-    fp_before = _corpus_fingerprint(sf)
-    # regenerate the corpus at the SAME path (one extra row -> new
-    # size; rewrite -> new mtime)
-    docs2 = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta {i}", "en")
-         for i in range(11)],
-        "doc_id long, text string, lang string")
-    docs2.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sf, "documents.parquet"))
-    tables.clear_load_memo()  # lake-dir mutation contract (tables.py)
-
-    assert _corpus_fingerprint(sf) != fp_before
-    second = _lsh_pair_graph(spark, sf)
-    assert second is not first
-    assert not first.is_cached  # stale frame was unpersisted
-    second.unpersist()
-
-    # missing path: consistent sentinel, no raise
-    assert _corpus_fingerprint(str(tmp_path / "nope")) is None
+def test_connected_components_releases_its_cache_when_a_round_raises(spark):
+    """connected_components caches its input edges for the duration of
+    the call and releases them however it ends: edges whose evaluation
+    raises leave the CacheManager as it was."""
+    edges = spark.range(6).select(
+        F.col("id").alias("id_a"),
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id_b"))
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="boom"):
+        connected_components(edges)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

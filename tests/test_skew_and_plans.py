@@ -868,19 +868,30 @@ def test_r12_media_jpeg_stats_plan_is_exchange_free(spark):
 
 
 def test_r13_lr_train_plan_shape(spark):
-    """Distributed GD stays in-plan: the feature frame is CACHED (one
-    scan feeds 5 epochs + the scoring pass), each epoch consumes the
-    previous one-row gradient frame via broadcast nested-loop join
-    (the broadcast-of-scalar pattern — NOT a cartesian product), and
+    """Distributed GD stays in-plan: ONE documents scan feeds 5 epochs
+    + the scoring pass through the features' explicit exchange (the
+    other four readers are ReusedExchange; nothing is cached for a
+    later call to read), each epoch consumes the previous one-row
+    gradient frame via broadcast nested-loop join (the
+    broadcast-of-scalar pattern — NOT a cartesian product), and
     nothing collects to the driver."""
-    plan = REGISTRY["doc_quality_lr_train"][0](
-        spark, SF_ORACLE)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"))
-    tree = plan.split("\n\n")[0]
-    assert "CartesianProduct" not in tree
-    assert "InMemoryTableScan" in tree
-    assert "BroadcastNestedLoopJoin" in tree
+    plan = _final_plan(spark, "doc_quality_lr_train")
+    assert "CartesianProduct" not in plan
+    assert "InMemoryRelation" not in plan
+    assert len(re.findall(r"FileScan parquet", plan)) == 1
+    assert len(re.findall(r"[+:]- ReusedExchange", plan)) >= 4
+    assert "BroadcastNestedLoopJoin" in plan
+
+
+def test_canonical_by_rank_reads_one_checkpointed_pair_source(spark):
+    """dedup_canonical_by_rank localCheckpoints its pair source once:
+    connected components and PageRank both read that checkpoint, so
+    the final plan scans no parquet file (the MinHash candidate
+    pipeline ran once, at build time, where the components' rounds
+    run anyway)."""
+    plan = _final_plan(spark, "dedup_canonical_by_rank")
+    assert "FileScan parquet" not in plan
+    assert "ExistingRDD" in plan
 
 
 def test_r13_bpe_train_plan_shape(spark):

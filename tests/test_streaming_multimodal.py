@@ -839,7 +839,7 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
     $SC_SPARK_INDEX_DIR digest gate (sentinel-proven read)."""
     from sc_crawler_spark import cli, tables
     from sc_crawler_spark.operators.dedup import minhash_lsh_pairs
-    from sc_crawler_spark.queries.pipeline import _PAIR_MEMO, doc_pagerank
+    from sc_crawler_spark.queries.pipeline import doc_pagerank
     from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark.streaming import (
         read_document_stream, stream_near_dedup)
@@ -929,11 +929,9 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
         os.path.join(folded, "pairs"))
     monkeypatch.setenv("SC_SPARK_INDEX_DIR", folded)
     tables.clear_load_memo()
-    _PAIR_MEMO.clear()
     ranked = {r.doc_id for r in doc_pagerank(spark, lake).collect()}
     assert {777, 888} <= ranked
     tables.clear_load_memo()
-    _PAIR_MEMO.clear()
 
 
 def test_fold_digest_partials_merge_exactly(spark, tmpdir):
